@@ -1657,7 +1657,8 @@ object Queries {
 
   // ---------------------------------------------------------------- v68_sharded_layout
   /** The dir-sharded SERVING layout end to end under the driver gate:
-    * buildTo a snapshot, [[VectorIndex.relayoutSharded]] it, load (which
+    * save the session-shared index as a snapshot,
+    * [[VectorIndex.relayoutSharded]] it, load (which
     * detects `rows_sharded/` and swaps [[VectorIndex!.probeLayout]] to
     * the shuffle-free one-file-per-shard aligned scan — the path that
     * removes the ~2.5×-snapshot-bytes load shuffle every serving JVM
@@ -1669,10 +1670,10 @@ object Queries {
     val path = java.nio.file.Files
       .createTempDirectory("graft_shl_").toString
     try {
-      // publish the session-shared index (same params/corpus as buildTo
-      // would produce — deterministic build; buildTo's shuffle-free
-      // build-to-path plan stays gated by v20/BucketedBuildSpec): THIS
-      // gate's claim starts at relayoutSharded + the layout-aware load
+      // publish the session-shared index (same rows buildTo would write
+      // — deterministic build; buildTo's equality with a cached build is
+      // gated by DehnswSpec): THIS gate's claim starts at
+      // relayoutSharded + the layout-aware load
       buildEmbIndex(s, dir).save(s"$path/snap")
       VectorIndex.relayoutSharded(s, s"$path/snap")
       val loaded = VectorIndex.load(s, s"$path/snap", cache = false)

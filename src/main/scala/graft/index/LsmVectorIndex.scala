@@ -22,16 +22,16 @@ import graft.operators.TopK
   *    per-index top-k with the same partial/final merge the multi-shard
   *    probe uses (top-k of a union == top-k of the per-member top-k
   *    union, so exact-mode results equal one flat index — oracle-gated);
-  *  - '''compact''' folds all generations into the base via the
-  *    deterministic shard-scoped append once their total size crosses
-  *    `compactThreshold`, bounding the generation count a probe pays for.
-  *    Exact-mode probes are invariant across compaction (append ==
-  *    full rebuild; spec-gated).
+  *  - '''compact''' folds all generations into the base and purges
+  *    every tombstone in ONE shard-scoped rewrite once their total size
+  *    crosses `compactThreshold`, bounding the generation count a probe
+  *    pays for. The compacted base equals a full build over the live set,
+  *    so exact-mode probes are invariant across compaction (spec-gated).
   *
   * Id uniqueness within each ingested batch is validated eagerly (cheap,
   * O(batch)); cross-generation/base clashes would need an O(index) lookup
-  * per batch — exactly the cost this structure avoids — so they are
-  * validated at compaction time by append's disjointness check.
+  * per batch — exactly the cost this structure avoids — so the rewrite's
+  * disjointness check catches them at compaction time.
   *
   * Instances are immutable: ingest/compact return a new handle; superseded
   * generations (and compacted bases this class itself created) have their
@@ -48,14 +48,14 @@ final class LsmVectorIndex private (
     // liveness filter (one broadcast sorted primitive array, binary
     // search per candidate pop — dead rows never enter any shard's
     // top-k, so results are the exact live top-k with no overfetch);
-    // compaction physically removes them via the shard-scoped
-    // VectorIndex.remove. Bounded by deleteThreshold auto-purge.
+    // compaction physically removes them in its one shard-scoped
+    // rewrite. Bounded by deleteThreshold auto-purge and 2^20.
     val tombstones: Set[Long] = Set.empty,
     val deleteThreshold: Long = Long.MaxValue,
     // Shared across every handle descended from the same lineage: true
     // while a compactAsync fold is in flight. Ingest must not auto-run the
     // SYNCHRONOUS compact() then — it would unpersist the very snapshot
-    // generations (and possibly the base) the background append is still
+    // generations (and possibly the base) the background rewrite is still
     // reading, and the eventual swap would fail its base-identity require.
     asyncPending: java.util.concurrent.atomic.AtomicBoolean =
       new java.util.concurrent.atomic.AtomicBoolean(false))
@@ -113,48 +113,46 @@ final class LsmVectorIndex private (
     else next
   }
 
-  /** Fold every generation into the base (one deterministic shard-scoped
-    * append over their union). Exact-mode probe results are unchanged —
-    * append equals a full rebuild, and the merged probe equals a flat
-    * probe. Generations this index built are unpersisted; so is the base
-    * when it came from a previous compaction. */
+  /** Fold every generation into the base and purge every tombstone in
+    * ONE shard-scoped rewrite: a shard gaining a live fresh id or holding
+    * a tombstoned id is rebuilt once from its survivors plus its live
+    * fresh ids; the rest keep rows and meta verbatim. Exact-mode probe
+    * results are unchanged (the result equals a build over the live set)
+    * and probes stop paying the liveness filter. The tombstones reach
+    * the plan as a one-column relation, not a literal id list, so the
+    * driver's per-execution cost does not grow with their count.
+    * Generations this index built are unpersisted; so is a base a
+    * previous compaction created, once it is replaced. */
   def compact(): LsmVectorIndex = {
     require(!asyncPending.get(),
       "compact() while a compactAsync fold is outstanding would unpersist " +
-        "the snapshot generations (and owned base) the background append is " +
-        "reading — apply the returned swap instead, or let it fail first")
+        "the snapshot generations (and owned base) the background rewrite " +
+        "is reading — apply the returned swap instead, or let it fail first")
     if (generations.isEmpty && tombstones.isEmpty) return this
     val spark = base.rows.sparkSession
     import spark.implicits._
-    // physical delete first: tombstoned base ids leave via the
-    // shard-scoped remove; tombstoned FRESH ids simply don't ride the
-    // append. After the fold no tombstone survives — probes stop paying
-    // the liveness filter.
-    val purgedBase =
-      if (tombstones.isEmpty) base
-      else base.remove(tombstones.toSeq.toDF("id"))
-    val newBase =
-      if (generations.isEmpty) { purgedBase.optimize(); purgedBase }
-      else {
-        val freshVecs = generations
-          .map(_.rows.toDF().select(col("global_id").as("id"), col("embedding")))
-          .reduce(_ union _)
-          .filter(if (tombstones.isEmpty) lit(true)
-                  else !col("id").isInCollection(tombstones))
-        purgedBase.appendRecovered(freshVecs) // materializes before we unpersist
-      }
+    val dead = if (tombstones.isEmpty) null else tombstones.toSeq.toDF("id")
+    val newBase = base.rewrite(dead, freshVectors(generations),
+      normalize = false) // materializes before we unpersist
+    val replaced = newBase ne base
     generations.foreach(_.unpersist())
-    if (ownsBase) base.unpersist()
-    if ((purgedBase ne base) && (newBase ne purgedBase)) purgedBase.unpersist()
+    if (ownsBase && replaced) base.unpersist()
     new LsmVectorIndex(newBase, Vector.empty, compactThreshold, genShardSize,
-      ownsBase = true, Set.empty, deleteThreshold, asyncPending)
+      ownsBase || replaced, Set.empty, deleteThreshold, asyncPending)
   }
+
+  /** The (id, embedding) rows of `gens` for the rewrite (null if none). */
+  private def freshVectors(gens: Vector[VectorIndex]): DataFrame =
+    if (gens.isEmpty) null
+    else gens
+      .map(_.rows.toDF().select(col("global_id").as("id"), col("embedding")))
+      .reduce(_ union _)
 
   /** Logical DELETE (tombstoning) — the index-lifecycle face the
     * reference has no answer to: ids stop appearing in any probe result
     * immediately (exactness via the kernel liveness filter — see the
     * tombstone field note), and the NEXT compaction removes them
-    * physically through [[VectorIndex.remove]]'s shard-scoped rebuild.
+    * physically in its one shard-scoped rewrite.
     * Deleting an id that was never inserted is a harmless no-op
     * (idempotent), so callers can replay delete feeds. Auto-purges
     * (compacts) when the tombstone set reaches `deleteThreshold` — the
@@ -178,7 +176,9 @@ final class LsmVectorIndex private (
     * ingest keeps accepting batches while the fold runs — the
     * background-compaction shape a live stream needs (a synchronous
     * [[compact]] blocks the batch that crosses the threshold for the
-    * whole append rebuild).
+    * whole rebuild). The fold is the same shard-scoped rewrite as
+    * [[compact]], over the snapshot generations only; tombstones stay on
+    * the handle the swap is applied to, for the next [[compact]].
     *
     * Returns a future SWAP function: apply it to any LATER handle
     * descended from this one (same leading generations — validated by
@@ -196,9 +196,7 @@ final class LsmVectorIndex private (
       : scala.concurrent.Future[LsmVectorIndex => LsmVectorIndex] = {
     val snapshot = generations
     if (snapshot.isEmpty) return scala.concurrent.Future.successful(identity)
-    val freshVecs = snapshot
-      .map(_.rows.toDF().select(col("global_id").as("id"), col("embedding")))
-      .reduce(_ union _)
+    val freshVecs = freshVectors(snapshot)
     val oldBase = base
     val owned = ownsBase
     val pending = asyncPending
@@ -206,7 +204,7 @@ final class LsmVectorIndex private (
       "a compactAsync fold is already outstanding on this lineage")
     scala.concurrent.Future {
       val newBase =
-        try oldBase.appendRecovered(freshVecs) // materializes before any unpersist
+        try oldBase.rewrite(null, freshVecs, normalize = false) // materializes before any unpersist
         catch { case e: Throwable => pending.set(false); throw e }
       // 0 = fresh, 1 = applied, 2 = abandoned: a FIRST misapply abandons
       // the fold (drop its output, re-enable compaction) instead of

@@ -628,52 +628,102 @@ class VectorIndex private (
     * index stays valid and keeps its caches; drop them with [[unpersist]]
     * when a superseded generation is no longer needed. */
   def append(newVectors: DataFrame): VectorIndex =
-    appendImpl(newVectors, normalize = true)
+    rewrite(null, newVectors, normalize = true)
 
-  /** [[append]] for INTERNALLY RECOVERED vectors — LSM compaction folds
-    * generation rows that were already normalized at their original
-    * ingest (or, quantized, are byte-stable dequantized midpoints);
-    * re-normalizing them would drift last bits and break the
-    * compaction-preserves-probes / append==rebuild invariants. */
-  private[index] def appendRecovered(newVectors: DataFrame): VectorIndex =
-    appendImpl(newVectors, normalize = false)
+  /** Shard-scoped physical DELETE (the reference's API stops at
+    * insert/query/optimize/save): [[append]]'s economics in reverse —
+    * only shards holding a removed id are rebuilt, and a shard emptied by
+    * removal drops out of meta. Absent ids are no-ops; removing only
+    * absent ids returns this index itself (deletes are idempotent, the
+    * LSM contract upstream relies on it). Input: one `id LONG` column. */
+  def remove(removeIds: DataFrame): VectorIndex =
+    rewrite(removeIds, null, normalize = false)
 
-  /** Shared discover/recover/validate front half of [[appendImpl]] and
-    * [[VectorIndex.appendTo]]: the normalized fresh batch (CACHED — it
-    * is evaluated for shard discovery AND the rebuild, and a
-    * nondeterministic source re-evaluating differently would corrupt the
-    * shard/row bookkeeping), the affected shard ids, and the
-    * affected-slice ∪ fresh rebuild input, with the dimension and
-    * id-disjointness contract enforced in one aggregation pass (a
-    * clashing id necessarily hashes into an affected shard, so the
-    * distinctness check covers old-vs-new AND new-vs-new clashes;
-    * `existing` is recovered from index rows and must NOT re-normalize).
-    * An empty batch returns (fresh, Nil, null). Callers differ only in
-    * the rebuilt-rows SINK (in-memory cache vs parquet write) and
-    * unpersist `fresh` when done. */
-  private[index] def appendPrep(newVectors: DataFrame, normalize: Boolean,
-      cacheInput: Boolean): (DataFrame, Seq[Int], DataFrame) = {
+  /** The one shard-scoped rewrite behind [[append]], [[remove]] and LSM
+    * compaction: drop `removeIds` (`id`; null = none) and add
+    * `newVectors` (`id`, `embedding`; null = none). Each affected shard
+    * (it gains a surviving new id, or holds a removed id) is rebuilt ONCE
+    * from (existing − removed) ∪ (added − removed); the others keep rows
+    * and meta verbatim. The kernel is deterministic in ascending-id
+    * order, so the result equals [[VectorIndex.build]] over the live set
+    * bit for bit. No affected shard returns this index. `normalize` =
+    * false marks INTERNALLY RECOVERED vectors (generation rows, already
+    * transformed at ingest): re-transforming would drift last bits. */
+  private[index] def rewrite(removeIds: DataFrame, newVectors: DataFrame,
+      normalize: Boolean): VectorIndex = {
+    val (fresh, affectedSeq, rebuildInput) =
+      rewritePrep(removeIds, newVectors, normalize, cacheInput = true)
+    if (affectedSeq.isEmpty) return this
+    val affected = affectedSeq.toSet
+    val rebuilt = VectorIndex.buildRows(rebuildInput, params, numShards)
+    val kept = rows.filter(!col("sub_index_id").isin(affectedSeq: _*))
+    val cached = kept.union(rebuilt).cache()
+    // untouched shards keep their meta verbatim; recompute only the
+    // rebuilt shards. The scan of the cached union materializes every
+    // partition of it, kept slice included, so the inputs can be dropped
+    // after this one pass.
+    val rebuiltMeta = VectorIndex.computeMeta(
+      cached.filter(col("sub_index_id").isin(affectedSeq: _*)))
+    val meta2 = (meta.filterNot(m => affected(m.sub_index_id)) ++ rebuiltMeta)
+      .sortBy(_.sub_index_id)
+    if (fresh != null) fresh.unpersist()
+    rebuildInput.unpersist()
+    new VectorIndex(params, numShards, cached, meta2,
+      java.util.UUID.randomUUID().toString)
+  }
+
+  /** Discover/recover/validate front half shared by [[rewrite]] and
+    * [[VectorIndex.appendTo]], which differ only in the rebuilt-rows
+    * SINK (in-memory cache vs parquet write). Returns (the fresh batch if
+    * it was cached, else null; affected shards; rebuild input), or
+    * (null, Nil, null) with nothing cached when no shard is affected.
+    * API input is normalized and CACHED (a nondeterministic source
+    * re-evaluated between discovery and rebuild would corrupt the
+    * bookkeeping); recovered rows come from cached index rows and are
+    * not cached again. Removed ids enter every plan as DATA — one
+    * relation joined left-semi/left-anti, never a literal In-list — so
+    * planning cost does not grow with their count (small sets
+    * broadcast; large ones shuffle 8-byte keys, never the vectors). */
+  private[index] def rewritePrep(removeIds: DataFrame, newVectors: DataFrame,
+      normalize: Boolean, cacheInput: Boolean): (DataFrame, Seq[Int], DataFrame) = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val selected = newVectors.select(col("id").cast("long"), col("embedding"))
-    val fresh = (if (normalize) VectorIndex.normalizeInput(selected, params)
-                 else selected).cache()
-    val affected = fresh
+    val selected = Option(newVectors).map(_.select(col("id").cast("long"), col("embedding")))
+    val cachedFresh =
+      if (normalize) selected.map(VectorIndex.normalizeInput(_, params).cache()).orNull
+      else null
+    val fresh = Option(cachedFresh).orElse(selected).getOrElse(
+      spark.emptyDataset[(Long, Array[Float])].toDF("id", "embedding"))
+    def release(): Unit = if (cachedFresh != null) cachedFresh.unpersist()
+    val removed = Option(removeIds).map(_.select(col("id").cast("long")))
+    def survivors(df: DataFrame): DataFrame =
+      removed.fold(df)(r => df.join(r, Seq("id"), "left_anti"))
+    val added = survivors(fresh)
+    // only removed ids actually PRESENT can change a shard: hashing the
+    // raw request set would rebuild shards that lose nothing (e.g. LSM
+    // tombstones for fresh-generation ids that never reached this base)
+    val addedIds = added.select(col("id"))
+    val touchedIds = removed.fold(addedIds)(r => addedIds.union(
+      rows.toDF().select(col("global_id").as("id")).join(r, Seq("id"), "left_semi")))
+    val affected = touchedIds
       .select(VectorIndex.shardOf(col("id"), numShards).as("s"))
       .distinct().as[Int].collect().toSet
-    if (affected.isEmpty) return (fresh, Nil, null)
+    if (affected.isEmpty) { release(); return (null, Nil, null) }
     val affectedSeq = affected.toSeq
-    val existing = rows
+    val existing = survivors(rows
       .filter(col("sub_index_id").isin(affectedSeq: _*))
-      .select(col("global_id").as("id"), col("embedding"))
-    val rebuildInput0 = existing.union(fresh)
+      .select(col("global_id").as("id"), col("embedding")))
+    val rebuildInput0 = existing.union(added)
     val rebuildInput = if (cacheInput) rebuildInput0.cache() else rebuildInput0
     // one validation pass: total/distinct counts + dimension mismatches
     // (existing rows always match, so counting over the union is the same
-    // check as counting over fresh alone — in the same job). A failed
+    // check as counting over fresh alone — in the same job; a clashing id
+    // necessarily hashes into an affected shard, so the distinct count
+    // covers old-vs-new AND new-vs-new clashes). A failed
     // validation unpersists before throwing — a caller that catches and
-    // retries must not accumulate orphaned cached batches.
-    try {
+    // retries must not accumulate orphaned cached batches. A pure
+    // removal adds nothing to validate.
+    if (newVectors != null) try {
       val dim = if (meta.nonEmpty) dimension else -1
       val counts = rebuildInput
         .agg(count(lit(1)), count_distinct(col("id")),
@@ -684,84 +734,11 @@ class VectorIndex private (
       require(nIn == nDistinct,
         s"appended ids must be disjoint from the index and unique (${nIn - nDistinct} clashes)")
     } catch { case t: Throwable =>
-      fresh.unpersist()
+      release()
       if (cacheInput) rebuildInput.unpersist()
       throw t
     }
-    (fresh, affectedSeq, rebuildInput)
-  }
-
-  private def appendImpl(newVectors: DataFrame, normalize: Boolean): VectorIndex = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val (fresh, affectedSeq, rebuildInput) =
-      appendPrep(newVectors, normalize, cacheInput = true)
-    if (affectedSeq.isEmpty) { fresh.unpersist(); return this }
-    val affected = affectedSeq.toSet
-    val rebuilt = VectorIndex.buildRows(rebuildInput, params, numShards)
-    val kept = rows.filter(!col("sub_index_id").isin(affectedSeq: _*))
-    val cached = kept.union(rebuilt).cache()
-    // untouched shards keep their meta verbatim; recompute only the
-    // rebuilt shards (one pass over the affected slice of the cached
-    // union, which also materializes it — not the whole index)
-    val rebuiltMeta = VectorIndex.computeMeta(
-      cached.filter(col("sub_index_id").isin(affectedSeq: _*)))
-    cached.count() // materialize the kept slice too before dropping inputs
-    val meta2 = (meta.filterNot(m => affected(m.sub_index_id)) ++ rebuiltMeta)
-      .sortBy(_.sub_index_id)
-    fresh.unpersist()
-    rebuildInput.unpersist()
-    new VectorIndex(params, numShards, cached, meta2,
-      java.util.UUID.randomUUID().toString)
-  }
-
-  /** Shard-scoped physical DELETE — the lifecycle face the reference
-    * lacks entirely (its API stops at insert/query/optimize/save):
-    * rebuild ONLY the shards owning a removed id, exactly [[append]]'s
-    * economics in reverse. Ids are routed to shards by the same pure
-    * id->shard hash, so survivors keep their shard and untouched shards
-    * keep rows AND meta verbatim; a shard emptied by removal simply
-    * drops out of meta (probes of an empty shard return nothing by
-    * construction). Removing an id that is not in the index is a no-op
-    * for that id — deletes are idempotent, the LSM contract upstream
-    * relies on it. Input: one `id LONG` column. */
-  def remove(removeIds: DataFrame): VectorIndex = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val ids = removeIds.select(col("id").cast("long")).distinct().cache()
-    // only ids actually PRESENT can change a shard: hashing the raw
-    // request set would rebuild shards that lose nothing (e.g. LSM
-    // tombstones for fresh-generation ids that never reached this base —
-    // deletes are idempotent, so absent ids are legal and common).
-    // Command-sized delete batches broadcast (one semi-join, no corpus
-    // shuffle); a corpus-scale removal set would blow the broadcast /
-    // driver heap, so above the threshold the semi-join is left to plan
-    // as a shuffle — 8 bytes/id keys exchange, never the vectors.
-    val nIds = ids.count()
-    val idsSide = if (nIds <= 1000000L) broadcast(ids) else ids
-    val affected = rows.toDF().select(col("global_id").as("id"))
-      .join(idsSide, Seq("id"), "left_semi")
-      .select(VectorIndex.shardOf(col("id"), numShards).as("s"))
-      .distinct().as[Int].collect().toSet
-    if (affected.isEmpty) { ids.unpersist(); return this }
-    val affectedSeq = affected.toSeq
-    val surviving = rows
-      .filter(col("sub_index_id").isin(affectedSeq: _*))
-      .select(col("global_id").as("id"), col("embedding"))
-      .join(ids, Seq("id"), "left_anti")
-      .cache()
-    val rebuilt = VectorIndex.buildRows(surviving, params, numShards)
-    val kept = rows.filter(!col("sub_index_id").isin(affectedSeq: _*))
-    val cached = kept.union(rebuilt).cache()
-    val rebuiltMeta = VectorIndex.computeMeta(
-      cached.filter(col("sub_index_id").isin(affectedSeq: _*)))
-    cached.count() // materialize before dropping inputs
-    val meta2 = (meta.filterNot(m => affected(m.sub_index_id)) ++ rebuiltMeta)
-      .sortBy(_.sub_index_id)
-    ids.unpersist()
-    surviving.unpersist()
-    new VectorIndex(params, numShards, cached, meta2,
-      java.util.UUID.randomUUID().toString)
+    (cachedFresh, affectedSeq, rebuildInput)
   }
 
   /** Drop this index's cached data (rows + probe layout). Call on a
@@ -1265,20 +1242,18 @@ object VectorIndex {
     val old = load(spark, oldPath, cache = false)
     val params = old.params
     val numShards = old.numShards
-    // shared discover/recover/validate half ([[appendPrep]]); the
+    // shared discover/recover/validate half ([[rewritePrep]]); the
     // existing-rows isin predicate is pushed to parquet, and the
     // shard-sorted layout makes the row-group stats prune the scan to
     // the affected files
     val (fresh, affectedSeq, rebuildInput) =
-      old.appendPrep(newVectors, normalize = true, cacheInput = false)
-    if (affectedSeq.isEmpty) {
-      fresh.unpersist()
+      old.rewritePrep(null, newVectors, normalize = true, cacheInput = false)
+    if (affectedSeq.isEmpty)
       throw new IllegalArgumentException("appendTo over an empty batch")
-    }
     val affected = affectedSeq.toSet
     // 1) rebuilt shards stream straight to the new snapshot (no cache);
     // unpersist in finally — a failed write must not leak the cached
-    // batch (appendPrep's leak-safe contract covers only validation)
+    // batch (rewritePrep's leak-safe contract covers only validation)
     try {
       buildRows(rebuildInput, params, numShards)
         .write.mode("overwrite").parquet(s"$newPath/rows")

@@ -299,6 +299,113 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
     assert(resultSet(compacted.query(queries, 10, searchWidth = 0)) == before)
   }
 
+  test("compaction is one fused rewrite: rows and meta equal a build over the live set") {
+    // base ids 10..299 over 4 shards (id % 4). Shard 0 loses base ids
+    // only, shard 1 gains fresh ids only, shard 2 does both, and shard 3
+    // loses every base id while all its fresh ids are tombstoned too, so
+    // it ends empty and must drop out of meta.
+    val fresh1 = slice(300, 360).filter(col("id") % 4 =!= 0)
+    val fresh2 = slice(360, 400).filter(col("id") % 4 =!= 0)
+    val removedBase = Set(20L, 24L, 28L, 22L, 26L) ++ (11L until 300L by 4)
+    val freshShard3 = (303L until 400L by 4).toSet
+    val lsm = LsmVectorIndex(baseIdx, compactThreshold = 1000000)
+      .ingest(fresh1)
+      .delete(removedBase ++ freshShard3.filter(_ < 360) + 302L)
+      .ingest(fresh2)
+      .delete(freshShard3.filter(_ >= 360) + 361L) // ingested, deleted before the fold
+    val dead = lsm.tombstones
+    val compacted = lsm.compact()
+    val live = emb.filter(col("vec_id") >= 10 && col("vec_id") < 400)
+      .filter(col("vec_id") < 300 || col("vec_id") % 4 =!= 0)
+      .filter(!col("vec_id").isin(dead.toSeq: _*))
+      .select(col("vec_id").as("id"), col("embedding"))
+    val full = VectorIndex.build(live, params, numShards = 4)
+    def canon(ds: org.apache.spark.sql.Dataset[graft.index.IndexRow]) =
+      ds.collect().map(r => (r.sub_index_id, r.offset, r.global_id, r.layer,
+        r.embedding.toSeq, r.out, r.edges)).sortBy(t => (t._1, t._2)).toSeq
+    assert(compacted.generations.isEmpty && compacted.tombstones.isEmpty)
+    assert(compacted.base.meta.map(_.sub_index_id).toSeq == Seq(0, 1, 2),
+      "the emptied shard must drop out of meta")
+    assert(compacted.base.meta.toSeq == full.meta.toSeq)
+    assert(canon(compacted.base.rows) == canon(full.rows))
+  }
+
+  test("compaction work does not grow with the tombstone count, and no id list is planned") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // synthetic 8-d corpus large enough for 2,000 PRESENT tombstones
+    val rnd = new scala.util.Random(20261017)
+    def vecs(ids: Range) =
+      ids.map(i => (i.toLong, Array.fill(8)(rnd.nextFloat()))).toDF("id", "embedding")
+    val p = IndexParams(minimumConnect = 4, relaxedMonotonicity = 16, step = 2)
+    val base = VectorIndex.build(vecs(0 until 2400), p, numShards = 4)
+    val gen1 = vecs(2400 until 2500).cache()
+    val gen2 = vecs(2500 until 2600).cache()
+    // every id-keyed In/InSet reachable from an executed plan, cached
+    // plans and adaptive query stages included
+    def idLists(plan: SparkPlan): Seq[String] = {
+      val own = plan.expressions.flatMap(_.collect {
+        case e @ (_: In | _: InSet)
+            if e.references.exists(a => a.name == "id" || a.name == "global_id") =>
+          e.getClass.getSimpleName
+      })
+      val inner = plan match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case _ => Nil
+      }
+      own ++ (plan.children ++ plan.subqueries ++ inner).flatMap(idLists)
+    }
+    def compactWork(tombstones: Seq[Long]): (Int, Seq[String]) = {
+      val lsm = LsmVectorIndex(base, compactThreshold = 1000000)
+        .ingest(gen1).ingest(gen2).delete(tombstones)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val lists = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val jobListener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          idLists(qe.executedPlan).foreach(lists.add)
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(jobListener)
+      spark.listenerManager.register(planListener)
+      try {
+        lsm.compact()
+        org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
+      } finally {
+        spark.sparkContext.removeSparkListener(jobListener)
+        spark.listenerManager.unregister(planListener)
+      }
+      import scala.jdk.CollectionConverters._
+      (jobs.get, lists.asScala.toSeq)
+    }
+    // the base reads its dimension once per handle (a job); read it up
+    // front so both compactions start from the same handle state
+    base.dimension
+    val few = (0L until 10L).map(_ * 7)
+    val many = few ++ (400L until 2390L)
+    assert(many.distinct.size == 2000 && many.forall(_ < 2400))
+    val (fewJobs, fewLists) = compactWork(few)
+    val (manyJobs, manyLists) = compactWork(many)
+    assert(fewLists.isEmpty && manyLists.isEmpty,
+      s"tombstones were planned as literal id lists: ${fewLists ++ manyLists}")
+    assert(fewJobs > 0 && fewJobs == manyJobs,
+      s"compact() ran $fewJobs jobs with 10 tombstones, $manyJobs with 2000")
+    gen1.unpersist(); gen2.unpersist(); base.unpersist()
+  }
+
   test("delete: idempotent, unknown ids are no-ops, auto-purge at threshold") {
     val lsm = LsmVectorIndex(baseIdx, compactThreshold = 1000000,
       deleteThreshold = 8)
