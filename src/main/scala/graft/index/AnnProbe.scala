@@ -31,6 +31,11 @@ trait AnnProbe {
     * serve RANK-equivalently (ids only, never the raw distances). */
   def probeSemanticMetric: DistanceMetric = probeMetric
   def probeSession: SparkSession
+  /** The probe of a literal query batch as a LAZY plan. It must run no
+    * job when called: the rewrite builds it inside the optimizer, where a
+    * job would nest inside planning, and memoizes the optimized plan for
+    * later executions of the same shape. The eager
+    * [[VectorIndex.query]] path is therefore not usable here. */
   def probeBatch(batch: Array[(Long, Array[Float])], k: Int, searchWidth: Int): DataFrame
   /** One-line shape description for the rewrite's log line. */
   def probeDescription: String

@@ -19,9 +19,9 @@ import graft.operators.TopK
   *    just the batch — work is O(batch) and the sealed base is untouched
   *    (object-identity guaranteed, spec-gated);
   *  - '''query''' probes the base and every generation and merges their
-  *    per-index top-k with the same partial/final merge the multi-shard
-  *    probe uses (top-k of a union == top-k of the per-member top-k
-  *    union, so exact-mode results equal one flat index — oracle-gated);
+  *    per-shard top-k into one top-k per query, as the multi-shard probe
+  *    does (top-k of a union == top-k of the per-member top-k union, so
+  *    exact-mode results equal one flat index — oracle-gated);
   *  - '''compact''' folds all generations into the base and purges
   *    every tombstone in ONE shard-scoped rewrite once their total size
   *    crosses `compactThreshold`, bounding the generation count a probe
@@ -251,102 +251,54 @@ final class LsmVectorIndex private (
     }
   }
 
-  /** Batch kNN probe across base + generations — same contract and output
-    * schema as [[VectorIndex.query]] (searchWidth 0 = exact). Queries are
-    * routed once (collected once for the broadcast path, never collected
-    * for the driverless path) and each member index contributes at most k
-    * candidates per query to one final merge. */
+  /** Batch kNN probe across base + generations — same contract, output
+    * schema and routing as [[VectorIndex.query]] (searchWidth 0 = exact).
+    * A batch of at most `maxBatch` queries is validated and answered
+    * EAGERLY, in one Spark job over the fused member layout (see
+    * [[queryBatch]]) with the top-k merged on the driver: the driver
+    * holds at most `maxBatch` query vectors and `maxBatch × k` result
+    * rows. A larger batch is probed per member without the driver and
+    * merged by one shuffle. Deleted ids are dropped inside the kernel
+    * (the liveness filter), so every member returns its exact live top-k
+    * and no tombstone post-filter is needed. */
   def query(queries: DataFrame, k: Int, searchWidth: Int,
       maxBatch: Int = 100000): DataFrame = {
-    val members = (base +: generations).filter(_.meta.nonEmpty)
-    val spark = base.rows.sparkSession
-    import spark.implicits._
-    if (members.isEmpty) {
-      return spark.emptyDataset[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "distance")
-    }
-    if (members.size == 1 && tombstones.isEmpty)
-      return members.head.query(queries, k, searchWidth, maxBatch)
-    val qds = queries
-      .select(col("query_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    val probeCount = qds.select(col("query_id")).limit(maxBatch + 1).count()
-    if (probeCount <= maxBatch)
-      queryBatch(qds.collect().sortBy(_._1), k, searchWidth, maxBatch)
-    else {
-      // kernel-level liveness filter: dead ids never enter any shard's
-      // top-k, so every member returns its exact live top-k directly —
-      // no k+tombstones overfetch (whose candidate volume grows with
-      // the tombstone count), no post-filter. ONE broadcast shared by
-      // every member's probe.
-      val live = liveFilter
-      mergeMembers(members.map(_.queryDistributed(queries, k, searchWidth, live)), k)
+    val members = probeMembers
+    if (members.isEmpty) return VectorIndex.resultFrame(probeSession, Nil)
+    val live = liveFilter
+    VectorIndex.routeBatch(queries, maxBatch) match {
+      case Some(batch) =>
+        VectorIndex.probeNow(members, batch, k, searchWidth, maxBatch, live)
+      case None if members.size == 1 =>
+        members.head.queryDistributed(queries, k, searchWidth, live)
+      case None =>
+        TopK.topKMerge(
+          members.map(_.queryDistributed(queries, k, searchWidth, live)).reduce(_ union _), k)
     }
   }
 
-  /** Probe with an already-materialized query batch (broadcast path) —
-    * the [[AnnProbe]] face the SQL rewrite splices in.
+  /** Probe with an already-materialized query batch, LAZILY — the
+    * [[AnnProbe]] face the SQL rewrite splices in.
     *
     * FUSED across members: the cached probe layouts of the base and every
     * generation are unioned (a narrow concatenation — no recompute, no
     * shuffle) and probed in ONE job; each task maps its union partition
-    * back to (member, local shard) through the broadcast shard offsets.
-    * One job chain + one merge instead of one per member — the per-probe
-    * fixed cost no longer grows with the generation count. */
+    * back to (member, local shard). One job chain + one merge instead of
+    * one per member — the per-probe fixed cost no longer grows with the
+    * generation count. */
   def queryBatch(batch: Array[(Long, Array[Float])], k: Int, searchWidth: Int,
       maxBatch: Int = 100000): DataFrame = {
-    val members = (base +: generations).filter(_.meta.nonEmpty)
-    val spark = base.rows.sparkSession
-    import spark.implicits._
-    if (members.isEmpty) {
-      return spark.emptyDataset[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "distance")
-    }
-    if (members.size == 1 && tombstones.isEmpty)
-      return members.head.queryBatch(batch, k, searchWidth, maxBatch)
-    if (batch.isEmpty) {
-      return spark.emptyDataset[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "distance")
-    }
-    // the fused path broadcasts the raw chunk straight into
-    // probePartition, bypassing VectorIndex.queryBatch's query transform —
-    // apply it here (cosine normalization / MIPS zero-augmentation;
-    // members all share base.params; the single-member shortcut above
-    // delegates and must NOT be pre-transformed or the vector would be
-    // transformed twice)
-    val normBatch =
-      if (base.params.transformsInput)
-        batch.map { case (id, v) => (id, base.params.transformQueryVector(v)) }
-      else batch
-    // kernel-level liveness filter (see query()) — each shard returns
-    // its exact live top-k, no tombstone overfetch
-    val live = liveFilter
-    // member m owns union partitions [offsets(m), offsets(m+1))
-    val offsets = members.map(_.numShards).scanLeft(0)(_ + _).toArray
-    val memberInfo = members.map(m =>
-      (m.indexId, m.params, m.meta.map(x => x.sub_index_id -> x).toMap)).toArray
-    val bcInfo = spark.sparkContext.broadcast((offsets, memberInfo))
-    val union = members.map(_.probeLayout).reduce(_ union _)
-    val candidateChunks = normBatch.grouped(math.max(maxBatch, 1)).map { chunk =>
-      val bcQueries = spark.sparkContext.broadcast(chunk)
-      val rdd = union.mapPartitions { rit =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val (offs, info) = bcInfo.value
-        var m = 0
-        while (m + 1 < offs.length && offs(m + 1) <= pid) m += 1
-        val (iid, params, metaMap) = info(m)
-        VectorIndex.probePartition(
-          rit, iid, pid - offs(m), params, metaMap, bcQueries.value, k, searchWidth,
-          live)
-      }
-      spark.createDataset(rdd).toDF("query_id", "distance", "neighbor_id")
-    }.toSeq
-    mergeMembers(candidateChunks, k)
+    val members = probeMembers
+    if (members.isEmpty) VectorIndex.resultFrame(probeSession, Nil)
+    else VectorIndex.probeLazy(members, batch, k, Array(searchWidth), maxBatch, liveFilter)
   }
 
   override def probeBatch(
       batch: Array[(Long, Array[Float])], k: Int, searchWidth: Int): DataFrame =
     queryBatch(batch, k, searchWidth)
+
+  /** The base and every generation that holds a shard. */
+  private def probeMembers: Seq[VectorIndex] = (base +: generations).filter(_.meta.nonEmpty)
 
   /** The tombstone set as ONE broadcast sorted primitive array, created
     * lazily on first probe and shared by every subsequent query on this
@@ -386,17 +338,6 @@ final class LsmVectorIndex private (
     if (tombstones.isEmpty) return null
     val bc = tombstoneBc
     gid => java.util.Arrays.binarySearch(bc.value, gid) < 0
-  }
-
-  private def mergeMembers(perMember: Seq[DataFrame], k: Int): DataFrame = {
-    // no tombstone post-filter here: both callers thread the kernel
-    // liveness filter into every member probe, so no dead id can reach
-    // the merge — an isInCollection belt would re-serialize the whole
-    // tombstone set into every task's plan for zero filtering effect
-    val union = perMember
-      .map(_.select(col("query_id"), col("distance"), col("neighbor_id")))
-      .reduce(_ union _)
-    TopK.topKMerge(union, k)
   }
 
   /** Total vectors across base + generations. */

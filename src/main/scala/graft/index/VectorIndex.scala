@@ -181,13 +181,15 @@ case class WidthCalibration(searchWidth: Int, targetRecall: Double, k: Int,
   *
   * Query: broadcast the query batch, probe every shard (the *intended*
   * multi-shard semantics of the commented `query_with_sub_index`,
-  * dehnsw.h:532-587), then one partial/final top-k merge instead of the
-  * reference's sequential distance-bound (deliberate divergence, SURVEY
-  * §2.1 O7 — a shared bound would serialize shard visits).
+  * dehnsw.h:532-587), then one top-k merge of the per-shard top-k instead
+  * of the reference's sequential distance-bound (deliberate divergence,
+  * SURVEY §2.1 O7 — a shared bound would serialize shard visits). The
+  * merge runs on the driver for small batches and as a shuffle for large
+  * ones.
   *
   * Scale notes: each task holds one shard's adjacency (size subIndexBound —
-  * pick it from executor memory); candidates shuffled are O(queries x
-  * shards x k) via TopKByDistance, never O(rows).
+  * pick it from executor memory); candidates merged are O(queries x
+  * shards x k), never O(rows).
   */
 class VectorIndex private (
     val params: IndexParams,
@@ -221,27 +223,25 @@ class VectorIndex private (
     * dehnsw.h:300-307): 0 = exact (per-shard brute-force scan — guaranteed
     * exhaustive, a strict strengthening of the reference's
     * connected-component walk); > 0 = ANN beam with early termination.
-    * Returns (query_id, rank, neighbor_id, distance). */
-  /** @param maxBatch query vectors broadcast per pass; bigger batches are
-    *                 chunked so a single broadcast never exceeds
-    *                 maxBatch x dim floats (executor-memory safety at
-    *                 scale), with all chunks merged in one final top-k. */
-  def query(queries: DataFrame, k: Int, searchWidth: Int, maxBatch: Int = 100000): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val qds = queries
-      .select(col("query_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    // routing probe collects ONLY ids (column-pruned scan, 8 bytes/row
-    // bounded at maxBatch+1) — collecting whole rows here would ship up
-    // to maxBatch query VECTORS to the driver just to count them. Small
-    // batches then pay one more (full) collect; big batches never
-    // transit the driver at all — the driverless shuffled probe is also
-    // ~3x faster than chunked broadcasts at 200k queries.
-    val probeCount = qds.select(col("query_id")).limit(maxBatch + 1).count()
-    if (probeCount <= maxBatch) queryBatch(qds.collect().sortBy(_._1), k, searchWidth, maxBatch)
-    else queryDistributed(queries, k, searchWidth)
-  }
+    * Returns (query_id, rank, neighbor_id, distance).
+    *
+    * Routing: one `limit(maxBatch + 1)` collect. A batch of at most
+    * `maxBatch` queries is answered EAGERLY, before this returns: one
+    * Spark job probes every shard, each task ships at most k candidates
+    * per query, and the driver merges them into the final top-k
+    * ([[VectorIndex.probeNow]]). The result is a local relation, so
+    * collecting it runs no further job. The driver then holds at most
+    * `maxBatch` query vectors and `maxBatch × k` result rows. The batch
+    * is validated there first: a missing, ragged or non-finite query
+    * vector throws an IllegalArgumentException naming its query id. A
+    * larger batch never transits the driver beyond that collect and is
+    * answered lazily by the driverless shuffled probe
+    * ([[queryDistributed]]). */
+  def query(queries: DataFrame, k: Int, searchWidth: Int, maxBatch: Int = 100000): DataFrame =
+    VectorIndex.routeBatch(queries, maxBatch) match {
+      case Some(batch) => VectorIndex.probeNow(Seq(this), batch, k, searchWidth, maxBatch, null)
+      case None => queryDistributed(queries, k, searchWidth)
+    }
 
   /** Two-stage REFINED probe — the quantization-ceiling breaker: stage 1
     * pulls a per-query pool of `pool` candidates from this index
@@ -327,44 +327,14 @@ class VectorIndex private (
     }
   }
 
-  /** Query vectors transformed iff the index transforms at its API
-    * boundary (cosine normalization / MIPS zero-augmentation) — the
-    * probe-side half of the contract (corpus rows were transformed once
-    * at build/append ingest). */
-  @inline private def normalizeQuery(v: Array[Float]): Array[Float] =
-    params.transformQueryVector(v)
-
-  /** Probe with an already-materialized query batch (no collect) — used by
-    * the optimizer rewrite, where the query vector is a plan literal. */
+  /** Probe with an already-materialized query batch, LAZILY (no job
+    * runs until the result is consumed) — the [[AnnProbe.probeBatch]]
+    * face the optimizer rewrite splices in. Batches over `maxBatch` are
+    * broadcast in chunks, with all chunks merged in one final top-k. */
   def queryBatch(
       queryBatch: Array[(Long, Array[Float])], k: Int, searchWidth: Int,
-      maxBatch: Int = 100000): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    if (queryBatch.isEmpty) {
-      return spark.emptyDataset[(Long, Int, Long, Double)]
-        .toDF("query_id", "rank", "neighbor_id", "distance")
-    }
-    val bcMeta = spark.sparkContext.broadcast(meta.map(m => m.sub_index_id -> m).toMap)
-    val p = params
-    val iid = indexId
-    val normBatch = queryBatch.map { case (id, v) => (id, normalizeQuery(v)) }
-
-    val candidateChunks = normBatch.grouped(math.max(maxBatch, 1)).map { chunk =>
-      val bcQueries = spark.sparkContext.broadcast(chunk)
-      val rdd = probeLayout.mapPartitions { rit =>
-        // partition index == shard id; when the shard's graph is already
-        // resident in the executor cache, its rows are simply never
-        // consumed (cached blocks — skipping costs nothing)
-        val shardId = org.apache.spark.TaskContext.getPartitionId()
-        VectorIndex.probePartition(
-          rit, iid, shardId, p, bcMeta.value, bcQueries.value, k, searchWidth)
-      }
-      spark.createDataset(rdd).toDF("query_id", "distance", "neighbor_id")
-    }.toSeq
-
-    TopK.topKMerge(candidateChunks.reduce(_ union _), k)
-  }
+      maxBatch: Int = 100000): DataFrame =
+    VectorIndex.probeLazy(Seq(this), queryBatch, k, Array(searchWidth), maxBatch, null)
 
   /** Probe the same query batch at SEVERAL beam widths in one pass —
     * the recall-sweep shape (v8 oracle, [[graft.Sweep]]): per shard the
@@ -385,37 +355,10 @@ class VectorIndex private (
       return spark.emptyDataset[(Int, Long, Int, Long, Double)]
         .toDF("search_width", "query_id", "rank", "neighbor_id", "distance")
     }
-    val bcMeta = spark.sparkContext.broadcast(meta.map(m => m.sub_index_id -> m).toMap)
-    val p = params
-    val iid = indexId
     val widthArr = widths.toArray
-    val normed = batch.map { case (id, v) => (id, normalizeQuery(v)) }
-    // width index rides in the low bits of a synthetic query id so the
-    // per-(query, width) top-k merge reuses the scalar machinery
-    val candidateChunks = normed.grouped(math.max(maxBatch, 1)).map { chunk =>
-      val bcQueries = spark.sparkContext.broadcast(chunk)
-      val rdd = probeLayout.mapPartitions { rit =>
-        val shardId = org.apache.spark.TaskContext.getPartitionId()
-        val g = VectorIndex.shardGraphFor(rit, iid, shardId, p, bcMeta.value)
-        if (g == null) Iterator.empty
-        else {
-          val graph = g
-          graph.synchronized {
-            bcQueries.value.toArray.flatMap { case (qid, qvec) =>
-              widthArr.indices.flatMap { wi =>
-                val sw = widthArr(wi)
-                val topk =
-                  if (sw <= 0) graph.bruteForceTopK(qvec, k)
-                  else graph.queryTopK(qvec, k, sw)
-                topk.map { case (d, gid) => (qid * w + wi, d, gid) }
-              }
-            }.iterator
-          }
-        }
-      }
-      spark.createDataset(rdd).toDF("query_id", "distance", "neighbor_id")
-    }.toSeq
-    TopK.topKMerge(candidateChunks.reduce(_ union _), k)
+    // the merge runs per (query, width): the width index rides in the low
+    // bits of the synthetic query id the probe emits (query_id * w + wi)
+    VectorIndex.probeLazy(Seq(this), batch, k, widthArr, maxBatch, null)
       .select(
         element_at(typedLit(widthArr), (col("query_id") % w).cast("int") + 1)
           .as("search_width"),
@@ -787,12 +730,6 @@ object VectorIndex {
     (hits.toMap.withDefaultValue(0), gt.size)
   }
 
-  /** One shard's probe: rehydrate (or cache-hit) the graph from the
-    * partition's rows and run every query of the broadcast batch against
-    * it — the per-partition body shared by the broadcast probe and the
-    * fused multi-member LSM probe. The graph carries reusable search
-    * scratch, so probes serialize on it and materialize INSIDE the lock
-    * (a lazy iterator would escape it). */
   /** Resolve the resident graph for a shard, rehydrating STREAMING from
     * the row iterator on a cache miss (one row live at a time — never a
     * materialized row buffer beside the graph; the buffered form OOM'd
@@ -818,24 +755,160 @@ object VectorIndex {
     }
   }
 
-  private[index] def probePartition(
-      rit: Iterator[IndexRow], iid: String, shardId: Int, params: IndexParams,
-      metaMap: Map[Int, ShardMeta], queries: Array[(Long, Array[Float])],
-      k: Int, searchWidth: Int,
-      live: Long => Boolean = null): Iterator[(Long, Double, Long)] = {
-    val g = shardGraphFor(rit, iid, shardId, params, metaMap)
-    if (g == null) Iterator.empty // shard holds no vectors
+  /** A local (query_id, rank, neighbor_id, distance) relation. */
+  private[index] def resultFrame(spark: SparkSession,
+      rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("query_id", LongType, nullable = false),
+      StructField("rank", IntegerType, nullable = false),
+      StructField("neighbor_id", LongType, nullable = false),
+      StructField("distance", DoubleType, nullable = false))))
+  }
+
+  /** Collect at most `maxBatch + 1` rows of a query relation: the batch,
+    * validated and sorted by id, when it holds at most `maxBatch`
+    * queries; None when it is larger (the caller then probes without the
+    * driver). */
+  private[index] def routeBatch(queries: DataFrame, maxBatch: Int)
+      : Option[Array[(Long, Array[Float])]] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val head = queries
+      .select(col("query_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])].limit(maxBatch + 1).collect()
+    if (head.length > maxBatch) None
     else {
-      val graph = g
-      graph.synchronized {
-        queries.toArray.flatMap { case (qid, qvec) =>
-          val topk =
-            if (searchWidth <= 0) graph.bruteForceTopK(qvec, k, live)
-            else graph.queryTopK(qvec, k, searchWidth, live)
-          topk.map { case (d, gid) => (qid, d, gid) }
-        }.iterator
-      }
+      val batch = head.sortBy(_._1)
+      validateQueries(batch)
+      Some(batch)
     }
+  }
+
+  /** Reject a query vector the kernel would answer wrongly: a missing
+    * embedding, one whose length differs from the batch's first (ragged),
+    * or a NaN/infinite component — which would poison every shard's
+    * distance order. The message names the query id. */
+  private[index] def validateQueries(batch: Array[(Long, Array[Float])]): Unit =
+    batch.foreach { case (id, v) =>
+      require(v != null, s"query $id has no embedding")
+      val (firstId, first) = batch(0) // checked non-null on the first pass
+      require(v.length == first.length,
+        s"ragged query batch: query $id has ${v.length} components, " +
+          s"query $firstId has ${first.length}")
+      val bad = v.indexWhere(x => !java.lang.Float.isFinite(x))
+      require(bad < 0, s"query $id has a non-finite component ${v(bad)} at index $bad")
+    }
+
+  /** One task's candidates for a broadcast query chunk, as parallel
+    * primitive arrays; `slots(j)` = query position × |widths| + width
+    * position. At most k candidates per slot. */
+  private[index] final case class ShardCandidates(
+      slots: Array[Int], dists: Array[Double], ids: Array[Long])
+
+  /** The per-shard candidate core of every broadcast probe. The probe
+    * layouts of `members` are unioned (a narrow concatenation; a single
+    * index is its own layout), and each task maps its partition back to
+    * (member, shard), rehydrates or cache-hits that shard's graph and
+    * probes every query of the chunk at every width, `live` dropping
+    * deleted ids inside the kernel. The graph carries reusable search
+    * scratch, so probes serialize on it. Every partition yields exactly
+    * one [[ShardCandidates]]. */
+  private[index] def shardCandidates(
+      members: Seq[VectorIndex],
+      chunk: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]],
+      k: Int, widths: Array[Int], live: Long => Boolean)
+      : org.apache.spark.rdd.RDD[ShardCandidates] = {
+    val offsets = members.map(_.numShards).scanLeft(0)(_ + _).toArray
+    val info = members.map(m =>
+      (m.indexId, m.params, m.meta.map(x => x.sub_index_id -> x).toMap)).toArray
+    // the partition index of the layout union itself — not the task's
+    // partition id, which counts from the start of any union of chunks
+    members.map(_.probeLayout).reduce(_ union _).mapPartitionsWithIndex { (pid, rit) =>
+      var m = 0
+      while (offsets(m + 1) <= pid) m += 1
+      val (iid, params, metaMap) = info(m)
+      val g = shardGraphFor(rit, iid, pid - offsets(m), params, metaMap)
+      val slots = new mutable.ArrayBuilder.ofInt
+      val dists = new mutable.ArrayBuilder.ofDouble
+      val ids = new mutable.ArrayBuilder.ofLong
+      if (g != null) g.synchronized {
+        var s = 0
+        for ((_, q) <- chunk.value; w <- widths) {
+          val topk =
+            if (w <= 0) g.bruteForceTopK(q, k, live)
+            else g.queryTopK(q, k, w, live)
+          topk.foreach { case (d, gid) => slots += s; dists += d; ids += gid }
+          s += 1
+        }
+      }
+      Iterator.single(ShardCandidates(slots.result(), dists.result(), ids.result()))
+    }
+  }
+
+  /** Answer a driver-held query batch NOW: for each chunk, ONE Spark job
+    * over the members' shards, whose task results (at most k candidates
+    * per query) are merged into one [[graft.operators.TopKBuffer]] per
+    * query id as each task finishes — the same (distance, id) order as
+    * the SQL merge. Returns a local relation: consuming it runs no job.
+    * A chunk holds at most `maxChunk` queries, and few enough that one
+    * job's task results (queries × k × partitions × ~24 B) stay within a
+    * quarter of `spark.driver.maxResultSize`. */
+  private[graft] def probeNow(
+      members: Seq[VectorIndex], batch: Array[(Long, Array[Float])], k: Int,
+      searchWidth: Int, maxChunk: Int, live: Long => Boolean): DataFrame = {
+    val spark = members.head.rows.sparkSession
+    val sc = spark.sparkContext
+    val params = members.head.params
+    val qids = batch.map(_._1).distinct.sorted
+    val bufs = qids.map(_ => new graft.operators.TopKBuffer(k))
+    val resultLimit = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val perQuery = 24L * math.max(1, k * members.map(_.numShards).sum)
+    val chunkSize = math.max(1L, math.min(maxChunk.toLong,
+      if (resultLimit <= 0) Long.MaxValue else resultLimit / 4 / perQuery)).toInt
+    batch.grouped(chunkSize).foreach { raw =>
+      val chunk = raw.map { case (id, v) => (id, params.transformQueryVector(v)) }
+      val slot = chunk.map(q => java.util.Arrays.binarySearch(qids, q._1))
+      val rdd = shardCandidates(members, sc.broadcast(chunk), k, Array(searchWidth), live)
+      sc.runJob(rdd, (it: Iterator[ShardCandidates]) => it.next(),
+        (_: Int, c: ShardCandidates) => c.slots.indices.foreach { j =>
+          bufs(slot(c.slots(j))).insert(c.dists(j), c.ids(j))
+        })
+    }
+    resultFrame(spark, qids.indices.flatMap { i =>
+      bufs(i).sortedPairs.iterator.zipWithIndex.map {
+        case ((d, id), r) => org.apache.spark.sql.Row(qids(i), r + 1, id, d)
+      }
+    })
+  }
+
+  /** The LAZY form of [[probeNow]]: the same candidate core, merged by
+    * the SQL top-k ([[TopK.topKMerge]]), and no job runs until the result
+    * is consumed. Candidates carry the synthetic id query_id × |widths| +
+    * width position, so the merge is per (query, width). Batches over
+    * `maxBatch` are broadcast in chunks. */
+  private[index] def probeLazy(
+      members: Seq[VectorIndex], batch: Array[(Long, Array[Float])], k: Int,
+      widths: Array[Int], maxBatch: Int, live: Long => Boolean): DataFrame = {
+    val spark = members.head.rows.sparkSession
+    import spark.implicits._
+    if (batch.isEmpty) return resultFrame(spark, Nil)
+    val params = members.head.params
+    val w = widths.length
+    val candidateChunks = batch.grouped(math.max(maxBatch, 1)).map { raw =>
+      val bc = spark.sparkContext.broadcast(
+        raw.map { case (id, v) => (id, params.transformQueryVector(v)) })
+      val rdd = shardCandidates(members, bc, k, widths, live).flatMap { c =>
+        val qs = bc.value
+        c.slots.indices.iterator.map { j =>
+          val s = c.slots(j)
+          (qs(s / w)._1 * w + s % w, c.dists(j), c.ids(j))
+        }
+      }
+      spark.createDataset(rdd).toDF("query_id", "distance", "neighbor_id")
+    }.toSeq
+    TopK.topKMerge(candidateChunks.reduce(_ union _), k)
   }
 
   /** Small-file IO through the Hadoop FS API so index metadata lands on

@@ -59,16 +59,9 @@ object StreamingOps {
       drain(q)
     }
 
-  /** Drain a finite streaming query: process every available batch, then
-    * stop. With `-Dgraft.stream.profile` set, the per-batch engine timing
-    * breakdown (StreamingQueryProgress.durationMs: triggerExecution,
-    * queryPlanning, getBatch, addBatch, walCommit, commitOffsets) is
-    * printed to stderr before the query stops — the measurement the
-    * micro-batch fixed-cost work is driven by (guide §1). Dev-only flag;
-    * zero cost when unset. */
-  /** Scoped leg timer for the same `-Dgraft.stream.profile` flag: prints
-    * the wall time of one named leg of a batch body (dev-only; a plain
-    * pass-through when the flag is unset). */
+  /** Scoped leg timer for the `-Dgraft.stream.profile` flag of
+    * [[drain]]: prints the wall time of one named leg of a batch body
+    * (dev-only; a plain pass-through when the flag is unset). */
   private[graft] def timeLeg[T](tag: String)(f: => T): T =
     if (!sys.props.contains("graft.stream.profile")) f
     else {
@@ -78,6 +71,13 @@ object StreamingOps {
       r
     }
 
+  /** Drain a finite streaming query: process every available batch, then
+    * stop. With `-Dgraft.stream.profile` set, the per-batch engine timing
+    * breakdown (StreamingQueryProgress.durationMs: triggerExecution,
+    * queryPlanning, getBatch, addBatch, walCommit, commitOffsets) is
+    * printed to stderr before the query stops — the measurement the
+    * micro-batch fixed-cost work is driven by (guide §1). Dev-only flag;
+    * zero cost when unset. */
   private[graft] def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
     try {
       q.processAllAvailable()

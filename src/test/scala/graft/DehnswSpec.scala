@@ -189,6 +189,20 @@ class DehnswSpec extends AnyFunSuite with SparkSuite {
     assert(b.exceptAll(a).count() === 0)
   }
 
+  test("work counter: a warm 100-query broadcast probe runs exactly one Spark job") {
+    import spark.implicits._
+    // a local 100-query batch: routing it runs no job, so the one job is
+    // the probe itself (the top-k merge runs on the driver)
+    val q100 = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 100)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+      .toDF("query_id", "embedding")
+    val warm = index.query(q100, 10, 32).collect()
+    val (res, jobs) = jobsDuring(index.query(q100, 10, 32).collect())
+    assert(jobs == 1, s"warm query ran $jobs jobs")
+    assert(res.length == 1000 && res.toSeq == warm.toSeq)
+  }
+
   test("empty corpus builds an empty index and answers queries with 0 rows") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Array[Float])].toDF("id", "embedding")

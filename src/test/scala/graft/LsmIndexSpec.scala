@@ -406,6 +406,22 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
     gen1.unpersist(); gen2.unpersist(); base.unpersist()
   }
 
+  test("work counter: a warm fused probe with tombstones runs exactly one Spark job") {
+    import spark.implicits._
+    val lsm = LsmVectorIndex(baseIdx, compactThreshold = 1000000)
+      .ingest(slice(300, 350)).ingest(slice(350, 400)).delete(Seq(20L, 310L, 360L))
+    assert(lsm.generations.size == 2)
+    val q = emb.filter(col("vec_id") < 100).select(col("vec_id"), col("embedding"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+      .toDF("query_id", "embedding")
+    val warm = lsm.query(q, 10, 32).collect()
+    val (res, jobs) = jobsDuring(lsm.query(q, 10, 32).collect())
+    assert(jobs == 1, s"warm fused query ran $jobs jobs")
+    assert(res.length == 1000 && res.toSeq == warm.toSeq)
+    assert(!res.exists(r => lsm.tombstones.contains(r.getLong(2))))
+    lsm.unpersist()
+  }
+
   test("delete: idempotent, unknown ids are no-ops, auto-purge at threshold") {
     val lsm = LsmVectorIndex(baseIdx, compactThreshold = 1000000,
       deleteThreshold = 8)

@@ -114,14 +114,20 @@ class MultiVectorSpec extends AnyFunSuite with SparkSuite {
 
   test("ANN stage 1 plans as an index probe, never a corpus-token scan join") {
     // v39's exact stage 1 is a broadcast cross join (every query token x
-    // every corpus token); the ANN form must instead route candidates
-    // through the probe's partial/final top-k — no nested-loop or
-    // cartesian join anywhere in the plan
+    // every corpus token); the ANN form must instead take its candidates
+    // from the index probe — whose answer is a local (query_id, rank,
+    // neighbor_id, distance) relation, a leaf no corpus-token scan feeds —
+    // and no nested-loop or cartesian join may appear anywhere in the plan
     val (qv, cv) = v40Inputs
     val idx = Queries.tokenIndex(spark, sfDir)
-    val p = MultiVector.maxSimTopKAnn(qv, cv, idx, k = 5, m = 20, searchWidth = 8)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("topk_by_distance"), s"no index-probe top-k in:\n${p.take(3000)}")
+    val ann = MultiVector.maxSimTopKAnn(qv, cv, idx, k = 5, m = 20, searchWidth = 8)
+    val probes = ann.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if r.output.map(_.name) == Seq("query_id", "rank", "neighbor_id", "distance") => r
+    }
+    assert(probes.size == 1 && probes.head.data.nonEmpty,
+      s"stage 1 is not fed by the index probe:\n${ann.queryExecution.analyzed}")
+    val p = ann.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin"), s"stage 1 degraded to a scan join:\n${p.take(3000)}")
     assert(!p.contains("CartesianProduct"), s"stage 1 degraded to a cartesian:\n${p.take(3000)}")
   }

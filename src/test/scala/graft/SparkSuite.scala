@@ -21,4 +21,22 @@ object SparkSuite {
 trait SparkSuite {
   lazy val spark: SparkSession = SparkSuite.session
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Run `f` and count the Spark jobs it started (the work counter the
+    * probe specs pin). */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    val r = try {
+      val r = f
+      org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
+      r
+    } finally spark.sparkContext.removeSparkListener(l)
+    (r, jobs.get)
+  }
 }
