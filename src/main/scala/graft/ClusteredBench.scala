@@ -61,6 +61,28 @@ object ClusteredBench {
   private[graft] val CorpusSalt = 29L
   private[graft] val QuerySalt = 31L
 
+  /** The corpus.json identity: the generator knobs every phase and
+    * consumer main regenerates the corpus from. */
+  private[graft] def corpusIdentity(n: Long, dim: Int, nClusters: Int,
+      sigma: Float): String =
+    s"""{"n":$n,"dim":$dim,"n_clusters":$nClusters,""" +
+      s""""sigma":$sigma,"corpus_salt":$CorpusSalt}"""
+
+  /** Refuse a snapshot built from a different generated corpus than
+    * `corpusJson`: its recall would be measured against the wrong
+    * corpus. Legacy snapshots without corpus.json are trusted. */
+  private[graft] def requireCorpusMatch(spark: SparkSession,
+      snapPath: String, corpusJson: String): Unit = {
+    val found = VectorIndex.readSmallFile(spark, s"$snapPath/corpus.json")
+    if (found == null)
+      println(s"corpus identity: no corpus.json at $snapPath (legacy " +
+        "snapshot) — trusting the caller's generator args")
+    else require(found == corpusJson,
+      s"corpus identity mismatch: $snapPath was built from $found but " +
+        s"this run regenerates $corpusJson — every recall/latency " +
+        "number would be measured against the wrong corpus")
+  }
+
   /** Deterministic clustered vector for an id: one per-id RNG stream
     * (first draw picks the cluster, the rest is noise), one per-cluster
     * RNG for the center — regenerable anywhere, executor-side. */
@@ -236,30 +258,14 @@ object ClusteredBench {
       step = 4, quantized = true, quantLo = 0f, quantHi = 1f)
 
     // corpus identity sidecar — same contract class as IvfPqSnapshot's
-    // params.json: every phase regenerates the corpus from (n, dim,
-    // nClusters, sigma, salt), and measuring a snapshot against a
-    // DIFFERENTLY-generated corpus silently produces garbage (the probe
-    // returns the snapshot corpus's neighbors, the ground truth ranks
-    // the regenerated one's). The build phase records the generator
-    // knobs; every later phase refuses a mismatch. Legacy snapshots
-    // (pre-sidecar) are accepted as-is.
-    val corpusJson = s"""{"n":$n,"dim":$dim,"n_clusters":$nClusters,""" +
-      s""""sigma":$sigma,"corpus_salt":$CorpusSalt}"""
-    def requireCorpusMatch(): Unit = {
-      val found = VectorIndex.readSmallFile(spark, s"$snapPath/corpus.json")
-      if (found == null)
-        println(s"corpus identity: no corpus.json at $snapPath (legacy " +
-          "snapshot) — trusting the caller's generator args")
-      else require(found == corpusJson,
-        s"corpus identity mismatch: $snapPath was built from $found but " +
-          s"this run regenerates $corpusJson — every recall/latency " +
-          "number would be measured against the wrong corpus")
-    }
+    // params.json: the build phase records the generator knobs; every
+    // later phase refuses a mismatch
+    val corpusJson = corpusIdentity(n, dim, nClusters, sigma)
 
     // --- phase: build (skipped when the snapshot already exists) ---
     if (phases("build")) {
       if (new java.io.File(s"$snapPath/params.json").exists()) {
-        requireCorpusMatch()
+        requireCorpusMatch(spark, snapPath, corpusJson)
         println(s"build: snapshot already published at $snapPath — reusing")
       } else {
         println(s"build: $n x ${dim}d clustered (K=$nClusters, sigma=$sigma), " +
@@ -339,7 +345,7 @@ object ClusteredBench {
 
     // --- phase: graph (recall curve + width calibration + latency) ---
     if (phases("graph")) {
-      requireCorpusMatch()
+      requireCorpusMatch(spark, snapPath, corpusJson)
       val idx = VectorIndex.load(spark, snapPath, cache = false)
       println(s"graph: loaded ${idx.meta.map(_.n_vectors).sum} vectors, " +
         s"shards=${idx.numShards}")
@@ -387,7 +393,7 @@ object ClusteredBench {
     // allocation churn (humongous flat arrays under G1) is what OOM'd a
     // combined run; measurement phases get fresh heaps.
     if (phases("serve")) {
-      requireCorpusMatch()
+      requireCorpusMatch(spark, snapPath, corpusJson)
       val idx = VectorIndex.load(spark, snapPath, cache = false)
       // honest labels: only the FIRST width's first batch is cold (shard
       // graphs + page cache persist across the loop) — later widths'
@@ -419,7 +425,7 @@ object ClusteredBench {
     // REFINE ceiling (SQ8 top-pool -> float rerank) beside it — the
     // knob that breaks the ceiling when calibration cannot.
     if (phases("ceiling")) {
-      requireCorpusMatch()
+      requireCorpusMatch(spark, snapPath, corpusJson)
       val (cLo, cHi) = VectorIndex.calibrateQuantRange(corpus)
       println(f"calibrateQuantRange over the corpus: [$cLo%.6f, $cHi%.6f]")
       def recallOf(rows: Set[(Long, Long)]): Double =
@@ -463,7 +469,7 @@ object ClusteredBench {
     // Run it in its own JVM with all shards resident (same discipline as
     // the serve phase) for honest warm numbers.
     if (phases("faces")) {
-      requireCorpusMatch()
+      requireCorpusMatch(spark, snapPath, corpusJson)
       // force the float GT FIRST, while no shard graphs are resident:
       // it is a corpus-sized fused scan, and running it lazily after the
       // warm-ups measured it on a heap already holding all 128 graphs
@@ -568,7 +574,7 @@ object ClusteredBench {
 
     // --- phase: ivfpq (global vs residual codebooks, same GT) ---
     if (phases("ivfpq")) {
-      requireCorpusMatch()
+      requireCorpusMatch(spark, snapPath, corpusJson)
       val numCents = ivfCents; val m = pqM; val codewords = 256
       val stride = math.max(1L, n / 100000L)
       val sample = corpus.filter(pmod(col("id"), lit(stride)) === 0)

@@ -53,26 +53,13 @@ object FaceServeBench {
     import spark.implicits._
 
     val snapPath = if (graphM == 4) s"$dir/graph" else s"$dir/graph_m$graphM"
-    // corpus identity gate (the ClusteredBench discipline): this main
-    // REGENERATES corpus + queries from its CLI knobs, so a knob that
-    // disagrees with the snapshot's recorded generator (e.g. the
-    // nClusters=10000 default against a K=100000 decade snapshot)
-    // produces self-consistent but silently wrong recall numbers — the
-    // exact incident corpus.json exists to prevent (SCALE.md r19).
-    // Refuse the mismatch; legacy snapshots without the sidecar are
-    // trusted, matching ClusteredBench.
-    locally {
-      val corpusJson = s"""{"n":$n,"dim":$dim,"n_clusters":$nClusters,""" +
-        s""""sigma":$sigma,"corpus_salt":${ClusteredBench.CorpusSalt}}"""
-      val found = VectorIndex.readSmallFile(spark, s"$snapPath/corpus.json")
-      if (found == null)
-        println(s"corpus identity: no corpus.json at $snapPath (legacy " +
-          "snapshot) — trusting the caller's generator args")
-      else require(found == corpusJson,
-        s"corpus identity mismatch: $snapPath was built from $found but " +
-          s"this run regenerates $corpusJson — the served-recall numbers " +
-          "would be measured against the wrong corpus")
-    }
+    // corpus identity gate: this main REGENERATES corpus + queries from
+    // its CLI knobs, so a knob that disagrees with the snapshot's
+    // recorded generator (e.g. the nClusters=10000 default against a
+    // K=100000 decade snapshot) would produce self-consistent but
+    // silently wrong recall numbers (SCALE.md r19)
+    ClusteredBench.requireCorpusMatch(spark, snapPath,
+      ClusteredBench.corpusIdentity(n, dim, nClusters, sigma))
     val qdf = (0L until nQueries.toLong).map(id =>
         (id, ClusteredBench.clusteredVector(id, dim, nClusters, sigma,
           ClusteredBench.QuerySalt)))

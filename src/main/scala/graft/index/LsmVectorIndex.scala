@@ -357,10 +357,9 @@ final class LsmVectorIndex private (
   def save(path: String): Unit = {
     base.save(s"$path/base")
     generations.zipWithIndex.foreach { case (g, i) => g.save(s"$path/gen-$i") }
-    VectorIndex.writeSmallFile(base.rows.sparkSession, s"$path/lsm.json",
-      s"""{"generations":${generations.length},"compactThreshold":$compactThreshold,""" +
-        s""""genShardSize":$genShardSize,"deleteThreshold":$deleteThreshold,""" +
-        s""""tombstones":[${tombstones.toSeq.sorted.mkString(",")}]}""")
+    Sidecar.write(base.rows.sparkSession, s"$path/lsm.json",
+      Sidecar.LsmFile(generations.length, compactThreshold, genShardSize,
+        deleteThreshold, tombstones.toArray.sorted))
   }
 }
 
@@ -385,20 +384,10 @@ object LsmVectorIndex {
     * handle owns its members (unpersist/compaction may drop their
     * caches). */
   def load(spark: SparkSession, path: String): LsmVectorIndex = {
-    val manifest = VectorIndex.readSmallFile(spark, s"$path/lsm.json")
-    require(manifest != null, s"missing $path/lsm.json")
-    def field(key: String): Long =
-      s""""$key":\\s*(-?\\d+)""".r.findFirstMatchIn(manifest).get.group(1).toLong
-    val nGens = field("generations").toInt
+    val m = Sidecar.readRequired[Sidecar.LsmFile](spark, s"$path/lsm.json")
     val base = VectorIndex.load(spark, s"$path/base")
-    val gens = (0 until nGens).map(i => VectorIndex.load(spark, s"$path/gen-$i")).toVector
-    // optional fields: absent in manifests written before delete support
-    val ts = """"tombstones":\s*\[([^\]]*)\]""".r.findFirstMatchIn(manifest)
-      .map(_.group(1).split(',').filter(_.trim.nonEmpty).map(_.trim.toLong).toSet)
-      .getOrElse(Set.empty[Long])
-    val delThresh = """"deleteThreshold":\s*(-?\d+)""".r.findFirstMatchIn(manifest)
-      .map(_.group(1).toLong).getOrElse(Long.MaxValue)
-    new LsmVectorIndex(base, gens, field("compactThreshold"),
-      field("genShardSize"), ownsBase = true, ts, delThresh)
+    val gens = (0 until m.generations).map(i => VectorIndex.load(spark, s"$path/gen-$i")).toVector
+    new LsmVectorIndex(base, gens, m.compactThreshold, m.genShardSize,
+      ownsBase = true, m.tombstones.toSet, m.deleteThreshold)
   }
 }

@@ -105,28 +105,14 @@ case class ShardMeta(sub_index_id: Int, n_vectors: Long, layer_count: Int, entry
   * part [[FaceServer]] dispatches on, so it must survive a JSON
   * round-trip structurally, not as prose. */
 case class FaceArtifact(path: String, knobs: Map[String, String] = Map.empty) {
-  private def esc(s: String) =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-  /** Compact JSON object (keys sorted for deterministic bytes). */
-  def toJson: String =
-    s"""{"path":"${esc(path)}","knobs":{${
-      knobs.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
-        .mkString(",")}}}"""
+  /** Compact JSON object (knob keys sorted for deterministic bytes). */
+  def toJson: String = Sidecar.encode(this)
 }
 
 object FaceArtifact {
-  private def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
   /** Parse [[FaceArtifact.toJson]] output; None on anything else. */
-  def fromJson(json: String): Option[FaceArtifact] = {
-    val strPair = """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r
-    for {
-      p <- """"path":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(json)
-      kn <- VectorIndex.sliceBalanced(json, "knobs", '{', '}')
-    } yield FaceArtifact(unesc(p.group(1)),
-      strPair.findAllMatchIn(kn)
-        .map(m => unesc(m.group(1)) -> unesc(m.group(2))).toMap)
-  }
+  def fromJson(json: String): Option[FaceArtifact] =
+    scala.util.Try(Sidecar.decode[FaceArtifact](json)).toOption
 }
 
 /** One measured serving FACE of a published index pair: `face` names the
@@ -913,13 +899,35 @@ object VectorIndex {
 
   /** Small-file IO through the Hadoop FS API so index metadata lands on
     * the SAME filesystem as the parquet rows (hdfs://, s3a://, file:...) —
-    * java.nio would silently write a driver-local path for remote URIs. */
+    * java.nio would silently write a driver-local path for remote URIs.
+    * The bytes go to a `_` temp sibling (skipped by parquet readers and
+    * [[appendTo]]'s kept-file listing) renamed over `path`, so a failed
+    * write leaves the previous file whole. Locally that is one POSIX
+    * rename (FileContext's local rename deletes the target first, via
+    * forked shell calls), after dropping the old checksum file so no
+    * reader pairs it with the new bytes. */
   private[graft] def writeSmallFile(
       spark: SparkSession, path: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p0 = new org.apache.hadoop.fs.Path(path)
+    val fs = p0.getFileSystem(conf)
+    val p = fs.makeQualified(p0)
+    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
+      s"_${p.getName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      val out = fs.create(tmp, false)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+      if (p.toUri.getScheme == "file") {
+        import java.nio.file.{Files, Paths, StandardCopyOption}
+        def nio(q: org.apache.hadoop.fs.Path) = Paths.get(q.toUri)
+        def crc(q: org.apache.hadoop.fs.Path) =
+          Paths.get(q.getParent.toUri).resolve(s".${q.getName}.crc")
+        Files.deleteIfExists(crc(p))
+        Files.move(nio(tmp), nio(p), StandardCopyOption.ATOMIC_MOVE)
+        if (Files.exists(crc(tmp))) Files.move(crc(tmp), crc(p), StandardCopyOption.ATOMIC_MOVE)
+      } else org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
+        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    } catch { case e: Throwable => fs.delete(tmp, false); throw e }
   }
 
   /** Hardlink `src` to `dst` when both ends are local filesystems (zero
@@ -959,36 +967,20 @@ object VectorIndex {
     * .HybridRetrieval.serveFromSnapshots]] and graft.ProbeBench. */
   val CalibratedWidth: Int = Int.MinValue
 
-  /** Persist a [[WidthCalibration]] beside a snapshot's params.json.
-    * Doubles serialize via toString (shortest round-trip — reparsing
-    * yields identical bits). */
+  /** Persist a [[WidthCalibration]] beside a snapshot's params.json
+    * ([[Sidecar.CalibrationFile]]). */
   def writeCalibration(spark: SparkSession, path: String,
       cal: WidthCalibration): Unit =
-    writeSmallFile(spark, s"$path/calibration.json",
-      s"""{"search_width":${cal.searchWidth},""" +
-        s""""target_recall":${cal.targetRecall},"k":${cal.k},""" +
-        s""""sample_recall":${cal.sampleRecall},""" +
-        s""""curve":[${cal.curve.map(c => s"[${c._1},${c._2}]").mkString(",")}]""" +
-        (if (cal.faces.isEmpty) "}"
-         else s""","faces":[${cal.faces.map { f =>
-             def q(s: String) =
-               "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-             // the structured ref rides as a 7th/6th ESCAPED-JSON string
-             // element (same escaping as the free-text artifact — the
-             // reader's quoted-group regex handles both); a ref with an
-             // empty artifact still writes the artifact slot so element
-             // positions stay unambiguous
-             s"""["${f.face}",${f.param},${f.recall},${f.msPerQuery}""" +
-               (if (f.artifact.isEmpty && f.ref.isEmpty) "]"
-                else s",${q(f.artifact)}" +
-                  f.ref.map(r => s",${q(r.toJson)}]").getOrElse("]"))
-           }.mkString(",")}]}"""))
+    Sidecar.write(spark, s"$path/calibration.json", Sidecar.CalibrationFile(
+      cal.searchWidth, cal.targetRecall, cal.k, cal.sampleRecall,
+      cal.curve.map { case (w, r) => Sidecar.CurvePoint(w, r) },
+      cal.faces.map(f => Sidecar.FaceEntry(f.face, f.param, f.recall,
+        f.msPerQuery, f.artifact, f.ref.map(_.toJson).getOrElse("")))))
 
   /** Read a snapshot's persisted calibration; None when never calibrated
-    * OR when the sidecar is truncated/corrupt (writeCalibration is not
-    * atomic — a half-written file must degrade to the exact-scan
-    * fallback the absent-file path already models, never crash a
-    * serving process). */
+    * OR when the sidecar is truncated/corrupt (a half-written file must
+    * degrade to the exact-scan fallback the absent-file path already
+    * models, never crash a serving process). */
   def readCalibration(spark: SparkSession, path: String)
       : Option[WidthCalibration] = {
     // the READ is outside the catch: a transient store error must stay a
@@ -997,62 +989,14 @@ object VectorIndex {
     // calibrated serve to a corpus-wide exact scan)
     val json = readSmallFile(spark, s"$path/calibration.json")
     if (json == null) return None
-    try {
-      def num(k: String) =
-        (s""""$k":\\s*(-?[0-9.Ee+-]+)""").r.findFirstMatchIn(json).get.group(1)
-      // the regexes apply to the SLICED "curve" / "faces" array
-      // substrings, never the whole document — a free-text artifact
-      // containing a bracketed numeric pattern like [8,0.5] (a snapshot
-      // path, a knob note) must not be mis-parsed as a curve point
-      val curveJson = sliceBalanced(json, "curve", '[', ']').get
-      val curve = """\[(\d+),([-0-9.Ee+]+)\]""".r.findAllMatchIn(curveJson)
-        .map(m => (m.group(1).toInt, m.group(2).toDouble)).toSeq
-      // the face table is optional (pre-face sidecars parse unchanged).
-      // Trailing quoted elements are optional too: 4-element
-      // (pre-artifact), 5-element (free-text artifact only), 6-element
-      // (+ escaped structured-ref JSON) entries all parse
-      val facesJson = sliceBalanced(json, "faces", '[', ']').getOrElse("")
-      def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-      val faces = ("""\["(\w+)",(\d+),([-0-9.Ee+]+),([-0-9.Ee+]+)""" +
-          """(?:,"((?:[^"\\]|\\.)*)")?(?:,"((?:[^"\\]|\\.)*)")?\]""").r
-        .findAllMatchIn(facesJson)
-        .map(m => FacePoint(m.group(1), m.group(2).toInt,
-          m.group(3).toDouble, m.group(4).toDouble,
-          Option(m.group(5)).map(unesc).getOrElse(""),
-          Option(m.group(6)).map(unesc).flatMap(FaceArtifact.fromJson))).toSeq
-      Some(WidthCalibration(num("search_width").toInt,
-        num("target_recall").toDouble, num("k").toInt,
-        num("sample_recall").toDouble, curve, faces))
-    } catch { case _: Exception => None }
-  }
-
-  /** Slice the balanced `open`…`close` value of `"key":` out of a JSON
-    * document — string-aware (quotes and escapes inside the value never
-    * confuse the depth count), so regex-based field extraction can run
-    * on exactly the substring it targets. None when the key is absent
-    * or the value is truncated. */
-  private[graft] def sliceBalanced(json: String, key: String, open: Char,
-      close: Char): Option[String] = {
-    val at = json.indexOf(s""""$key":""")
-    if (at < 0) return None
-    val start = json.indexOf(open, at + key.length + 3)
-    if (start < 0) return None
-    var depth = 0; var i = start; var inStr = false; var escaped = false
-    while (i < json.length) {
-      val c = json.charAt(i)
-      if (inStr) {
-        if (escaped) escaped = false
-        else if (c == '\\') escaped = true
-        else if (c == '"') inStr = false
-      } else if (c == '"') inStr = true
-      else if (c == open) depth += 1
-      else if (c == close) {
-        depth -= 1
-        if (depth == 0) return Some(json.substring(start, i + 1))
+    scala.util.Try(Sidecar.decode[Sidecar.CalibrationFile](json)).toOption
+      .map { c =>
+        WidthCalibration(c.search_width, c.target_recall, c.k,
+          c.sample_recall, c.curve.map(p => (p.w, p.r)),
+          c.faces.map(f => FacePoint(f.face, f.param, f.recall, f.msPerQuery,
+            f.artifact, Some(f.ref).filter(_.nonEmpty)
+              .flatMap(FaceArtifact.fromJson))))
       }
-      i += 1
-    }
-    None
   }
 
   /** Read a small file via the Hadoop FS; null when absent. */
@@ -1393,25 +1337,16 @@ object VectorIndex {
   private[index] def writeMetaAndParams(
       spark: SparkSession, path: String, meta: Array[ShardMeta],
       p: IndexParams, numShards: Int, indexId: String): Unit = {
-    writeSmallFile(spark, s"$path/meta.json",
-      meta.map(m => s"""{"sub_index_id":${m.sub_index_id},"n_vectors":${m.n_vectors},""" +
-        s""""layer_count":${m.layer_count},"entry_offset":${m.entry_offset}}""")
-        .mkString("", "\n", "\n"))
+    Sidecar.writeLines(spark, s"$path/meta.json", meta.toSeq)
     // schedule as from:M:RM triples — build provenance AND an append
     // contract (append rebuilds shards with the same schedule)
     val sched = p.schedule
       .map(s => s"${s.fromCount}:${s.minimumConnect}:${s.relaxedMonotonicity}")
       .mkString(";")
-    val json =
-      s"""{"metric":"${p.metric.name}","minimumConnect":${p.minimumConnect},
-         |"relaxedMonotonicity":${p.relaxedMonotonicity},"step":${p.step},
-         |"subIndexBound":${p.subIndexBound},"numShards":$numShards,
-         |"schedule":"$sched",
-         |"quantized":${p.quantized},"quantLo":${p.quantLo},"quantHi":${p.quantHi},
-         |"normalizeForCosine":${p.normalizeForCosine},
-         |"augmentForMips":${p.augmentForMips},"mipsMaxNorm":${p.mipsMaxNorm},
-         |"indexId":"$indexId"}""".stripMargin
-    writeSmallFile(spark, s"$path/params.json", json)
+    Sidecar.write(spark, s"$path/params.json", Sidecar.IndexParamsFile(
+      p.metric.name, p.minimumConnect, p.relaxedMonotonicity, p.step,
+      p.subIndexBound, numShards, sched, p.quantized, p.quantLo, p.quantHi,
+      p.normalizeForCosine, p.augmentForMips, p.mipsMaxNorm, indexId))
   }
 
   /** Partition stub for [[ShardAlignedRDD]]: target index == shard id,
@@ -1548,10 +1483,8 @@ object VectorIndex {
     * pays is the last one any consumer of this snapshot pays. */
   def relayoutSharded(spark: SparkSession, path: String): Unit = {
     val rows = spark.read.parquet(s"$path/rows")
-    val paramsJson = readSmallFile(spark, s"$path/params.json")
-    require(paramsJson != null, s"missing $path/params.json")
-    val numShards = """"numShards":\s*(\d+)""".r.findFirstMatchIn(paramsJson)
-      .get.group(1).toInt
+    val numShards = Sidecar.readRequired[Sidecar.IndexParamsFile](spark,
+      s"$path/params.json").numShards
     rows.repartition(numShards, col("sub_index_id"))
       .write.mode("overwrite").partitionBy("sub_index_id")
       .parquet(s"$path/rows_sharded")
@@ -1656,54 +1589,32 @@ object VectorIndex {
     import spark.implicits._
     val rows0 = spark.read.parquet(s"$path/rows").as[IndexRow]
     val rows = if (cache) rows0.cache() else rows0
-    val metaText = readSmallFile(spark, s"$path/meta.json")
-    val meta =
-      if (metaText != null) {
-        def field(line: String, key: String): Long =
-          s""""$key":\\s*(-?\\d+)""".r.findFirstMatchIn(line).get.group(1).toLong
-        metaText.split("\n")
-          .filter(_.trim.nonEmpty)
-          .map(l => ShardMeta(field(l, "sub_index_id").toInt, field(l, "n_vectors"),
-            field(l, "layer_count").toInt, field(l, "entry_offset").toInt))
-          .sortBy(_.sub_index_id)
-      } else {
+    val meta = Sidecar.readLines[ShardMeta](spark, s"$path/meta.json")
+      .map(_.toArray.sortBy(_.sub_index_id))
+      .getOrElse {
         // older saves wrote meta as a Spark JSON directory
         spark.read.json(s"$path/meta")
           .select(col("sub_index_id").cast("int"), col("n_vectors").cast("long"),
             col("layer_count").cast("int"), col("entry_offset").cast("int"))
           .as[ShardMeta].collect().sortBy(_.sub_index_id)
       }
-    val paramsJson = readSmallFile(spark, s"$path/params.json")
-    require(paramsJson != null, s"missing $path/params.json")
-    def extract(key: String): String =
-      s""""$key":\\s*"?([^,"}]+)"?""".r.findFirstMatchIn(paramsJson).get.group(1)
-    val metric = DistanceMetric.all.find(_.name == extract("metric")).get
-    // optional (older saves lack the key; empty string = no schedule)
-    val schedule = """"schedule":\s*"([^"]*)"""".r.findFirstMatchIn(paramsJson)
-      .map(_.group(1)).getOrElse("")
-      .split(";").toSeq.filter(_.nonEmpty)
+    val pf = Sidecar.readRequired[Sidecar.IndexParamsFile](spark, s"$path/params.json")
+    val metric = DistanceMetric.all.find(_.name == pf.metric).getOrElse(
+      sys.error(s"$path/params.json: unknown metric '${pf.metric}'"))
+    val schedule = pf.schedule.split(";").toSeq.filter(_.nonEmpty)
       .map { t =>
         val Array(f, m, rm) = t.split(":")
         ParamStep(f.toInt, m.toInt, rm.toInt)
       }
-    // optional (older saves lack the keys; default = float storage)
-    def extractOpt(key: String): Option[String] =
-      s""""$key":\\s*"?([^,"}]+)"?""".r.findFirstMatchIn(paramsJson).map(_.group(1))
-    val params = IndexParams(metric, extract("minimumConnect").toInt,
-      extract("relaxedMonotonicity").toInt, extract("step").toInt,
-      extract("subIndexBound").toLong, schedule,
-      quantized = extractOpt("quantized").exists(_.toBoolean),
-      quantLo = extractOpt("quantLo").map(_.toFloat).getOrElse(-0.5f),
-      quantHi = extractOpt("quantHi").map(_.toFloat).getOrElse(0.5f),
-      normalizeForCosine = extractOpt("normalizeForCosine").exists(_.toBoolean),
-      augmentForMips = extractOpt("augmentForMips").exists(_.toBoolean),
-      mipsMaxNorm = extractOpt("mipsMaxNorm").map(_.toFloat).getOrElse(0f))
+    val params = IndexParams(metric, pf.minimumConnect, pf.relaxedMonotonicity,
+      pf.step, pf.subIndexBound, schedule, pf.quantized, pf.quantLo, pf.quantHi,
+      pf.normalizeForCosine, pf.augmentForMips, pf.mipsMaxNorm)
     // fresh cache identity per load: reusing the persisted id would let a
     // probe of the loaded index hit executor-cached graphs built from the
     // ORIGINAL in-memory index (same JVM), silently bypassing the loaded
     // rows — the save/load invariance gate must exercise the load path
-    val idx = new VectorIndex(params, extract("numShards").toInt, rows, meta,
-      extract("indexId") + "#load-" + java.util.UUID.randomUUID().toString)
+    val idx = new VectorIndex(params, pf.numShards, rows, meta,
+      pf.indexId + "#load-" + java.util.UUID.randomUUID().toString)
     // a relayoutSharded snapshot probes through the narrow aligned scan
     // (probeLayout fast path) — detected here so the handle knows its
     // layout; absence or a malformed layout degrades to the shuffle

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.index.Sidecar
 
 /** Hybrid lexical + dense retrieval fused with Reciprocal Rank Fusion
   * (Cormack, Clarke & Buettcher, SIGIR 2009): each leg produces a
@@ -265,11 +266,9 @@ object HybridRetrieval {
   private def writeBm25Stats(spark: org.apache.spark.sql.SparkSession,
       path: String, nDocs: Long, sumDl: Long, tokBuckets: Int,
       dfCapNum: Long, dfCapDen: Long): Unit =
-    graft.index.VectorIndex.writeSmallFile(spark, s"$path/stats.json",
-      s"""{"n_docs":$nDocs,"sum_dl":$sumDl,""" +
-        s""""avgdl":${if (nDocs > 0) sumDl.toDouble / nDocs else 0.0},""" +
-        s""""tok_buckets":$tokBuckets,""" +
-        s""""df_cap_num":$dfCapNum,"df_cap_den":$dfCapDen}""")
+    Sidecar.write(spark, s"$path/stats.json", Sidecar.Bm25StatsFile(nDocs,
+      Some(sumDl), if (nDocs > 0) sumDl.toDouble / nDocs else 0.0,
+      Some(tokBuckets), dfCapNum, dfCapDen))
 
   /** A loaded [[saveBm25Index]] snapshot's pieces: uncapped posting and
     * df frames, the serve-time df cap value (n_docs x num/den — already
@@ -305,17 +304,13 @@ object HybridRetrieval {
     org.apache.spark.sql.types.StructField("tok_bkt",
       org.apache.spark.sql.types.IntegerType)))
 
-  /** True when the stats.json CONTENT describes a SPLIT (df-side-table)
-    * snapshot — the ONE format sniff shared by every load/serve dispatch
-    * site. The string overload lets a caller that already read the
-    * sidecar avoid a second store round-trip. */
-  private[graft] def isSplitSnapshot(json: String): Boolean =
-    json != null && json.contains("\"sum_dl\"")
-
+  /** True when the snapshot's stats.json describes a SPLIT (df-side-table)
+    * layout — the ONE format sniff shared by every load/serve dispatch
+    * site: only the split layout records `sum_dl`. */
   private[graft] def isSplitSnapshot(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    isSplitSnapshot(
-      graft.index.VectorIndex.readSmallFile(spark, s"$path/stats.json"))
+    Sidecar.read[Sidecar.Bm25StatsFile](spark, s"$path/stats.json")
+      .exists(_.sum_dl.isDefined)
 
   /** Open a [[saveBm25Index]] snapshot as its split pieces — the serving
     * handle for [[bm25Serve]]'s snapshot overload (two-phase pruning:
@@ -324,18 +319,14 @@ object HybridRetrieval {
     * posting rows through the scan). */
   def openBm25Index(spark: org.apache.spark.sql.SparkSession, path: String)
       : Bm25Snapshot = {
+    val s = Sidecar.readRequired[Sidecar.Bm25StatsFile](spark, s"$path/stats.json")
     import spark.implicits._
-    val json = graft.index.VectorIndex.readSmallFile(spark, s"$path/stats.json")
-    require(json != null, s"missing $path/stats.json")
-    def longField(k: String) =
-      (s""""$k":\\s*(-?\\d+)""").r.findFirstMatchIn(json).map(_.group(1).toLong)
-    val nDocs = longField("n_docs").get
-    val sumDl = longField("sum_dl").getOrElse(
+    val sumDl = s.sum_dl.getOrElse(
       sys.error(s"$path is a pre-split (v1) snapshot — no sum_dl; " +
         "serve it via loadBm25Index"))
-    val nBkt = longField("tok_buckets").get.toInt
-    val num = longField("df_cap_num").getOrElse(Long.MaxValue)
-    val den = math.max(1L, longField("df_cap_den").getOrElse(1L))
+    val nBkt = s.tok_buckets.getOrElse(throw new IllegalArgumentException(
+      s"corrupt sidecar $path/stats.json: missing tok_buckets"))
+    val (nDocs, num, den) = (s.n_docs, s.df_cap_num, math.max(1L, s.df_cap_den))
     val maxDf = if (num == Long.MaxValue) Long.MaxValue else nDocs * num / den
     val stats = Seq((nDocs, if (nDocs > 0) sumDl.toDouble / nDocs else 0.0, nBkt))
       .toDF("n_docs", "avgdl", "tok_buckets")
@@ -356,19 +347,16 @@ object HybridRetrieval {
   def loadBm25Index(spark: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    val json = graft.index.VectorIndex.readSmallFile(spark, s"$path/stats.json")
-    require(json != null, s"missing $path/stats.json")
-    if (isSplitSnapshot(json)) {
+    val s = Sidecar.readRequired[Sidecar.Bm25StatsFile](spark, s"$path/stats.json")
+    if (s.sum_dl.isDefined) {
       val snap = openBm25Index(spark, path)
       val dfKept = snap.df.filter(col("df") <= snap.maxDf)
       (snap.postings.join(dfKept, Seq("tok", "tok_bkt")), snap.stats)
     } else {
-      val postings = spark.read.parquet(s"$path/postings")
-      val nDocs = """"n_docs":\s*(\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
-      val avgdl = """"avgdl":\s*([^,}]+)""".r.findFirstMatchIn(json).get.group(1).toDouble
-      val nBkt = """"tok_buckets":\s*(\d+)""".r.findFirstMatchIn(json)
-        .map(_.group(1).toInt).getOrElse(0) // pre-bucketing snapshots: no pruning
-      (postings, Seq((nDocs, avgdl, nBkt)).toDF("n_docs", "avgdl", "tok_buckets"))
+      // pre-bucketing snapshots: no tok_buckets, no pruning
+      (spark.read.parquet(s"$path/postings"),
+        Seq((s.n_docs, s.avgdl, s.tok_buckets.getOrElse(0)))
+          .toDF("n_docs", "avgdl", "tok_buckets"))
     }
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.PqFunctions
+import graft.index.Sidecar
 
 /** Self-contained serving of a published IVF-PQ codes snapshot — the
   * missing piece between "codes exist on disk" and "a consumer can
@@ -47,11 +48,8 @@ object IvfPqServe {
         "codebooks are unreadable without the encode knobs")
     cents.select(col("centroid_id").cast("long"), col("c_embedding"))
       .coalesce(1).write.mode("overwrite").parquet(s"$snapDir/model/centroids")
-    // Float.toString round-trips bit-exactly through toFloat
-    graft.index.VectorIndex.writeSmallFile(spark,
-      s"$snapDir/model/codebooks.json",
-      s"""{"k_eff":$kEff,"sub_dim":$subDim,""" +
-        s""""flat":[${flat.mkString(",")}]}""")
+    Sidecar.write(spark, s"$snapDir/model/codebooks.json",
+      Sidecar.CodebooksFile(kEff, subDim, flat))
   }
 
   /** Read a snapshot's persisted model; hard error when absent or
@@ -62,22 +60,11 @@ object IvfPqServe {
     val params = IvfPqSnapshot.readParams(spark, snapDir).getOrElse(
       sys.error(s"IvfPqServe: $snapDir has no params.json identity " +
         "sidecar — cannot serve codes of unknown shape"))
-    val json = graft.index.VectorIndex.readSmallFile(spark,
-      s"$snapDir/model/codebooks.json")
-    require(json != null,
-      s"IvfPqServe: $snapDir/model is not published — run writeModel " +
-        "at encode time (ClusteredBench ivfpq / publishmodel)")
-    def num(k: String) =
-      (s""""$k":\\s*(\\d+)""").r.findFirstMatchIn(json).getOrElse(
-        sys.error(s"IvfPqServe: $snapDir/model/codebooks.json is corrupt " +
-          s"(missing $k)")).group(1).toInt
-    val flatJson = graft.index.VectorIndex
-      .sliceBalanced(json, "flat", '[', ']').getOrElse(
-        sys.error(s"IvfPqServe: $snapDir/model/codebooks.json is corrupt " +
-          "(missing flat)"))
-    val flat = flatJson.substring(1, flatJson.length - 1).split(',')
-      .map(_.toFloat)
-    val kEff = num("k_eff"); val subDim = num("sub_dim")
+    val Sidecar.CodebooksFile(kEff, subDim, flat) = Sidecar.read[
+      Sidecar.CodebooksFile](spark, s"$snapDir/model/codebooks.json")
+      .getOrElse(throw new IllegalArgumentException(
+        s"IvfPqServe: $snapDir/model is not published — run writeModel " +
+          "at encode time (ClusteredBench ivfpq / publishmodel)"))
     require(flat.length == params.m * kEff * subDim,
       s"IvfPqServe: $snapDir codebooks hold ${flat.length} floats but " +
         s"params say m=${params.m} x k=$kEff x subDim=$subDim")

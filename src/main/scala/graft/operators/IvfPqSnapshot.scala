@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
+import graft.index.Sidecar
+
 /** Identity sidecar for a published IVF-PQ codes snapshot.
   *
   * The codes parquet under `<dir>/codes` is meaningless without the
@@ -39,8 +41,9 @@ import org.apache.spark.sql.SparkSession
   *                   knobs JSON (ClusteredBench's corpus.json string),
   *                   for real corpora a content fingerprint WRAPPED AS
   *                   AN OBJECT ({"fingerprint":"..."} — writeParams
-  *                   refuses a bare string, which would not survive the
-  *                   sidecar's balanced-brace parse). Codes
+  *                   refuses anything but one JSON object, which the
+  *                   sidecar stores verbatim and reads back as the same
+  *                   string). Codes
   *                   published before a corpus regeneration at the same
   *                   dir must not silently serve against the new one —
   *                   the same failure class the graph snapshot's
@@ -53,25 +56,10 @@ case class IvfPqParams(flavor: String, numCents: Int, m: Int,
 object IvfPqSnapshot {
 
   /** Persist the identity sidecar beside a just-published codes dir. */
-  def writeParams(spark: SparkSession, dir: String, p: IvfPqParams): Unit = {
-    val json =
-      s"""{"flavor":"${p.flavor}","num_cents":${p.numCents},"m":${p.m},""" +
-        s""""codewords":${p.codewords},"route":"${p.route}"""" +
-        // raw object, not a string: the corpus identity is itself JSON
-        (if (p.corpus.isEmpty) "}" else s""","corpus":${p.corpus}}""")
-    // the identity must survive the reader's balanced-brace slice: a
-    // non-object value (a bare fingerprint string) would write invalid
-    // JSON that readParams slices to "" — the corpus gate the field
-    // exists for would then be SILENTLY off for every reader. Refuse at
-    // write time with guidance instead (wrap fingerprints in an object)
-    require(p.corpus.isEmpty ||
-        graft.index.VectorIndex.sliceBalanced(json, "corpus", '{', '}')
-          .contains(p.corpus),
-      s"IvfPqSnapshot: corpus identity must be a JSON OBJECT that " +
-        s"round-trips the sidecar (got: ${p.corpus}) — wrap a raw " +
-        """fingerprint as {"fingerprint":"..."}""")
-    graft.index.VectorIndex.writeSmallFile(spark, s"$dir/params.json", json)
-  }
+  def writeParams(spark: SparkSession, dir: String, p: IvfPqParams): Unit =
+    Sidecar.write(spark, s"$dir/params.json", Sidecar.IvfPqFile(p.flavor,
+      p.numCents, p.m, p.codewords, p.route,
+      Sidecar.rawObject(p.corpus, "IvfPqSnapshot")))
 
   /** Read a snapshot's identity sidecar; None for legacy snapshots
     * published before the sidecar existed (callers fall back to the
@@ -79,22 +67,10 @@ object IvfPqSnapshot {
     * error — unlike the calibration sidecar (an optimization hint whose
     * absence degrades safely), identity corruption must not degrade
     * into a silently-wrong serve. */
-  def readParams(spark: SparkSession, dir: String): Option[IvfPqParams] = {
-    val json = graft.index.VectorIndex.readSmallFile(spark, s"$dir/params.json")
-    if (json == null) return None
-    def str(k: String) =
-      (s""""$k":\\s*"([^"]*)"""").r.findFirstMatchIn(json).getOrElse(
-        sys.error(s"IvfPqSnapshot: $dir/params.json is corrupt " +
-          s"(missing \"$k\"): $json")).group(1)
-    def num(k: String) =
-      (s""""$k":\\s*(\\d+)""").r.findFirstMatchIn(json).getOrElse(
-        sys.error(s"IvfPqSnapshot: $dir/params.json is corrupt " +
-          s"(missing \"$k\"): $json")).group(1).toInt
-    Some(IvfPqParams(str("flavor"), num("num_cents"), num("m"),
-      num("codewords"), str("route"),
-      graft.index.VectorIndex.sliceBalanced(json, "corpus", '{', '}')
-        .getOrElse("")))
-  }
+  def readParams(spark: SparkSession, dir: String): Option[IvfPqParams] =
+    Sidecar.read[Sidecar.IvfPqFile](spark, s"$dir/params.json").map(f =>
+      IvfPqParams(f.flavor, f.num_cents, f.m, f.codewords, f.route,
+        f.corpus.map(_.text).getOrElse("")))
 
   /** Validate a snapshot against the knobs a reader is about to serve
     * with. Legacy snapshots (no sidecar) pass — the route is an

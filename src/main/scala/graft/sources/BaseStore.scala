@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.Sidecar
+
 /** Published FULL-PRECISION base store for two-stage refined serving —
   * the disk-backed (id, embedding) relation the refine tier
   * ([[graft.operators.RefineKnn]], [[graft.index.VectorIndex
@@ -57,6 +59,8 @@ object BaseStore {
   def publish(corpus: DataFrame, path: String, files: Int = 256,
       corpusJson: String = "", assumeSorted: Boolean = false): Unit = {
     val spark = corpus.sparkSession
+    // a non-object identity is refused before the corpus-sized write
+    val identity = Sidecar.rawObject(corpusJson, "BaseStore")
     val shaped =
       if (assumeSorted) corpus.select(col("id").cast("long"), col("embedding"))
       else corpus
@@ -72,19 +76,8 @@ object BaseStore {
       .option("parquet.block.size", 32 << 20)
       .mode("overwrite").parquet(s"$path/data")
     val n = spark.read.parquet(s"$path/data").count()
-    val json = s"""{"n":$n,"files":$files,"page_rows":$PageRows""" +
-      (if (corpusJson.isEmpty) "}" else s""","corpus":$corpusJson}""")
-    // same contract as IvfPqSnapshot.writeParams: a non-object identity
-    // (a bare fingerprint string) would write invalid JSON that
-    // publishedCorpus slices to "" — every reader's corpus require
-    // would then pass vacuously. Refuse at publish time instead.
-    require(corpusJson.isEmpty ||
-        graft.index.VectorIndex.sliceBalanced(json, "corpus", '{', '}')
-          .contains(corpusJson),
-      s"BaseStore: corpus identity must be a JSON OBJECT that " +
-        s"round-trips params.json (got: $corpusJson) — wrap a raw " +
-        """fingerprint as {"fingerprint":"..."}""")
-    graft.index.VectorIndex.writeSmallFile(spark, s"$path/params.json", json)
+    Sidecar.write(spark, s"$path/params.json",
+      Sidecar.BaseStoreFile(n, files, PageRows, identity))
   }
 
   /** The store as a plain relation (full-scan serve shape, or any other
@@ -93,22 +86,17 @@ object BaseStore {
     spark.read.parquet(s"$path/data").select(col("id"), col("embedding"))
 
   /** Row count recorded at publish; -1 for a store without the sidecar. */
-  def publishedCount(spark: SparkSession, path: String): Long = {
-    val json = graft.index.VectorIndex.readSmallFile(spark, s"$path/params.json")
-    if (json == null) return -1L
-    """"n":\s*(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
-      .getOrElse(-1L)
-  }
+  def publishedCount(spark: SparkSession, path: String): Long =
+    readParams(spark, path).map(_.n).getOrElse(-1L)
 
   /** Corpus identity recorded at publish ("" when absent); callers
     * serving a known corpus should require equality before reranking
     * against the store. */
-  def publishedCorpus(spark: SparkSession, path: String): String = {
-    val json = graft.index.VectorIndex.readSmallFile(spark, s"$path/params.json")
-    if (json == null) return ""
-    graft.index.VectorIndex.sliceBalanced(json, "corpus", '{', '}')
-      .getOrElse("")
-  }
+  def publishedCorpus(spark: SparkSession, path: String): String =
+    readParams(spark, path).flatMap(_.corpus).map(_.text).getOrElse("")
+
+  private def readParams(spark: SparkSession, path: String) =
+    Sidecar.read[Sidecar.BaseStoreFile](spark, s"$path/params.json")
 
   /** POINT-FETCH the rows for a bounded id set: one IN-pushed scan whose
     * column index narrows the read to the pages containing hits.

@@ -172,9 +172,8 @@ class CalibrateWidthSpec extends AnyFunSuite with SparkSuite {
         Map("pool" -> "100", "fetch" -> "point", "note" -> """q"v\x"""))
       val ivfRef = FaceArtifact("/tmp/clustered/ivfpq_residual_c8192_m16_r64",
         Map("base" -> "/tmp/clustered/base", "pool" -> "500"))
-      // ADVICE r19 regression: free text containing a bracketed numeric
-      // pattern ([8,0.5] — a knob note) must NOT be parsed as a curve
-      // point now that the regexes run on sliced array substrings
+      // free text containing a bracketed numeric pattern ([8,0.5] — a
+      // knob note) must NOT be parsed as a curve point
       val faces = Seq(
         FacePoint("exact", 0, 0.959, 136.0),
         FacePoint("refine", 256, 0.994, 34.9,
@@ -191,6 +190,43 @@ class CalibrateWidthSpec extends AnyFunSuite with SparkSuite {
       // FaceArtifact's own JSON round-trip, standalone
       assert(FaceArtifact.fromJson(ref.toJson) === Some(ref))
       assert(FaceArtifact.fromJson("not json").isEmpty)
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
+  test("calibration.json bytes of the earlier string writer read to the same values") {
+    import graft.index.{FaceArtifact, FacePoint, WidthCalibration}
+    val dir = java.nio.file.Files.createTempDirectory("graft_calfix_").toString
+    try {
+      // verbatim output of the pre-codec writer: 4-, 5- and 6-element
+      // face entries, escaped refs (one with an empty artifact slot),
+      // quotes, backslashes and non-ASCII text at both escaping levels
+      VectorIndex.writeSmallFile(spark, s"$dir/calibration.json",
+        """{"search_width":256,"target_recall":0.95,"k":10,"sample_recall":0.799,"curve":[[32,0.5],[256,0.799]],"faces":[["exact",0,0.959,136.0],["refine",256,0.994,34.9,"pool=100 sweep [8,0.5] \"q\" \\x é"],["ivfpq_residual",8,0.993,262.0,"m=16","{\"path\":\"/tmp/sto\\\"re\\\\base é漢\",\"knobs\":{\"fetch\":\"point\",\"note\":\"q\\\"v\\\\x ü\",\"pool\":\"100\"}}"],["beam",64,0.9,12.0,"","{\"path\":\"/snap\",\"knobs\":{}}"]]}""")
+      val ref = FaceArtifact("/tmp/sto\"re\\base é漢",
+        Map("pool" -> "100", "note" -> "q\"v\\x ü", "fetch" -> "point"))
+      val want = WidthCalibration(256, 0.95, 10, 0.799,
+        Seq(32 -> 0.5, 256 -> 0.799), Seq(
+          FacePoint("exact", 0, 0.959, 136.0),
+          FacePoint("refine", 256, 0.994, 34.9,
+            "pool=100 sweep [8,0.5] \"q\" \\x é"),
+          FacePoint("ivfpq_residual", 8, 0.993, 262.0, "m=16", Some(ref)),
+          FacePoint("beam", 64, 0.9, 12.0, "", Some(FaceArtifact("/snap")))))
+      assert(VectorIndex.readCalibration(spark, dir) === Some(want))
+      // and what the codec writes back reads to the same value
+      VectorIndex.writeCalibration(spark, dir, want)
+      assert(VectorIndex.readCalibration(spark, dir) === Some(want))
+      // an integer recall, a wrong-typed slot or a truncated file: None
+      VectorIndex.writeSmallFile(spark, s"$dir/calibration.json",
+        """{"search_width":0,"target_recall":1,"k":10,"sample_recall":1,"curve":[[0,1]]}""")
+      assert(VectorIndex.readCalibration(spark, dir).map(_.curve) ===
+        Some(Seq(0 -> 1.0)))
+      Seq("""{"search_width":0,"target_recall":0.9,"k":10,"sample_recall":1.0,"curve":[[0,1.0]],"faces":[["exact","x",1.0,2.0]]}""",
+          """{"search_width":0,"target_recall":0.9,"k":10,"sample_recall":1.0,"curve":[[0,1.0]],"faces":[["exact",0,1.0]]}""",
+          """{"search_width":0,"target_recall":0.9,"k":10,"sample_recall":1.0,"cur""")
+        .foreach { text =>
+          VectorIndex.writeSmallFile(spark, s"$dir/calibration.json", text)
+          assert(VectorIndex.readCalibration(spark, dir).isEmpty, text)
+        }
     } finally graft.streaming.StreamingOps.deleteRecursively(dir)
   }
 }

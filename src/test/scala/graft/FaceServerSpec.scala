@@ -180,4 +180,20 @@ class FaceServerSpec extends AnyFunSuite with SparkSuite {
       graft.streaming.StreamingOps.deleteRecursively(dir)
     }
   }
+
+  test("FaceArtifact paths and knobs with quotes, backslashes and non-ASCII text round-trip") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_faceart_").toString
+    try {
+      val awkward = Seq("plain", "q\"uote", "back\\slash", "\\\"", "\"\\\"",
+        "é漢ü — ✓", "{\"nested\":[1,2]}", "tab\tnew\nline", "")
+      val refs = awkward.map(s => FaceArtifact(s"/tmp/$s/snap",
+        awkward.map(k => s"k$k" -> s"v$k").toMap))
+      refs.foreach(r => assert(FaceArtifact.fromJson(r.toJson) === Some(r)))
+      val cal = graft.index.WidthCalibration(0, 0.9, 10, 1.0, Seq(0 -> 1.0),
+        refs.zipWithIndex.map { case (r, i) =>
+          FacePoint(s"f$i", i, 0.9, 1.5, awkward(i), Some(r)) })
+      VectorIndex.writeCalibration(spark, dir, cal)
+      assert(VectorIndex.readCalibration(spark, dir) === Some(cal))
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
 }

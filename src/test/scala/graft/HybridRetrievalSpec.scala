@@ -664,4 +664,39 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
     // neither may reach the fused hit count on this testdata
     assert(rows("hybrid") > rows("dense") && rows("hybrid") > rows("lex"))
   }
+
+  test("stats.json bytes of the earlier string writer read to the same values; v1 still detected") {
+    val c = Seq((10L, "alpha beta gamma delta"), (11L, "alpha beta epsilon"),
+      (12L, "gamma gamma delta")).toDF("doc_id", "text")
+    val (p, d, st) = HybridRetrieval.bm25SnapshotPieces(c)
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_fix_").toString
+    try {
+      HybridRetrieval.saveBm25Index(p, d, st, dir, dfCapNum = 3L, dfCapDen = 4L)
+      val fresh = HybridRetrieval.openBm25Index(spark, dir)
+      // verbatim output of the pre-codec writer for the same snapshot
+      graft.index.VectorIndex.writeSmallFile(spark, s"$dir/stats.json",
+        """{"n_docs":3,"sum_dl":10,"avgdl":3.3333333333333335,"tok_buckets":64,"df_cap_num":3,"df_cap_den":4}""")
+      val snap = HybridRetrieval.openBm25Index(spark, dir)
+      assert((snap.nDocs, snap.sumDl, snap.tokBuckets, snap.maxDf,
+        snap.dfCapNum, snap.dfCapDen) === (3L, 10L, 64, 2L, 3L, 4L))
+      assert((fresh.nDocs, fresh.sumDl, fresh.tokBuckets, fresh.maxDf,
+        fresh.dfCapNum, fresh.dfCapDen) === (3L, 10L, 64, 2L, 3L, 4L))
+      assert(HybridRetrieval.isSplitSnapshot(spark, dir))
+      // a pre-split (v1) stats.json: no sum_dl, optional tok_buckets
+      graft.index.VectorIndex.writeSmallFile(spark, s"$dir/stats.json",
+        """{"n_docs":3,"avgdl":3.3333333333333335}""")
+      assert(!HybridRetrieval.isSplitSnapshot(spark, dir))
+      val e = intercept[RuntimeException](HybridRetrieval.openBm25Index(spark, dir))
+      assert(e.getMessage.contains("pre-split (v1)"))
+      val (_, v1Stats) = HybridRetrieval.loadBm25Index(spark, dir)
+      assert(v1Stats.as[(Long, Double, Int)].collect().toSeq ===
+        Seq((3L, 3.3333333333333335, 0)))
+      // a truncated stats.json names the file
+      graft.index.VectorIndex.writeSmallFile(spark, s"$dir/stats.json",
+        """{"n_docs":3,"sum_""")
+      val t = intercept[IllegalArgumentException](
+        HybridRetrieval.loadBm25Index(spark, dir))
+      assert(t.getMessage.contains(s"$dir/stats.json"))
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
 }

@@ -104,4 +104,49 @@ class IvfPqSnapshotSpec extends AnyFunSuite with SparkSuite {
       assert(e.getMessage.contains("corrupt"))
     } finally graft.streaming.StreamingOps.deleteRecursively(dir)
   }
+
+  test("codebook floats round-trip bit for bit; earlier params/codebooks bytes read back") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_cb_").toString
+    try {
+      val rnd = new scala.util.Random(20261017L)
+      def bits(): Float = {
+        val f = java.lang.Float.intBitsToFloat(rnd.nextInt())
+        if (f.isNaN) bits() else f
+      }
+      val (m, kEff, subDim) = (4, 64, 16)
+      val flat = Array(0f, -0f, Float.MinPositiveValue, Float.MaxValue,
+        Float.NegativeInfinity) ++ Array.fill(m * kEff * subDim - 5)(bits())
+      val cents = Seq((0L, Array(0f, 1f))).toDF("centroid_id", "c_embedding")
+      IvfPqSnapshot.writeParams(spark, dir, IvfPqParams("global", 1, m, 256, "argmin"))
+      graft.operators.IvfPqServe.writeModel(spark, dir, cents, flat, kEff, subDim)
+      val back = graft.operators.IvfPqServe.readModel(spark, dir)
+      assert(back.flat.map(java.lang.Float.floatToRawIntBits).toSeq ===
+        flat.map(java.lang.Float.floatToRawIntBits).toSeq)
+      assert(back.kEff === kEff && back.subDim === subDim)
+      // verbatim output of the pre-codec writers
+      val corpus = """{"n":100000000,"dim":64,"n_clusters":100000,"sigma":0.05,"corpus_salt":29}"""
+      graft.index.VectorIndex.writeSmallFile(spark, s"$dir/params.json",
+        s"""{"flavor":"residual","num_cents":1,"m":2,"codewords":256,"route":"beam64","corpus":$corpus}""")
+      graft.index.VectorIndex.writeSmallFile(spark, s"$dir/model/codebooks.json",
+        """{"k_eff":2,"sub_dim":2,"flat":[0.1,-0.0,1.4E-45,3.4028235E38,-2.5,1.0E-7,123456.79,1.17549435E-38]}""")
+      assert(IvfPqSnapshot.readParams(spark, dir) ===
+        Some(IvfPqParams("residual", 1, 2, 256, "beam64", corpus)))
+      val old = graft.operators.IvfPqServe.readModel(spark, dir)
+      assert(old.flat.map(java.lang.Float.floatToRawIntBits).toSeq ===
+        Array(0.1f, -0f, 1.4E-45f, 3.4028235E38f, -2.5f, 1.0E-7f, 123456.79f,
+          1.17549435E-38f).map(java.lang.Float.floatToRawIntBits).toSeq)
+      // a corpus identity keeps the caller's exact spelling
+      val spaced = """{ "fingerprint" : "a}\"b", "v": 0.050 }"""
+      IvfPqSnapshot.writeParams(spark, dir,
+        IvfPqParams("residual", 1, 2, 256, "beam64", spaced))
+      assert(IvfPqSnapshot.readParams(spark, dir).get.corpus === spaced)
+      // a truncated codebooks.json names the file
+      graft.index.VectorIndex.writeSmallFile(spark, s"$dir/model/codebooks.json",
+        """{"k_eff":2,"sub_dim":2,"flat":[0.1,-0.0""")
+      val e = intercept[IllegalArgumentException](
+        graft.operators.IvfPqServe.readModel(spark, dir))
+      assert(e.getMessage.contains(s"$dir/model/codebooks.json"))
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
 }

@@ -596,4 +596,29 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
         s"pair ($a,$b) distance $d != true $acc")
     }
   }
+
+  test("tombstones below and above Int.MaxValue round-trip lsm.json; earlier manifests load") {
+    val dir = java.nio.file.Files.createTempDirectory("lsm_ts_save_").toString
+    try {
+      val ts = Set(20L, Int.MaxValue.toLong, Int.MaxValue + 1L, 5000000000L,
+        Long.MaxValue - 1)
+      LsmVectorIndex(baseIdx, compactThreshold = 1000000, deleteThreshold = 777L)
+        .delete(ts).save(dir)
+      val back = LsmVectorIndex.load(spark, dir)
+      assert(back.tombstones === ts && back.deleteThreshold === 777L)
+      // verbatim output of the pre-codec writer, and a manifest from
+      // before delete support (no deleteThreshold, no tombstones)
+      graft.index.VectorIndex.writeSmallFile(spark, s"$dir/lsm.json",
+        """{"generations":0,"compactThreshold":1000,"genShardSize":65536,"deleteThreshold":777,"tombstones":[3,2147483647,2147483648,5000000000,9223372036854775806]}""")
+      val fixture = LsmVectorIndex.load(spark, dir)
+      assert(fixture.tombstones === Set(3L, 2147483647L, 2147483648L,
+        5000000000L, 9223372036854775806L))
+      assert(fixture.compactThreshold === 1000L && fixture.genShardSize === 65536L)
+      graft.index.VectorIndex.writeSmallFile(spark, s"$dir/lsm.json",
+        """{"generations":0,"compactThreshold":1000,"genShardSize":65536}""")
+      val preDelete = LsmVectorIndex.load(spark, dir)
+      assert(preDelete.tombstones.isEmpty &&
+        preDelete.deleteThreshold === Long.MaxValue)
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
 }

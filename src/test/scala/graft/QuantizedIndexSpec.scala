@@ -194,4 +194,76 @@ class QuantizedIndexSpec extends AnyFunSuite with SparkSuite {
     val v = graft.functions.VectorFunctions.l2NormalizeArray(Array(3f, 4f))
     assert(math.abs(v(0) - 0.6f) < 1e-6 && math.abs(v(1) - 0.8f) < 1e-6)
   }
+
+  test("quantLo/quantHi/mipsMaxNorm round-trip params.json bit for bit") {
+    import graft.index.Sidecar.IndexParamsFile
+    val rnd = new scala.util.Random(20261017L)
+    def bits(): Float = {
+      val f = java.lang.Float.intBitsToFloat(rnd.nextInt())
+      if (f.isNaN) bits() else f
+    }
+    val edge = Seq(0f, -0f, Float.MinPositiveValue, -Float.MinPositiveValue,
+      java.lang.Float.MIN_NORMAL, Float.MaxValue, Float.MinValue,
+      Float.PositiveInfinity, Float.NegativeInfinity, 0.1f, 1e-7f)
+    val fs = edge ++ Seq.fill(30000)(bits())
+    fs.grouped(3).foreach { g =>
+      val f = IndexParamsFile("euclidean2", 8, 32, 2, 1000L, 2,
+        quantLo = g(0), quantHi = g(1 % g.length), mipsMaxNorm = g(2 % g.length),
+        indexId = "x")
+      val back = graft.index.Sidecar.decode[IndexParamsFile](
+        graft.index.Sidecar.encode(f))
+      Seq(f.quantLo -> back.quantLo, f.quantHi -> back.quantHi,
+          f.mipsMaxNorm -> back.mipsMaxNorm).foreach { case (a, b) =>
+        assert(java.lang.Float.floatToRawIntBits(a) ===
+          java.lang.Float.floatToRawIntBits(b), s"$a read back as $b")
+      }
+    }
+  }
+
+  test("params.json bytes of the earlier string writer load to the same params") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_paramsfix_").toString
+    try {
+      index.save(dir)
+      def loadWith(text: String) = {
+        VectorIndex.writeSmallFile(spark, s"$dir/params.json", text)
+        VectorIndex.load(spark, dir, cache = false)
+      }
+      // verbatim multi-line output of the pre-codec writer
+      val full = loadWith(
+        """{"metric":"euclidean2","minimumConnect":8,
+          |"relaxedMonotonicity":32,"step":2,
+          |"subIndexBound":10000000,"numShards":2,
+          |"schedule":"0:4:16;1000:8:32",
+          |"quantized":true,"quantLo":-1.17549435E-38,"quantHi":3.4028235E38,
+          |"normalizeForCosine":false,
+          |"augmentForMips":false,"mipsMaxNorm":0.0,
+          |"indexId":"idx-1"}""".stripMargin)
+      assert(full.numShards === 2)
+      assert(full.params === IndexParams(minimumConnect = 8,
+        relaxedMonotonicity = 32, step = 2, subIndexBound = 10000000L,
+        schedule = Seq(graft.index.ParamStep(0, 4, 16),
+          graft.index.ParamStep(1000, 8, 32)),
+        quantized = true, quantLo = -1.17549435E-38f, quantHi = 3.4028235E38f))
+      val mips = loadWith(
+        """{"metric":"euclidean2","minimumConnect":4,
+          |"relaxedMonotonicity":16,"step":1,
+          |"subIndexBound":10000000,"numShards":1,
+          |"schedule":"",
+          |"quantized":false,"quantLo":-0.5,"quantHi":0.5,
+          |"normalizeForCosine":false,
+          |"augmentForMips":true,"mipsMaxNorm":1.4E-45,
+          |"indexId":"mips-1"}""".stripMargin)
+      assert(mips.params.augmentForMips &&
+        mips.params.mipsMaxNorm == Float.MinPositiveValue)
+      // a save from before the optional keys existed: defaults apply
+      val old = loadWith(
+        """{"metric":"euclidean2","minimumConnect":8,
+          |"relaxedMonotonicity":32,"step":2,
+          |"subIndexBound":10000000,"numShards":2,
+          |"indexId":"old-1"}""".stripMargin)
+      assert(old.params === IndexParams(minimumConnect = 8,
+        relaxedMonotonicity = 32, step = 2, subIndexBound = 10000000L))
+      assert(old.numShards === 2)
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
 }
