@@ -17,7 +17,13 @@ import graft.operators.TopK
   *
   *  - '''ingest''' builds a small FRESH index (its own generation) from
   *    just the batch — work is O(batch) and the sealed base is untouched
-  *    (object-identity guaranteed, spec-gated);
+  *    (object-identity guaranteed, spec-gated). A batch that fits one
+  *    generation shard (`genShardSize`) and at most
+  *    [[LsmVectorIndex.DriverBuildRows]] rows is collected once and its
+  *    graph built on the DRIVER, the rows handed over as one driver-held
+  *    partition that is also the probe layout; a larger batch is built
+  *    by the distributed build, one generation shard per `genShardSize`
+  *    vectors. Both yield the rows and meta of [[VectorIndex.build]];
   *  - '''query''' probes the base and every generation and merges their
   *    per-shard top-k into one top-k per query, as the multi-shard probe
   *    does (top-k of a union == top-k of the per-member top-k union, so
@@ -28,15 +34,21 @@ import graft.operators.TopK
   *    pays for. The compacted base equals a full build over the live set,
   *    so exact-mode probes are invariant across compaction (spec-gated).
   *
-  * Id uniqueness within each ingested batch is validated eagerly (cheap,
-  * O(batch)); cross-generation/base clashes would need an O(index) lookup
-  * per batch — exactly the cost this structure avoids — so the rewrite's
-  * disjointness check catches them at compaction time.
+  * Each ingested batch is validated eagerly (cheap, O(batch)): unique
+  * ids, and finite embeddings of the index's dimension. Cross-generation
+  * or base clashes would need an O(index) lookup per batch — exactly the
+  * cost this structure avoids — so the rewrite's disjointness check
+  * catches them at compaction time.
+  *
+  * Memory: a driver-built generation's rows stay on the driver until
+  * compaction folds the generation, which releases them, so
+  * `compactThreshold` (plus one batch) bounds that footprint (SCALE.md).
   *
   * Instances are immutable: ingest/compact return a new handle; superseded
   * generations (and compacted bases this class itself created) have their
-  * caches dropped automatically. The caller-supplied base is never
-  * unpersisted.
+  * caches dropped automatically — a driver-built generation has no other
+  * source, so a handle superseded by a compaction must not be probed. The
+  * caller-supplied base is never unpersisted.
   */
 final class LsmVectorIndex private (
     val base: VectorIndex,
@@ -93,17 +105,38 @@ final class LsmVectorIndex private (
   /** Fold one micro-batch (columns: id LONG, embedding ARRAY<FLOAT>) into
     * a new generation; auto-compacts when the fresh total crosses the
     * threshold. O(batch) work — the base and prior generations are reused
-    * as-is. */
+    * as-is.
+    *
+    * One bounded collect (`limit(bound + 1)`, `bound` the smaller of
+    * `genShardSize` and [[LsmVectorIndex.DriverBuildRows]]) picks the
+    * path:
+    *  - a batch of at most `bound` rows is validated and built ON
+    *    THE DRIVER ([[VectorIndex.buildOnDriver]]): the same kernel loop
+    *    a one-shard build task runs, so no parallelism is lost, and no
+    *    further job — the generation's rows are one driver-held
+    *    partition that its first probe reads without an exchange;
+    *  - a larger batch is cached, validated in one aggregation and built
+    *    distributed, `genShardSize` vectors per generation shard, after
+    *    a wasted collect of at most `DriverBuildRows + 1` rows.
+    * Either way the batch is rejected, naming an id, when an id is
+    * missing or repeated, or an embedding is missing, non-finite or of
+    * another dimension than the index's. */
   def ingest(batch: DataFrame): LsmVectorIndex = {
-    val fresh = batch.select(col("id").cast("long"), col("embedding")).cache()
-    val counts = fresh.agg(count(lit(1)), count_distinct(col("id"))).head
-    val (n, nDistinct) = (counts.getLong(0), counts.getLong(1))
-    if (n == 0) { fresh.unpersist(); return this }
-    require(n == nDistinct,
-      s"ingested ids must be unique within the batch (${n - nDistinct} clashes)")
-    val genShards = math.max(1L, (n + genShardSize - 1) / genShardSize).toInt
-    val gen = VectorIndex.build(fresh, base.params, genShards)
-    fresh.unpersist() // gen rows were materialized by build's meta pass
+    val spark = batch.sparkSession
+    import spark.implicits._
+    val input = batch.select(col("id").cast("long"), col("embedding"))
+    val bound = math.min(genShardSize, LsmVectorIndex.DriverBuildRows.toLong).toInt
+    val head = input.as[(java.lang.Long, Array[Float])].limit(bound + 1).collect()
+    if (head.isEmpty) return this
+    val dim = inputDim
+    val gen =
+      if (head.length <= bound) {
+        LsmVectorIndex.validate(LsmVectorIndex.BatchFacts.of(head), dim)
+        val p = base.params
+        VectorIndex.buildOnDriver(spark, head
+          .map { case (id, v) => (id.longValue, p.transformCorpusVector(v)) }
+          .sortBy(_._1).toIndexedSeq, p)
+      } else buildDistributed(input, dim)
     val next = new LsmVectorIndex(
       base, generations :+ gen, compactThreshold, genShardSize, ownsBase,
       tombstones, deleteThreshold, asyncPending)
@@ -113,6 +146,26 @@ final class LsmVectorIndex private (
     else next
   }
 
+  /** A batch over the driver bound: cached, validated in ONE
+    * aggregation and built by the distributed build. The cache is
+    * dropped on every exit; on success the build's meta pass has
+    * materialized the generation rows first. */
+  private def buildDistributed(input: DataFrame, dim: Int): VectorIndex = {
+    val fresh = input.cache()
+    try {
+      val facts = LsmVectorIndex.BatchFacts.of(fresh)
+      LsmVectorIndex.validate(facts, dim)
+      VectorIndex.build(fresh, base.params, ((facts.n + genShardSize - 1) / genShardSize).toInt)
+    } finally fresh.unpersist()
+  }
+
+  /** The input dimension the index takes: that of the base, or of the
+    * first generation while the base is empty, less MIPS's augmented
+    * component; -1 while the index holds no vector. Read once per
+    * member and carried across rewrites, so steady ingest pays no job. */
+  private def inputDim: Int = (base +: generations).find(_.meta.nonEmpty)
+    .fold(-1)(_.dimension - (if (base.params.augmentForMips) 1 else 0))
+
   /** Fold every generation into the base and purge every tombstone in
     * ONE shard-scoped rewrite: a shard gaining a live fresh id or holding
     * a tombstoned id is rebuilt once from its survivors plus its live
@@ -121,8 +174,9 @@ final class LsmVectorIndex private (
     * and probes stop paying the liveness filter. The tombstones reach
     * the plan as a one-column relation, not a literal id list, so the
     * driver's per-execution cost does not grow with their count.
-    * Generations this index built are unpersisted; so is a base a
-    * previous compaction created, once it is replaced. */
+    * Generations this index built are unpersisted, the rows of a
+    * driver-built one released for good; so is a base a previous
+    * compaction created, once it is replaced. */
   def compact(): LsmVectorIndex = {
     require(!asyncPending.get(),
       "compact() while a compactAsync fold is outstanding would unpersist " +
@@ -343,8 +397,10 @@ final class LsmVectorIndex private (
   /** Total vectors across base + generations. */
   def vectorCount: Long = base.meta.map(_.n_vectors).sum + freshCount
 
-  /** Drop caches of every member this handle references. The base is only
-    * dropped when this class created it (a compaction product). */
+  /** Drop caches of every member this handle references, and release the
+    * rows of its driver-built generations: the handle must not be probed
+    * afterwards. The base is only dropped when this class created it (a
+    * compaction product). */
   def unpersist(): Unit = {
     generations.foreach(_.unpersist())
     if (ownsBase) base.unpersist()
@@ -364,12 +420,72 @@ final class LsmVectorIndex private (
 }
 
 object LsmVectorIndex {
+  /** The most rows [[LsmVectorIndex.ingest]] builds on the driver; a
+    * smaller `genShardSize` bounds it further. A batch over it is built
+    * distributed, after a collect of at most this many rows plus one:
+    * about 2 MB of 64-d vectors, 25 MB of 768-d ones. */
+  private[graft] val DriverBuildRows: Int = 8192
+
+  /** What [[LsmVectorIndex.ingest]] validates about a batch, gathered on
+    * the driver from the collected rows or by one aggregation over the
+    * cached batch, so both paths run the same [[validate]]. Ids name the
+    * smallest offender; a shape is (embedding length, id), and the batch's
+    * narrowest and widest bound every length in it. */
+  private[index] final case class BatchFacts(n: Long, withId: Long, distinct: Long,
+      noEmbedding: Option[Long], nonFinite: Option[Long],
+      narrowest: Option[(Int, Long)], widest: Option[(Int, Long)])
+
+  private[index] object BatchFacts {
+    def of(rows: Array[(java.lang.Long, Array[Float])]): BatchFacts = {
+      val ids = rows.collect { case (id, _) if id != null => id.longValue }.sorted
+      def first(bad: Array[Float] => Boolean) =
+        rows.collect { case (id, v) if id != null && bad(v) => id.longValue }.minOption
+      val shapes = rows.collect { case (id, v) if id != null && v != null => (v.length, id.longValue) }
+      BatchFacts(rows.length, ids.length, ids.indices.count(i => i == 0 || ids(i) != ids(i - 1)),
+        first(_ == null), first(v => v != null && v.exists(x => !java.lang.Float.isFinite(x))),
+        shapes.minOption, shapes.maxOption)
+    }
+
+    def of(batch: DataFrame): BatchFacts = {
+      val (id, emb) = (col("id"), col("embedding"))
+      val shape = when(emb.isNotNull, struct(size(emb), id))
+      val r = batch.agg(count(lit(1)), count(id), count_distinct(id),
+        min(when(emb.isNull, id)),
+        min(when(exists(emb, x => isnan(x) || abs(x) === Float.PositiveInfinity), id)),
+        min(shape), max(shape)).head
+      def idAt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+      def shapeAt(i: Int) = if (r.isNullAt(i)) None else Some((r.getStruct(i).getInt(0), r.getStruct(i).getLong(1)))
+      BatchFacts(r.getLong(0), r.getLong(1), r.getLong(2), idAt(3), idAt(4), shapeAt(5), shapeAt(6))
+    }
+  }
+
+  /** Reject a batch the index would store wrongly: a row without an id, a
+    * repeated id, or an embedding that is missing, of another dimension
+    * than `dim` (or, while the index is empty, than the rest of the
+    * batch), or non-finite — a NaN is never evicted from a top-k. */
+  private[index] def validate(f: BatchFacts, dim: Int): Unit = {
+    require(f.withId == f.n, s"ingested rows must carry an id (${f.n - f.withId} without)")
+    require(f.distinct == f.withId,
+      s"ingested ids must be unique within the batch (${f.withId - f.distinct} clashes)")
+    f.noEmbedding.foreach(id => throw new IllegalArgumentException(s"ingested id $id has no embedding"))
+    for ((ln, lid) <- f.narrowest; (wn, wid) <- f.widest) {
+      val want = if (dim > 0) dim else ln
+      val expected = if (dim > 0) s"the index dimension is $dim" else s"id $lid has $ln"
+      require(ln == want, s"ingested id $lid has $ln components, $expected")
+      require(wn == want, s"ingested id $wid has $wn components, $expected")
+    }
+    f.nonFinite.foreach(id =>
+      throw new IllegalArgumentException(s"ingested id $id has a non-finite component"))
+  }
+
   /** Wrap a sealed base index for generational ingest.
     *
     * @param compactThreshold fold generations into the base once their
     *                         total vector count reaches this
     * @param genShardSize     max vectors per generation shard (a
-    *                         micro-batch usually fits one shard) */
+    *                         micro-batch usually fits one shard, and is
+    *                         then built on the driver when it also fits
+    *                         [[DriverBuildRows]]) */
   def apply(base: VectorIndex, compactThreshold: Long,
       genShardSize: Long = 65536L,
       deleteThreshold: Long = Long.MaxValue): LsmVectorIndex = {

@@ -199,11 +199,16 @@ class VectorIndex private (
     queryBatch(batch, k, searchWidth)
   override def probeDescription: String = s"shards=$numShards"
 
-  /** Vector dimension, read once from the first index row and reused by
-    * every append (one fewer job per call). Only valid when the index is
-    * non-empty — callers guard on meta.nonEmpty. */
-  @transient lazy val dimension: Int =
-    rows.select(size(col("embedding"))).head.getInt(0)
+  /** Stored vector dimension, read once from the first index row (one
+    * job) and reused by every append. A driver-built index, and a
+    * rewrite of an index that knew it, start out knowing it. Only valid
+    * when the index is non-empty — callers guard on meta.nonEmpty. */
+  def dimension: Int = {
+    if (knownDim <= 0) knownDim = rows.select(size(col("embedding"))).head.getInt(0)
+    knownDim
+  }
+  // <= 0 = not read yet (a deserialized handle holds 0)
+  @transient @volatile private var knownDim: Int = -1
 
   /** Batch kNN probe. searchWidth (= the reference's query-RM,
     * dehnsw.h:300-307): 0 = exact (per-shard brute-force scan — guaranteed
@@ -418,19 +423,29 @@ class VectorIndex private (
     (w, curve)
   }
 
-  /** Probe-ready layout shared by the broadcast and shuffled probes:
-    * partition i holds exactly shard i's rows (ShardPartitioner maps the
-    * shard id to itself), cached ONCE per index — the exchange happens on
-    * first probe, not once per query call, and both probe paths read the
-    * same cached blocks. */
   /** Set by [[VectorIndex.load]] when the snapshot carries a
     * [[VectorIndex.relayoutSharded]] layout — [[probeLayout]] then
     * builds shard-aligned partitions by a NARROW scan instead of the
     * corpus-sized shuffle. */
   @transient private[graft] var shardedLayoutDir: Option[String] = None
 
+  /** Set by [[VectorIndex.buildOnDriver]]: the driver-held rows, already
+    * one partition per shard, which [[rows]] reads too — [[probeLayout]]
+    * is that RDD itself. */
+  @transient private var driverLayout: Option[VectorIndex.DriverRowsRDD] = None
+
+  /** The id of the broadcast that holds a driver-built index's rows. */
+  private[graft] def driverRowsBroadcastId: Option[Long] = driverLayout.map(_.broadcastId)
+
+  /** Probe-ready layout shared by the broadcast and shuffled probes:
+    * partition i holds exactly shard i's rows (ShardPartitioner maps the
+    * shard id to itself), cached ONCE per index — the exchange happens on
+    * first probe, not once per query call, and both probe paths read the
+    * same cached blocks. */
   @transient private[graft] lazy val probeLayout
-      : org.apache.spark.rdd.RDD[IndexRow] = {
+      : org.apache.spark.rdd.RDD[IndexRow] = driverLayout.getOrElse {
+    // a driver-built index is laid out by construction, and reading its
+    // rows costs nothing, so there is nothing to cache.
     // FAST PATH — dir-sharded snapshot layout (rows_sharded/, one file
     // per shard): the probe layout is a narrow aligned scan, NOT a
     // shuffle. The legacy partitionBy below moves ~2.5x the snapshot's
@@ -586,7 +601,10 @@ class VectorIndex private (
     val affected = affectedSeq.toSet
     val rebuilt = VectorIndex.buildRows(rebuildInput, params, numShards)
     val kept = rows.filter(!col("sub_index_id").isin(affectedSeq: _*))
-    val cached = kept.union(rebuilt).cache()
+    // memory AND disk whatever the session's default: the rebuilt rows
+    // may come from driver-built generations, which are released once
+    // folded, so these blocks must never be dropped and recomputed
+    val cached = kept.union(rebuilt).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // untouched shards keep their meta verbatim; recompute only the
     // rebuilt shards. The scan of the cached union materializes every
     // partition of it, kept slice included, so the inputs can be dropped
@@ -597,8 +615,10 @@ class VectorIndex private (
       .sortBy(_.sub_index_id)
     if (fresh != null) fresh.unpersist()
     rebuildInput.unpersist()
-    new VectorIndex(params, numShards, cached, meta2,
+    val next = new VectorIndex(params, numShards, cached, meta2,
       java.util.UUID.randomUUID().toString)
+    next.knownDim = knownDim // a rewrite never changes the dimension
+    next
   }
 
   /** Discover/recover/validate front half shared by [[rewrite]] and
@@ -672,7 +692,10 @@ class VectorIndex private (
 
   /** Drop this index's cached data (rows + probe layout). Call on a
     * superseded generation after [[append]] — each generation caches the
-    * full row set, so long ingest loops must release old ones. */
+    * full row set, so long ingest loops must release old ones. A
+    * driver-built index ([[VectorIndex.buildOnDriver]]) has no source to
+    * recompute from: its rows are released and it must not be probed
+    * again. */
   def unpersist(): Unit = {
     probeLayout.unpersist(false)
     rows.unpersist()
@@ -1059,17 +1082,11 @@ object VectorIndex {
     val p = params
     ds
       .mapPartitions { it =>
-        // consecutive rows share sub_index_id after the sort; build each
-        // shard's graph in ascending-id insertion order. Dimension is fixed
-        // at index creation (SURVEY §1.1) — enforce it on ingest.
+        // consecutive rows share sub_index_id after the sort. Dimension is
+        // fixed at index creation (SURVEY §1.1): the partition's first row
+        // sets it for every shard the partition builds.
         var dim = -1
-        val checked = it.map { r =>
-          if (dim == -1) dim = r._2.length
-          else require(r._2.length == dim,
-            s"embedding dimension mismatch at id=${r._1}: got ${r._2.length}, index dimension is $dim")
-          r
-        }
-        val bit = checked.buffered
+        val bit = it.buffered
         val built = mutable.BitSet.empty
         new Iterator[IndexRow] {
           private var pending: Iterator[IndexRow] = Iterator.empty
@@ -1081,24 +1098,62 @@ object VectorIndex {
                 s"input rows not grouped by sub_index_id: shard $shardId reappeared " +
                   "after another shard (bucketed corpus unsorted or mis-bucketed?)")
               built += shardId
+              if (dim < 0) dim = bit.head._2.length
               val vecs = mutable.ArrayBuffer.empty[(Long, Array[Float])]
-              var prevId = Long.MinValue
               while (bit.hasNext && bit.head._3 == shardId) {
                 val r = bit.next()
-                require(r._1 > prevId,
-                  s"ids not ascending within shard $shardId: ${r._1} after $prevId " +
-                    "(bucketed corpus unsorted, or duplicate ids?)")
-                prevId = r._1
                 vecs += ((r._1, r._2))
               }
-              val g = new SubIndexGraph(p, vecs.length)
-              vecs.foreach { case (id, v) => g.insert(id, v) }
-              pending = dehydrate(shardId, g)
+              pending = buildShard(shardId, vecs, p, dim)._2
             }
             pending.next()
           }
         }
       }
+  }
+
+  /** Build ONE shard's graph: the kernel loop of both build paths, the
+    * distributed per-partition build ([[buildPartitions]]) and the
+    * driver build of a small LSM generation ([[buildOnDriver]]). `vecs`
+    * must be id-ascending, the order the kernel is deterministic in, and
+    * of dimension `dim`. Returns the shard's meta, read off the graph,
+    * and its dehydrated rows. */
+  private[index] def buildShard(shardId: Int,
+      vecs: collection.IndexedSeq[(Long, Array[Float])], params: IndexParams,
+      dim: Int): (ShardMeta, Iterator[IndexRow]) = {
+    var prevId = Long.MinValue
+    vecs.foreach { case (id, v) =>
+      require(id > prevId, s"ids not ascending within shard $shardId: $id after $prevId " +
+        "(bucketed corpus unsorted, or duplicate ids?)")
+      require(v.length == dim,
+        s"embedding dimension mismatch at id=$id: got ${v.length}, index dimension is $dim")
+      prevId = id
+    }
+    val g = new SubIndexGraph(params, vecs.length)
+    vecs.foreach { case (id, v) => g.insert(id, v) }
+    (ShardMeta(shardId, g.count, g.layerCount, g.entryOffset), dehydrate(shardId, g))
+  }
+
+  /** Build a ONE-shard index on the driver from id-ascending vectors
+    * that are already transformed ([[IndexParams.transformCorpusVector]]):
+    * the small-LSM-generation path. The graph is built here by
+    * [[buildShard]], the meta is read off it, and the dehydrated rows
+    * become a [[DriverRowsRDD]] of exactly one partition, which backs
+    * [[rows]] and is the probe layout too. Building runs no job, and the
+    * first probe runs no exchange. The rows stay on the driver until
+    * [[unpersist]] releases them, which compaction does for every
+    * generation it folds. */
+  private[index] def buildOnDriver(spark: SparkSession,
+      vecs: IndexedSeq[(Long, Array[Float])], params: IndexParams): VectorIndex = {
+    import spark.implicits._
+    val dim = vecs.head._2.length
+    val (meta, built) = buildShard(0, vecs, params, dim)
+    val layout = new DriverRowsRDD(spark.sparkContext, spark.sparkContext.broadcast(built.toArray))
+    val idx = new VectorIndex(params, 1, spark.createDataset(layout), Array(meta),
+      java.util.UUID.randomUUID().toString)
+    idx.driverLayout = Some(layout)
+    idx.knownDim = dim
+    idx
   }
 
   /** Derive the SQ8 quantization range from the corpus itself: the global
@@ -1348,6 +1403,39 @@ object VectorIndex {
       p.subIndexBound, numShards, sched, p.quantized, p.quantLo, p.quantHi,
       p.normalizeForCosine, p.augmentForMips, p.mipsMaxNorm, indexId))
   }
+
+  /** One shard's driver-held rows as a one-partition RDD read from a
+    * broadcast. A task carries the broadcast handle and an executor
+    * fetches the rows once; a parallelized collection would instead ship
+    * them, Java-serialized, with every task of every probe (about 9 ms
+    * per 250 64-d rows), and could never free them while a plan refers
+    * to it.
+    *
+    * The rows have no other source, so [[unpersist]] releases them for
+    * good: the broadcast is destroyed and dropped, and what is left is
+    * an empty shell. A compacted base keeps that shell in its lineage,
+    * which its cached rows (memory and disk, see `rewrite`) never
+    * recompute. */
+  private[index] class DriverRowsRDD(sc: org.apache.spark.SparkContext,
+      @volatile private var shard: org.apache.spark.broadcast.Broadcast[Array[IndexRow]])
+    extends org.apache.spark.rdd.RDD[IndexRow](sc, Nil) {
+    val broadcastId: Long = shard.id
+    override protected def getPartitions: Array[org.apache.spark.Partition] =
+      Array(new ShardZero)
+    override def compute(split: org.apache.spark.Partition,
+        ctx: org.apache.spark.TaskContext): Iterator[IndexRow] = {
+      val rows = shard
+      if (rows == null) throw new IllegalStateException(
+        s"the driver-built rows of RDD $id were released (their generation was compacted or unpersisted)")
+      rows.value.iterator
+    }
+    override def unpersist(blocking: Boolean = false): this.type = synchronized {
+      if (shard != null) { shard.destroy(); shard = null }
+      super.unpersist(blocking)
+    }
+  }
+
+  private class ShardZero extends org.apache.spark.Partition { override def index: Int = 0 }
 
   /** Partition stub for [[ShardAlignedRDD]]: target index == shard id,
     * wrapping the parent (file-scan) partition that holds that shard. */

@@ -32,6 +32,16 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
     df.select(col("query_id"), col("rank"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
 
+  /** Index rows in a comparable form: adjacency included, ordered by
+    * (shard, offset). */
+  private def canon(ds: org.apache.spark.sql.Dataset[graft.index.IndexRow]) =
+    ds.collect().map(r => (r.sub_index_id, r.offset, r.global_id, r.layer,
+      r.embedding.toSeq, r.out, r.edges)).sortBy(t => (t._1, t._2)).toSeq
+
+  /** Rows and meta equal, bit for bit. */
+  private def sameIndex(a: VectorIndex, b: VectorIndex): Boolean =
+    a.numShards == b.numShards && a.meta.toSeq == b.meta.toSeq && canon(a.rows) == canon(b.rows)
+
   /** Flat single-build ground truth over vec_id in [10, hi). */
   private def flatExact(hi: Int): Set[(Long, Int, Long)] = {
     val flat = VectorIndex.build(
@@ -320,9 +330,6 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
       .filter(!col("vec_id").isin(dead.toSeq: _*))
       .select(col("vec_id").as("id"), col("embedding"))
     val full = VectorIndex.build(live, params, numShards = 4)
-    def canon(ds: org.apache.spark.sql.Dataset[graft.index.IndexRow]) =
-      ds.collect().map(r => (r.sub_index_id, r.offset, r.global_id, r.layer,
-        r.embedding.toSeq, r.out, r.edges)).sortBy(t => (t._1, t._2)).toSeq
     assert(compacted.generations.isEmpty && compacted.tombstones.isEmpty)
     assert(compacted.base.meta.map(_.sub_index_id).toSeq == Seq(0, 1, 2),
       "the emptied shard must drop out of meta")
@@ -620,5 +627,174 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
       assert(preDelete.tombstones.isEmpty &&
         preDelete.deleteThreshold === Long.MaxValue)
     } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
+  /** (id, embedding) rows of vec_id in [from, until) as a local relation. */
+  private def localRows(from: Int, until: Int): Array[(Long, Array[Float])] =
+    slice(from, until).collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+
+  test("ingest rejects a non-finite or wrongly-sized embedding on both paths, naming the id") {
+    import spark.implicits._
+    val rows = localRows(300, 310)
+    val d = rows.head._2.length
+    def batchWith(id: Long, v: Array[Float]): DataFrame =
+      rows.map { case (i, x) => (i, if (i == id) v else x) }.toSeq.toDF("id", "embedding")
+    def vec(id: Long) = rows.find(_._1 == id).get._2
+    val bad = Seq(
+      303L -> vec(303).updated(1, Float.NaN),
+      305L -> vec(305).updated(0, Float.PositiveInfinity),
+      307L -> vec(307).updated(d - 1, Float.NegativeInfinity),
+      304L -> (vec(304) :+ 0.5f),
+      306L -> vec(306).take(d - 1))
+    val base = baseIdx
+    val emptyBase = VectorIndex.build(slice(0, 0), params, numShards = 4)
+    // the default bound takes the driver path; 4 forces the distributed one
+    for (shardSize <- Seq(65536L, 4L)) {
+      val lsm = LsmVectorIndex(base, compactThreshold = 1000000, genShardSize = shardSize)
+      for ((id, v) <- bad) {
+        val e = intercept[IllegalArgumentException](lsm.ingest(batchWith(id, v)))
+        assert(e.getMessage.contains(s"ingested id $id "), s"genShardSize $shardSize: ${e.getMessage}")
+      }
+      // an empty base takes its dimension from the first generation
+      val grown = LsmVectorIndex(emptyBase, compactThreshold = 1000000, genShardSize = shardSize)
+        .ingest(slice(10, 20))
+      val e = intercept[IllegalArgumentException](grown.ingest(batchWith(306L, vec(306).take(d - 1))))
+      assert(e.getMessage.contains(s"ingested id 306 has ${d - 1} components, the index dimension is $d"),
+        e.getMessage)
+      // and an empty index, a ragged batch
+      val e2 = intercept[IllegalArgumentException](
+        LsmVectorIndex(emptyBase, 1000000, genShardSize = shardSize)
+          .ingest(batchWith(306L, vec(306).take(d - 1))))
+      assert(e2.getMessage.contains("id 306 has"), e2.getMessage)
+    }
+  }
+
+  test("a batch rejected on the distributed path leaves nothing cached") {
+    import spark.implicits._
+    val lsm = LsmVectorIndex(baseIdx, compactThreshold = 1000000, genShardSize = 4)
+    val nan = localRows(300, 310).map { case (i, v) => (i, if (i == 302) v.updated(0, Float.NaN) else v) }
+      .toSeq.toDF("id", "embedding")
+    for (batch <- Seq(slice(300, 310).union(slice(300, 302)), nan)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      intercept[IllegalArgumentException](lsm.ingest(batch))
+      assert(batch.select(col("id").cast("long"), col("embedding")).storageLevel ==
+        org.apache.spark.storage.StorageLevel.NONE, "the rejected batch is still cached")
+      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+        "a rejected batch left a persisted RDD")
+    }
+  }
+
+  test("a driver-built generation equals VectorIndex.build over the batch, rows and meta") {
+    import spark.implicits._
+    import graft.index.ParamStep
+    // unsorted ids with a gap: 300..339 and 400..429, shuffled
+    val batchRows = new scala.util.Random(20261017)
+      .shuffle((localRows(300, 340) ++ localRows(400, 430)).toSeq)
+    val batch = batchRows.toDF("id", "embedding")
+    val variants = Seq(
+      "float L2" -> params,
+      "SQ8" -> params.copy(quantized = true),
+      "cosine" -> params.copy(normalizeForCosine = true),
+      "MIPS" -> params.copy(augmentForMips = true,
+        mipsMaxNorm = VectorIndex.calibrateMipsNorm(slice(10, 430))),
+      "schedule" -> params.copy(schedule = Seq(ParamStep(0, 4, 16), ParamStep(25, 8, 32))))
+    for ((name, p) <- variants) {
+      val base = VectorIndex.build(slice(10, 60), p, numShards = 1)
+      val gen = LsmVectorIndex(base, compactThreshold = 1000000).ingest(batch).generations.last
+      assert(sameIndex(gen, VectorIndex.build(batch, p, numShards = 1)), s"$name generation differs")
+      base.unpersist()
+    }
+  }
+
+  test("a batch over genShardSize still builds a multi-shard generation equal to build") {
+    val lsm = LsmVectorIndex(baseIdx, compactThreshold = 1000000, genShardSize = 30)
+      .ingest(slice(300, 400))
+    val gen = lsm.generations.last
+    assert(gen.numShards == 4)
+    assert(sameIndex(gen, VectorIndex.build(slice(300, 400), params, numShards = 4)))
+    lsm.unpersist()
+  }
+
+  test("work counter: a small ingest runs at most 2 jobs and no exchange") {
+    // the first ingest reads the base dimension once
+    val lsm0 = LsmVectorIndex(baseIdx, compactThreshold = 1000000).ingest(slice(300, 350))
+    val (lsm1, ingest) = workDuring(lsm0.ingest(slice(350, 400)))
+    assert(ingest.jobs <= 2 && ingest.stages == ingest.jobs && ingest.shuffleWriteBytes == 0,
+      s"small ingest ran $ingest")
+    lsm1.unpersist()
+  }
+
+  test("work counter: the first probe of a new generation is 1 job of 1 stage") {
+    import spark.implicits._
+    val q = localRows(0, 10).toSeq.toDF("query_id", "embedding")
+    val lsm0 = LsmVectorIndex(baseIdx, compactThreshold = 1000000)
+    lsm0.query(q, 10, 32).collect() // lays out the base
+    val lsm1 = lsm0.ingest(slice(300, 350))
+    val (res, probe) = workDuring(lsm1.query(q, 10, 32).collect())
+    assert(probe.jobs == 1 && probe.stages == 1 && probe.shuffleWriteBytes == 0,
+      s"first probe of the new generation ran $probe")
+    assert(res.length == 100)
+    lsm1.unpersist()
+  }
+
+  test("compaction, compactAsync and save/load over driver-built generations equal a build over the live set") {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val base = baseIdx
+    def stream() = LsmVectorIndex(base, compactThreshold = 1000000)
+      .ingest(slice(300, 350)).delete(Seq(20L, 310L)).ingest(slice(350, 400))
+    val full = VectorIndex.build(slice(10, 400).filter(!col("id").isin(20L, 310L)),
+      params, numShards = 4)
+    assert(stream().generations.forall(_.numShards == 1))
+    assert(sameIndex(stream().compact().base, full), "compact")
+    val dir = java.nio.file.Files.createTempDirectory("lsm_driver_gen_").toString
+    try {
+      stream().save(dir)
+      assert(sameIndex(LsmVectorIndex.load(spark, dir).compact().base, full), "save/load + compact")
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+    val lsm = stream()
+    val swap = scala.concurrent.Await.result(
+      lsm.compactAsync(), scala.concurrent.duration.Duration(180, "seconds"))
+    // the async fold keeps the tombstones for the next compact
+    assert(sameIndex(swap(lsm).compact().base, full), "compactAsync + compact")
+  }
+
+  test("compaction releases the driver-held rows of every generation it folds") {
+    import org.apache.spark.graft.DriverBlocks
+    // destroying a broadcast is asynchronous: wait up to 10 s
+    def released(ids: Seq[Long]): Boolean = {
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (ids.exists(DriverBlocks.holdsBroadcast) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      !ids.exists(DriverBlocks.holdsBroadcast)
+    }
+    var lsm = LsmVectorIndex(baseIdx, compactThreshold = 60)
+    for (cycle <- 0 until 3) {
+      val from = 300 + 60 * cycle
+      lsm = lsm.ingest(slice(from, from + 20)).ingest(slice(from + 20, from + 40))
+      val held = lsm.generations.flatMap(_.driverRowsBroadcastId)
+      assert(held.size == 2 && held.forall(DriverBlocks.holdsBroadcast),
+        s"cycle $cycle: the live generations' rows must be on the driver")
+      lsm = lsm.ingest(slice(from + 40, from + 60)) // 60 fresh: compacts
+      assert(lsm.generations.isEmpty, s"cycle $cycle did not compact")
+      assert(released(held), s"cycle $cycle: a folded generation still holds driver blocks")
+    }
+    // the compacted base never reads the released rows again
+    assert(resultSet(lsm.query(queries, 10, searchWidth = 0)) == flatExact(480))
+  }
+
+  test("a batch over DriverBuildRows is built distributed, one at the bound on the driver") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261017)
+    val rows = (0 to LsmVectorIndex.DriverBuildRows)
+      .map(i => (1000000L + i, Array.fill(8)(rnd.nextFloat())))
+    val empty = VectorIndex.build(slice(0, 0), params, numShards = 4)
+    def genOf(n: Int) = LsmVectorIndex(empty, compactThreshold = Long.MaxValue)
+      .ingest(rows.take(n).toDF("id", "embedding")).generations.last
+    val atBound = genOf(LsmVectorIndex.DriverBuildRows)
+    assert(atBound.driverRowsBroadcastId.nonEmpty, "a batch at the bound is built on the driver")
+    val over = genOf(rows.length)
+    assert(over.driverRowsBroadcastId.isEmpty && over.numShards == 1)
+    assert(sameIndex(over, VectorIndex.build(rows.toDF("id", "embedding"), params, numShards = 1)))
+    atBound.unpersist(); over.unpersist()
   }
 }

@@ -16,6 +16,9 @@ object SparkSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Spark work counted by [[SparkSuite.workDuring]]. */
+  final case class Work(jobs: Int, stages: Int, shuffleWriteBytes: Long)
 }
 
 trait SparkSuite {
@@ -25,10 +28,26 @@ trait SparkSuite {
   /** Run `f` and count the Spark jobs it started (the work counter the
     * probe specs pin). */
   def jobsDuring[T](f: => T): (T, Int) = {
+    val (r, w) = workDuring(f)
+    (r, w.jobs)
+  }
+
+  /** Run `f` and count the Spark work it started: jobs, SUBMITTED stages
+    * (a stage whose output is already materialized is skipped, not
+    * submitted) and shuffle bytes written. */
+  def workDuring[T](f: => T): (T, SparkSuite.Work) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
     org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(l)
@@ -37,6 +56,6 @@ trait SparkSuite {
       org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
       r
     } finally spark.sparkContext.removeSparkListener(l)
-    (r, jobs.get)
+    (r, SparkSuite.Work(jobs.get, stages.get, shuffled.get))
   }
 }
