@@ -169,7 +169,9 @@ final class LsmVectorIndex private (
   /** Fold every generation into the base and purge every tombstone in
     * ONE shard-scoped rewrite: a shard gaining a live fresh id or holding
     * a tombstoned id is rebuilt once from its survivors plus its live
-    * fresh ids; the rest keep rows and meta verbatim. Exact-mode probe
+    * fresh ids; the rest keep rows and meta verbatim. The rebuilt shards
+    * are the only rows that move: the new base's cached rows are its
+    * probe layout, so its first probe runs no exchange. Exact-mode probe
     * results are unchanged (the result equals a build over the live set)
     * and probes stop paying the liveness filter. The tombstones reach
     * the plan as a one-column relation, not a literal id list, so the

@@ -200,9 +200,10 @@ class VectorIndex private (
   override def probeDescription: String = s"shards=$numShards"
 
   /** Stored vector dimension, read once from the first index row (one
-    * job) and reused by every append. A driver-built index, and a
-    * rewrite of an index that knew it, start out knowing it. Only valid
-    * when the index is non-empty — callers guard on meta.nonEmpty. */
+    * job) and reused by every append. An in-memory index reads it in its
+    * build, and a rewrite of an index that knew it starts out knowing
+    * it. Only valid when the index is non-empty — callers guard on
+    * meta.nonEmpty. */
   def dimension: Int = {
     if (knownDim <= 0) knownDim = rows.select(size(col("embedding"))).head.getInt(0)
     knownDim
@@ -429,23 +430,27 @@ class VectorIndex private (
     * corpus-sized shuffle. */
   @transient private[graft] var shardedLayoutDir: Option[String] = None
 
-  /** Set by [[VectorIndex.buildOnDriver]]: the driver-held rows, already
-    * one partition per shard, which [[rows]] reads too — [[probeLayout]]
-    * is that RDD itself. */
-  @transient private var driverLayout: Option[VectorIndex.DriverRowsRDD] = None
+  /** Set for an IN-MEMORY index ([[VectorIndex.build]], [[rewrite]],
+    * [[VectorIndex.buildOnDriver]]): its one copy of the rows, partition
+    * s holding exactly shard s, which [[rows]] reads too —
+    * [[probeLayout]] is that RDD itself. */
+  @transient private var inMemoryLayout: Option[org.apache.spark.rdd.RDD[IndexRow]] = None
 
   /** The id of the broadcast that holds a driver-built index's rows. */
-  private[graft] def driverRowsBroadcastId: Option[Long] = driverLayout.map(_.broadcastId)
+  private[graft] def driverRowsBroadcastId: Option[Long] =
+    inMemoryLayout.collect { case d: VectorIndex.DriverRowsRDD => d.broadcastId }
 
   /** Probe-ready layout shared by the broadcast and shuffled probes:
-    * partition i holds exactly shard i's rows (ShardPartitioner maps the
-    * shard id to itself), cached ONCE per index — the exchange happens on
-    * first probe, not once per query call, and both probe paths read the
-    * same cached blocks. */
+    * partition i holds exactly shard i's rows. An in-memory index was
+    * laid out so by its build ([[VectorIndex.build]], [[rewrite]]), and
+    * this is its one cached copy, filled by the build. A LOADED snapshot
+    * lays it out on first probe, not once per query call, and both probe
+    * paths read the same blocks: a narrow scan of a
+    * [[VectorIndex.relayoutSharded]] snapshot, else one exchange of the
+    * rows, cached at `spark.graft.probeLayoutStorage` (which governs
+    * only this case). */
   @transient private[graft] lazy val probeLayout
-      : org.apache.spark.rdd.RDD[IndexRow] = driverLayout.getOrElse {
-    // a driver-built index is laid out by construction, and reading its
-    // rows costs nothing, so there is nothing to cache.
+      : org.apache.spark.rdd.RDD[IndexRow] = inMemoryLayout.getOrElse {
     // FAST PATH — dir-sharded snapshot layout (rows_sharded/, one file
     // per shard): the probe layout is a narrow aligned scan, NOT a
     // shuffle. The legacy partitionBy below moves ~2.5x the snapshot's
@@ -592,36 +597,42 @@ class VectorIndex private (
     * order, so the result equals [[VectorIndex.build]] over the live set
     * bit for bit. No affected shard returns this index. `normalize` =
     * false marks INTERNALLY RECOVERED vectors (generation rows, already
-    * transformed at ingest): re-transforming would drift last bits. */
+    * transformed at ingest): re-transforming would drift last bits.
+    *
+    * The result's one cached copy is its probe layout: partition s is
+    * the rebuilt shard s if s is affected, else partition s of this
+    * [[probeLayout]], picked by partition index (narrow, no exchange).
+    * The added vectors are validated inside the build
+    * ([[VectorIndex.AppendCheck]]), so the rebuild's exchange is the
+    * rewrite's only one. */
   private[index] def rewrite(removeIds: DataFrame, newVectors: DataFrame,
       normalize: Boolean): VectorIndex = {
     val (fresh, affectedSeq, rebuildInput) =
       rewritePrep(removeIds, newVectors, normalize, cacheInput = true)
     if (affectedSeq.isEmpty) return this
     val affected = affectedSeq.toSet
-    val rebuilt = VectorIndex.buildRows(rebuildInput, params, numShards)
-    val kept = rows.filter(!col("sub_index_id").isin(affectedSeq: _*))
-    // memory AND disk whatever the session's default: the rebuilt rows
-    // may come from driver-built generations, which are released once
-    // folded, so these blocks must never be dropped and recomputed
-    val cached = kept.union(rebuilt).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // untouched shards keep their meta verbatim; recompute only the
-    // rebuilt shards. The scan of the cached union materializes every
-    // partition of it, kept slice included, so the inputs can be dropped
-    // after this one pass.
-    val rebuiltMeta = VectorIndex.computeMeta(
-      cached.filter(col("sub_index_id").isin(affectedSeq: _*)))
-    val meta2 = (meta.filterNot(m => affected(m.sub_index_id)) ++ rebuiltMeta)
-      .sortBy(_.sub_index_id)
-    if (fresh != null) fresh.unpersist()
-    rebuildInput.unpersist()
-    val next = new VectorIndex(params, numShards, cached, meta2,
-      java.util.UUID.randomUUID().toString)
-    next.knownDim = knownDim // a rewrite never changes the dimension
+    // the layout pass materializes every partition, kept ones included,
+    // so the inputs can be dropped after it
+    val next = try {
+      val check = if (newVectors == null) null
+        else VectorIndex.AppendCheck(rows.sparkSession, if (meta.nonEmpty) dimension else -1)
+      val rebuilt = VectorIndex.buildLayout(rebuildInput, params, numShards, check)
+      val idx = VectorIndex.inMemory(rows.sparkSession, params, numShards,
+        new VectorIndex.ShardAlignedRDD(VectorIndex.concat(Seq(probeLayout, rebuilt)),
+          Array.tabulate(numShards)(s => if (affected(s)) numShards + s else s)))
+      if (check != null)
+        try check.verify() catch { case t: Throwable => idx.unpersist(); throw t }
+      idx
+    } finally {
+      if (fresh != null) fresh.unpersist()
+      rebuildInput.unpersist()
+    }
+    // a rewrite never changes the dimension
+    if (next.knownDim <= 0) next.knownDim = knownDim
     next
   }
 
-  /** Discover/recover/validate front half shared by [[rewrite]] and
+  /** Discover/recover front half shared by [[rewrite]] and
     * [[VectorIndex.appendTo]], which differ only in the rebuilt-rows
     * SINK (in-memory cache vs parquet write). Returns (the fresh batch if
     * it was cached, else null; affected shards; rebuild input), or
@@ -654,9 +665,10 @@ class VectorIndex private (
     val addedIds = added.select(col("id"))
     val touchedIds = removed.fold(addedIds)(r => addedIds.union(
       rows.toDF().select(col("global_id").as("id")).join(r, Seq("id"), "left_semi")))
+    // each task sends its own distinct shards: no exchange
     val affected = touchedIds
       .select(VectorIndex.shardOf(col("id"), numShards).as("s"))
-      .distinct().as[Int].collect().toSet
+      .as[Int].mapPartitions(_.toSet.iterator).collect().toSet
     if (affected.isEmpty) { release(); return (null, Nil, null) }
     val affectedSeq = affected.toSeq
     val existing = survivors(rows
@@ -664,38 +676,17 @@ class VectorIndex private (
       .select(col("global_id").as("id"), col("embedding")))
     val rebuildInput0 = existing.union(added)
     val rebuildInput = if (cacheInput) rebuildInput0.cache() else rebuildInput0
-    // one validation pass: total/distinct counts + dimension mismatches
-    // (existing rows always match, so counting over the union is the same
-    // check as counting over fresh alone — in the same job; a clashing id
-    // necessarily hashes into an affected shard, so the distinct count
-    // covers old-vs-new AND new-vs-new clashes). A failed
-    // validation unpersists before throwing — a caller that catches and
-    // retries must not accumulate orphaned cached batches. A pure
-    // removal adds nothing to validate.
-    if (newVectors != null) try {
-      val dim = if (meta.nonEmpty) dimension else -1
-      val counts = rebuildInput
-        .agg(count(lit(1)), count_distinct(col("id")),
-          count(when(lit(dim >= 0) && size(col("embedding")) =!= dim, 1))).head
-      val (nIn, nDistinct, badDim) = (counts.getLong(0), counts.getLong(1), counts.getLong(2))
-      require(badDim == 0,
-        s"appended vectors must match index dimension $dim ($badDim mismatching rows)")
-      require(nIn == nDistinct,
-        s"appended ids must be disjoint from the index and unique (${nIn - nDistinct} clashes)")
-    } catch { case t: Throwable =>
-      release()
-      if (cacheInput) rebuildInput.unpersist()
-      throw t
-    }
     (cachedFresh, affectedSeq, rebuildInput)
   }
 
-  /** Drop this index's cached data (rows + probe layout). Call on a
-    * superseded generation after [[append]] — each generation caches the
-    * full row set, so long ingest loops must release old ones. A
-    * driver-built index ([[VectorIndex.buildOnDriver]]) has no source to
-    * recompute from: its rows are released and it must not be probed
-    * again. */
+  /** Drop this index's cached data: the one shard-aligned copy of an
+    * in-memory index, or a loaded snapshot's row cache and probe layout.
+    * Call on a superseded generation after [[append]] — each generation
+    * caches the full row set, so long ingest loops must release old
+    * ones. A driver-built index ([[VectorIndex.buildOnDriver]]) has no
+    * source to recompute from: its rows are released and it must not be
+    * probed again; nor may an index whose layout reads them, such as a
+    * compacted LSM base, once its own copy is dropped. */
   def unpersist(): Unit = {
     probeLayout.unpersist(false)
     rows.unpersist()
@@ -704,9 +695,14 @@ class VectorIndex private (
   /** Materialize the index — the engine-side A5 `optimize` (reference:
     * python_binding/dehnswpy.cpp:18-21, a deep-copy compaction no-op that
     * exists to settle memory after build): forces the cached rows to
-    * compute so later probes pay no build cost. Returns this index,
-    * mirroring the reference's returned copy. */
-  def optimize(): VectorIndex = { rows.count(); probeLayout.count(); this }
+    * compute so later probes pay no build cost. An in-memory index is
+    * materialized by its build, so this is one read of its cache.
+    * Returns this index, mirroring the reference's returned copy. */
+  def optimize(): VectorIndex = {
+    if (inMemoryLayout.isEmpty) rows.count()
+    probeLayout.count()
+    this
+  }
 
   /** Persist index rows + shard meta + params (reference save/load
     * round-trip invariant: dehnsw.h:666-844, exercised at
@@ -834,7 +830,7 @@ object VectorIndex {
       (m.indexId, m.params, m.meta.map(x => x.sub_index_id -> x).toMap)).toArray
     // the partition index of the layout union itself — not the task's
     // partition id, which counts from the start of any union of chunks
-    members.map(_.probeLayout).reduce(_ union _).mapPartitionsWithIndex { (pid, rit) =>
+    concat(members.map(_.probeLayout)).mapPartitionsWithIndex { (pid, rit) =>
       var m = 0
       while (offsets(m + 1) <= pid) m += 1
       val (iid, params, metaMap) = info(m)
@@ -855,6 +851,14 @@ object VectorIndex {
       Iterator.single(ShardCandidates(slots.result(), dists.result(), ids.result()))
     }
   }
+
+  /** The layouts' partitions one after another. `RDD.union` would instead
+    * zip them partition by partition when every layout declares the same
+    * partitioner, as [[ShardAlignedRDD]]s of equal shard count do. */
+  private def concat(layouts: Seq[org.apache.spark.rdd.RDD[IndexRow]])
+      : org.apache.spark.rdd.RDD[IndexRow] =
+    if (layouts.size == 1) layouts.head
+    else new org.apache.spark.rdd.UnionRDD(layouts.head.context, layouts)
 
   /** Answer a driver-held query batch NOW: for each chunk, ONE Spark job
     * over the members' shards, whose task results (at most k candidates
@@ -1051,65 +1055,157 @@ object VectorIndex {
   private[index] def shardOf(id: org.apache.spark.sql.Column, numShards: Int) =
     pmod(id, lit(numShards)).cast("int")
 
-  /** Shard-build pipeline shared by [[build]] and [[VectorIndex.append]]:
-    * (id, embedding) rows → shard assignment (id % numShards) → one
-    * partition-local graph build per shard → IndexRows. */
-  private[index] def buildRows(
-      df: DataFrame, params: IndexParams, numShards: Int): Dataset[IndexRow] = {
+  /** The build input laid out for the shard builds: (id, embedding, shard)
+    * rows, shard s in partition s (`repartitionById`: the shard id IS the
+    * partition, so every shard gets a task of its own, where a hash
+    * repartition packs several shards into one task), id-sorted. */
+  private def shardSorted(df: DataFrame, numShards: Int): Dataset[(Long, Array[Float], Int)] = {
     val spark = df.sparkSession
     import spark.implicits._
-    buildPartitions(
-      df
-        .select(col("id").cast("long"), col("embedding"))
-        .withColumn("sub_index_id", shardOf(col("id"), numShards))
-        .repartition(numShards, col("sub_index_id"))
-        .sortWithinPartitions(col("sub_index_id"), col("id"))
-        .as[(Long, Array[Float], Int)],
-      params)
+    df.select(col("id").cast("long"), col("embedding"))
+      .withColumn("sub_index_id", shardOf(col("id"), numShards))
+      .repartitionById(numShards, col("sub_index_id"))
+      .sortWithinPartitions(col("sub_index_id"), col("id"))
+      .as[(Long, Array[Float], Int)]
+  }
+
+  /** Shard-build pipeline of the snapshot writers ([[buildTo]],
+    * [[appendTo]]): (id, embedding) rows → shard assignment (id %
+    * numShards) → one graph build per shard, in its own partition →
+    * IndexRows. */
+  private[index] def buildRows(
+      df: DataFrame, params: IndexParams, numShards: Int): Dataset[IndexRow] =
+    buildPartitions(shardSorted(df, numShards), params)
+
+  /** [[buildRows]] for an in-memory index: an RDD whose partition s
+    * holds exactly shard s, the layout the probes read. An empty input,
+    * which Spark plans as a relation of no partitions, gives `numShards`
+    * empty ones. */
+  private[index] def buildLayout(df: DataFrame, params: IndexParams,
+      numShards: Int, check: AppendCheck = null): org.apache.spark.rdd.RDD[IndexRow] = {
+    val p = params
+    val built = shardSorted(df, numShards).rdd.mapPartitions(buildGrouped(_, p, check))
+    if (built.partitions.nonEmpty) built
+    else df.sparkSession.sparkContext.parallelize(Seq.empty[IndexRow], numShards)
   }
 
   /** Partition-local graph build over rows that are ALREADY grouped by
     * sub_index_id within each partition and id-sorted within each group —
     * the post-exchange half of [[buildRows]], also reachable without any
-    * exchange from a shard-bucketed corpus table ([[buildFromBucketed]]).
-    * A shard revisited after a different shard in the same partition means
-    * the ordering contract is broken (two partial graphs would silently
-    * share a shard id) — fail the task instead. */
+    * exchange from a shard-bucketed corpus table ([[buildFromBucketed]]). */
   private[graft] def buildPartitions(
       ds: Dataset[(Long, Array[Float], Int)], params: IndexParams): Dataset[IndexRow] = {
     val spark = ds.sparkSession
     import spark.implicits._
     val p = params
-    ds
-      .mapPartitions { it =>
-        // consecutive rows share sub_index_id after the sort. Dimension is
-        // fixed at index creation (SURVEY §1.1): the partition's first row
-        // sets it for every shard the partition builds.
-        var dim = -1
-        val bit = it.buffered
-        val built = mutable.BitSet.empty
-        new Iterator[IndexRow] {
-          private var pending: Iterator[IndexRow] = Iterator.empty
-          def hasNext: Boolean = pending.hasNext || bit.hasNext
-          def next(): IndexRow = {
-            if (!pending.hasNext) {
-              val shardId = bit.head._3
-              require(!built.contains(shardId),
-                s"input rows not grouped by sub_index_id: shard $shardId reappeared " +
-                  "after another shard (bucketed corpus unsorted or mis-bucketed?)")
-              built += shardId
-              if (dim < 0) dim = bit.head._2.length
-              val vecs = mutable.ArrayBuffer.empty[(Long, Array[Float])]
-              while (bit.hasNext && bit.head._3 == shardId) {
-                val r = bit.next()
-                vecs += ((r._1, r._2))
-              }
-              pending = buildShard(shardId, vecs, p, dim)._2
-            }
-            pending.next()
-          }
-        }
+    ds.mapPartitions(buildGrouped(_, p))
+  }
+
+  /** One partition of shard builds ([[buildShard]] per run of equal
+    * shard ids), each shard first passed through `check` if one is given.
+    * A shard revisited after a different shard in the same
+    * partition means the ordering contract is broken (two partial graphs
+    * would silently share a shard id) — fail the task instead. */
+  private def buildGrouped(it: Iterator[(Long, Array[Float], Int)],
+      p: IndexParams, check: AppendCheck = null): Iterator[IndexRow] = {
+    // consecutive rows share sub_index_id after the sort. Dimension is
+    // fixed at index creation (SURVEY §1.1): the partition's first row
+    // sets it for every shard the partition builds.
+    var dim = -1
+    val bit = it.buffered
+    val built = mutable.BitSet.empty
+    Iterator.continually(bit).takeWhile(_.hasNext).flatMap { _ =>
+      val shardId = bit.head._3
+      require(!built.contains(shardId),
+        s"input rows not grouped by sub_index_id: shard $shardId reappeared " +
+          "after another shard (bucketed corpus unsorted or mis-bucketed?)")
+      built += shardId
+      if (dim < 0) dim = bit.head._2.length
+      val vecs = mutable.ArrayBuffer.empty[(Long, Array[Float])]
+      while (bit.hasNext && bit.head._3 == shardId) {
+        val r = bit.next()
+        vecs += ((r._1, r._2))
       }
+      if (check != null && check.rejects(vecs)) Iterator.empty
+      else buildShard(shardId, vecs, p, dim)._2
+    }
+  }
+
+  /** The checks on vectors added to an index ([[VectorIndex!.rewrite]],
+    * [[appendTo]]): each must have the index dimension `dim` (unchecked
+    * while the index is empty, -1), and no id may repeat, within the
+    * batch or against the index. A rewrite runs them INSIDE its build:
+    * every copy of an id lands in the same shard, adjacent after the
+    * build's id sort, so a shard counts its own violations into the
+    * accumulators and is not built if it has any; [[verify]] then throws
+    * on the driver. */
+  private[index] final case class AppendCheck(dim: Int,
+      badDims: org.apache.spark.util.LongAccumulator,
+      clashes: org.apache.spark.util.LongAccumulator) {
+    def rejects(vecs: collection.IndexedSeq[(Long, Array[Float])]): Boolean = {
+      val bad = if (dim < 0) 0 else vecs.count(v => v._2 == null || v._2.length != dim)
+      val dup = (1 until vecs.length).count(i => vecs(i)._1 == vecs(i - 1)._1)
+      badDims.add(bad)
+      clashes.add(dup)
+      bad + dup > 0
+    }
+    def verify(): Unit = AppendCheck.require(dim, badDims.value, clashes.value)
+  }
+
+  private[index] object AppendCheck {
+    def apply(spark: SparkSession, dim: Int): AppendCheck =
+      AppendCheck(dim, spark.sparkContext.longAccumulator, spark.sparkContext.longAccumulator)
+
+    def require(dim: Int, badDims: Long, clashes: Long): Unit = {
+      Predef.require(badDims == 0,
+        s"appended vectors must match index dimension $dim ($badDims mismatching rows)")
+      Predef.require(clashes == 0,
+        s"appended ids must be disjoint from the index and unique ($clashes clashes)")
+    }
+  }
+
+  /** An in-memory index over `layout`, whose partition s must hold
+    * exactly shard s: the layout is its one cached copy (memory and
+    * disk: it may read rows that are released once it is filled, see
+    * [[DriverRowsRDD]]), backing both [[VectorIndex!.rows]] and
+    * [[VectorIndex!.probeLayout]]. ONE pass fills the cache, checks that
+    * every row sits in its own shard's partition and reads the shard
+    * meta; a failed pass drops what it cached. */
+  private def inMemory(spark: SparkSession, params: IndexParams, numShards: Int,
+      layout: org.apache.spark.rdd.RDD[IndexRow]): VectorIndex = {
+    import spark.implicits._
+    require(layout.partitions.length == numShards,
+      s"shard layout has ${layout.partitions.length} partitions for $numShards shards")
+    layout.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shards = try layout.mapPartitionsWithIndex((s, it) => Iterator(shardMetaOf(s, it))).collect()
+      catch { case t: Throwable => layout.unpersist(false); throw t }
+    val idx = new VectorIndex(params, numShards, spark.createDataset(layout),
+      shards.flatMap(_._1), java.util.UUID.randomUUID().toString)
+    idx.inMemoryLayout = Some(layout)
+    idx.knownDim = shards.map(_._2).max
+    idx
+  }
+
+  /** Shard `shard`'s meta and dimension (-1 if empty) from its rows, every
+    * one of which must belong to it. The entry is the lowest offset on
+    * the top layer, as the kernel records it at promotion
+    * (dehnsw.h:495-499); a shard built in two partitions repeats offsets,
+    * so its largest offset falls short of n - 1. */
+  private def shardMetaOf(shard: Int, rows: Iterator[IndexRow]): (Option[ShardMeta], Int) = {
+    var (n, layers, entry, maxOffset, dim) = (0L, -1, -1, -1, -1)
+    rows.foreach { r =>
+      require(r.sub_index_id == shard, s"a row of shard ${r.sub_index_id} sits in the " +
+        s"partition of shard $shard: the layout is not shard-aligned")
+      n += 1
+      dim = r.embedding.length
+      if (r.layer > layers || r.layer == layers && r.offset < entry) {
+        layers = r.layer; entry = r.offset
+      }
+      maxOffset = math.max(maxOffset, r.offset)
+    }
+    require(maxOffset == n - 1, s"shard $shard has $n rows but max offset $maxOffset — " +
+      "shard built in multiple partitions (corpus mis-partitioned?)")
+    (if (n == 0) None else Some(ShardMeta(shard, n, layers, entry)), dim)
   }
 
   /** Build ONE shard's graph: the kernel loop of both build paths, the
@@ -1151,7 +1247,7 @@ object VectorIndex {
     val layout = new DriverRowsRDD(spark.sparkContext, spark.sparkContext.broadcast(built.toArray))
     val idx = new VectorIndex(params, 1, spark.createDataset(layout), Array(meta),
       java.util.UUID.randomUUID().toString)
-    idx.driverLayout = Some(layout)
+    idx.inMemoryLayout = Some(layout)
     idx.knownDim = dim
     idx
   }
@@ -1239,17 +1335,20 @@ object VectorIndex {
         .toDF("id", "embedding")
     }
 
-  /** Bulk build (reference O1 insert loop, parallelized across shards).
-    * Input df must have columns (id LONG, embedding ARRAY<FLOAT>). */
-  def build(df: DataFrame, params: IndexParams, numShards: Int): VectorIndex = {
-    val cached = buildRows(normalizeInput(df, params), params, numShards).cache()
-    val meta = computeMeta(cached)
-    new VectorIndex(params, numShards, cached, meta,
-      java.util.UUID.randomUUID().toString)
-  }
+  /** Bulk build (reference O1 insert loop, parallelized across shards:
+    * one task per shard). Input df must have columns (id LONG, embedding
+    * ARRAY<FLOAT>). The corpus moves through ONE exchange, which puts
+    * shard s in partition s; the built rows stay there, cached once at
+    * memory and disk, and that copy is both [[VectorIndex!.rows]] and the
+    * probe layout, so no probe moves them again. Builds eagerly: the pass
+    * that fills the cache reads the shard meta. */
+  def build(df: DataFrame, params: IndexParams, numShards: Int): VectorIndex =
+    inMemory(df.sparkSession, params, numShards,
+      buildLayout(normalizeInput(df, params), params, numShards))
 
   /** Build STRAIGHT TO STORAGE: index rows stream from the build tasks
-    * directly into compressed parquet — no cluster-wide cache, no
+    * (one per shard, so one file per shard) directly into compressed
+    * parquet — no cluster-wide cache, no
     * serialized eviction spill; exactly one on-disk copy. Returns the
     * LOADED index over that parquet (lazy cache, rehydrated per probe).
     *
@@ -1323,10 +1422,18 @@ object VectorIndex {
     if (affectedSeq.isEmpty)
       throw new IllegalArgumentException("appendTo over an empty batch")
     val affected = affectedSeq.toSet
-    // 1) rebuilt shards stream straight to the new snapshot (no cache);
-    // unpersist in finally — a failed write must not leak the cached
-    // batch (rewritePrep's leak-safe contract covers only validation)
+    // 1) one validation pass before anything is written (existing rows
+    // always match, and a clashing id hashes into an affected shard, so
+    // counting over the rebuild input covers old-vs-new AND new-vs-new
+    // clashes); then the rebuilt shards stream straight to the new
+    // snapshot (no cache). Unpersist in finally — a failed validation or
+    // write must not leak the cached batch.
     try {
+      val dim = if (old.meta.nonEmpty) old.dimension else -1
+      val counts = rebuildInput
+        .agg(count(lit(1)), count_distinct(col("id")),
+          count(when(lit(dim >= 0) && size(col("embedding")) =!= dim, 1))).head
+      AppendCheck.require(dim, counts.getLong(2), counts.getLong(0) - counts.getLong(1))
       buildRows(rebuildInput, params, numShards)
         .write.mode("overwrite").parquet(s"$newPath/rows")
     } finally fresh.unpersist()
@@ -1438,24 +1545,29 @@ object VectorIndex {
   private class ShardZero extends org.apache.spark.Partition { override def index: Int = 0 }
 
   /** Partition stub for [[ShardAlignedRDD]]: target index == shard id,
-    * wrapping the parent (file-scan) partition that holds that shard. */
+    * wrapping the parent partition that holds that shard. */
   private class ShardAlignedPartition(
       override val index: Int, val parent: org.apache.spark.Partition)
     extends org.apache.spark.Partition
 
-  /** Narrow re-indexing of a one-file-per-shard scan so that partition
-    * index == shard id — the property every probe consumer relies on
-    * (TaskContext.getPartitionId as the shard, [[VectorIndex
-    * .queryDistributed]]'s zipPartitions against [[ShardPartitioner]]-
-    * partitioned queries). Purity is enforced per ROW (a mis-packed
-    * file partition would otherwise hydrate a graph from another
-    * shard's rows — silent corruption, so it is a hard error). */
+  /** Narrow re-indexing so that partition index == shard id — the
+    * property every probe consumer relies on ([[shardCandidates]]'s
+    * partition index as the shard, [[VectorIndex.queryDistributed]]'s
+    * zipPartitions against [[ShardPartitioner]]-partitioned queries):
+    * partition s reads partition `perm(s)` of the parent, a
+    * one-file-per-shard scan ([[alignedLayout]]) or the union of an old
+    * layout and its rebuilt shards ([[VectorIndex!.rewrite]]). Purity is enforced
+    * per ROW (a mis-packed parent partition would otherwise hydrate a
+    * graph from another shard's rows — silent corruption, so it is a
+    * hard error). */
   private class ShardAlignedRDD(
-      parent: org.apache.spark.rdd.RDD[IndexRow], perm: Array[Int],
-      numShards: Int)
-    extends org.apache.spark.rdd.RDD[IndexRow](parent) {
+      parent: org.apache.spark.rdd.RDD[IndexRow], perm: Array[Int])
+    extends org.apache.spark.rdd.RDD[IndexRow](parent.context,
+      Seq(new org.apache.spark.NarrowDependency(parent) {
+        def getParents(p: Int): Seq[Int] = Seq(perm(p))
+      })) {
     override val partitioner: Option[org.apache.spark.Partitioner] =
-      Some(new ShardPartitioner(numShards))
+      Some(new ShardPartitioner(perm.length))
     override protected def getPartitions: Array[org.apache.spark.Partition] =
       Array.tabulate[org.apache.spark.Partition](perm.length)(s =>
         new ShardAlignedPartition(s, firstParent[IndexRow].partitions(perm(s))))
@@ -1466,8 +1578,7 @@ object VectorIndex {
       firstParent[IndexRow].iterator(p.parent, ctx).map { r =>
         require(r.sub_index_id == shardId,
           s"sharded layout violation: a row of shard ${r.sub_index_id} " +
-            s"appeared in the partition serving shard $shardId — the " +
-            "rows_sharded layout is corrupt; re-run relayoutSharded")
+            s"appeared in the partition serving shard $shardId")
         r
       }
     }
@@ -1551,16 +1662,16 @@ object VectorIndex {
     } else {
       val perm = new Array[Int](numShards)
       firstShard.foreach { case (i, s) => perm(s) = i }
-      Some(new ShardAlignedRDD(raw, perm, numShards))
+      Some(new ShardAlignedRDD(raw, perm))
     }
   }
 
   /** One-time MIGRATION of a snapshot to the dir-sharded probe layout:
     * writes `<path>/rows_sharded/sub_index_id=N/` with EXACTLY one file
-    * per shard (a hash repartition on the shard id puts all of a
-    * shard's rows in one task, so each directory receives one file),
-    * then validates the one-file-per-shard invariant and per-shard row
-    * counts against meta.json. The flat `rows/` stays untouched — it
+    * per shard, each written by its own task (`repartitionById` puts
+    * shard s in partition s), then validates one file per shard
+    * directory and one directory per non-empty shard. The flat `rows/`
+    * stays untouched — it
     * remains the authoritative copy for [[appendTo]]'s footer-stat
     * file surgery; this layout exists so every SERVING process's
     * [[VectorIndex!.probeLayout]] is a narrow scan instead of a
@@ -1573,7 +1684,7 @@ object VectorIndex {
     val rows = spark.read.parquet(s"$path/rows")
     val numShards = Sidecar.readRequired[Sidecar.IndexParamsFile](spark,
       s"$path/params.json").numShards
-    rows.repartition(numShards, col("sub_index_id"))
+    rows.repartitionById(numShards, col("sub_index_id"))
       .write.mode("overwrite").partitionBy("sub_index_id")
       .parquet(s"$path/rows_sharded")
     // validate before anyone serves from it: exactly one data file per

@@ -18,7 +18,7 @@ object SparkSuite {
   }
 
   /** Spark work counted by [[SparkSuite.workDuring]]. */
-  final case class Work(jobs: Int, stages: Int, shuffleWriteBytes: Long)
+  final case class Work(jobs: Int, stages: Int, shuffleWriteBytes: Long, shuffles: Int)
 }
 
 trait SparkSuite {
@@ -34,17 +34,22 @@ trait SparkSuite {
 
   /** Run `f` and count the Spark work it started: jobs, SUBMITTED stages
     * (a stage whose output is already materialized is skipped, not
-    * submitted) and shuffle bytes written. */
+    * submitted), shuffle bytes written and shuffles (submitted stages
+    * that write one). */
   def workDuring[T](f: => T): (T, SparkSuite.Work) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
+    val shuffles = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
       override def onStageSubmitted(
-          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
         stages.incrementAndGet()
+        if (org.apache.spark.graft.DriverBlocks.writesShuffle(e.stageInfo))
+          shuffles.incrementAndGet()
+      }
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (e.taskMetrics != null)
           shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
@@ -56,6 +61,6 @@ trait SparkSuite {
       org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
       r
     } finally spark.sparkContext.removeSparkListener(l)
-    (r, SparkSuite.Work(jobs.get, stages.get, shuffled.get))
+    (r, SparkSuite.Work(jobs.get, stages.get, shuffled.get, shuffles.get))
   }
 }

@@ -3,8 +3,13 @@ package org.apache.spark.graft
 import org.apache.spark.SparkEnv
 import org.apache.spark.storage.BroadcastBlockId
 
-/** Spec access to the driver's block manager, which is `private[spark]`. */
+/** Spec access to driver internals that are `private[spark]`: the block
+  * manager and a stage's shuffle. */
 object DriverBlocks {
+
+  /** Whether `stage` writes a shuffle (is a shuffle map stage). */
+  def writesShuffle(stage: org.apache.spark.scheduler.StageInfo): Boolean =
+    stage.shuffleDepId.isDefined
 
   /** Whether the driver still holds a block (value or piece) of
     * broadcast `id`. */
