@@ -85,18 +85,23 @@ object AppendBench {
     def ino(f: java.io.File) =
       try java.nio.file.Files.getAttribute(f.toPath, "unix:ino")
       catch { case _: Exception => null }
-    val oldFiles = new java.io.File(s"$oldPath/rows").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f).toMap
-    val newFiles = new java.io.File(s"$newPath/rows").listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    val carried = newFiles.filter(f => oldFiles.contains(f.getName))
-    val linked = carried.count(f =>
-      ino(f) != null && ino(f) == ino(oldFiles(f.getName)))
+    // part files keyed by "sub_index_id=s/<name>": a kept shard's
+    // directory carries its file over under the same key
+    def partFiles(rows: String): Map[String, java.io.File] =
+      Option(new java.io.File(rows).listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) f.listFiles().toSeq.map(g => s"${f.getName}/${g.getName}" -> g)
+        else Seq(f.getName -> f)
+      }.filter(_._1.endsWith(".parquet")).toMap
+    val oldFiles = partFiles(s"$oldPath/rows")
+    val newFiles = partFiles(s"$newPath/rows")
+    val carried = newFiles.keys.filter(oldFiles.contains).toSeq
+    val linked = carried.count(k =>
+      ino(newFiles(k)) != null && ino(newFiles(k)) == ino(oldFiles(k)))
     val copied = carried.length - linked
-    val fresh = newFiles.filterNot(f => oldFiles.contains(f.getName))
+    val fresh = newFiles.collect { case (k, f) if !oldFiles.contains(k) => f }
     println(f"appendTo: $nAppend%d rows into $residues%d of $numShards%d shards -> " +
       f"$appendS%.1f s wall; files: $linked%d hardlinked (zero bytes, " +
-      f"inode-verified), $copied%d byte-copied, ${fresh.length}%d written " +
+      f"inode-verified), $copied%d byte-copied, ${fresh.size}%d written " +
       f"(${fresh.map(_.length()).sum / 1e9}%.2f GB)")
     // retirement accounting: what deleting the OLD generation would free
     // (old-exclusive bytes, nlink == 1) vs what it merely unshares

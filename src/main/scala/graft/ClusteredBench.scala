@@ -281,23 +281,6 @@ object ClusteredBench {
       }
     }
 
-    // --- phase: relayout (one-time dir-sharded probe layout migration) ---
-    // After this, every serving JVM's probeLayout is a narrow aligned
-    // scan — the legacy load re-serializes the WHOLE index through one
-    // shuffle (51 GB for this snapshot, measured) before its first
-    // probe. Run it in a SMALL-heap JVM (no graphs are hydrated) with
-    // spark.local.dir on tmpfs if local disk is tight: the shuffle it
-    // pays is the last one any consumer of this snapshot pays.
-    if (phases("relayout")) {
-      if (new java.io.File(s"$snapPath/rows_sharded/_SUCCESS").exists()) {
-        println(s"relayout: $snapPath already dir-sharded — reusing")
-      } else {
-        val t0 = System.nanoTime()
-        VectorIndex.relayoutSharded(spark, snapPath)
-        println(f"relayout wall: ${(System.nanoTime() - t0) / 1e9}%.0f s")
-      }
-    }
-
     // --- phase: basestore (publish the full-precision rerank store) ---
     // The id-sorted small-page parquet base ([[graft.sources.BaseStore]])
     // the refine and IVF-PQ faces rerank against FROM DISK — the

@@ -1657,28 +1657,29 @@ object Queries {
 
   // ---------------------------------------------------------------- v68_sharded_layout
   /** The dir-sharded SERVING layout end to end under the driver gate:
-    * save the session-shared index as a snapshot,
-    * [[VectorIndex.relayoutSharded]] it, load (which
-    * detects `rows_sharded/` and swaps [[VectorIndex!.probeLayout]] to
-    * the shuffle-free one-file-per-shard aligned scan — the path that
-    * removes the ~2.5×-snapshot-bytes load shuffle every serving JVM
-    * otherwise pays), exact-probe. The layout must be invisible in the
-    * results, so v4's brute-force oracle applies unchanged; the plan
-    * properties (no shuffle dependency, ShardPartitioner carried,
-    * corrupt-layout fallback) are spec-gated in ShardedLayoutSpec. */
+    * save the session-shared index as a snapshot (one directory per
+    * shard, `rows/sub_index_id=s/`), load it, and exact-probe. The
+    * loaded [[VectorIndex!.probeLayout]] must read each shard's directory
+    * in place — no shuffle in its lineage, where a flat snapshot pays one
+    * of ~2.5× its parquet bytes in every serving JVM. The layout must be
+    * invisible in the results, so v4's brute-force oracle applies
+    * unchanged; the ShardPartitioner, the missing-directory failure and
+    * the flat-snapshot load are spec-gated in ShardedLayoutSpec. */
   def v68ShardedLayout(s: SparkSession, dir: String): DataFrame = {
     val path = java.nio.file.Files
       .createTempDirectory("graft_shl_").toString
     try {
       // publish the session-shared index (same rows buildTo would write
       // — deterministic build; buildTo's equality with a cached build is
-      // gated by DehnswSpec): THIS gate's claim starts at
-      // relayoutSharded + the layout-aware load
+      // gated by DehnswSpec): THIS gate's claim starts at the save
       buildEmbIndex(s, dir).save(s"$path/snap")
-      VectorIndex.relayoutSharded(s, s"$path/snap")
       val loaded = VectorIndex.load(s, s"$path/snap", cache = false)
-      require(loaded.shardedLayoutDir.nonEmpty,
-        "load must detect the rows_sharded layout")
+      def shuffles(rdd: org.apache.spark.rdd.RDD[_]): Boolean = rdd.dependencies.exists {
+        case _: org.apache.spark.ShuffleDependency[_, _, _] => true
+        case d => shuffles(d.rdd)
+      }
+      require(!shuffles(loaded.probeLayout),
+        "a loaded snapshot's probe layout must read its shard directories without a shuffle")
       loaded.query(embQueries(s, dir), k = 10, searchWidth = 0)
         .withColumn("distance", round(col("distance"), 6))
         .orderBy(col("query_id"), col("rank"))

@@ -424,11 +424,14 @@ class VectorIndex private (
     (w, curve)
   }
 
-  /** Set by [[VectorIndex.load]] when the snapshot carries a
-    * [[VectorIndex.relayoutSharded]] layout — [[probeLayout]] then
-    * builds shard-aligned partitions by a NARROW scan instead of the
-    * corpus-sized shuffle. */
-  @transient private[graft] var shardedLayoutDir: Option[String] = None
+  /** Set by [[VectorIndex.load]] for a snapshot laid out one directory
+    * per shard: its `rows/` directory, which [[probeLayout]] reads shard
+    * by shard. None for an in-memory index and for a flat snapshot
+    * written before that layout. */
+  @transient private var shardDirs: Option[String] = None
+
+  /** Set once a loaded index has made its [[probeLayout]]. */
+  @transient @volatile private var layoutMade = false
 
   /** Set for an IN-MEMORY index ([[VectorIndex.build]], [[rewrite]],
     * [[VectorIndex.buildOnDriver]]): its one copy of the rows, partition
@@ -445,23 +448,19 @@ class VectorIndex private (
     * laid out so by its build ([[VectorIndex.build]], [[rewrite]]), and
     * this is its one cached copy, filled by the build. A LOADED snapshot
     * lays it out on first probe, not once per query call, and both probe
-    * paths read the same blocks: a narrow scan of a
-    * [[VectorIndex.relayoutSharded]] snapshot, else one exchange of the
-    * rows, cached at `spark.graft.probeLayoutStorage` (which governs
-    * only this case). */
+    * paths read the same blocks: partition s is a narrow scan of
+    * `rows/sub_index_id=s/` ([[VectorIndex.readShards]]). A flat
+    * snapshot written before that layout, and an index over a bucketed
+    * corpus ([[VectorIndex.buildFromBucketed]]), are laid out by one
+    * exchange of the rows instead (~2.5x the parquet bytes: 51 GB at
+    * 100M). Both are cached at `spark.graft.probeLayoutStorage` (which
+    * governs only these cases). */
   @transient private[graft] lazy val probeLayout
       : org.apache.spark.rdd.RDD[IndexRow] = inMemoryLayout.getOrElse {
-    // FAST PATH — dir-sharded snapshot layout (rows_sharded/, one file
-    // per shard): the probe layout is a narrow aligned scan, NOT a
-    // shuffle. The legacy partitionBy below moves ~2.5x the snapshot's
-    // parquet bytes through shuffle storage on EVERY serving process's
-    // first probe (51 GB measured for the 100M M=8 snapshot — the
-    // whole index, re-serialized row-wise); with the sharded layout a
-    // load-then-probe touches only the parquet it actually reads.
-    val aligned = shardedLayoutDir.flatMap(dir =>
-      VectorIndex.alignedLayout(rows.sparkSession, dir, numShards))
-    val rdd = aligned.getOrElse {
-      rows.rdd.map(r => (r.sub_index_id, r))
+    layoutMade = true
+    val rdd = shardDirs match {
+      case Some(dir) => VectorIndex.readShards(rows.sparkSession, dir, meta, numShards)
+      case None => rows.rdd.map(r => (r.sub_index_id, r))
         .partitionBy(new VectorIndex.ShardPartitioner(numShards))
         .map(_._2)
     }
@@ -688,7 +687,8 @@ class VectorIndex private (
     * probed again; nor may an index whose layout reads them, such as a
     * compacted LSM base, once its own copy is dropped. */
   def unpersist(): Unit = {
-    probeLayout.unpersist(false)
+    // a loaded layout never probed is not made just to be dropped
+    if (inMemoryLayout.nonEmpty || layoutMade) probeLayout.unpersist(false)
     rows.unpersist()
   }
 
@@ -704,11 +704,14 @@ class VectorIndex private (
     this
   }
 
-  /** Persist index rows + shard meta + params (reference save/load
-    * round-trip invariant: dehnsw.h:666-844, exercised at
-    * dehnsw_example.cpp:208-228). */
+  /** Persist the index (reference save/load round trip, one shard at a
+    * time: dehnsw.h:666-844, exercised at dehnsw_example.cpp:208-228):
+    * [[probeLayout]] is written one directory per shard,
+    * `rows/sub_index_id=s/` ([[VectorIndex.writeShards]]), beside the
+    * meta and params sidecars. Saving a loaded flat snapshot is its
+    * migration to that layout. */
   def save(path: String): Unit = {
-    rows.write.mode("overwrite").parquet(s"$path/rows")
+    VectorIndex.writeShards(rows.sparkSession, probeLayout, s"$path/rows")
     VectorIndex.writeMetaAndParams(
       rows.sparkSession, path, meta, params, numShards, indexId)
   }
@@ -928,7 +931,7 @@ object VectorIndex {
     * the SAME filesystem as the parquet rows (hdfs://, s3a://, file:...) —
     * java.nio would silently write a driver-local path for remote URIs.
     * The bytes go to a `_` temp sibling (skipped by parquet readers and
-    * [[appendTo]]'s kept-file listing) renamed over `path`, so a failed
+    * [[linkOrCopyTree]]) renamed over `path`, so a failed
     * write leaves the previous file whole. Locally that is one POSIX
     * rename (FileContext's local rename deletes the target first, via
     * forked shell calls), after dropping the old checksum file so no
@@ -957,11 +960,40 @@ object VectorIndex {
     } catch { case e: Throwable => fs.delete(tmp, false); throw e }
   }
 
+  /** Hardlink (both ends local) or copy every data file under `srcDir`
+    * into `dstDir`, preserving the partition-directory structure: zero
+    * bytes moved on a local store; on an object store the copy is the
+    * server-side-copy fast path. The kept-file discipline shared by
+    * [[appendTo]] (each untouched shard directory) and
+    * [[graft.operators.HybridRetrieval.appendBm25]]. */
+  private[graft] def linkOrCopyTree(conf: org.apache.hadoop.conf.Configuration,
+      srcDir: String, dstDir: String): Unit = {
+    val src = new org.apache.hadoop.fs.Path(srcDir)
+    val fs = src.getFileSystem(conf)
+    val dst = new org.apache.hadoop.fs.Path(dstDir)
+    val dstFs = dst.getFileSystem(conf)
+    // relative paths computed against the QUALIFIED source: listFiles
+    // returns qualified paths, so stripping an unqualified (relative /
+    // "./"-spelled) srcDir would silently nest the whole source layout
+    // under the destination
+    val srcPrefix = fs.makeQualified(src).toUri.getPath
+    val it = fs.listFiles(src, true)
+    while (it.hasNext) {
+      val f = it.next()
+      val name = f.getPath.getName
+      if (f.isFile && !name.startsWith("_") && !name.startsWith(".")) {
+        val rel = f.getPath.toUri.getPath.stripPrefix(srcPrefix)
+          .stripPrefix("/")
+        val out = new org.apache.hadoop.fs.Path(dst, rel)
+        dstFs.mkdirs(out.getParent)
+        linkOrCopyFile(fs, f.getPath, dstFs, out, conf)
+      }
+    }
+  }
+
   /** Hardlink `src` to `dst` when both ends are local filesystems (zero
-    * bytes moved), else a FileSystem copy — which on object stores is
-    * the server-side-copy fast path. The kept-file discipline shared by
-    * [[appendTo]] and [[graft.operators.HybridRetrieval.appendBm25]]. */
-  private[graft] def linkOrCopyFile(
+    * bytes moved), else a FileSystem copy. */
+  private def linkOrCopyFile(
       fs: org.apache.hadoop.fs.FileSystem, src: org.apache.hadoop.fs.Path,
       dstFs: org.apache.hadoop.fs.FileSystem, dst: org.apache.hadoop.fs.Path,
       conf: org.apache.hadoop.conf.Configuration): Unit = {
@@ -1069,16 +1101,11 @@ object VectorIndex {
       .as[(Long, Array[Float], Int)]
   }
 
-  /** Shard-build pipeline of the snapshot writers ([[buildTo]],
-    * [[appendTo]]): (id, embedding) rows → shard assignment (id %
-    * numShards) → one graph build per shard, in its own partition →
-    * IndexRows. */
-  private[index] def buildRows(
-      df: DataFrame, params: IndexParams, numShards: Int): Dataset[IndexRow] =
-    buildPartitions(shardSorted(df, numShards), params)
-
-  /** [[buildRows]] for an in-memory index: an RDD whose partition s
-    * holds exactly shard s, the layout the probes read. An empty input,
+  /** The shard build of every distributed writer (in-memory builds,
+    * rewrites, [[buildTo]], [[appendTo]]): (id, embedding) rows → shard
+    * assignment (id % numShards) → one graph build per shard, in its own
+    * partition → an RDD whose partition s holds exactly shard s, the
+    * layout the probes read and [[writeShards]] writes. An empty input,
     * which Spark plans as a relation of no partitions, gives `numShards`
     * empty ones. */
   private[index] def buildLayout(df: DataFrame, params: IndexParams,
@@ -1091,7 +1118,7 @@ object VectorIndex {
 
   /** Partition-local graph build over rows that are ALREADY grouped by
     * sub_index_id within each partition and id-sorted within each group —
-    * the post-exchange half of [[buildRows]], also reachable without any
+    * the post-exchange half of [[buildLayout]], reached without any
     * exchange from a shard-bucketed corpus table ([[buildFromBucketed]]). */
   private[graft] def buildPartitions(
       ds: Dataset[(Long, Array[Float], Int)], params: IndexParams): Dataset[IndexRow] = {
@@ -1211,9 +1238,10 @@ object VectorIndex {
   /** Build ONE shard's graph: the kernel loop of both build paths, the
     * distributed per-partition build ([[buildPartitions]]) and the
     * driver build of a small LSM generation ([[buildOnDriver]]). `vecs`
-    * must be id-ascending, the order the kernel is deterministic in, and
-    * of dimension `dim`. Returns the shard's meta, read off the graph,
-    * and its dehydrated rows. */
+    * must be id-ascending, the order the kernel is deterministic in, of
+    * dimension `dim` and finite: a NaN vector would enter every top-k of
+    * its shard and never be evicted. Returns the shard's meta, read off
+    * the graph, and its dehydrated rows. */
   private[index] def buildShard(shardId: Int,
       vecs: collection.IndexedSeq[(Long, Array[Float])], params: IndexParams,
       dim: Int): (ShardMeta, Iterator[IndexRow]) = {
@@ -1223,6 +1251,9 @@ object VectorIndex {
         "(bucketed corpus unsorted, or duplicate ids?)")
       require(v.length == dim,
         s"embedding dimension mismatch at id=$id: got ${v.length}, index dimension is $dim")
+      var c = 0
+      while (c < dim && java.lang.Float.isFinite(v(c))) c += 1
+      require(c == dim, s"non-finite embedding at id=$id: component $c is ${v(c)}")
       prevId = id
     }
     val g = new SubIndexGraph(params, vecs.length)
@@ -1347,10 +1378,11 @@ object VectorIndex {
       buildLayout(normalizeInput(df, params), params, numShards))
 
   /** Build STRAIGHT TO STORAGE: index rows stream from the build tasks
-    * (one per shard, so one file per shard) directly into compressed
-    * parquet — no cluster-wide cache, no
-    * serialized eviction spill; exactly one on-disk copy. Returns the
-    * LOADED index over that parquet (lazy cache, rehydrated per probe).
+    * (one per shard) directly into compressed parquet, one file per shard
+    * under `rows/sub_index_id=s/` ([[writeShards]]) — no cluster-wide
+    * cache, no serialized eviction spill; exactly one on-disk copy.
+    * Returns the LOADED index over that parquet (lazy cache, rehydrated
+    * per probe), whose first probe reads each shard's directory in place.
     *
     * This is the decade-scale disk mitigation measured in SCALE.md: at
     * 100M x 64d the MEMORY_AND_DISK cache spill of a cached build
@@ -1362,11 +1394,9 @@ object VectorIndex {
   def buildTo(df: DataFrame, params: IndexParams, numShards: Int,
       path: String): VectorIndex = {
     val spark = df.sparkSession
-    import spark.implicits._
-    buildRows(normalizeInput(df, params), params, numShards)
-      .write.mode("overwrite").parquet(s"$path/rows")
-    val rowsDisk = spark.read.parquet(s"$path/rows").as[IndexRow]
-    val meta = computeMeta(rowsDisk) // one (shard, layer, offset) scan of the parquet
+    writeShards(spark, buildLayout(normalizeInput(df, params), params, numShards), s"$path/rows")
+    // one (shard, layer, offset) scan of the parquet
+    val meta = computeMeta(readRows(spark, s"$path/rows"))
     writeMetaAndParams(spark, path, meta, params, numShards,
       java.util.UUID.randomUUID().toString)
     // one knob for "too big for a second copy": when the probe layout
@@ -1384,18 +1414,17 @@ object VectorIndex {
     * land the result at `newPath` while moving as few untouched bytes
     * as possible. Untouched work is skipped at two levels:
     *
-    *  - COMPUTE: only affected shards re-insert (buildRows over the
-    *    affected slice ∪ fresh); every other shard's graph is reused
+    *  - COMPUTE: only affected shards re-insert ([[buildLayout]] over
+    *    the affected slice ∪ fresh); every other shard's graph is reused
     *    verbatim, meta included.
-    *  - I/O: a kept rows file whose parquet footer shows no affected
-    *    shard in any row group's [min, max] of `sub_index_id` (rows are
-    *    shard-sorted within files, so the stats are tight) is HARDLINKED
-    *    into the new snapshot — zero bytes moved; on a store without
-    *    links (or cross-device) it falls back to a byte copy, which on
-    *    object stores is the server-side-copy fast path. Only files
-    *    that MIX affected and unaffected shards are read and rewritten
-    *    filtered (with one-shard-per-file layouts from [[buildTo]],
-    *    that is usually zero files).
+    *  - I/O: the rebuilt shards are written by [[writeShards]], and each
+    *    untouched shard's `rows/sub_index_id=s/` directory is HARDLINKED
+    *    into the new snapshot whole — zero bytes moved; on a store
+    *    without links (or cross-device) it falls back to a byte copy,
+    *    which on object stores is the server-side-copy fast path. A flat
+    *    snapshot written before the shard directories has nothing to
+    *    link: its kept shards go through the same writer, from its probe
+    *    layout, so the new snapshot is laid out by shard either way.
     *
     * The old snapshot is left untouched (still servable — snapshots are
     * immutable generations; retire it when traffic drains). Returns the
@@ -1407,21 +1436,20 @@ object VectorIndex {
     * or re-copying the untouched 99%". */
   def appendTo(spark: SparkSession, oldPath: String,
       newVectors: DataFrame, newPath: String): VectorIndex = {
-    import spark.implicits._
     val hconf = spark.sessionState.newHadoopConf()
     requireDistinctPaths(hconf, oldPath, newPath, "appendTo")
     val old = load(spark, oldPath, cache = false)
     val params = old.params
     val numShards = old.numShards
     // shared discover/recover/validate half ([[rewritePrep]]); the
-    // existing-rows isin predicate is pushed to parquet, and the
-    // shard-sorted layout makes the row-group stats prune the scan to
-    // the affected files
+    // existing-rows isin predicate prunes the scan to the affected
+    // shards' directories
     val (fresh, affectedSeq, rebuildInput) =
       old.rewritePrep(null, newVectors, normalize = true, cacheInput = false)
     if (affectedSeq.isEmpty)
       throw new IllegalArgumentException("appendTo over an empty batch")
     val affected = affectedSeq.toSet
+    val newRows = s"$newPath/rows"
     // 1) one validation pass before anything is written (existing rows
     // always match, and a clashing id hashes into an affected shard, so
     // counting over the rebuild input covers old-vs-new AND new-vs-new
@@ -1434,55 +1462,22 @@ object VectorIndex {
         .agg(count(lit(1)), count_distinct(col("id")),
           count(when(lit(dim >= 0) && size(col("embedding")) =!= dim, 1))).head
       AppendCheck.require(dim, counts.getLong(2), counts.getLong(0) - counts.getLong(1))
-      buildRows(rebuildInput, params, numShards)
-        .write.mode("overwrite").parquet(s"$newPath/rows")
-    } finally fresh.unpersist()
-    // 2) rebuilt-shard meta from the (still rebuilt-only) new rows dir
-    val rebuiltMeta = computeMeta(
-      spark.read.parquet(s"$newPath/rows").as[IndexRow])
-    // 3) kept files: hardlink clean ones, rewrite only mixed ones
-    val conf = hconf
-    val oldRows = new org.apache.hadoop.fs.Path(s"$oldPath/rows")
-    val fs = oldRows.getFileSystem(conf)
-    val dstFs = new org.apache.hadoop.fs.Path(s"$newPath/rows").getFileSystem(conf)
-    val dataFiles = fs.listStatus(oldRows).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-    val mixed = scala.collection.mutable.ArrayBuffer.empty[String]
-    dataFiles.foreach { p =>
-      import scala.jdk.CollectionConverters._
-      // footer-only read (KB-sized, per kept FILE): per-row-group
-      // [min, max] of the shard column; None when stats are missing
-      val ranges: Seq[Option[(Int, Int)]] =
-        org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-          conf, p, org.apache.parquet.format.converter
-            .ParquetMetadataConverter.NO_FILTER)
-          .getBlocks.asScala.toSeq.map { b =>
-            b.getColumns.asScala
-              .find(_.getPath.toDotString == "sub_index_id")
-              .map(_.getStatistics)
-              .filter(s => s != null && !s.isEmpty)
-              .map(s => (s.genericGetMin.asInstanceOf[Number].intValue,
-                s.genericGetMax.asInstanceOf[Number].intValue))
-          }
-      val touchesAffected = ranges.exists {
-        case Some((lo, hi)) => affected.exists(s => lo <= s && s <= hi)
-        case None => true // no stats: conservatively mixed
-      }
-      val onlyAffected = ranges.nonEmpty && ranges.forall {
-        case Some((lo, hi)) => (lo to hi).forall(affected)
-        case None => false
-      }
-      if (!touchesAffected) {
-        // pure kept file: the shared hardlink-else-copy fast path
-        linkOrCopyFile(fs, p, dstFs,
-          new org.apache.hadoop.fs.Path(s"$newPath/rows/${p.getName}"), conf)
-      } else if (!onlyAffected) mixed += p.toString
-      // else: file holds only affected shards — superseded by the rebuild
+      val rebuilt = buildLayout(rebuildInput, params, numShards)
+      writeShards(spark,
+        if (old.shardDirs.nonEmpty) rebuilt
+        else new ShardAlignedRDD(concat(Seq(old.probeLayout, rebuilt)),
+          Array.tabulate(numShards)(s => if (affected(s)) numShards + s else s)),
+        newRows)
+    } finally {
+      fresh.unpersist()
+      old.unpersist()
     }
-    if (mixed.nonEmpty)
-      spark.read.parquet(mixed.toSeq: _*)
-        .filter(!col("sub_index_id").isin(affectedSeq: _*))
-        .write.mode("append").parquet(s"$newPath/rows")
+    // 2) rebuilt-shard meta, read before the kept directories join them
+    val rebuiltMeta = computeMeta(
+      readRows(spark, newRows).filter(col("sub_index_id").isin(affectedSeq: _*)))
+    // 3) kept shard directories: hardlinked whole
+    for (dir <- old.shardDirs; s <- old.meta.map(_.sub_index_id) if !affected(s))
+      linkOrCopyTree(hconf, s"$dir/sub_index_id=$s", s"$newRows/sub_index_id=$s")
     val meta2 = (old.meta.filterNot(m => affected(m.sub_index_id)) ++ rebuiltMeta)
       .sortBy(_.sub_index_id)
     writeMetaAndParams(spark, newPath, meta2, params, numShards,
@@ -1496,7 +1491,7 @@ object VectorIndex {
     * meta is numShards tiny records — one small file write through the
     * Hadoop FS API (works for hdfs://, s3a://, file:, ...), not a Spark
     * job. */
-  private[index] def writeMetaAndParams(
+  private[graft] def writeMetaAndParams(
       spark: SparkSession, path: String, meta: Array[ShardMeta],
       p: IndexParams, numShards: Int, indexId: String): Unit = {
     Sidecar.writeLines(spark, s"$path/meta.json", meta.toSeq)
@@ -1554,9 +1549,10 @@ object VectorIndex {
     * property every probe consumer relies on ([[shardCandidates]]'s
     * partition index as the shard, [[VectorIndex.queryDistributed]]'s
     * zipPartitions against [[ShardPartitioner]]-partitioned queries):
-    * partition s reads partition `perm(s)` of the parent, a
-    * one-file-per-shard scan ([[alignedLayout]]) or the union of an old
-    * layout and its rebuilt shards ([[VectorIndex!.rewrite]]). Purity is enforced
+    * partition s reads partition `perm(s)` of the parent: the per-shard
+    * directory scans of a loaded snapshot ([[readShards]]), or the union
+    * of an old layout and its rebuilt shards ([[VectorIndex!.rewrite]],
+    * [[appendTo]] onto a flat snapshot). Purity is enforced
     * per ROW (a mis-packed parent partition would otherwise hydrate a
     * graph from another shard's rows — silent corruption, so it is a
     * hard error). */
@@ -1588,124 +1584,83 @@ object VectorIndex {
         split.asInstanceOf[ShardAlignedPartition].parent)
   }
 
-  /** Build the shard-aligned probe layout from a [[relayoutSharded]]
-    * directory: one whole-file partition per shard (split/packing
-    * disabled for exactly this scan), a 1-row-per-partition probe job
-    * to learn which file holds which shard, then a narrow re-index so
-    * partition i == shard i. None (with a log line) when the layout
-    * does not hold one file per shard — callers fall back to the
-    * legacy shuffle, never to a wrong layout. */
-  /** Serializes [[alignedLayout]]'s session-conf window: the file-split
-    * knobs are read through `sessionState.conf` (NOT the thread-local
-    * `SQLConf.get`), so a thread-scoped overlay cannot reach the file
-    * scan's partition planning — the set/restore must be session-global
-    * and therefore LOCKED, or two indexes loading concurrently could
-    * interleave restores and one would plan under default confs, fail
-    * the one-file-per-partition check, and silently fall back to the
-    * 51 GB load shuffle this layout exists to remove. An unrelated
-    * query planned by ANOTHER thread during the (narrow, planning-only)
-    * window can still see 16 GB file partitions — a perf hiccup, never
-    * a correctness one: mis-packed aligned scans are detected (and fall
-    * back) and per-row shard purity is hard-checked at compute. */
-  private val alignedLayoutLock = new Object
-
-  private[index] def alignedLayout(spark: SparkSession, dir: String,
-      numShards: Int): Option[org.apache.spark.rdd.RDD[IndexRow]] = {
+  /** Write a shard-aligned layout (partition s holds exactly shard s) to
+    * `dir`, one directory per shard, `sub_index_id=s/`, holding the one
+    * file written by the task of partition s; an empty shard writes
+    * nothing. The rows are declared sorted by shard within each
+    * partition, which one shard per partition makes true, so the write
+    * plans no Sort above the build: a Sort would buffer a whole shard
+    * beside its graph. */
+  private[index] def writeShards(spark: SparkSession,
+      layout: org.apache.spark.rdd.RDD[IndexRow], dir: String): Unit = {
     import spark.implicits._
-    // PLAN the scan under the conf window, holding the lock; the window
-    // ends before any job runs — RDD.partitions memoizes, so the
-    // planning result is fixed once forced
-    val raw = alignedLayoutLock.synchronized {
-      val conf = spark.conf
-      val overrides = Seq(
-        // openCost == maxPartitionBytes closes a file partition after
-        // every file (no packing two shards into one partition); files
-        // below the bound are never split (no shard torn across two)
-        "spark.sql.files.maxPartitionBytes" -> (16L << 30).toString,
-        "spark.sql.files.openCostInBytes" -> (16L << 30).toString)
-      val prev = overrides.map { case (k, _) => k -> conf.getOption(k) }
-      overrides.foreach { case (k, v) => conf.set(k, v) }
-      try {
-        // classic stream reads, NOT Hadoop vectored IO: each aligned task
-        // drains its file over MINUTES (graph hydration interleaves with
-        // the read), and the vectored path bounds every prefetched range
-        // fetch at 300 s — 32 slow-draining consumers starve the shared
-        // fetch pool and the whole probe dies on a read "timeout"
-        // (measured at the 100M decade). Per-scan option, no global state.
-        val r = spark.read
-          .option("parquet.hadoop.vectored.io.enabled", "false")
-          .parquet(dir)
-          .select(col("sub_index_id").cast("int"), col("offset"),
-            col("global_id"), col("layer"), col("embedding"), col("out"),
-            col("edges"))
-          .as[IndexRow].rdd
-        r.partitions.length // force planning under the conf window
-        r
-      } finally prev.foreach {
-        case (k, Some(v)) => conf.set(k, v)
-        case (k, None) => conf.unset(k)
-      }
-    }
-    val nParts = raw.partitions.length // memoized above
-    val firstShard = raw.mapPartitionsWithIndex { (i, it) =>
-      if (it.hasNext) Iterator((i, it.next().sub_index_id))
-      else Iterator.empty
-    }.collect()
-    if (nParts != numShards || firstShard.length != numShards ||
-        firstShard.map(_._2).distinct.length != numShards) {
-      Console.err.println(
-        s"graft: sharded layout at $dir is not one-file-per-shard " +
-        s"($nParts partitions, ${firstShard.length} non-empty, " +
-        s"${firstShard.map(_._2).distinct.length} distinct shards for " +
-        s"$numShards shards) — falling back to the shuffle layout")
-      None
-    } else {
-      val perm = new Array[Int](numShards)
-      firstShard.foreach { case (i, s) => perm(s) = i }
-      Some(new ShardAlignedRDD(raw, perm))
-    }
+    org.apache.spark.sql.graft.GraftSqlBridge
+      .declareSorted(spark.createDataset(layout).toDF(), "sub_index_id")
+      .write.mode("overwrite").partitionBy("sub_index_id").parquet(dir)
   }
 
-  /** One-time MIGRATION of a snapshot to the dir-sharded probe layout:
-    * writes `<path>/rows_sharded/sub_index_id=N/` with EXACTLY one file
-    * per shard, each written by its own task (`repartitionById` puts
-    * shard s in partition s), then validates one file per shard
-    * directory and one directory per non-empty shard. The flat `rows/`
-    * stays untouched — it
-    * remains the authoritative copy for [[appendTo]]'s footer-stat
-    * file surgery; this layout exists so every SERVING process's
-    * [[VectorIndex!.probeLayout]] is a narrow scan instead of a
-    * shuffle that re-serializes the whole index (~2.5x the parquet
-    * bytes — 51 GB for the 100M M=8 snapshot, paid per JVM).
-    *
-    * Run it once per published snapshot, anywhere: the one shuffle it
-    * pays is the last one any consumer of this snapshot pays. */
-  def relayoutSharded(spark: SparkSession, path: String): Unit = {
-    val rows = spark.read.parquet(s"$path/rows")
-    val numShards = Sidecar.readRequired[Sidecar.IndexParamsFile](spark,
-      s"$path/params.json").numShards
-    rows.repartitionById(numShards, col("sub_index_id"))
-      .write.mode("overwrite").partitionBy("sub_index_id")
-      .parquet(s"$path/rows_sharded")
-    // validate before anyone serves from it: exactly one data file per
-    // shard directory, one directory per shard
-    val base = new org.apache.hadoop.fs.Path(s"$path/rows_sharded")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(base).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("sub_index_id="))
-    val nonEmptyShards = spark.read.parquet(s"$path/rows").
-      select(col("sub_index_id")).distinct().count()
-    require(dirs.length.toLong == nonEmptyShards,
-      s"relayoutSharded wrote ${dirs.length} shard dirs for " +
-        s"$nonEmptyShards non-empty shards at $path")
-    dirs.foreach { d =>
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(base, d))
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
-          && !f.getPath.getName.startsWith("."))
-      require(files.length == 1,
-        s"relayoutSharded: $d holds ${files.length} files — the " +
-          "one-file-per-shard invariant failed (concurrent writer?)")
+  /** The columns of an [[IndexRow]]: a shard directory's files hold all
+    * but `sub_index_id`, which the directory name carries. */
+  private lazy val rowSchema = org.apache.spark.sql.Encoders.product[IndexRow].schema
+
+  /** A snapshot's `rows/` directory as index rows, flat or laid out by
+    * shard, read with the known schema: no footer is read to infer it,
+    * and a snapshot of no rows reads as empty. */
+  private def readRows(spark: SparkSession, dir: String): Dataset[IndexRow] = {
+    import spark.implicits._
+    spark.read.schema(rowSchema).parquet(dir).as[IndexRow]
+  }
+
+  /** The probe layout of a snapshot laid out by [[writeShards]]:
+    * partition s reads the files of `dir/sub_index_id=s/` whole, and the
+    * shard id is the partition index. One listing finds every shard's
+    * files and one file scan reads them all, with no query planned, so
+    * neither the driver's work nor the lineage each probe task carries
+    * grows with the shard count (a scan planned per shard costs ~65 ms
+    * of driver time and ~30 KB of lineage per shard). A shard without
+    * meta gets an empty partition, and so does one whose directory is
+    * missing: its probe then fails on the row count its meta promises,
+    * never serving a partial index. */
+  private[index] def readShards(spark: SparkSession, dir: String,
+      meta: Array[ShardMeta], numShards: Int): org.apache.spark.rdd.RDD[IndexRow] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val files = mutable.Map.empty[String, Seq[org.apache.hadoop.fs.FileStatus]].withDefaultValue(Nil)
+    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
+    while (it.hasNext) {
+      val f = it.next()
+      val name = f.getPath.getName
+      if (!name.startsWith("_") && !name.startsWith("."))
+        files(f.getPath.getParent.getName) :+= f
     }
+    val withMeta = meta.map(_.sub_index_id).toSet
+    val groups = (0 until numShards).map(s =>
+      if (withMeta(s)) files(s"sub_index_id=$s") else Nil)
+    // classic stream reads, NOT Hadoop vectored IO: a probe task drains
+    // its shard over minutes while it rehydrates the graph, and the
+    // vectored path bounds each prefetched range at 300 s (measured at
+    // the 100M decade: the probe died on a read timeout)
+    val read = org.apache.spark.sql.graft.GraftSqlBridge.readParquetGroups(spark,
+      org.apache.spark.sql.types.StructType(rowSchema.filterNot(_.name == "sub_index_id")),
+      groups, Map("parquet.hadoop.vectored.io.enabled" -> "false"))
+    new ShardAlignedRDD(read.mapPartitionsWithIndex((s, it) => it.map(storedRow(s, _))),
+      Array.range(0, numShards))
+  }
+
+  /** Shard `shard`'s [[IndexRow]] from a row of its directory's files:
+    * offset, global_id, layer, embedding, out, edges (the [[rowSchema]]
+    * order). Converted by hand, not by a planned deserializer, so the
+    * probe layout's lineage stays the file scan alone. */
+  private def storedRow(shard: Int,
+      r: org.apache.spark.sql.catalyst.InternalRow): IndexRow = {
+    def layers[T](a: org.apache.spark.sql.catalyst.util.ArrayData)(
+        edge: org.apache.spark.sql.catalyst.InternalRow => T): Seq[Seq[T]] =
+      Seq.tabulate(a.numElements()) { l =>
+        val es = a.getArray(l)
+        Seq.tabulate(es.numElements())(e => edge(es.getStruct(e, 2)))
+      }
+    IndexRow(shard, r.getInt(0), r.getLong(1), r.getInt(2), r.getArray(3).toFloatArray(),
+      layers(r.getArray(4))(e => OutEdge(e.getDouble(0), e.getInt(1))),
+      layers(r.getArray(5))(e => EdgeRef(e.getInt(0), e.getInt(1))))
   }
 
   /** One-time write of a shard-bucketed corpus table: rows land in
@@ -1776,7 +1731,11 @@ object VectorIndex {
     }
   }
 
-  /** Load a saved index (reference O10).
+  /** Load a saved index (reference O10). The sidecars are read first: a
+    * missing `meta.json` is an IllegalArgumentException naming it. Rows
+    * written one directory per shard ([[VectorIndex!.save]], [[buildTo]],
+    * [[appendTo]]) are read in place by the first probe; a flat `rows/`,
+    * as older versions wrote it, is laid out by an exchange instead.
     * @param cache cache the row Dataset (default). Pass `false` for a
     *               corpus-scale index probed a bounded number of times:
     *               Dataset.cache is MEMORY_AND_DISK, i.e. a second
@@ -1785,19 +1744,11 @@ object VectorIndex {
     *               exceeds a single node's local-disk pool (SCALE.md);
     *               pair with `spark.graft.probeLayoutStorage=NONE`. */
   def load(spark: SparkSession, path: String, cache: Boolean = true): VectorIndex = {
-    import spark.implicits._
-    val rows0 = spark.read.parquet(s"$path/rows").as[IndexRow]
-    val rows = if (cache) rows0.cache() else rows0
     val meta = Sidecar.readLines[ShardMeta](spark, s"$path/meta.json")
-      .map(_.toArray.sortBy(_.sub_index_id))
-      .getOrElse {
-        // older saves wrote meta as a Spark JSON directory
-        spark.read.json(s"$path/meta")
-          .select(col("sub_index_id").cast("int"), col("n_vectors").cast("long"),
-            col("layer_count").cast("int"), col("entry_offset").cast("int"))
-          .as[ShardMeta].collect().sortBy(_.sub_index_id)
-      }
+      .getOrElse(throw new IllegalArgumentException(s"missing $path/meta.json"))
+      .toArray.sortBy(_.sub_index_id)
     val pf = Sidecar.readRequired[Sidecar.IndexParamsFile](spark, s"$path/params.json")
+    val rows = readRows(spark, s"$path/rows")
     val metric = DistanceMetric.all.find(_.name == pf.metric).getOrElse(
       sys.error(s"$path/params.json: unknown metric '${pf.metric}'"))
     val schedule = pf.schedule.split(";").toSeq.filter(_.nonEmpty)
@@ -1812,15 +1763,13 @@ object VectorIndex {
     // probe of the loaded index hit executor-cached graphs built from the
     // ORIGINAL in-memory index (same JVM), silently bypassing the loaded
     // rows — the save/load invariance gate must exercise the load path
-    val idx = new VectorIndex(params, pf.numShards, rows, meta,
+    val idx = new VectorIndex(params, pf.numShards, if (cache) rows.cache() else rows, meta,
       pf.indexId + "#load-" + java.util.UUID.randomUUID().toString)
-    // a relayoutSharded snapshot probes through the narrow aligned scan
-    // (probeLayout fast path) — detected here so the handle knows its
-    // layout; absence or a malformed layout degrades to the shuffle
-    val shardedDir = new org.apache.hadoop.fs.Path(s"$path/rows_sharded/_SUCCESS")
-    if (shardedDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(shardedDir))
-      idx.shardedLayoutDir = Some(s"$path/rows_sharded")
+    // a flat snapshot holds its part files at the top of rows/
+    val dir = new org.apache.hadoop.fs.Path(s"$path/rows")
+    val flat = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+      .exists(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+    if (!flat) idx.shardDirs = Some(dir.toString)
     idx
   }
 

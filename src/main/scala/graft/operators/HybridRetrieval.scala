@@ -632,7 +632,7 @@ object HybridRetrieval {
     // 1) keep every base posting file: hardlink (or copy) into the new
     // snapshot's bucket directories — nothing in them changes
     graft.streaming.StreamingOps.timeLeg("bm25app.link") {
-      linkOrCopyTree(hconf, s"$oldPath/postings", s"$newPath/postings") }
+      graft.index.VectorIndex.linkOrCopyTree(hconf, s"$oldPath/postings", s"$newPath/postings") }
     // 2) the batch's posting files land beside them, same layout
     graft.streaming.StreamingOps.timeLeg("bm25app.write-postings") {
       writePostingFiles(postings, s"$newPath/postings", old.tokBuckets, "append") }
@@ -655,36 +655,6 @@ object HybridRetrieval {
         newPath) }
     writeBm25Stats(spark, newPath, old.nDocs + bn, old.sumDl + bSum,
       old.tokBuckets, old.dfCapNum, old.dfCapDen)
-  }
-
-  /** Hardlink (both ends local) or copy every data file under `srcDir`
-    * into `dstDir`, preserving the partition-directory structure. The
-    * kept-file fast path shared with [[graft.index.VectorIndex
-    * .appendTo]]'s discipline: zero bytes moved on a local store; on an
-    * object store the copy is the server-side-copy fast path. */
-  private def linkOrCopyTree(conf: org.apache.hadoop.conf.Configuration,
-      srcDir: String, dstDir: String): Unit = {
-    val src = new org.apache.hadoop.fs.Path(srcDir)
-    val fs = src.getFileSystem(conf)
-    val dst = new org.apache.hadoop.fs.Path(dstDir)
-    val dstFs = dst.getFileSystem(conf)
-    // relative paths computed against the QUALIFIED source: listFiles
-    // returns qualified paths, so stripping an unqualified (relative /
-    // "./"-spelled) srcDir would silently nest the whole source layout
-    // under the destination
-    val srcPrefix = fs.makeQualified(src).toUri.getPath
-    val it = fs.listFiles(src, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && !name.startsWith("_") && !name.startsWith(".")) {
-        val rel = f.getPath.toUri.getPath.stripPrefix(srcPrefix)
-          .stripPrefix("/")
-        val out = new org.apache.hadoop.fs.Path(dst, rel)
-        dstFs.mkdirs(out.getParent)
-        graft.index.VectorIndex.linkOrCopyFile(fs, f.getPath, dstFs, out, conf)
-      }
-    }
   }
 
   /** Hybrid retrieval served ENTIRELY from published snapshots — the

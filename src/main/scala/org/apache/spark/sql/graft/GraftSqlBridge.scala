@@ -26,6 +26,44 @@ object GraftSqlBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df`'s rows, declared sorted by `column` within each partition (the
+    * caller's guarantee; it is not checked), so a plan that requires that
+    * order, such as a write partitioned by `column`, adds no Sort. */
+  def declareSorted(df: org.apache.spark.sql.DataFrame, column: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    val out = qe.analyzed.output
+    val key = out.find(_.name == column).getOrElse(
+      throw new IllegalArgumentException(s"no column $column in ${out.mkString(", ")}"))
+    dataFrame(df.sparkSession, org.apache.spark.sql.execution.LogicalRDD(out, qe.toRdd,
+      outputOrdering = Seq(SortOrder(key, Ascending)))(qe.sparkSession))
+  }
+
+  /** Parquet files read as one partition per group: partition i reads
+    * every file of `groups(i)` whole, with Spark's own parquet reader, as
+    * rows of `schema`; an empty group is an empty partition. No query
+    * is planned, so a task carries the same few kilobytes of lineage
+    * for 4 groups or 4,000. The rows may be reused between `next` calls:
+    * copy what outlives one. `options` reach the reader's Hadoop
+    * configuration only. */
+  def readParquetGroups(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      groups: Seq[Seq[org.apache.hadoop.fs.FileStatus]],
+      options: Map[String, String]): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.execution.datasources._
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val read = new parquet.ParquetFileFormat().buildReaderWithPartitionValues(
+      cs, schema, new org.apache.spark.sql.types.StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      cs.sessionState.newHadoopConfWithOptions(options))
+    val parts = groups.zipWithIndex.map { case (files, i) =>
+      FilePartition(i, files.map(f => PartitionedFile(
+        org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromFileStatus(f), 0, f.getLen,
+        Array.empty[String], f.getModificationTime, f.getLen)).toArray)
+    }
+    new FileScanRDD(cs, read, parts, schema)
+  }
+
   /** The logical plan backing a DataFrame. */
   def logicalPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan

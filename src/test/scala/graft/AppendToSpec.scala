@@ -9,8 +9,8 @@ import graft.index.{IndexParams, VectorIndex}
   * shard-scoped append:
   *  - result == one full rebuild over the union (the append==rebuild
   *    bit invariant, probed);
-  *  - untouched shard files are HARDLINKED into the new snapshot (same
-  *    inode), never re-read or re-written;
+  *  - untouched shard directories are HARDLINKED into the new snapshot
+  *    (same inode), never re-read or re-written;
   *  - only the affected shards' meta changes.
   */
 class AppendToSpec extends AnyFunSuite with SparkSuite {
@@ -66,21 +66,17 @@ class AppendToSpec extends AnyFunSuite with SparkSuite {
         else assert(m.n_vectors == oldMeta(m.sub_index_id).n_vectors + 100)
       }
 
-      // I/O: every untouched shard file is the SAME inode (hardlink)
-      val oldFiles = new java.io.File(s"$oldDir/rows").listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).map(f => f.getName -> f).toMap
-      val newFiles = new java.io.File(s"$newDir/rows").listFiles()
-        .filter(f => f.getName.endsWith(".parquet"))
-      val sharedNames = newFiles.filter(f => oldFiles.contains(f.getName))
-      assert(sharedNames.nonEmpty, "no kept files were carried over by link")
-      sharedNames.foreach { f =>
-        assert(inode(f.toPath) === inode(oldFiles(f.getName).toPath),
-          s"${f.getName} was copied, not hardlinked")
+      // I/O: each of the 14 untouched shard directories holds the SAME
+      // inode as the old one (hardlink); the 2 affected ones hold new files
+      def part(root: String, s: Int) = {
+        val files = new java.io.File(s"$root/rows/sub_index_id=$s").listFiles()
+          .filter(_.getName.endsWith(".parquet"))
+        assert(files.length == 1, s"shard $s of $root: ${files.toSeq}")
+        files.head.toPath
       }
-      // and links dominate: of the ~10 non-empty part files (16 shards
-      // hash into 16 partitions with collisions), only the <=2 holding
-      // the affected residues may be rewritten
-      assert(sharedNames.length >= 6, s"only ${sharedNames.length} files linked")
+      assert(new java.io.File(s"$newDir/rows").list().count(_.startsWith("sub_index_id=")) == 16)
+      val linked = (0 until numShards).filter(s => inode(part(newDir, s)) == inode(part(oldDir, s)))
+      assert(linked == (2 until numShards), s"hardlinked shard directories: $linked")
     } finally {
       graft.streaming.StreamingOps.deleteRecursively(oldDir)
       graft.streaming.StreamingOps.deleteRecursively(

@@ -71,15 +71,14 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("relayoutSharded writes each shard directory from its own task") {
+  test("buildTo writes each shard directory from its own task") {
     val dir = java.nio.file.Files.createTempDirectory("build_layout_").toString
     try {
       VectorIndex.buildTo(frame(vectors(0L until 200L)), params, numShards = 4, s"$dir/snap")
         .unpersist()
-      VectorIndex.relayoutSharded(spark, s"$dir/snap")
       // a task's output file is named after its partition: part-0000<p>-...
       val writers = (0 until 4).map { s =>
-        val files = new java.io.File(s"$dir/snap/rows_sharded/sub_index_id=$s")
+        val files = new java.io.File(s"$dir/snap/rows/sub_index_id=$s")
           .listFiles().map(_.getName).filter(_.startsWith("part-"))
         assert(files.length == 1, s"shard $s: ${files.toSeq}")
         files.head.take(10)
@@ -163,6 +162,34 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
     Seq(sparse, empty, emptied).foreach(_.unpersist())
   }
 
+  test("a non-finite corpus vector is rejected by every build path, naming its id") {
+    val dir = java.nio.file.Files.createTempDirectory("build_layout_nan_").toString
+    def poisoned(ids: Seq[Long], bad: Long, x: Float) =
+      frame(vectors(ids).map { case (id, v) => (id, if (id == bad) v.updated(3, x) else v) })
+    def rejects(what: String, bad: Long)(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      assert(e.getMessage.contains(s"non-finite embedding at id=$bad"), s"$what: ${e.getMessage}")
+    }
+    try {
+      rejects("build", 17L)(VectorIndex.build(poisoned(0L until 100L, 17L, Float.NaN), params, 4))
+      rejects("buildTo", 18L)(VectorIndex.buildTo(
+        poisoned(0L until 100L, 18L, Float.PositiveInfinity), params, 4, s"$dir/to"))
+      rejects("cosine build", 19L)(VectorIndex.build(poisoned(0L until 100L, 19L, Float.NaN),
+        params.copy(normalizeForCosine = true), 4))
+      val idx = VectorIndex.build(frame(vectors(0L until 100L)), params, numShards = 4)
+      rejects("append", 105L)(idx.append(poisoned(100L until 110L, 105L, Float.NaN)))
+      VectorIndex.buildTo(frame(vectors(0L until 100L)), params, 4, s"$dir/old").unpersist()
+      rejects("appendTo", 106L)(VectorIndex.appendTo(spark, s"$dir/old",
+        poisoned(100L until 110L, 106L, Float.NegativeInfinity), s"$dir/new"))
+      VectorIndex.writeBucketedCorpus(poisoned(0L until 100L, 7L, Float.NaN), "nan_bucketed", 4)
+      rejects("bucketed build", 7L)(VectorIndex.buildFromBucketed(spark, "nan_bucketed", params))
+      idx.unpersist()
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS nan_bucketed")
+      graft.streaming.StreamingOps.deleteRecursively(dir)
+    }
+  }
+
   test("a clashing or wrongly-sized append is rejected and leaves nothing cached") {
     import spark.implicits._
     val idx = VectorIndex.build(frame(vectors(0L until 100L)), params, numShards = 4)
@@ -192,9 +219,8 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
       assert(lsm.generations.head.numShards == 4)
       val qs = vectors(5000L until 5010L, seed = 99).toDF("query_id", "embedding")
       val expected = lsm.query(qs, 10, 0).collect().toSet
+      // both members save one directory per shard and load laid out by shard
       lsm.save(dir)
-      // both members load as rows_sharded layouts of 4 shards
-      Seq("base", "gen-0").foreach(m => VectorIndex.relayoutSharded(spark, s"$dir/$m"))
       val loaded = LsmVectorIndex.load(spark, dir)
       assert((loaded.base +: loaded.generations).forall(_.probeLayout.partitioner.nonEmpty))
       assert(loaded.query(qs, 10, 0).collect().toSet == expected)
