@@ -123,10 +123,10 @@ final class LsmVectorIndex private (
     * another dimension than the index's. */
   def ingest(batch: DataFrame): LsmVectorIndex = {
     val spark = batch.sparkSession
-    import spark.implicits._
     val input = batch.select(col("id").cast("long"), col("embedding"))
     val bound = math.min(genShardSize, LsmVectorIndex.DriverBuildRows.toLong).toInt
-    val head = input.as[(java.lang.Long, Array[Float])].limit(bound + 1).collect()
+    val head = input.limit(bound + 1).collect()
+      .map(r => (r.getAs[java.lang.Long](0), VectorIndex.floatsAt(r, 1)))
     if (head.isEmpty) return this
     val dim = inputDim
     val gen =

@@ -29,13 +29,17 @@ final case class RawObject(text: String)
 object Sidecar {
 
   /** Vector snapshot `params.json`; `schedule` is `from:M:RM` triples
-    * joined by `;`. The defaulted keys are absent from older saves. */
+    * joined by `;`, and `dimension` is the stored vector dimension (no
+    * key for an empty index). The defaulted keys are absent from older
+    * saves. */
   case class IndexParamsFile(metric: String, minimumConnect: Int,
       relaxedMonotonicity: Int, step: Int, subIndexBound: Long,
       numShards: Int, schedule: String = "", quantized: Boolean = false,
       quantLo: Float = -0.5f, quantHi: Float = 0.5f,
       normalizeForCosine: Boolean = false, augmentForMips: Boolean = false,
-      mipsMaxNorm: Float = 0f, indexId: String)
+      mipsMaxNorm: Float = 0f, indexId: String,
+      @JsonDeserialize(contentAs = classOf[java.lang.Integer])
+      dimension: Option[Int] = None)
 
   /** `calibration.json` ([[WidthCalibration]]); no `faces` key when the
     * table is empty. */

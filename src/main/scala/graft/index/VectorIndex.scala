@@ -199,11 +199,12 @@ class VectorIndex private (
     queryBatch(batch, k, searchWidth)
   override def probeDescription: String = s"shards=$numShards"
 
-  /** Stored vector dimension, read once from the first index row (one
-    * job) and reused by every append. An in-memory index reads it in its
-    * build, and a rewrite of an index that knew it starts out knowing
-    * it. Only valid when the index is non-empty — callers guard on
-    * meta.nonEmpty. */
+  /** Stored vector dimension, reused by every append. An in-memory index
+    * reads it in its build, a rewrite of an index that knew it starts out
+    * knowing it, and a loaded snapshot takes it from `params.json`; a
+    * snapshot written without that key reads it once from its first row
+    * (one job). Only valid when the index is non-empty — callers guard
+    * on meta.nonEmpty. */
   def dimension: Int = {
     if (knownDim <= 0) knownDim = rows.select(size(col("embedding"))).head.getInt(0)
     knownDim
@@ -708,13 +709,14 @@ class VectorIndex private (
     * time: dehnsw.h:666-844, exercised at dehnsw_example.cpp:208-228):
     * [[probeLayout]] is written one directory per shard,
     * `rows/sub_index_id=s/` ([[VectorIndex.writeShards]]), beside the
-    * meta and params sidecars. Saving a loaded flat snapshot is its
+    * meta and params sidecars, `meta.json` last
+    * ([[VectorIndex.publish]]). Saving a loaded flat snapshot is its
     * migration to that layout. */
-  def save(path: String): Unit = {
-    VectorIndex.writeShards(rows.sparkSession, probeLayout, s"$path/rows")
-    VectorIndex.writeMetaAndParams(
-      rows.sparkSession, path, meta, params, numShards, indexId)
-  }
+  def save(path: String): Unit =
+    VectorIndex.publish(rows.sparkSession, path, params, numShards, indexId) {
+      VectorIndex.writeShards(rows.sparkSession, probeLayout, s"$path/rows")
+      (meta, knownDim)
+    }
 }
 
 object VectorIndex {
@@ -781,11 +783,10 @@ object VectorIndex {
     * driver). */
   private[index] def routeBatch(queries: DataFrame, maxBatch: Int)
       : Option[Array[(Long, Array[Float])]] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
     val head = queries
       .select(col("query_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].limit(maxBatch + 1).collect()
+      .limit(maxBatch + 1).collect()
+      .map(r => (r.getLong(0), floatsAt(r, 1)))
     if (head.length > maxBatch) None
     else {
       val batch = head.sortBy(_._1)
@@ -793,6 +794,10 @@ object VectorIndex {
       Some(batch)
     }
   }
+
+  /** Field `i` of a collected row as a float array; null stays null. */
+  private[index] def floatsAt(r: org.apache.spark.sql.Row, i: Int): Array[Float] =
+    if (r.isNullAt(i)) null else r.getSeq[Float](i).toArray
 
   /** Reject a query vector the kernel would answer wrongly: a missing
     * embedding, one whose length differs from the batch's first (ragged),
@@ -1107,34 +1112,26 @@ object VectorIndex {
     * partition → an RDD whose partition s holds exactly shard s, the
     * layout the probes read and [[writeShards]] writes. An empty input,
     * which Spark plans as a relation of no partitions, gives `numShards`
-    * empty ones. */
+    * empty ones. `check` and `report`, when given, see every shard as it
+    * is built. */
   private[index] def buildLayout(df: DataFrame, params: IndexParams,
-      numShards: Int, check: AppendCheck = null): org.apache.spark.rdd.RDD[IndexRow] = {
+      numShards: Int, check: AppendCheck = null,
+      report: BuiltShards = null): org.apache.spark.rdd.RDD[IndexRow] = {
     val p = params
-    val built = shardSorted(df, numShards).rdd.mapPartitions(buildGrouped(_, p, check))
+    val built = shardSorted(df, numShards).rdd.mapPartitions(buildGrouped(_, p, check, report))
     if (built.partitions.nonEmpty) built
     else df.sparkSession.sparkContext.parallelize(Seq.empty[IndexRow], numShards)
   }
 
-  /** Partition-local graph build over rows that are ALREADY grouped by
-    * sub_index_id within each partition and id-sorted within each group —
-    * the post-exchange half of [[buildLayout]], reached without any
-    * exchange from a shard-bucketed corpus table ([[buildFromBucketed]]). */
-  private[graft] def buildPartitions(
-      ds: Dataset[(Long, Array[Float], Int)], params: IndexParams): Dataset[IndexRow] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val p = params
-    ds.mapPartitions(buildGrouped(_, p))
-  }
-
   /** One partition of shard builds ([[buildShard]] per run of equal
-    * shard ids), each shard first passed through `check` if one is given.
+    * shard ids), each shard first passed through `check` and its meta
+    * then added to `report`, for each one given.
     * A shard revisited after a different shard in the same
     * partition means the ordering contract is broken (two partial graphs
     * would silently share a shard id) — fail the task instead. */
   private def buildGrouped(it: Iterator[(Long, Array[Float], Int)],
-      p: IndexParams, check: AppendCheck = null): Iterator[IndexRow] = {
+      p: IndexParams, check: AppendCheck = null,
+      report: BuiltShards = null): Iterator[IndexRow] = {
     // consecutive rows share sub_index_id after the sort. Dimension is
     // fixed at index creation (SURVEY §1.1): the partition's first row
     // sets it for every shard the partition builds.
@@ -1154,18 +1151,23 @@ object VectorIndex {
         vecs += ((r._1, r._2))
       }
       if (check != null && check.rejects(vecs)) Iterator.empty
-      else buildShard(shardId, vecs, p, dim)._2
+      else {
+        val (meta, rows) = buildShard(shardId, vecs, p, dim)
+        if (report != null) report.shards.add((meta, dim))
+        rows
+      }
     }
   }
 
   /** The checks on vectors added to an index ([[VectorIndex!.rewrite]],
     * [[appendTo]]): each must have the index dimension `dim` (unchecked
     * while the index is empty, -1), and no id may repeat, within the
-    * batch or against the index. A rewrite runs them INSIDE its build:
-    * every copy of an id lands in the same shard, adjacent after the
-    * build's id sort, so a shard counts its own violations into the
-    * accumulators and is not built if it has any; [[verify]] then throws
-    * on the driver. */
+    * batch or against the index. Both run them INSIDE their build, the
+    * one validation of an append: every copy of an id lands in the same
+    * shard, adjacent after the build's id sort, so a shard counts its own
+    * violations into the accumulators and is not built if it has any;
+    * [[verify]] then throws on the driver, after the pass that ran the
+    * build (the rewrite's cache fill, appendTo's write). */
   private[index] final case class AppendCheck(dim: Int,
       badDims: org.apache.spark.util.LongAccumulator,
       clashes: org.apache.spark.util.LongAccumulator) {
@@ -1177,6 +1179,31 @@ object VectorIndex {
       bad + dup > 0
     }
     def verify(): Unit = AppendCheck.require(dim, badDims.value, clashes.value)
+  }
+
+  /** The meta and dimension of every non-empty shard a build's tasks
+    * built, as [[buildShard]] read them off the graphs: how [[buildTo]]
+    * and [[appendTo]] take the meta of the rows they write without
+    * reading them back. The builds run in the write job's result stage,
+    * whose task updates Spark applies once per partition, so a shard
+    * reported twice was built in two tasks. */
+  private[index] final case class BuiltShards(
+      shards: org.apache.spark.util.CollectionAccumulator[(ShardMeta, Int)]) {
+    /** The reported meta by shard id, and the dimension (-1 when no shard
+      * was built). */
+    def result(): (Array[ShardMeta], Int) = {
+      import scala.jdk.CollectionConverters._
+      val all = shards.value.asScala.toArray.sortBy(_._1.sub_index_id)
+      val twice = all.map(_._1.sub_index_id).diff(all.map(_._1.sub_index_id).distinct)
+      require(twice.isEmpty, s"shards ${twice.distinct.mkString(", ")} were built more " +
+        "than once (corpus mis-partitioned?)")
+      (all.map(_._1), all.headOption.fold(-1)(_._2))
+    }
+  }
+
+  private[index] object BuiltShards {
+    def apply(spark: SparkSession): BuiltShards =
+      BuiltShards(spark.sparkContext.collectionAccumulator[(ShardMeta, Int)])
   }
 
   private[index] object AppendCheck {
@@ -1236,7 +1263,7 @@ object VectorIndex {
   }
 
   /** Build ONE shard's graph: the kernel loop of both build paths, the
-    * distributed per-partition build ([[buildPartitions]]) and the
+    * distributed per-partition build ([[buildGrouped]]) and the
     * driver build of a small LSM generation ([[buildOnDriver]]). `vecs`
     * must be id-ascending, the order the kernel is deterministic in, of
     * dimension `dim` and finite: a NaN vector would enter every top-k of
@@ -1381,6 +1408,9 @@ object VectorIndex {
     * (one per shard) directly into compressed parquet, one file per shard
     * under `rows/sub_index_id=s/` ([[writeShards]]) — no cluster-wide
     * cache, no serialized eviction spill; exactly one on-disk copy.
+    * The build tasks report each shard's meta ([[BuiltShards]]), so
+    * nothing is read back: two jobs, the exchange and the write. The
+    * sidecars follow, `meta.json` last ([[publish]]).
     * Returns the LOADED index over that parquet (lazy cache, rehydrated
     * per probe), whose first probe reads each shard's directory in place.
     *
@@ -1394,11 +1424,12 @@ object VectorIndex {
   def buildTo(df: DataFrame, params: IndexParams, numShards: Int,
       path: String): VectorIndex = {
     val spark = df.sparkSession
-    writeShards(spark, buildLayout(normalizeInput(df, params), params, numShards), s"$path/rows")
-    // one (shard, layer, offset) scan of the parquet
-    val meta = computeMeta(readRows(spark, s"$path/rows"))
-    writeMetaAndParams(spark, path, meta, params, numShards,
-      java.util.UUID.randomUUID().toString)
+    val report = BuiltShards(spark)
+    publish(spark, path, params, numShards, java.util.UUID.randomUUID().toString) {
+      writeShards(spark, buildLayout(normalizeInput(df, params), params, numShards,
+        report = report), s"$path/rows")
+      report.result()
+    }
     // one knob for "too big for a second copy": when the probe layout
     // cache is off, the row Dataset cache (MEMORY_AND_DISK — another
     // full copy) must be off too, or the mitigation is undone
@@ -1426,6 +1457,17 @@ object VectorIndex {
     *    link: its kept shards go through the same writer, from its probe
     *    layout, so the new snapshot is laid out by shard either way.
     *
+    * One build-and-write pass that reads nothing back: three jobs, the
+    * affected-shard discovery, the exchange and the write. The added
+    * vectors are validated inside the build ([[AppendCheck]]) and the
+    * rebuilt shards' meta comes from their build tasks ([[BuiltShards]]);
+    * the index dimension comes from the old `params.json` (a snapshot
+    * written without that key pays one one-row read). Rows are written
+    * before the check passes, so `meta.json` is the commit point
+    * ([[publish]]): a rejected batch deletes the rows it wrote and throws
+    * the checks' IllegalArgumentException, and `newPath` is left without
+    * `meta.json`, which [[load]] refuses.
+    *
     * The old snapshot is left untouched (still servable — snapshots are
     * immutable generations; retire it when traffic drains). Returns the
     * loaded handle over `newPath`, same cache knob as [[buildTo]].
@@ -1441,60 +1483,80 @@ object VectorIndex {
     val old = load(spark, oldPath, cache = false)
     val params = old.params
     val numShards = old.numShards
-    // shared discover/recover/validate half ([[rewritePrep]]); the
-    // existing-rows isin predicate prunes the scan to the affected
-    // shards' directories
+    // shared discover/recover half ([[rewritePrep]]); the existing-rows
+    // isin predicate prunes the scan to the affected shards' directories
     val (fresh, affectedSeq, rebuildInput) =
       old.rewritePrep(null, newVectors, normalize = true, cacheInput = false)
     if (affectedSeq.isEmpty)
       throw new IllegalArgumentException("appendTo over an empty batch")
     val affected = affectedSeq.toSet
     val newRows = s"$newPath/rows"
-    // 1) one validation pass before anything is written (existing rows
-    // always match, and a clashing id hashes into an affected shard, so
-    // counting over the rebuild input covers old-vs-new AND new-vs-new
-    // clashes); then the rebuilt shards stream straight to the new
-    // snapshot (no cache). Unpersist in finally — a failed validation or
-    // write must not leak the cached batch.
-    try {
+    publish(spark, newPath, params, numShards, java.util.UUID.randomUUID().toString) {
+      // existing rows always match, and a clashing id hashes into an
+      // affected shard, so checking the rebuilt shards covers old-vs-new
+      // AND new-vs-new clashes. Unpersist in finally: a rejected batch or
+      // a failed write must not leak the cached batch.
       val dim = if (old.meta.nonEmpty) old.dimension else -1
-      val counts = rebuildInput
-        .agg(count(lit(1)), count_distinct(col("id")),
-          count(when(lit(dim >= 0) && size(col("embedding")) =!= dim, 1))).head
-      AppendCheck.require(dim, counts.getLong(2), counts.getLong(0) - counts.getLong(1))
-      val rebuilt = buildLayout(rebuildInput, params, numShards)
-      writeShards(spark,
-        if (old.shardDirs.nonEmpty) rebuilt
-        else new ShardAlignedRDD(concat(Seq(old.probeLayout, rebuilt)),
-          Array.tabulate(numShards)(s => if (affected(s)) numShards + s else s)),
-        newRows)
-    } finally {
-      fresh.unpersist()
-      old.unpersist()
+      val check = AppendCheck(spark, dim)
+      val report = BuiltShards(spark)
+      try {
+        val rebuilt = buildLayout(rebuildInput, params, numShards, check, report)
+        writeShards(spark,
+          if (old.shardDirs.nonEmpty) rebuilt
+          else new ShardAlignedRDD(concat(Seq(old.probeLayout, rebuilt)),
+            Array.tabulate(numShards)(s => if (affected(s)) numShards + s else s)),
+          newRows)
+      } finally {
+        fresh.unpersist()
+        old.unpersist()
+      }
+      check.verify()
+      val (rebuiltMeta, builtDim) = report.result()
+      require(rebuiltMeta.map(_.sub_index_id).toSet == affected,
+        s"shards ${affectedSeq.sorted.mkString(", ")} were rebuilt, but their build " +
+          s"reported ${rebuiltMeta.map(_.sub_index_id).mkString(", ")}")
+      // kept shard directories: hardlinked whole
+      for (dir <- old.shardDirs; s <- old.meta.map(_.sub_index_id) if !affected(s))
+        linkOrCopyTree(hconf, s"$dir/sub_index_id=$s", s"$newRows/sub_index_id=$s")
+      ((old.meta.filterNot(m => affected(m.sub_index_id)) ++ rebuiltMeta).sortBy(_.sub_index_id),
+        if (dim > 0) dim else builtDim)
     }
-    // 2) rebuilt-shard meta, read before the kept directories join them
-    val rebuiltMeta = computeMeta(
-      readRows(spark, newRows).filter(col("sub_index_id").isin(affectedSeq: _*)))
-    // 3) kept shard directories: hardlinked whole
-    for (dir <- old.shardDirs; s <- old.meta.map(_.sub_index_id) if !affected(s))
-      linkOrCopyTree(hconf, s"$dir/sub_index_id=$s", s"$newRows/sub_index_id=$s")
-    val meta2 = (old.meta.filterNot(m => affected(m.sub_index_id)) ++ rebuiltMeta)
-      .sortBy(_.sub_index_id)
-    writeMetaAndParams(spark, newPath, meta2, params, numShards,
-      java.util.UUID.randomUUID().toString)
     load(spark, newPath, cache = !spark.conf
       .get("spark.graft.probeLayoutStorage", "MEMORY_ONLY")
       .equalsIgnoreCase("NONE"))
   }
 
-  /** Meta + params sidecars next to an already-written `rows` parquet.
-    * meta is numShards tiny records — one small file write through the
-    * Hadoop FS API (works for hdfs://, s3a://, file:, ...), not a Spark
-    * job. */
+  /** Publish the snapshot at `path` with `meta.json` as its commit
+    * point: any `meta.json` there is deleted before `write` writes the
+    * first row, and the new one is written last, after `params.json`.
+    * `write` writes `rows/` and returns the meta and the stored dimension
+    * (<= 0 when unknown). [[load]] refuses a directory without
+    * `meta.json`, so a publish that fails or is rejected at any step
+    * never pairs a stale `meta.json` with new rows; short of a crash,
+    * its rows are deleted too. */
+  private[index] def publish(spark: SparkSession, path: String, params: IndexParams,
+      numShards: Int, indexId: String)(write: => (Array[ShardMeta], Int)): Unit = {
+    val metaFile = new org.apache.hadoop.fs.Path(s"$path/meta.json")
+    val fs = metaFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(metaFile, false)
+    try {
+      val (meta, dim) = write
+      writeMetaAndParams(spark, path, meta, params, numShards, indexId,
+        Some(dim).filter(_ > 0))
+    } catch { case t: Throwable =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/rows"), true)
+      throw t
+    }
+  }
+
+  /** Params + meta sidecars next to an already-written `rows` parquet,
+    * `meta.json` last: the commit point of [[publish]]. meta is numShards
+    * tiny records — one small file write through the Hadoop FS API (works
+    * for hdfs://, s3a://, file:, ...), not a Spark job. */
   private[graft] def writeMetaAndParams(
       spark: SparkSession, path: String, meta: Array[ShardMeta],
-      p: IndexParams, numShards: Int, indexId: String): Unit = {
-    Sidecar.writeLines(spark, s"$path/meta.json", meta.toSeq)
+      p: IndexParams, numShards: Int, indexId: String,
+      dimension: Option[Int] = None): Unit = {
     // schedule as from:M:RM triples — build provenance AND an append
     // contract (append rebuilds shards with the same schedule)
     val sched = p.schedule
@@ -1503,7 +1565,8 @@ object VectorIndex {
     Sidecar.write(spark, s"$path/params.json", Sidecar.IndexParamsFile(
       p.metric.name, p.minimumConnect, p.relaxedMonotonicity, p.step,
       p.subIndexBound, numShards, sched, p.quantized, p.quantLo, p.quantHi,
-      p.normalizeForCosine, p.augmentForMips, p.mipsMaxNorm, indexId))
+      p.normalizeForCosine, p.augmentForMips, p.mipsMaxNorm, indexId, dimension))
+    Sidecar.writeLines(spark, s"$path/meta.json", meta.toSeq)
   }
 
   /** One shard's driver-held rows as a one-partition RDD read from a
@@ -1590,14 +1653,13 @@ object VectorIndex {
     * nothing. The rows are declared sorted by shard within each
     * partition, which one shard per partition makes true, so the write
     * plans no Sort above the build: a Sort would buffer a whole shard
-    * beside its graph. */
+    * beside its graph. The write is the one query planned: the rows are
+    * serialized in its tasks, not through a Dataset planned first. */
   private[index] def writeShards(spark: SparkSession,
-      layout: org.apache.spark.rdd.RDD[IndexRow], dir: String): Unit = {
-    import spark.implicits._
+      layout: org.apache.spark.rdd.RDD[IndexRow], dir: String): Unit =
     org.apache.spark.sql.graft.GraftSqlBridge
-      .declareSorted(spark.createDataset(layout).toDF(), "sub_index_id")
+      .sortedFrame(spark, layout, org.apache.spark.sql.Encoders.product[IndexRow], "sub_index_id")
       .write.mode("overwrite").partitionBy("sub_index_id").parquet(dir)
-  }
 
   /** The columns of an [[IndexRow]]: a shard directory's files hold all
     * but `sub_index_id`, which the directory name carries. */
@@ -1686,8 +1748,9 @@ object VectorIndex {
     * co-located (one bucket file per bucket, never split) and
     * (sub_index_id, id)-sorted, so the plan is scan → mapPartitions.
     * Plan-guarded in PlanShapeSpec; the grouped/sorted input contract is
-    * additionally enforced in-task ([[buildPartitions]]) and a shard split
-    * across partitions is caught by the computeMeta offset invariant. */
+    * additionally enforced in-task ([[buildGrouped]]) and a shard split
+    * across partitions is caught by [[BuiltShards]], which also supplies
+    * the meta. */
   def buildFromBucketed(
       spark: SparkSession, table: String, params: IndexParams): VectorIndex = {
     val cat = spark.sessionState.catalog
@@ -1701,29 +1764,28 @@ object VectorIndex {
     // DisableUnnecessaryBucketedScan would demote the scan to ordinary
     // file splits (nothing above a mapPartitions "needs" bucketing), and a
     // split bucket file puts half a shard in each of two partitions — the
-    // conf must be off while THIS plan is forced (build() materializes the
-    // rows inside this window via computeMeta's action).
+    // conf must be off while THIS plan is forced (the build materializes
+    // the rows inside this window).
     val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
     try {
-      val cached = buildPartitions(
-        {
-          import spark.implicits._
-          val src = spark.table(table)
-            .select(col("id").cast("long"), col("embedding"),
-              col("sub_index_id").cast("int"))
-            .as[(Long, Array[Float], Int)]
-          // bucketed corpora hold RAW vectors — the API-boundary
-          // transform (cosine normalization / MIPS augmentation) happens
-          // here (narrow map, keeps the no-Exchange/no-Sort plan)
-          if (params.transformsInput) {
-            val p = params
-            src.map { case (id, v, s) => (id, p.transformCorpusVector(v), s) }
-          } else src
-        }, params).cache()
-      val meta = computeMeta(cached)
-      new VectorIndex(params, numShards, cached, meta,
+      import spark.implicits._
+      val src = spark.table(table)
+        .select(col("id").cast("long"), col("embedding"),
+          col("sub_index_id").cast("int"))
+        .as[(Long, Array[Float], Int)]
+      val p = params
+      val report = BuiltShards(spark)
+      // bucketed corpora hold RAW vectors — the API-boundary transform
+      // (cosine normalization / MIPS augmentation) happens here (narrow
+      // map, keeps the no-Exchange/no-Sort plan)
+      val cached = (if (p.transformsInput)
+          src.map { case (id, v, s) => (id, p.transformCorpusVector(v), s) }
+        else src).mapPartitions(buildGrouped(_, p, report = report)).cache()
+      // one pass fills the cache, the builds in its result stage
+      cached.foreachPartition((_: Iterator[IndexRow]) => ())
+      new VectorIndex(params, numShards, cached, report.result()._1,
         java.util.UUID.randomUUID().toString)
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
@@ -1732,7 +1794,9 @@ object VectorIndex {
   }
 
   /** Load a saved index (reference O10). The sidecars are read first: a
-    * missing `meta.json` is an IllegalArgumentException naming it. Rows
+    * missing `meta.json`, the commit point of every publish, is an
+    * IllegalArgumentException naming it. The index dimension is preset
+    * from `params.json` when it records one. Rows
     * written one directory per shard ([[VectorIndex!.save]], [[buildTo]],
     * [[appendTo]]) are read in place by the first probe; a flat `rows/`,
     * as older versions wrote it, is laid out by an exchange instead.
@@ -1765,39 +1829,13 @@ object VectorIndex {
     // rows — the save/load invariance gate must exercise the load path
     val idx = new VectorIndex(params, pf.numShards, if (cache) rows.cache() else rows, meta,
       pf.indexId + "#load-" + java.util.UUID.randomUUID().toString)
+    pf.dimension.foreach(idx.knownDim = _)
     // a flat snapshot holds its part files at the top of rows/
     val dir = new org.apache.hadoop.fs.Path(s"$path/rows")
     val flat = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
       .exists(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
     if (!flat) idx.shardDirs = Some(dir.toString)
     idx
-  }
-
-  private def computeMeta(rows: Dataset[IndexRow]): Array[ShardMeta] = {
-    import rows.sparkSession.implicits._
-    // entry = the unique vector whose layer == shard layer_count, recorded
-    // at promotion time; layer_count = max layer (dehnsw.h:495-499).
-    // Declarative aggregate (max layer, min offset among them via negated
-    // tie-break) so only (shard, layer, offset) shuffle — groupByKey +
-    // mapGroups would drag embeddings and adjacency through the exchange.
-    rows.groupBy(col("sub_index_id"))
-      .agg(count(lit(1)).as("n"),
-        max(struct(col("layer").as("l"), (-col("offset")).as("no"))).as("m"),
-        max(col("offset")).as("mo"))
-      .select(col("sub_index_id"), col("n"),
-        col("m.l").as("lc"), (-col("m.no")).as("eo"), col("mo"))
-      .as[(Int, Long, Int, Int, Int)].collect()
-      .map { case (s, n, lc, eo, mo) =>
-        // a shard built twice (split across partitions — e.g. a bucketed
-        // corpus read through file splits) yields duplicate offsets, so
-        // max(offset) falls short of n-1; a contiguous single build never
-        // does (dehydrate emits offsets 0..count-1)
-        require(mo == n - 1,
-          s"shard $s has $n rows but max offset $mo — shard built in " +
-            "multiple partitions (corpus mis-partitioned?)")
-        ShardMeta(s, n, lc, eo)
-      }
-      .sortBy(_.sub_index_id)
   }
 
   private[index] def dehydrate(shardId: Int, g: SubIndexGraph): Iterator[IndexRow] =

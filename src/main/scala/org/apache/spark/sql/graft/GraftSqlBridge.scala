@@ -26,17 +26,26 @@ object GraftSqlBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `df`'s rows, declared sorted by `column` within each partition (the
-    * caller's guarantee; it is not checked), so a plan that requires that
-    * order, such as a write partitioned by `column`, adds no Sort. */
-  def declareSorted(df: org.apache.spark.sql.DataFrame, column: String): org.apache.spark.sql.DataFrame = {
+  /** `rdd`'s objects as rows of `enc`'s schema, declared sorted by
+    * `column` within each partition (the caller's guarantee; it is not
+    * checked), so a plan that requires that order, such as a write
+    * partitioned by `column`, adds no Sort. The tasks serialize the
+    * objects and no query is planned here: the plan that reads the frame
+    * is planned once. */
+  def sortedFrame[T](spark: SparkSession, rdd: org.apache.spark.rdd.RDD[T],
+      enc: org.apache.spark.sql.Encoder[T], column: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
-    val out = qe.analyzed.output
+    val ee = org.apache.spark.sql.catalyst.encoders.encoderFor(enc)
+    val out = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(ee.schema)
     val key = out.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(s"no column $column in ${out.mkString(", ")}"))
-    dataFrame(df.sparkSession, org.apache.spark.sql.execution.LogicalRDD(out, qe.toRdd,
-      outputOrdering = Seq(SortOrder(key, Ascending)))(qe.sparkSession))
+    val rows = rdd.mapPartitions { it =>
+      val serialize = ee.createSerializer()
+      it.map(serialize)
+    }
+    dataFrame(spark, org.apache.spark.sql.execution.LogicalRDD(out, rows,
+      outputOrdering = Seq(SortOrder(key, Ascending)))(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
   }
 
   /** Parquet files read as one partition per group: partition i reads

@@ -11,7 +11,9 @@ import graft.index.{IndexParams, VectorIndex}
   *    bit invariant, probed);
   *  - untouched shard directories are HARDLINKED into the new snapshot
   *    (same inode), never re-read or re-written;
-  *  - only the affected shards' meta changes.
+  *  - only the affected shards' meta changes;
+  *  - a rejected batch names its count, leaves the old snapshot serving
+  *    row for row the same and nothing loadable at the new path.
   */
 class AppendToSpec extends AnyFunSuite with SparkSuite {
 
@@ -91,6 +93,48 @@ class AppendToSpec extends AnyFunSuite with SparkSuite {
   test("appendTo == full rebuild; untouched shard files hardlink (SQ8)") {
     checkAppendTo(IndexParams(minimumConnect = 4, relaxedMonotonicity = 16, step = 4,
       quantized = true, quantLo = 0f, quantHi = 1f))
+  }
+
+  /** A rejected batch: appendTo throws the same message as the checks
+    * that ran before the rows were written, the old snapshot still loads
+    * and probes row for row the same, and nothing loads at `newPath`. */
+  private def checkRejected(batch: Int => org.apache.spark.sql.DataFrame, message: String): Unit = {
+    val params = IndexParams(minimumConnect = 4, relaxedMonotonicity = 16, step = 4)
+    val root = java.nio.file.Files.createTempDirectory("graft_appendto_reject_").toString
+    val (oldDir, newDir) = (s"$root/old", s"$root/new")
+    val qdf = corpus(20, 8, i => 900000L + i).select(col("id").as("query_id"), col("embedding"))
+    def served() = {
+      val idx = VectorIndex.load(spark, oldDir, cache = false)
+      val rows = idx.rows.collect().map(r => (r.sub_index_id, r.offset, r.global_id, r.layer,
+        r.embedding.toSeq, r.out, r.edges)).sortBy(t => (t._1, t._2)).toSeq
+      val hits = idx.query(qdf, 10, searchWidth = 16).collect().map(_.toSeq).toSeq
+      graft.index.ShardGraphCache.evict(idx.probeId)
+      (rows, idx.meta.toSeq, hits)
+    }
+    try {
+      VectorIndex.buildTo(corpus(400, 8, _.toLong), params, 4, oldDir).unpersist()
+      val before = served()
+      val e = intercept[IllegalArgumentException](
+        VectorIndex.appendTo(spark, oldDir, batch(8), newDir))
+      assert(e.getMessage === message)
+      assert(served() === before, "the rejected append changed the old snapshot")
+      intercept[IllegalArgumentException](VectorIndex.load(spark, newDir, cache = false))
+    } finally graft.streaming.StreamingOps.deleteRecursively(root)
+  }
+
+  test("appendTo rejects an id that clashes with the old snapshot, naming the count") {
+    checkRejected(dim => corpus(50, dim, 400L + _).union(corpus(2, dim, 10L + _)),
+      "requirement failed: appended ids must be disjoint from the index and unique (2 clashes)")
+  }
+
+  test("appendTo rejects an id repeated within the batch, naming the count") {
+    checkRejected(dim => corpus(50, dim, 400L + _).union(corpus(3, dim, i => 420L + (i + 1) / 2)),
+      "requirement failed: appended ids must be disjoint from the index and unique (3 clashes)")
+  }
+
+  test("appendTo rejects a wrongly-sized vector, naming the count") {
+    checkRejected(dim => corpus(50, dim, 400L + _).union(corpus(2, dim + 1, 450L + _)),
+      "requirement failed: appended vectors must match index dimension 8 (2 mismatching rows)")
   }
 
   test("retiring the old generation: delete is safe, freed vs shared bytes enumerated") {

@@ -54,6 +54,8 @@ class EagerProbeSpec extends AnyFunSuite with SparkSuite {
       val eager = idx.query(queryDf(batch), 10, w)
       assert(eager.count() === batch.length * 10L, s"$name w=$w")
       assertSame(eager, idx.queryBatch(batch, 10, w), s"$name w=$w")
+      if (name == "l2") assertSame(idx.query(queryDf(batch)
+        .withColumn("query_id", col("query_id").cast("int")), 10, w), eager, s"int query_id w=$w")
       idx.unpersist()
     }
   }

@@ -1,0 +1,160 @@
+package graft.index
+
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
+
+/** Snapshot publish ([[VectorIndex.buildTo]], [[VectorIndex.appendTo]]):
+  * one build-and-write pass that reads nothing back, with `meta.json` as
+  * the commit point.
+  *  - A directory whose publish was rejected or failed part-way is
+  *    refused by `load`; a stale `meta.json` never meets new rows.
+  *  - `appendTo` onto all 4 shards runs 3 jobs (affected-shard
+  *    discovery, the exchange, the write), and `buildTo` none after its
+  *    write.
+  *  - The published rows and meta equal [[VectorIndex.build]] over the
+  *    union bit for bit.
+  *  - `params.json` records the index dimension, and a snapshot written
+  *    without it still appends. */
+class PublishSpec extends AnyFunSuite with SparkSuite {
+
+  private val params = IndexParams(minimumConnect = 4, relaxedMonotonicity = 16, step = 2)
+
+  /** Seeded 8-d vectors in [-1, 1) for `ids`, each a function of its id. */
+  private def vectors(ids: Seq[Long], dim: Int = 8): Seq[(Long, Array[Float])] =
+    ids.map { i =>
+      val r = new scala.util.Random(i * 2654435761L + 5)
+      (i, Array.fill(dim)(r.nextFloat() * 2 - 1))
+    }
+
+  private def frame(rows: Seq[(Long, Array[Float])]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("id", "embedding")
+  }
+
+  /** Index rows in a comparable form: adjacency included, ordered by
+    * (shard, offset). */
+  private def canon(idx: VectorIndex) =
+    idx.rows.collect().toSeq.map(r => (r.sub_index_id, r.offset, r.global_id, r.layer,
+      r.embedding.toSeq, r.out, r.edges)).sortBy(t => (t._1, t._2))
+
+  private def withDir(f: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_publish_").toString
+    try f(dir) finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
+  private def refused(path: String): Unit = {
+    val e = intercept[IllegalArgumentException](VectorIndex.load(spark, path, cache = false))
+    assert(e.getMessage.contains("meta.json"), e.getMessage)
+  }
+
+  test("a rejected or failed publish over an existing snapshot leaves a directory load refuses") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failwrite.impl", classOf[FailingWriteFs].getName)
+    conf.set("fs.AbstractFileSystem.failwrite.impl", classOf[FailingWriteAfs].getName)
+    withDir { dir =>
+      try {
+        val (old, target) = (s"$dir/old", s"$dir/target")
+        VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, old).unpersist()
+        def occupy(): Unit = {
+          VectorIndex.buildTo(frame(vectors(0L until 100L)), params, 4, target).unpersist()
+          VectorIndex.load(spark, target, cache = false)
+        }
+
+        // a batch rejected after its rows were written
+        occupy()
+        intercept[IllegalArgumentException](VectorIndex.appendTo(spark, old,
+          frame(vectors(400L until 440L) ++ vectors(Seq(7L))), target))
+        refused(target)
+        assert(!new java.io.File(s"$target/rows").exists, "the rejected rows were left behind")
+
+        // a row file that fails part-way, under appendTo and under buildTo
+        FailingWriteFs.target = "part-"
+        occupy()
+        intercept[Exception](VectorIndex.appendTo(spark, old,
+          frame(vectors(400L until 440L)), s"failwrite://$target"))
+        refused(target)
+        occupy()
+        intercept[Exception](VectorIndex.buildTo(frame(vectors(0L until 300L)), params, 4,
+          s"failwrite://$target"))
+        refused(target)
+        FailingWriteFs.target = "\u0000"
+
+        // the old snapshot is untouched, and the directory publishes again
+        assert(VectorIndex.load(spark, old, cache = false).meta.map(_.n_vectors).sum == 400)
+        val again = VectorIndex.appendTo(spark, old, frame(vectors(400L until 440L)), target)
+        assert(again.meta.map(_.n_vectors).sum == 440)
+      } finally {
+        FailingWriteFs.target = "\u0000"
+        conf.unset("fs.failwrite.impl")
+        conf.unset("fs.AbstractFileSystem.failwrite.impl")
+      }
+    }
+  }
+
+  test("work counter: appendTo onto all 4 shards runs 3 jobs, and buildTo none after its write") {
+    withDir { dir =>
+      val (built, buildWork) = workDuring(
+        VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, s"$dir/g0"))
+      // the exchange that lays shard s in partition s, then the write
+      assert(buildWork.jobs <= 2, s"buildTo ran $buildWork")
+      // its cached rows would be filled by the append's read of g0
+      built.unpersist()
+      // contiguous ids touch every shard
+      val (appended, appendWork) = workDuring(VectorIndex.appendTo(spark, s"$dir/g0",
+        frame(vectors(400L until 500L)), s"$dir/g1"))
+      assert(appended.meta.length == 4 && appended.meta.map(_.n_vectors).sum == 500)
+      // affected-shard discovery, the exchange, the write
+      assert(appendWork.jobs <= 3, s"appendTo ran $appendWork")
+      appended.unpersist()
+    }
+  }
+
+  test("appendTo rows and meta equal build over the union: float, SQ8, cosine, MIPS, schedule") {
+    val cases = Seq(
+      "float" -> params,
+      "SQ8" -> params.copy(quantized = true, quantLo = -1f, quantHi = 1f),
+      "cosine" -> params.copy(normalizeForCosine = true),
+      "MIPS" -> params.copy(augmentForMips = true, mipsMaxNorm = 3f),
+      // shards hold 100 ids before the append and 125 after it
+      "schedule" -> params.copy(schedule = Seq(ParamStep(0, 2, 8), ParamStep(110, 4, 16))))
+    val (base, added) = (vectors(0L until 400L), vectors(400L until 500L))
+    cases.foreach { case (name, p) =>
+      withDir { dir =>
+        VectorIndex.buildTo(frame(base), p, 4, s"$dir/g0").unpersist()
+        val appended = VectorIndex.appendTo(spark, s"$dir/g0", frame(added), s"$dir/g1")
+        val full = VectorIndex.build(frame(base ++ added), p, 4)
+        assert(appended.meta.toSeq == full.meta.toSeq, s"$name: meta differs")
+        assert(canon(appended) == canon(full), s"$name: rows differ")
+        Seq(appended, full).foreach(_.unpersist())
+      }
+    }
+  }
+
+  test("params.json records the dimension; a snapshot written without it still appends") {
+    withDir { dir =>
+      def paramsText(path: String) = VectorIndex.readSmallFile(spark, s"$path/params.json")
+      VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, s"$dir/g0").unpersist()
+      assert(paramsText(s"$dir/g0").contains("\"dimension\":8"), paramsText(s"$dir/g0"))
+      val (dim, jobs) = jobsDuring(VectorIndex.load(spark, s"$dir/g0", cache = false).dimension)
+      assert(dim == 8 && jobs == 0, s"dimension $dim read in $jobs jobs")
+
+      // the key absent, as earlier versions wrote params.json
+      val without = paramsText(s"$dir/g0").replaceAll(",?\"dimension\":\\d+", "")
+      assert(!without.contains("dimension"))
+      VectorIndex.writeSmallFile(spark, s"$dir/g0/params.json", without)
+      val (appended, work) = workDuring(VectorIndex.appendTo(spark, s"$dir/g0",
+        frame(vectors(400L until 500L)), s"$dir/g1"))
+      // one more job: the one-row read of the dimension
+      assert(work.jobs <= 4, s"appendTo ran $work")
+      assert(paramsText(s"$dir/g1").contains("\"dimension\":8"), paramsText(s"$dir/g1"))
+      val full = VectorIndex.build(frame(vectors(0L until 500L)), params, 4)
+      assert(appended.meta.toSeq == full.meta.toSeq && canon(appended) == canon(full))
+      val wrong = intercept[IllegalArgumentException](VectorIndex.appendTo(spark, s"$dir/g0",
+        frame(vectors(500L until 502L, dim = 9)), s"$dir/g2"))
+      assert(wrong.getMessage.contains("must match index dimension 8 (2 mismatching rows)"))
+      Seq(appended, full).foreach(_.unpersist())
+    }
+  }
+}

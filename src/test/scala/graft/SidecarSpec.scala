@@ -75,10 +75,11 @@ class SidecarSpec extends AnyFunSuite with SparkSuite {
       VectorIndex.writeCalibration(spark, dir, cal)
       assert(new java.io.File(dir).list().toSet === names)
       assert(VectorIndex.readCalibration(spark, dir) === Some(cal))
-      val before = Seq("params.json", "calibration.json")
+      val before = Seq("meta.json", "calibration.json")
         .map(f => f -> bytes(s"$dir/$f")).toMap
 
-      FailingWriteFs.target = "params.json"
+      // meta.json is written last, after params.json
+      FailingWriteFs.target = "meta.json"
       intercept[java.io.IOException] {
         VectorIndex.writeMetaAndParams(spark, s"failwrite://$dir", meta.take(1),
           params.copy(step = 3), 1, "second")
@@ -94,8 +95,8 @@ class SidecarSpec extends AnyFunSuite with SparkSuite {
       assert(VectorIndex.readCalibration(spark, dir) === Some(cal))
       // the rewrite that succeeded replaced its file, and no staged
       // sibling is left behind by either outcome
-      assert(new String(bytes(s"$dir/meta.json").toArray, "UTF-8")
-        .trim.split("\n").length === 1)
+      assert(Sidecar.decode[Sidecar.IndexParamsFile](
+        new String(bytes(s"$dir/params.json").toArray, "UTF-8")).step === 3)
       assert(new java.io.File(dir).list().filter(_.startsWith("_")).isEmpty)
     } finally {
       FailingWriteFs.target = "\u0000"
