@@ -11,7 +11,9 @@ import graft.operators.{ExactKnn, RecallEval}
   * (example/dehnsw_example.cpp:154-185): N seeded synthetic vectors,
   * single-shard single-thread build (comparable to the reference's
   * single-thread profile) plus the distributed multi-shard path, reporting
-  * per-insert and per-query microseconds and recall.
+  * per-insert and per-query microseconds and recall. The single-shard
+  * section calls the kernel's beam and exact scan directly, not the
+  * index probe (`SubIndexGraph.topK`), because it compares the two.
   *
   * Run: sbt "runMain graft.KernelBench [nVectors] [dim] [sparkOnly] [quant]"
   * (third arg "sparkOnly" skips the single-thread section — for corpus
@@ -34,7 +36,9 @@ import graft.operators.{ExactKnn, RecallEval}
   * copy instead of a wholesale Kryo cache spill.
   *
   * Soak mode: sbt "runMain graft.KernelBench [nVectors] [dim] soak [nQueries]"
-  * drives the driverless shuffled probe (`queryDistributed`) with an
+  * drives the driverless shuffled probe (`queryDistributed`: the
+  * replicated queries zipped with the shard layout in the index's one
+  * per-shard probe core, `VectorIndex.shardCandidates`) with an
   * nQueries-row query set generated DISTRIBUTED via spark.range — no
   * query vector ever transits the driver in either direction — then
   * cross-checks a 100-query overlap against the broadcast `query` path

@@ -779,6 +779,12 @@ final class SubIndexGraph(params: IndexParams, capacity: Int) extends Serializab
     result
   }
 
+  /** The probe kernel: [[bruteForceTopK]] at `searchWidth <= 0` (exact
+    * whatever the graph's connectivity), else the [[queryTopK]] beam. */
+  def topK(q: Array[Float], k: Int, searchWidth: Int,
+      live: Long => Boolean = null): Array[(Double, Long)] =
+    if (searchWidth <= 0) bruteForceTopK(q, k, live) else queryTopK(q, k, searchWidth, live)
+
   /** Exact per-shard top-k by full scan — the searchWidth=0 path. The
     * reference's RM=0 semantics is an exhaustive walk of the layer-0
     * connected component (dehnsw.h:300-307); a full scan is the same cost

@@ -3,8 +3,6 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.TopK
-
 /** LSM-style generational vector index — the scale-safe streaming-ingest
   * form of the shard contract (reference: source/dehnsw.h:601-609, where a
   * full shard opens a new one; generational shards are that contract's
@@ -313,24 +311,15 @@ final class LsmVectorIndex private (
     * EAGERLY, in one Spark job over the fused member layout (see
     * [[queryBatch]]) with the top-k merged on the driver: the driver
     * holds at most `maxBatch` query vectors and `maxBatch × k` result
-    * rows. A larger batch is probed per member without the driver and
-    * merged by one shuffle. Deleted ids are dropped inside the kernel
-    * (the liveness filter), so every member returns its exact live top-k
-    * and no tombstone post-filter is needed. */
+    * rows. A larger batch is probed without the driver, over the same
+    * fused layout, and merged by one shuffle. Deleted ids are dropped
+    * inside the kernel (the liveness filter), so every member returns its
+    * exact live top-k and no tombstone post-filter is needed. */
   def query(queries: DataFrame, k: Int, searchWidth: Int,
       maxBatch: Int = 100000): DataFrame = {
     val members = probeMembers
-    if (members.isEmpty) return VectorIndex.resultFrame(probeSession, Nil)
-    val live = liveFilter
-    VectorIndex.routeBatch(queries, maxBatch) match {
-      case Some(batch) =>
-        VectorIndex.probeNow(members, batch, k, searchWidth, maxBatch, live)
-      case None if members.size == 1 =>
-        members.head.queryDistributed(queries, k, searchWidth, live)
-      case None =>
-        TopK.topKMerge(
-          members.map(_.queryDistributed(queries, k, searchWidth, live)).reduce(_ union _), k)
-    }
+    if (members.isEmpty) VectorIndex.resultFrame(probeSession, Nil)
+    else VectorIndex.probeRouted(members, queries, k, searchWidth, maxBatch, liveFilter)
   }
 
   /** Probe with an already-materialized query batch, LAZILY — the

@@ -2,11 +2,13 @@ package graft.index
 
 import scala.collection.mutable
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.DistanceMetric
-import graft.operators.TopK
+import graft.operators.{TopK, TopKBuffer}
 
 /** Executor-local cache of rehydrated shard graphs, keyed by (index
   * identity, shard). Rebuilding the in-memory adjacency from IndexRows is
@@ -229,12 +231,10 @@ class VectorIndex private (
     * vector throws an IllegalArgumentException naming its query id. A
     * larger batch never transits the driver beyond that collect and is
     * answered lazily by the driverless shuffled probe
-    * ([[queryDistributed]]). */
+    * ([[VectorIndex.probeDistributed]]), whose tasks reject such a vector
+    * by id. */
   def query(queries: DataFrame, k: Int, searchWidth: Int, maxBatch: Int = 100000): DataFrame =
-    VectorIndex.routeBatch(queries, maxBatch) match {
-      case Some(batch) => VectorIndex.probeNow(Seq(this), batch, k, searchWidth, maxBatch, null)
-      case None => queryDistributed(queries, k, searchWidth)
-    }
+    VectorIndex.probeRouted(Seq(this), queries, k, searchWidth, maxBatch, null)
 
   /** Two-stage REFINED probe — the quantization-ceiling breaker: stage 1
     * pulls a per-query pool of `pool` candidates from this index
@@ -438,13 +438,13 @@ class VectorIndex private (
     * [[VectorIndex.buildOnDriver]]): its one copy of the rows, partition
     * s holding exactly shard s, which [[rows]] reads too —
     * [[probeLayout]] is that RDD itself. */
-  @transient private var inMemoryLayout: Option[org.apache.spark.rdd.RDD[IndexRow]] = None
+  @transient private var inMemoryLayout: Option[RDD[IndexRow]] = None
 
   /** The id of the broadcast that holds a driver-built index's rows. */
   private[graft] def driverRowsBroadcastId: Option[Long] =
     inMemoryLayout.collect { case d: VectorIndex.DriverRowsRDD => d.broadcastId }
 
-  /** Probe-ready layout shared by the broadcast and shuffled probes:
+  /** The layout every probe reads ([[VectorIndex.shardCandidates]]):
     * partition i holds exactly shard i's rows. An in-memory index was
     * laid out so by its build ([[VectorIndex.build]], [[rewrite]]), and
     * this is its one cached copy, filled by the build. A LOADED snapshot
@@ -456,8 +456,7 @@ class VectorIndex private (
     * exchange of the rows instead (~2.5x the parquet bytes: 51 GB at
     * 100M). Both are cached at `spark.graft.probeLayoutStorage` (which
     * governs only these cases). */
-  @transient private[graft] lazy val probeLayout
-      : org.apache.spark.rdd.RDD[IndexRow] = inMemoryLayout.getOrElse {
+  @transient private[graft] lazy val probeLayout: RDD[IndexRow] = inMemoryLayout.getOrElse {
     layoutMade = true
     val rdd = shardDirs match {
       case Some(dir) => VectorIndex.readShards(rows.sparkSession, dir, meta, numShards)
@@ -479,89 +478,11 @@ class VectorIndex private (
     else rdd.persist(org.apache.spark.storage.StorageLevel.fromString(lvl))
   }
 
-  /** Fully driverless probe: query rows flow through ONE shuffle onto the
-    * identity-partitioned index layout — no driver collect, no broadcast,
-    * no `toLocalIterator` transit, so the batch may be arbitrarily large
-    * (each task holds one shard's graph plus a bounded query group).
-    * Each query is replicated to every shard (the same data volume a
-    * broadcast ships to every executor), probed per shard, and reduced by
-    * the usual partial/final top-k merge. Results are identical to
-    * [[query]] — gated by spec. Prefer [[query]] for small batches (one
-    * broadcast beats a |Q| x shards shuffle when |Q| is tiny). */
-  def queryDistributed(queries: DataFrame, k: Int, searchWidth: Int,
-      live: Long => Boolean = null): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val n = numShards
-    val bcMeta = spark.sparkContext.broadcast(meta.map(m => m.sub_index_id -> m).toMap)
-    val p = params
-    val iid = indexId
-    val qPairs = queries
-      .select(col("query_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].rdd
-      .map { case (id, v) => (id, p.transformQueryVector(v)) }
-      .flatMap(q => Iterator.range(0, n).map(s => (s, q)))
-      .partitionBy(new VectorIndex.ShardPartitioner(n))
-      .map(_._2)
-    val candidates = probeLayout.zipPartitions(qPairs, preservesPartitioning = false) {
-      (rit, qit) =>
-        if (!qit.hasNext) Iterator.empty
-        else {
-          val shardId = org.apache.spark.TaskContext.getPartitionId()
-          val g = VectorIndex.shardGraphFor(rit, iid, shardId, p, bcMeta.value)
-          if (g == null) Iterator.empty // shard holds no vectors
-          else {
-            val graph = g
-            // bounded groups keep per-task result memory ~groupSize x k
-            // while still materializing each group's probes inside the
-            // graph lock (the iterator must not escape the lock lazily)
-            qit.grouped(2048).flatMap { group =>
-              graph.synchronized {
-                group.iterator.flatMap { case (qid, qvec) =>
-                  val topk =
-                    if (searchWidth <= 0) graph.bruteForceTopK(qvec, k, live)
-                    else graph.queryTopK(qvec, k, searchWidth, live)
-                  topk.iterator.map { case (d, gid) => (qid, (d, gid)) }
-                }.toArray
-              }
-            }
-          }
-        }
-    }
-    // Reduce-side-only top-k merge. A map-side partial top-k is pure
-    // overhead here: each probe task already emits AT MOST k candidates
-    // per (query, shard), so partial aggregation shrinks nothing — it
-    // only materializes |queries-in-task| aggregation state (at 10^6
-    // queries that is a million-key hash map per task, which falls back
-    // to sort-based aggregation over the full candidate stream and OOMs
-    // long before the shuffle would). With mapSideCombine=false the
-    // candidate rows stream straight into the shuffle writer, and the
-    // reduce side builds one bounded TopKBuffer per query — memory
-    // O(queries-per-reduce-task x k), independent of shard count.
-    val mergeParts = math.max(
-      spark.conf.get("spark.sql.shuffle.partitions", n.toString).toInt, n)
-    val merged = candidates
-      .combineByKeyWithClassTag[graft.operators.TopKBuffer](
-        createCombiner = (v: (Double, Long)) => {
-          val b = new graft.operators.TopKBuffer(k); b.insert(v._1, v._2); b
-        },
-        mergeValue = (b: graft.operators.TopKBuffer, v: (Double, Long)) => {
-          b.insert(v._1, v._2); b
-        },
-        mergeCombiners = (a: graft.operators.TopKBuffer, b: graft.operators.TopKBuffer) => {
-          a.merge(b); a
-        },
-        partitioner = new org.apache.spark.HashPartitioner(mergeParts),
-        mapSideCombine = false)
-      .flatMap { case (qid, buf) =>
-        buf.sortedPairs.iterator.zipWithIndex.map {
-          case ((d, gid), i) => (qid, i + 1, gid, d)
-        }
-      }
-    merged.toDF("query_id", "rank", "neighbor_id", "distance")
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("neighbor_id"), col("distance"))
-  }
+  /** [[query]]'s driverless probe ([[VectorIndex.probeDistributed]]),
+    * whatever the batch size. Prefer [[query]] for small batches: one
+    * broadcast beats a |Q| x shards shuffle when |Q| is tiny. */
+  def queryDistributed(queries: DataFrame, k: Int, searchWidth: Int): DataFrame =
+    VectorIndex.probeDistributed(Seq(this), queries, k, searchWidth, null)
 
   /** Batch append: rebuild only the shards that receive new vectors
     * (SURVEY §1.3 — online single-vector insert is out of scope; batch
@@ -799,80 +720,109 @@ object VectorIndex {
   private[index] def floatsAt(r: org.apache.spark.sql.Row, i: Int): Array[Float] =
     if (r.isNullAt(i)) null else r.getSeq[Float](i).toArray
 
-  /** Reject a query vector the kernel would answer wrongly: a missing
-    * embedding, one whose length differs from the batch's first (ragged),
-    * or a NaN/infinite component — which would poison every shard's
-    * distance order. The message names the query id. */
+  /** Reject a driver-held batch holding a query vector [[checkQuery]]
+    * rejects, or one whose length differs from the batch's first. */
   private[index] def validateQueries(batch: Array[(Long, Array[Float])]): Unit =
     batch.foreach { case (id, v) =>
-      require(v != null, s"query $id has no embedding")
-      val (firstId, first) = batch(0) // checked non-null on the first pass
+      checkQuery(id, v)
+      val (firstId, first) = batch(0) // checked on the first pass
       require(v.length == first.length,
         s"ragged query batch: query $id has ${v.length} components, " +
           s"query $firstId has ${first.length}")
-      val bad = v.indexWhere(x => !java.lang.Float.isFinite(x))
-      require(bad < 0, s"query $id has a non-finite component ${v(bad)} at index $bad")
     }
 
-  /** One task's candidates for a broadcast query chunk, as parallel
-    * primitive arrays; `slots(j)` = query position × |widths| + width
-    * position. At most k candidates per slot. */
-  private[index] final case class ShardCandidates(
-      slots: Array[Int], dists: Array[Double], ids: Array[Long])
+  /** Reject a query vector the kernel would answer wrongly: a missing
+    * embedding, or a NaN/infinite component — which would poison every
+    * shard's distance order. The message names the query id. */
+  private[index] def checkQuery(id: Long, v: Array[Float]): Unit = {
+    require(v != null, s"query $id has no embedding")
+    val bad = v.indexWhere(x => !java.lang.Float.isFinite(x))
+    require(bad < 0, s"query $id has a non-finite component ${v(bad)} at index $bad")
+  }
 
-  /** The per-shard candidate core of every broadcast probe. The probe
-    * layouts of `members` are unioned (a narrow concatenation; a single
-    * index is its own layout), and each task maps its partition back to
-    * (member, shard), rehydrates or cache-hits that shard's graph and
-    * probes every query of the chunk at every width, `live` dropping
-    * deleted ids inside the kernel. The graph carries reusable search
-    * scratch, so probes serialize on it. Every partition yields exactly
-    * one [[ShardCandidates]]. */
-  private[index] def shardCandidates(
-      members: Seq[VectorIndex],
-      chunk: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]],
-      k: Int, widths: Array[Int], live: Long => Boolean)
-      : org.apache.spark.rdd.RDD[ShardCandidates] = {
+  /** One task's candidates for one query group, as parallel primitive
+    * arrays; `slots(j)` = query position in `group` × |widths| + width
+    * position. At most k candidates per slot. `group` stays in the task:
+    * it does not travel with a task result. */
+  private[index] final case class ShardCandidates(
+      slots: Array[Int], dists: Array[Double], ids: Array[Long])(
+      @transient val group: Array[(Long, Array[Float])])
+
+  /** The per-shard candidate core of every probe. The probe layouts of
+    * `members` are concatenated (a single index is its own layout), and
+    * each task maps its partition back to (member, shard), rehydrates or
+    * cache-hits that shard's graph and probes each query group at every
+    * width, `live` dropping deleted ids inside the kernel: one
+    * [[ShardCandidates]] per group. The queries are either a broadcast
+    * chunk, one group for every partition (`Left`), or keyed by the
+    * partition they were shuffled to (`Right`), in groups of 2048; a
+    * partition without queries then reads no rows. The graph carries
+    * reusable search scratch, so a group's probes run inside its lock. A
+    * query of another dimension than the shard's is rejected by id. */
+  private[index] def shardCandidates(members: Seq[VectorIndex],
+      queries: Either[Broadcast[Array[(Long, Array[Float])]], RDD[(Int, (Long, Array[Float]))]],
+      k: Int, widths: Array[Int], live: Long => Boolean): RDD[ShardCandidates] = {
     val offsets = members.map(_.numShards).scanLeft(0)(_ + _).toArray
     val info = members.map(m =>
       (m.indexId, m.params, m.meta.map(x => x.sub_index_id -> x).toMap)).toArray
-    // the partition index of the layout union itself — not the task's
-    // partition id, which counts from the start of any union of chunks
-    concat(members.map(_.probeLayout)).mapPartitionsWithIndex { (pid, rit) =>
+    def probe(pid: Int, rit: Iterator[IndexRow], groups: Iterator[Array[(Long, Array[Float])]]) = {
       var m = 0
       while (offsets(m + 1) <= pid) m += 1
       val (iid, params, metaMap) = info(m)
       val g = shardGraphFor(rit, iid, pid - offsets(m), params, metaMap)
-      val slots = new mutable.ArrayBuilder.ofInt
-      val dists = new mutable.ArrayBuilder.ofDouble
-      val ids = new mutable.ArrayBuilder.ofLong
-      if (g != null) g.synchronized {
-        var s = 0
-        for ((_, q) <- chunk.value; w <- widths) {
-          val topk =
-            if (w <= 0) g.bruteForceTopK(q, k, live)
-            else g.queryTopK(q, k, w, live)
-          topk.foreach { case (d, gid) => slots += s; dists += d; ids += gid }
-          s += 1
+      val aug = if (params.augmentForMips) 1 else 0
+      groups.map { group =>
+        val slots = new mutable.ArrayBuilder.ofInt
+        val dists = new mutable.ArrayBuilder.ofDouble
+        val ids = new mutable.ArrayBuilder.ofLong
+        if (g != null) g.synchronized {
+          for (((id, q), i) <- group.iterator.zipWithIndex) {
+            require(q.length == g.dim,
+              s"query $id has ${q.length - aug} components, the index takes ${g.dim - aug}")
+            for ((w, wi) <- widths.iterator.zipWithIndex; (d, gid) <- g.topK(q, k, w, live)) {
+              slots += i * widths.length + wi; dists += d; ids += gid
+            }
+          }
         }
+        ShardCandidates(slots.result(), dists.result(), ids.result())(group)
       }
-      Iterator.single(ShardCandidates(slots.result(), dists.result(), ids.result()))
+    }
+    val layout = concat(members.map(_.probeLayout))
+    queries match {
+      // the partition index of the layout union itself — not the task's
+      // partition id, which counts from the start of any union of chunks
+      case Left(chunk) =>
+        layout.mapPartitionsWithIndex((pid, rit) => probe(pid, rit, Iterator.single(chunk.value)))
+      case Right(replicated) => layout.zipPartitions(replicated) { (rit, qit) =>
+        val qs = qit.buffered
+        if (!qs.hasNext) Iterator.empty
+        else probe(qs.head._1, rit, qs.map(_._2).grouped(2048).map(_.toArray))
+      }
     }
   }
 
   /** The layouts' partitions one after another. `RDD.union` would instead
     * zip them partition by partition when every layout declares the same
     * partitioner, as [[ShardAlignedRDD]]s of equal shard count do. */
-  private def concat(layouts: Seq[org.apache.spark.rdd.RDD[IndexRow]])
-      : org.apache.spark.rdd.RDD[IndexRow] =
+  private def concat(layouts: Seq[RDD[IndexRow]]): RDD[IndexRow] =
     if (layouts.size == 1) layouts.head
     else new org.apache.spark.rdd.UnionRDD(layouts.head.context, layouts)
 
+  /** Route a query relation once ([[routeBatch]]) and probe `members`:
+    * a batch of at most `maxBatch` now ([[probeNow]]), a larger one
+    * without the driver ([[probeDistributed]]). */
+  private[index] def probeRouted(members: Seq[VectorIndex], queries: DataFrame, k: Int,
+      searchWidth: Int, maxBatch: Int, live: Long => Boolean): DataFrame =
+    routeBatch(queries, maxBatch) match {
+      case Some(batch) => probeNow(members, batch, k, searchWidth, maxBatch, live)
+      case None => probeDistributed(members, queries, k, searchWidth, live)
+    }
+
   /** Answer a driver-held query batch NOW: for each chunk, ONE Spark job
     * over the members' shards, whose task results (at most k candidates
-    * per query) are merged into one [[graft.operators.TopKBuffer]] per
-    * query id as each task finishes — the same (distance, id) order as
-    * the SQL merge. Returns a local relation: consuming it runs no job.
+    * per query) are merged into one [[TopKBuffer]] per query id as each
+    * task finishes — the same (distance, id) order as the SQL merge.
+    * Returns a local relation: consuming it runs no job.
     * A chunk holds at most `maxChunk` queries, and few enough that one
     * job's task results (queries × k × partitions × ~24 B) stay within a
     * quarter of `spark.driver.maxResultSize`. */
@@ -883,7 +833,7 @@ object VectorIndex {
     val sc = spark.sparkContext
     val params = members.head.params
     val qids = batch.map(_._1).distinct.sorted
-    val bufs = qids.map(_ => new graft.operators.TopKBuffer(k))
+    val bufs = qids.map(_ => new TopKBuffer(k))
     val resultLimit = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
     val perQuery = 24L * math.max(1, k * members.map(_.numShards).sum)
     val chunkSize = math.max(1L, math.min(maxChunk.toLong,
@@ -891,7 +841,7 @@ object VectorIndex {
     batch.grouped(chunkSize).foreach { raw =>
       val chunk = raw.map { case (id, v) => (id, params.transformQueryVector(v)) }
       val slot = chunk.map(q => java.util.Arrays.binarySearch(qids, q._1))
-      val rdd = shardCandidates(members, sc.broadcast(chunk), k, Array(searchWidth), live)
+      val rdd = shardCandidates(members, Left(sc.broadcast(chunk)), k, Array(searchWidth), live)
       sc.runJob(rdd, (it: Iterator[ShardCandidates]) => it.next(),
         (_: Int, c: ShardCandidates) => c.slots.indices.foreach { j =>
           bufs(slot(c.slots(j))).insert(c.dists(j), c.ids(j))
@@ -920,16 +870,60 @@ object VectorIndex {
     val candidateChunks = batch.grouped(math.max(maxBatch, 1)).map { raw =>
       val bc = spark.sparkContext.broadcast(
         raw.map { case (id, v) => (id, params.transformQueryVector(v)) })
-      val rdd = shardCandidates(members, bc, k, widths, live).flatMap { c =>
-        val qs = bc.value
+      val rdd = shardCandidates(members, Left(bc), k, widths, live).flatMap { c =>
         c.slots.indices.iterator.map { j =>
           val s = c.slots(j)
-          (qs(s / w)._1 * w + s % w, c.dists(j), c.ids(j))
+          (c.group(s / w)._1 * w + s % w, c.dists(j), c.ids(j))
         }
       }
       spark.createDataset(rdd).toDF("query_id", "distance", "neighbor_id")
     }.toSeq
     TopK.topKMerge(candidateChunks.reduce(_ union _), k)
+  }
+
+  /** Answer a query relation without the driver, lazily: ONE shuffle
+    * replicates each query — checked once ([[checkQuery]]) and
+    * transformed — to every partition of the members' concatenated
+    * layouts, [[shardCandidates]] probes each partition's queries in
+    * bounded groups, and one shuffle merges the top-k per query id. No
+    * collect, broadcast or `toLocalIterator` transit, so the batch may be
+    * arbitrarily large: a task holds one shard's graph plus one group's
+    * results. Each query ships to every shard, the same volume a
+    * broadcast ships to every executor. */
+  private[index] def probeDistributed(members: Seq[VectorIndex], queries: DataFrame,
+      k: Int, searchWidth: Int, live: Long => Boolean): DataFrame = {
+    val spark = members.head.rows.sparkSession
+    import spark.implicits._
+    val params = members.head.params
+    val n = members.map(_.numShards).sum
+    val replicated = queries
+      .select(col("query_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])].rdd
+      .flatMap { case (id, v) =>
+        checkQuery(id, v)
+        val q = (id, params.transformQueryVector(v))
+        Iterator.range(0, n).map(s => (s, q))
+      }
+      .partitionBy(new ShardPartitioner(n))
+    val candidates = shardCandidates(members, Right(replicated), k, Array(searchWidth), live)
+      .flatMap(c => c.slots.indices.iterator.map(j =>
+        (c.group(c.slots(j))._1, (c.dists(j), c.ids(j)))))
+    // Reduce-side-only top-k merge: a task emits at most k candidates per
+    // (query, shard), so a map-side partial top-k shrinks nothing, and its
+    // per-query state OOM'd the 10^6-query soak. The reduce side holds one
+    // bounded buffer per query: O(queries per reduce task × k).
+    val mergeParts = math.max(
+      spark.conf.get("spark.sql.shuffle.partitions", n.toString).toInt, n)
+    candidates
+      .combineByKeyWithClassTag[TopKBuffer](
+        v => { val b = new TopKBuffer(k); b.insert(v._1, v._2); b },
+        (b, v) => { b.insert(v._1, v._2); b },
+        (a, b) => { a.merge(b); a },
+        new org.apache.spark.HashPartitioner(mergeParts), mapSideCombine = false)
+      .flatMap { case (qid, buf) =>
+        buf.sortedPairs.iterator.zipWithIndex.map { case ((d, gid), i) => (qid, i + 1, gid, d) }
+      }
+      .toDF("query_id", "rank", "neighbor_id", "distance")
   }
 
   /** Small-file IO through the Hadoop FS API so index metadata lands on
@@ -1116,7 +1110,7 @@ object VectorIndex {
     * is built. */
   private[index] def buildLayout(df: DataFrame, params: IndexParams,
       numShards: Int, check: AppendCheck = null,
-      report: BuiltShards = null): org.apache.spark.rdd.RDD[IndexRow] = {
+      report: BuiltShards = null): RDD[IndexRow] = {
     val p = params
     val built = shardSorted(df, numShards).rdd.mapPartitions(buildGrouped(_, p, check, report))
     if (built.partitions.nonEmpty) built
@@ -1226,7 +1220,7 @@ object VectorIndex {
     * every row sits in its own shard's partition and reads the shard
     * meta; a failed pass drops what it cached. */
   private def inMemory(spark: SparkSession, params: IndexParams, numShards: Int,
-      layout: org.apache.spark.rdd.RDD[IndexRow]): VectorIndex = {
+      layout: RDD[IndexRow]): VectorIndex = {
     import spark.implicits._
     require(layout.partitions.length == numShards,
       s"shard layout has ${layout.partitions.length} partitions for $numShards shards")
@@ -1583,7 +1577,7 @@ object VectorIndex {
     * recompute. */
   private[index] class DriverRowsRDD(sc: org.apache.spark.SparkContext,
       @volatile private var shard: org.apache.spark.broadcast.Broadcast[Array[IndexRow]])
-    extends org.apache.spark.rdd.RDD[IndexRow](sc, Nil) {
+    extends RDD[IndexRow](sc, Nil) {
     val broadcastId: Long = shard.id
     override protected def getPartitions: Array[org.apache.spark.Partition] =
       Array(new ShardZero)
@@ -1609,9 +1603,9 @@ object VectorIndex {
     extends org.apache.spark.Partition
 
   /** Narrow re-indexing so that partition index == shard id — the
-    * property every probe consumer relies on ([[shardCandidates]]'s
-    * partition index as the shard, [[VectorIndex.queryDistributed]]'s
-    * zipPartitions against [[ShardPartitioner]]-partitioned queries):
+    * property the probe core relies on: [[shardCandidates]] reads its
+    * partition index as the shard, or zips it with queries shuffled by
+    * [[ShardPartitioner]]:
     * partition s reads partition `perm(s)` of the parent: the per-shard
     * directory scans of a loaded snapshot ([[readShards]]), or the union
     * of an old layout and its rebuilt shards ([[VectorIndex!.rewrite]],
@@ -1620,8 +1614,8 @@ object VectorIndex {
     * graph from another shard's rows — silent corruption, so it is a
     * hard error). */
   private class ShardAlignedRDD(
-      parent: org.apache.spark.rdd.RDD[IndexRow], perm: Array[Int])
-    extends org.apache.spark.rdd.RDD[IndexRow](parent.context,
+      parent: RDD[IndexRow], perm: Array[Int])
+    extends RDD[IndexRow](parent.context,
       Seq(new org.apache.spark.NarrowDependency(parent) {
         def getParents(p: Int): Seq[Int] = Seq(perm(p))
       })) {
@@ -1656,7 +1650,7 @@ object VectorIndex {
     * beside its graph. The write is the one query planned: the rows are
     * serialized in its tasks, not through a Dataset planned first. */
   private[index] def writeShards(spark: SparkSession,
-      layout: org.apache.spark.rdd.RDD[IndexRow], dir: String): Unit =
+      layout: RDD[IndexRow], dir: String): Unit =
     org.apache.spark.sql.graft.GraftSqlBridge
       .sortedFrame(spark, layout, org.apache.spark.sql.Encoders.product[IndexRow], "sub_index_id")
       .write.mode("overwrite").partitionBy("sub_index_id").parquet(dir)
@@ -1684,7 +1678,7 @@ object VectorIndex {
     * missing: its probe then fails on the row count its meta promises,
     * never serving a partial index. */
   private[index] def readShards(spark: SparkSession, dir: String,
-      meta: Array[ShardMeta], numShards: Int): org.apache.spark.rdd.RDD[IndexRow] = {
+      meta: Array[ShardMeta], numShards: Int): RDD[IndexRow] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val files = mutable.Map.empty[String, Seq[org.apache.hadoop.fs.FileStatus]].withDefaultValue(Nil)
     val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)

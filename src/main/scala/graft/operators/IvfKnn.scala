@@ -154,8 +154,8 @@ object IvfKnn {
     * reuses per-graph scratch (visited stamps), so a shared executor
     * instance would serialize all task threads behind one lock — and a
     * ~10k-node build costs ~a second against a partition's millions of
-    * routed rows. `searchWidth = 0` is the kernel's exhaustive
-    * connected walk — EXACT, row-for-row equal to [[assign]]
+    * routed rows. `searchWidth = 0` is the kernel's exhaustive scan
+    * ([[graft.index.SubIndexGraph.topK]]) — EXACT, row-for-row equal to [[assign]]
     * (RoutedAssignSpec); production widths trade a gated
     * assignment-agreement floor for the O(beam) routing. */
   def routedAssign(corpus: DataFrame, cents: DataFrame, searchWidth: Int,
@@ -171,15 +171,10 @@ object IvfKnn {
         if (!it.hasNext) Iterator.empty
         else {
           val graph = buildCentroidGraph(bc.value, m, rm) // task-private
-          // searchWidth 0 must be EXACT regardless of graph topology:
-          // queryTopK(sw=0) is exhaustive only over the entry point's
-          // connected component, so a future centroid-count/pruning
-          // change could silently break the routed==argmin oracle
-          // mapping — the brute-force scan is exhaustive by construction
+          // searchWidth 0 is the exhaustive scan, EXACT whatever the
+          // graph's topology, so routed == argmin holds by construction
           it.map { case (id, emb) =>
-            val r =
-              if (searchWidth <= 0) graph.bruteForceTopK(emb, 1)
-              else graph.queryTopK(emb, 1, searchWidth)
+            val r = graph.topK(emb, 1, searchWidth)
             (id, emb, if (r.isEmpty) -1L else r.head._2)
           }
         }

@@ -164,7 +164,7 @@ class DehnswSpec extends AnyFunSuite with SparkSuite {
       "append under a schedule must equal the full scheduled rebuild")
   }
 
-  test("chunked query batches (maxBatch) merge to the same global top-k") {
+  test("a batch over maxBatch takes the driverless probe and returns the same top-k") {
     val whole = index.query(queries, k = 5, searchWidth = 0)
     val chunked = index.query(queries, k = 5, searchWidth = 0, maxBatch = 3)
     assert(whole.exceptAll(chunked).count() === 0)

@@ -9,11 +9,14 @@ import graft.index.{IndexParams, LsmVectorIndex, VectorIndex}
 
 /** The eager broadcast probe (`query` on a batch of at most maxBatch
   * queries: one job, top-k merged on the driver) against the lazy one
-  * (`queryBatch`: the same per-shard candidates merged by the SQL top-k).
-  * Both must agree row for row — ranks and distances included — for
-  * every storage and metric, LSM members and tombstones, short results,
-  * ties, empty batches and chunked batches. The routed batch is also the
-  * query-vector boundary: a bad vector is rejected before any job runs. */
+  * (`queryBatch`: the same per-shard candidates merged by the SQL top-k)
+  * and the driverless one (`query` on a batch over maxBatch: the same
+  * core over shuffled queries, merged by a shuffle). All must agree row
+  * for row — ranks and distances included — for every storage and
+  * metric, LSM members and tombstones, short results, ties, empty
+  * batches and chunked batches. The routed batch is also the
+  * query-vector boundary: a bad vector is rejected before any job runs;
+  * the driverless probe rejects it in its tasks, naming the query. */
 class EagerProbeSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val emb = Tables.embeddings(spark, sfDir)
@@ -54,6 +57,7 @@ class EagerProbeSpec extends AnyFunSuite with SparkSuite {
       val eager = idx.query(queryDf(batch), 10, w)
       assert(eager.count() === batch.length * 10L, s"$name w=$w")
       assertSame(eager, idx.queryBatch(batch, 10, w), s"$name w=$w")
+      assertSame(eager, idx.query(queryDf(batch), 10, w, maxBatch = 1), s"$name w=$w driverless")
       if (name == "l2") assertSame(idx.query(queryDf(batch)
         .withColumn("query_id", col("query_id").cast("int")), 10, w), eager, s"int query_id w=$w")
       idx.unpersist()
@@ -72,6 +76,7 @@ class EagerProbeSpec extends AnyFunSuite with SparkSuite {
       assert(got.forall { case (_, _, id, _) =>
         !lsm.tombstones.contains(id) }, s"w=$w returned a deleted id")
       assertSame(eager, lsm.queryBatch(batch, 10, w), s"w=$w")
+      assertSame(eager, lsm.query(queryDf(batch), 10, w, maxBatch = 1), s"w=$w driverless")
     }
     lsm.unpersist(); lsm.base.unpersist()
   }
@@ -85,6 +90,7 @@ class EagerProbeSpec extends AnyFunSuite with SparkSuite {
     for (w <- Seq(0, 16)) {
       val eager = idx.query(queryDf(batch), 20, w)
       assertSame(eager, idx.queryBatch(batch, 20, w), s"w=$w")
+      assertSame(eager, idx.query(queryDf(batch), 20, w, maxBatch = 1), s"w=$w driverless")
       val got = rows(eager)
       if (w == 0) assert(got.size == batch.length * 12, "k > n must return all 12")
       got.groupBy(_._1).values.foreach { rs =>
@@ -116,6 +122,7 @@ class EagerProbeSpec extends AnyFunSuite with SparkSuite {
       assert(jobs == (withDup.length + 2) / 3, s"one job per chunk, w=$w")
       assertSame(chunked, idx.queryBatch(withDup, 10, w, maxBatch = 3), s"w=$w")
       assertSame(chunked, idx.queryBatch(withDup, 10, w), s"unchunked w=$w")
+      assertSame(chunked, idx.query(queryDf(withDup), 10, w, maxBatch = 1), s"driverless w=$w")
     }
     idx.unpersist()
   }
@@ -137,6 +144,45 @@ class EagerProbeSpec extends AnyFunSuite with SparkSuite {
       val (err, jobs) = jobsDuring(intercept[IllegalArgumentException](probe(qdf)))
       assert(err.getMessage.contains("query 7 "), s"$name $what: ${err.getMessage}")
       assert(jobs == 0, s"$name $what: $jobs jobs ran before the rejection")
+    }
+    lsm.unpersist(); idx.unpersist()
+  }
+
+  test("the driverless probe rejects a missing, non-finite or wrong-dimension query vector by id") {
+    val idx = VectorIndex.build(corpus, p, numShards = 2)
+    val lsm = LsmVectorIndex(idx, compactThreshold = 1000000)
+      .ingest(slice(400, 420)).delete(Seq(25L))
+    val v = batch(0)._2
+    val bad = Seq(
+      "no embedding" -> (7L, null: Array[Float]),
+      "NaN" -> (7L, v.updated(3, Float.NaN)),
+      "Infinity" -> (7L, v.updated(0, Float.PositiveInfinity)),
+      "wrong dimension" -> (7L, v.take(v.length - 1)))
+    for ((what, q) <- bad; (name, probe) <- Seq[(String, DataFrame => DataFrame)](
+        "VectorIndex" -> (idx.query(_, 10, 16, maxBatch = 1)),
+        "LsmVectorIndex" -> (lsm.query(_, 10, 16, maxBatch = 1)))) {
+      val qdf = queryDf(batch.filter(_._1 != 7L) :+ q)
+      val err = intercept[Exception](probe(qdf).collect())
+      val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toSeq
+      assert(messages.exists(_.contains("query 7 ")), s"$name $what: ${messages.head}")
+    }
+    lsm.unpersist(); idx.unpersist()
+  }
+
+  test("work counter: a driverless probe is one job of 3 stages and 2 shuffles, LSM or not") {
+    val idx = VectorIndex.build(slice(20, 300), p, numShards = 4)
+    val lsm = LsmVectorIndex(idx, compactThreshold = 1000000)
+      .ingest(slice(300, 340)).ingest(slice(340, 370)).ingest(slice(370, 400))
+    assert(lsm.generations.size == 3)
+    // a local batch: routing it runs no job, so every shuffle counted
+    // belongs to the probe
+    for ((name, probe) <- Seq[(String, () => DataFrame)](
+        "VectorIndex" -> (() => idx.query(queryDf(batch), 10, 16, maxBatch = 2)),
+        "LsmVectorIndex" -> (() => lsm.query(queryDf(batch), 10, 16, maxBatch = 2)))) {
+      val (res, work) = workDuring(probe().collect())
+      assert(res.length == batch.length * 10, name)
+      assert((work.jobs, work.stages, work.shuffles) == ((1, 3, 2)), s"$name: $work")
     }
     lsm.unpersist(); idx.unpersist()
   }

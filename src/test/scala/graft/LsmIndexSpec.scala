@@ -259,7 +259,7 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
     val lsm = LsmVectorIndex(baseIdx, compactThreshold = 1000000)
       .ingest(slice(300, 350)).ingest(slice(350, 400))
     val viaBroadcast = resultSet(lsm.query(queries, 10, searchWidth = 0))
-    // maxBatch=2 forces the per-member queryDistributed path + merge
+    // maxBatch=2 forces the driverless probe over the fused member layout
     val viaShuffle = resultSet(lsm.query(queries, 10, searchWidth = 0, maxBatch = 2))
     assert(viaShuffle == viaBroadcast)
   }
