@@ -121,7 +121,7 @@ object AnnBenchmark {
     val t0 = System.nanoTime()
     val idx = VectorIndex.build(corpus,
       IndexParams(minimumConnect = 4, relaxedMonotonicity = 128, step = 4), numShards = 4)
-    idx.rows.count()
+      .optimize()
     val buildMs = (System.nanoTime() - t0) / 1000000
 
     def meanRecall(res: DataFrame): Double =

@@ -44,7 +44,6 @@ object AppendBench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.graft.probeLayoutStorage", "NONE")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -241,7 +241,6 @@ object ClusteredBench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.graft.probeLayoutStorage", "NONE")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -370,11 +369,10 @@ object ClusteredBench {
     }
 
     // --- phase: serve (cold + warm latency at representative widths) ---
-    // Run in its OWN JVM with `-Dgraft.shardCache.maxEntries=128` (all
-    // shards resident — true warm steady state) — the graph phase's
-    // probe passes churn 128 graphs through a smaller LRU, and that
-    // allocation churn (humongous flat arrays under G1) is what OOM'd a
-    // combined run; measurement phases get fresh heaps.
+    // Run in its OWN JVM: the graph phase's probe passes leave their
+    // graphs resident, and that allocation churn (humongous flat arrays
+    // under G1) is what OOM'd a combined run; measurement phases get
+    // fresh heaps.
     if (phases("serve")) {
       requireCorpusMatch(spark, snapPath, corpusJson)
       val idx = VectorIndex.load(spark, snapPath, cache = false)

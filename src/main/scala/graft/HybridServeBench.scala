@@ -37,7 +37,6 @@ object HybridServeBench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.graft.probeLayoutStorage", "NONE")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -91,7 +90,7 @@ object HybridServeBench {
     // first pass is COLD (per-shard parquet read + graph rebuild run
     // inside the serve job — the "other job probes the published
     // snapshots" shape); later passes are WARM (shard graphs resident
-    // in the executor cache — the steady state)
+    // as the probe layout's cached blocks — the steady state)
     val vidx = VectorIndex.load(spark, s"$dir/vec", cache = false)
     // split (v2) snapshots open as two-phase handles; a pre-split lex
     // snapshot (e.g. one published by an earlier build) loads as the

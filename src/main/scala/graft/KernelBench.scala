@@ -181,9 +181,7 @@ object KernelBench {
           println(s"persisted index parquet at $dir")
           b
         } else {
-          val b = VectorIndex.build(df, params, numShards = numShards)
-          b.rows.count()
-          b
+          VectorIndex.build(df, params, numShards = numShards).optimize()
         }
       println(f"spark build (shards=$numShards%d): ${(System.nanoTime() - s0) / 1e9}%.2f s wall" +
         (if (persist) " (buildTo parquet + loaded handle)" else ""))

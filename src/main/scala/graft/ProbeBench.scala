@@ -9,14 +9,14 @@ import graft.index.VectorIndex
   * serving half of the decade lifecycle, decoupled from the build:
   * [[VectorIndex.buildTo]] published the index as compressed parquet;
   * this main loads that snapshot WITHOUT materializing any second copy
-  * (`load(cache = false)` + `spark.graft.probeLayoutStorage=NONE` —
-  * the shard graphs rehydrate once into the in-JVM ShardGraphCache and
-  * the parquet stays the only on-disk copy) and drives the same soak +
-  * gate protocol as KernelBench's soak mode. On a cluster this is
-  * exactly the "other job probes the published snapshot" deployment
-  * shape; on one node it is the disk-headroom mitigation for the 100M
-  * probe (SCALE.md: the loaded handle's MEMORY_AND_DISK row cache plus
-  * the probe-layout cache re-created the very spill buildTo avoided).
+  * (each shard directory is read once straight into its graph, cached
+  * at memory only — a graph that does not fit is re-read, never
+  * spilled — and the parquet stays the only on-disk copy) and drives the
+  * same soak + gate protocol as KernelBench's soak mode. On a cluster
+  * this is exactly the "other job probes the published snapshot"
+  * deployment shape; on one node it is the disk-headroom mitigation for
+  * the 100M probe (SCALE.md: the row caches a loaded handle once kept
+  * re-created the very spill buildTo avoided).
   *
   * Run: sbt "runMain graft.ProbeBench <indexPath> <dim> [nQueries] [k] [sw] [nTomb]"
   * Query vectors are the SAME deterministic per-id executor-side
@@ -47,7 +47,6 @@ object ProbeBench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.graft.probeLayoutStorage", "NONE")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

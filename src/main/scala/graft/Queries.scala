@@ -674,7 +674,7 @@ object Queries {
   private val bucketedIdxCache = new java.util.concurrent.ConcurrentHashMap[String, VectorIndex]()
   private val corpusBucketed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def corpusTableName(dir: String): String =
+  private[graft] def corpusTableName(dir: String): String =
     "graft_emb_corpus_bkt_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
 
   /** One-time bucketed corpus write (untimed bench prepare, like b1's). */

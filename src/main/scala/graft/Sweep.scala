@@ -37,7 +37,7 @@ object Sweep {
       val idx = VectorIndex.build(corpus,
         IndexParams(minimumConnect = m, relaxedMonotonicity = 4 * m, step = step),
         numShards = 4)
-      idx.rows.count() // materialize the build
+      idx.optimize()
       val buildMs = (System.nanoTime() - t0) / 1000000
       val nQueries = queries.count()
       searchWidths.map { sw =>

@@ -235,7 +235,7 @@ final class AdjList(initialCap: Int) extends Serializable {
 
 /** Min-heap on (dist, id) lexicographic order, primitive arrays — the
   * search frontier (`waiting_vectors`, reference: dehnsw.h:191,251). */
-final class MinHeap(initialCap: Int) {
+final class MinHeap(initialCap: Int) extends Serializable {
   var size: Int = 0
   private var ds = new Array[Double](initialCap)
   private var is = new Array[Int](initialCap)
@@ -295,6 +295,7 @@ object SubIndexGraph {
 
 /** One shard's graph — the engine-side `Sub_Index` (reference:
   * source/dehnsw.h:54-70), built partition-locally inside `mapPartitions`.
+  * `shardId` names the shard it holds (0 for a graph outside an index).
   *
   * Semantics preserved from the reference build kernel (SURVEY §2.1 O2-O5):
   * M-nearest linking, undirected refcounted edges, degree-cap pruning with
@@ -308,7 +309,8 @@ object SubIndexGraph {
   * generation-stamped visited marks) — no per-candidate boxing, matching
   * the reference's mechanical profile (SURVEY §4) on the JVM.
   */
-final class SubIndexGraph(params: IndexParams, capacity: Int) extends Serializable {
+final class SubIndexGraph(params: IndexParams, capacity: Int, val shardId: Int = 0)
+    extends Serializable {
 
   var count: Int = 0
   var layerCount: Int = 0

@@ -59,7 +59,7 @@ object FaceServer {
     * as in [[serve]] (ivfpq ADC-pool staging beside resident graphs). */
   def serveFace(idx: VectorIndex, face: FacePoint, queries: DataFrame,
       k: Int, scratch: String = null): DataFrame = {
-    val spark = idx.rows.sparkSession
+    val spark = idx.probeSession
     def ref(what: String): FaceArtifact = face.ref.getOrElse(
       sys.error(s"FaceServer: face '${face.face}'@${face.param} carries " +
         s"no structured artifact, so the $what it serves from cannot be " +

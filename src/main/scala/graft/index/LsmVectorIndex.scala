@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   *    (object-identity guaranteed, spec-gated). A batch that fits one
   *    generation shard (`genShardSize`) and at most
   *    [[LsmVectorIndex.DriverBuildRows]] rows is collected once and its
-  *    graph built on the DRIVER, the rows handed over as one driver-held
-  *    partition that is also the probe layout; a larger batch is built
-  *    by the distributed build, one generation shard per `genShardSize`
-  *    vectors. Both yield the rows and meta of [[VectorIndex.build]];
+  *    graph built on the DRIVER and broadcast as one driver-held
+  *    partition, the probe layout; a larger batch is built by the
+  *    distributed build, one generation shard per `genShardSize`
+  *    vectors. Both yield the graphs and meta of [[VectorIndex.build]];
   *  - '''query''' probes the base and every generation and merges their
   *    per-shard top-k into one top-k per query, as the multi-shard probe
   *    does (top-k of a union == top-k of the per-member top-k union, so
@@ -38,8 +38,8 @@ import org.apache.spark.sql.functions._
   * cost this structure avoids — so the rewrite's disjointness check
   * catches them at compaction time.
   *
-  * Memory: a driver-built generation's rows stay on the driver until
-  * compaction folds the generation, which releases them, so
+  * Memory: a driver-built generation's graph stays on the driver until
+  * compaction folds the generation, which releases it, so
   * `compactThreshold` (plus one batch) bounds that footprint (SCALE.md).
   *
   * Instances are immutable: ingest/compact return a new handle; superseded
@@ -93,7 +93,7 @@ final class LsmVectorIndex private (
     if (base.params.normalizeForCosine) graft.functions.DistanceMetric.Cosine
     else if (base.params.augmentForMips) graft.functions.DistanceMetric.InnerProduct
     else base.params.metric
-  override def probeSession: org.apache.spark.sql.SparkSession = base.rows.sparkSession
+  override def probeSession: org.apache.spark.sql.SparkSession = base.probeSession
   override def probeDescription: String =
     s"lsm base shards=${base.numShards} + ${generations.size} generations"
 
@@ -111,7 +111,7 @@ final class LsmVectorIndex private (
     *  - a batch of at most `bound` rows is validated and built ON
     *    THE DRIVER ([[VectorIndex.buildOnDriver]]): the same kernel loop
     *    a one-shard build task runs, so no parallelism is lost, and no
-    *    further job — the generation's rows are one driver-held
+    *    further job — the generation's graph is one driver-held
     *    partition that its first probe reads without an exchange;
     *  - a larger batch is cached, validated in one aggregation and built
     *    distributed, `genShardSize` vectors per generation shard, after
@@ -147,7 +147,7 @@ final class LsmVectorIndex private (
   /** A batch over the driver bound: cached, validated in ONE
     * aggregation and built by the distributed build. The cache is
     * dropped on every exit; on success the build's meta pass has
-    * materialized the generation rows first. */
+    * materialized the generation's graphs first. */
   private def buildDistributed(input: DataFrame, dim: Int): VectorIndex = {
     val fresh = input.cache()
     try {
@@ -167,14 +167,14 @@ final class LsmVectorIndex private (
   /** Fold every generation into the base and purge every tombstone in
     * ONE shard-scoped rewrite: a shard gaining a live fresh id or holding
     * a tombstoned id is rebuilt once from its survivors plus its live
-    * fresh ids; the rest keep rows and meta verbatim. The rebuilt shards
-    * are the only rows that move: the new base's cached rows are its
+    * fresh ids; the rest keep graphs and meta verbatim. The rebuilt shards
+    * are the only graphs built: the new base's cached graphs are its
     * probe layout, so its first probe runs no exchange. Exact-mode probe
     * results are unchanged (the result equals a build over the live set)
     * and probes stop paying the liveness filter. The tombstones reach
     * the plan as a one-column relation, not a literal id list, so the
     * driver's per-execution cost does not grow with their count.
-    * Generations this index built are unpersisted, the rows of a
+    * Generations this index built are unpersisted, the graph of a
     * driver-built one released for good; so is a base a previous
     * compaction created, once it is replaced. */
   def compact(): LsmVectorIndex = {
@@ -183,7 +183,7 @@ final class LsmVectorIndex private (
         "the snapshot generations (and owned base) the background rewrite " +
         "is reading — apply the returned swap instead, or let it fail first")
     if (generations.isEmpty && tombstones.isEmpty) return this
-    val spark = base.rows.sparkSession
+    val spark = probeSession
     import spark.implicits._
     val dead = if (tombstones.isEmpty) null else tombstones.toSeq.toDF("id")
     val newBase = base.rewrite(dead, freshVectors(generations),
@@ -195,12 +195,11 @@ final class LsmVectorIndex private (
       ownsBase || replaced, Set.empty, deleteThreshold, asyncPending)
   }
 
-  /** The (id, embedding) rows of `gens` for the rewrite (null if none). */
+  /** The (id, embedding) pairs of `gens` for the rewrite (null if none),
+    * read off their graphs. */
   private def freshVectors(gens: Vector[VectorIndex]): DataFrame =
     if (gens.isEmpty) null
-    else gens
-      .map(_.rows.toDF().select(col("global_id").as("id"), col("embedding")))
-      .reduce(_ union _)
+    else gens.map(_.vectors()).reduce(_ union _)
 
   /** Logical DELETE (tombstoning) — the index-lifecycle face the
     * reference has no answer to: ids stop appearing in any probe result
@@ -358,7 +357,7 @@ final class LsmVectorIndex private (
     if (tombstoneBcRef == null) {
       val sorted = tombstones.toArray
       java.util.Arrays.sort(sorted)
-      tombstoneBcRef = base.rows.sparkSession.sparkContext.broadcast(sorted)
+      tombstoneBcRef = probeSession.sparkContext.broadcast(sorted)
     }
     tombstoneBcRef
   }
@@ -389,7 +388,7 @@ final class LsmVectorIndex private (
   def vectorCount: Long = base.meta.map(_.n_vectors).sum + freshCount
 
   /** Drop caches of every member this handle references, and release the
-    * rows of its driver-built generations: the handle must not be probed
+    * graphs of its driver-built generations: the handle must not be probed
     * afterwards. The base is only dropped when this class created it (a
     * compaction product). */
   def unpersist(): Unit = {
@@ -404,7 +403,7 @@ final class LsmVectorIndex private (
   def save(path: String): Unit = {
     base.save(s"$path/base")
     generations.zipWithIndex.foreach { case (g, i) => g.save(s"$path/gen-$i") }
-    Sidecar.write(base.rows.sparkSession, s"$path/lsm.json",
+    Sidecar.write(probeSession, s"$path/lsm.json",
       Sidecar.LsmFile(generations.length, compactThreshold, genShardSize,
         deleteThreshold, tombstones.toArray.sorted))
   }

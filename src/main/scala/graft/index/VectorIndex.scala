@@ -10,75 +10,45 @@ import org.apache.spark.sql.functions._
 import graft.functions.DistanceMetric
 import graft.operators.{TopK, TopKBuffer}
 
-/** Executor-local cache of rehydrated shard graphs, keyed by (index
-  * identity, shard). Rebuilding the in-memory adjacency from IndexRows is
-  * the dominant fixed cost of a probe; repeated probes (recall sweeps,
-  * interactive batches) hit the cache instead. Bounded LRU; graphs carry
-  * mutable search scratch, so probes synchronize on the instance (two
-  * concurrent jobs may probe the same shard).
-  */
+/** Where an index's shard graphs are resident: the blocks of its probe
+  * layout ([[VectorIndex!.probeLayout]], partition s = shard s's graph),
+  * held by Spark's block manager and bounded by its storage memory. This
+  * driver-side registry maps an index id to that layout, so callers can
+  * see which graphs are resident and retire an index's graphs. Graphs
+  * carry mutable search scratch, so probes synchronize on the instance
+  * (two concurrent jobs may probe the same shard). */
 object ShardGraphCache {
-  // residency bound, overridable for decade-scale probes: resident
-  // graphs + in-flight rehydration buffers must co-fit in the heap, so
-  // a 128-shard 100M probe runs with this at ~the task concurrency
-  // (graphs older than the running tasks only help if the same shard is
-  // probed again before eviction — at soak shape each job touches each
-  // shard exactly once, so a deep cache is pure heap pressure).
-  // Read from the Spark conf first: this object initializes inside
-  // EXECUTOR JVMs, where a driver-side -D flag never arrives, but the
-  // SparkConf does (`--conf spark.graft.shardCache.maxEntries=N`). The
-  // system property remains as the local-mode/script fallback.
-  private val MaxEntries =
-    Option(org.apache.spark.SparkEnv.get)
-      .flatMap(_.conf.getOption("spark.graft.shardCache.maxEntries"))
-      .orElse(sys.props.get("graft.shardCache.maxEntries"))
-      .map(_.toInt).getOrElse(64)
-  private val cache =
-    new java.util.LinkedHashMap[(String, Int), SubIndexGraph](MaxEntries, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int), SubIndexGraph]): Boolean =
-        size() > MaxEntries
-    }
+  private val layouts = new java.util.concurrent.ConcurrentHashMap[
+    String, java.lang.ref.WeakReference[RDD[SubIndexGraph]]]()
 
-  def getOrRehydrate(indexId: String, shardId: Int)(make: => SubIndexGraph): SubIndexGraph = {
-    val key = (indexId, shardId)
-    val hit = cache.synchronized(cache.get(key))
-    if (hit != null) return hit
-    // build OUTSIDE the lock: concurrent tasks rehydrate DISTINCT shards
-    // (shard == partition), so holding the global lock through `make`
-    // would serialize every shard rebuild behind one core. The rare
-    // same-shard race (two concurrent query calls, both missing) builds
-    // twice and keeps the first insert — benign, both are identical.
-    val g = make
-    cache.synchronized {
-      val prior = cache.get(key)
-      if (prior != null) prior else { cache.put(key, g); g }
-    }
+  /** Record `layout` as the graphs of index `indexId`; an index no longer
+    * referenced drops out. */
+  private[index] def register(indexId: String, layout: RDD[SubIndexGraph]): Unit = {
+    layouts.values().removeIf(_.get == null)
+    layouts.put(indexId, new java.lang.ref.WeakReference(layout))
   }
 
-  /** Cache lookup without building — lets the probe skip materializing a
-    * shard's rows entirely when its graph is already resident. */
-  def peek(indexId: String, shardId: Int): SubIndexGraph =
-    cache.synchronized { cache.get((indexId, shardId)) }
+  private def layoutOf(indexId: String): Option[RDD[SubIndexGraph]] =
+    Option(layouts.get(indexId)).flatMap(r => Option(r.get))
 
-  /** Drop every resident graph of one index generation FROM THIS JVM —
-    * the heap half of RETIRING a snapshot (deleting its files frees
-    * storage; this frees the graphs a retired generation still pins).
-    * Scope honesty: the cache is per-JVM, so on a cluster this call
-    * only affects the JVM it runs in; executor-resident graphs of a
-    * retired generation age out via the cache's LRU bound (MaxEntries)
-    * — the eviction there is pressure-driven, not immediate. In local
-    * mode (driver == executor, the retirement spec's setting) this IS
-    * the full eviction, which is what lets the spec force the next
-    * probe to re-read the surviving snapshot's parquet and prove a
-    * delete of the OLD generation never corrupts the NEW one
-    * (hardlinked inodes stay alive). Returns the evicted count. */
-  def evict(indexId: String): Int = cache.synchronized {
-    val it = cache.keySet().iterator()
-    var n = 0
-    while (it.hasNext) if (it.next()._1 == indexId) { it.remove(); n += 1 }
-    n
-  }
+  /** Shard `shardId`'s graph of index `indexId` when this JVM holds it
+    * in memory, else null. */
+  def peek(indexId: String, shardId: Int): SubIndexGraph = layoutOf(indexId).flatMap {
+    case d: VectorIndex.DriverGraphRDD => d.resident
+    case l => org.apache.spark.sql.graft.GraftSqlBridge.residentValue(l.id, shardId)
+      .map(_.asInstanceOf[SubIndexGraph])
+  }.orNull
+
+  /** Drop every resident graph of index `indexId` from the block stores
+    * of the whole cluster: the heap half of RETIRING a snapshot
+    * (deleting its files frees storage; this frees its graphs). The
+    * index stays valid: its next probe re-reads a loaded snapshot's
+    * shards, or rebuilds an in-memory index's from its lineage, and
+    * caches them again. A driver-built generation's graph lives in its
+    * broadcast until [[VectorIndex!.unpersist]]. Returns the number of
+    * shards dropped. */
+  def evict(indexId: String): Int =
+    layoutOf(indexId).fold(0)(l => org.apache.spark.sql.graft.GraftSqlBridge.dropRddBlocks(l.id))
 }
 
 /** One persisted index row: a vector plus its per-layer adjacency
@@ -182,11 +152,20 @@ case class WidthCalibration(searchWidth: Int, targetRecall: Double, k: Int,
 class VectorIndex private (
     val params: IndexParams,
     val numShards: Int,
-    val rows: Dataset[IndexRow],
     val meta: Array[ShardMeta],
-    /** Stable identity for executor-side graph caching (fresh per build,
-      * persisted with the index). */
-    val indexId: String) extends Serializable with AnnProbe {
+    /** The identity of this index's graphs ([[ShardGraphCache]]): fresh
+      * per build and per load. */
+    val indexId: String,
+    @transient private val spark: SparkSession,
+    /** An in-memory index's graphs, persisted and filled by its build
+      * ([[VectorIndex.inMemory]], [[VectorIndex.buildOnDriver]]); None for
+      * a loaded snapshot. */
+    @transient private val built: Option[RDD[SubIndexGraph]],
+    /** A loaded snapshot's `rows/` directory; null for an in-memory index. */
+    @transient private val rowsDir: String,
+    /** Whether `rowsDir` holds one directory per shard, as every writer
+      * lays it out, rather than the flat part files of older versions. */
+    @transient private val byShard: Boolean) extends Serializable with AnnProbe {
 
   override def probeId: String = indexId
   override def probeMetric: graft.functions.DistanceMetric = params.metric
@@ -195,7 +174,7 @@ class VectorIndex private (
     if (params.normalizeForCosine) DistanceMetric.Cosine
     else if (params.augmentForMips) DistanceMetric.InnerProduct
     else params.metric
-  override def probeSession: SparkSession = rows.sparkSession
+  override def probeSession: SparkSession = spark
   override def probeBatch(
       batch: Array[(Long, Array[Float])], k: Int, searchWidth: Int): DataFrame =
     queryBatch(batch, k, searchWidth)
@@ -286,7 +265,6 @@ class VectorIndex private (
       pool: Int, searchWidth: Int, fetch: String = "auto",
       maxBatch: Int = 100000): DataFrame = {
     require(pool >= k, s"refine pool $pool must be >= k=$k")
-    val spark = rows.sparkSession
     // "auto": the measured crossover ([[graft.sources.BaseStore
     // .pointWins]]) — point fetch for small pools, the batch-amortized
     // full-store scan once the pool id set would touch enough vector
@@ -339,7 +317,6 @@ class VectorIndex private (
   def queryBatchMultiWidth(
       batch: Array[(Long, Array[Float])], k: Int, widths: Seq[Int],
       maxBatch: Int = 100000): DataFrame = {
-    val spark = rows.sparkSession
     import spark.implicits._
     val w = widths.length
     require(w >= 1, "need at least one width")
@@ -420,62 +397,75 @@ class VectorIndex private (
       : (Int, Seq[(Int, Double)]) = {
     val (w, curve) = calibrateWidth(sample, k, targetRecall, widths)
     val sampleRecall = curve.find(_._1 == w).map(_._2).getOrElse(1.0)
-    VectorIndex.writeCalibration(rows.sparkSession, path,
+    VectorIndex.writeCalibration(spark, path,
       WidthCalibration(w, targetRecall, k, sampleRecall, curve))
     (w, curve)
   }
 
-  /** Set by [[VectorIndex.load]] for a snapshot laid out one directory
-    * per shard: its `rows/` directory, which [[probeLayout]] reads shard
-    * by shard. None for an in-memory index and for a flat snapshot
-    * written before that layout. */
-  @transient private var shardDirs: Option[String] = None
+  /** The index rows (vectors and adjacency) as an uncached view, for
+    * statistics and benches: a loaded snapshot's parquet, or an
+    * in-memory index's graphs dehydrated on every read. No probe reads
+    * it. */
+  @transient lazy val rows: Dataset[IndexRow] = built match {
+    case Some(graphs) =>
+      import spark.implicits._
+      spark.createDataset(graphs.flatMap(VectorIndex.dehydrate))
+    case None => VectorIndex.readRows(spark, rowsDir)
+  }
 
   /** Set once a loaded index has made its [[probeLayout]]. */
   @transient @volatile private var layoutMade = false
 
-  /** Set for an IN-MEMORY index ([[VectorIndex.build]], [[rewrite]],
-    * [[VectorIndex.buildOnDriver]]): its one copy of the rows, partition
-    * s holding exactly shard s, which [[rows]] reads too —
-    * [[probeLayout]] is that RDD itself. */
-  @transient private var inMemoryLayout: Option[RDD[IndexRow]] = None
-
-  /** The id of the broadcast that holds a driver-built index's rows. */
-  private[graft] def driverRowsBroadcastId: Option[Long] =
-    inMemoryLayout.collect { case d: VectorIndex.DriverRowsRDD => d.broadcastId }
+  /** The id of the broadcast that holds a driver-built index's graph. */
+  private[graft] def driverGraphBroadcastId: Option[Long] =
+    built.collect { case d: VectorIndex.DriverGraphRDD => d.broadcastId }
 
   /** The layout every probe reads ([[VectorIndex.shardCandidates]]):
-    * partition i holds exactly shard i's rows. An in-memory index was
-    * laid out so by its build ([[VectorIndex.build]], [[rewrite]]), and
-    * this is its one cached copy, filled by the build. A LOADED snapshot
-    * lays it out on first probe, not once per query call, and both probe
-    * paths read the same blocks: partition s is a narrow scan of
-    * `rows/sub_index_id=s/` ([[VectorIndex.readShards]]). A flat
-    * snapshot written before that layout, and an index over a bucketed
-    * corpus ([[VectorIndex.buildFromBucketed]]), are laid out by one
-    * exchange of the rows instead (~2.5x the parquet bytes: 51 GB at
-    * 100M). Both are cached at `spark.graft.probeLayoutStorage` (which
-    * governs only these cases). */
-  @transient private[graft] lazy val probeLayout: RDD[IndexRow] = inMemoryLayout.getOrElse {
+    * partition s holds shard s's graph, or nothing for an empty shard.
+    * It is the index's one resident copy, persisted one graph per
+    * partition at a level its source sets. An in-memory index's build
+    * filled it at memory and disk, and a lost block is rebuilt from its
+    * lineage. A LOADED snapshot makes it on first probe, not once per
+    * query call, at memory only: partition s reads `rows/sub_index_id=s/`
+    * ([[VectorIndex.readShards]]) straight into the graph, and a block
+    * that did not fit, or was lost, is read the same way again by the
+    * next probe. A flat snapshot written before that layout is laid out
+    * by one exchange of its rows instead. */
+  @transient private[graft] lazy val probeLayout: RDD[SubIndexGraph] = built.getOrElse {
     layoutMade = true
-    val rdd = shardDirs match {
-      case Some(dir) => VectorIndex.readShards(rows.sparkSession, dir, meta, numShards)
-      case None => rows.rdd.map(r => (r.sub_index_id, r))
-        .partitionBy(new VectorIndex.ShardPartitioner(numShards))
-        .map(_._2)
+    val graphs = snapshotGraphs().persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    ShardGraphCache.register(indexId, graphs)
+    graphs
+  }
+
+  /** A loaded snapshot's graphs, uncached ([[probeLayout]]). */
+  private def snapshotGraphs(): RDD[SubIndexGraph] =
+    VectorIndex.rehydrateShards(
+      if (byShard) VectorIndex.readShards(spark, rowsDir, meta, numShards)
+      else rows.rdd.map(r => (r.sub_index_id, r))
+        .partitionBy(new VectorIndex.ShardPartitioner(numShards)).values,
+      params, meta, numShards)
+
+  /** The index's (id, embedding) pairs, of `shards` only when given, and
+    * the ids alone when `embeddings` is false: the values
+    * [[VectorIndex.dehydrate]] writes, read off an in-memory index's
+    * graphs without their adjacency, or by a column- and
+    * directory-pruned scan of a loaded snapshot. */
+  private[index] def vectors(shards: Seq[Int] = null, embeddings: Boolean = true): DataFrame = {
+    import spark.implicits._
+    built match {
+      case Some(graphs) =>
+        val keep = Option(shards).map(_.toSet)
+        val kept = graphs.filter(g => keep.forall(_(g.shardId)))
+        if (embeddings)
+          kept.flatMap(g => Iterator.range(0, g.count).map(o => (g.globalIds(o), g.vecAt(o))))
+            .toDF("id", "embedding")
+        else kept.flatMap(g => g.globalIds.iterator.take(g.count)).toDF("id")
+      case None =>
+        val all = rows.toDF()
+        (if (shards == null) all else all.filter(col("sub_index_id").isin(shards: _*)))
+          .select(col("global_id").as("id") +: (if (embeddings) Seq(col("embedding")) else Nil): _*)
     }
-    // `spark.graft.probeLayoutStorage` = NONE drops the layout cache for
-    // corpus-scale LOADED indexes: the rehydrated shard graphs live in
-    // ShardGraphCache after the first probe pass anyway, so the cached
-    // row blocks are a second full on-disk/heap copy of an index whose
-    // authoritative copy is already compressed parquet — exactly the
-    // copy that exhausted the local disk pool in the 100M probe
-    // (SCALE.md). Repeat probes still skip the map stage: the same RDD
-    // instance reuses its shuffle files.
-    val lvl = rows.sparkSession.conf
-      .get("spark.graft.probeLayoutStorage", "MEMORY_ONLY")
-    if (lvl.equalsIgnoreCase("NONE")) rdd
-    else rdd.persist(org.apache.spark.storage.StorageLevel.fromString(lvl))
   }
 
   /** [[query]]'s driverless probe ([[VectorIndex.probeDistributed]]),
@@ -521,8 +511,9 @@ class VectorIndex private (
     * transformed at ingest): re-transforming would drift last bits.
     *
     * The result's one cached copy is its probe layout: partition s is
-    * the rebuilt shard s if s is affected, else partition s of this
-    * [[probeLayout]], picked by partition index (narrow, no exchange).
+    * the rebuilt graph of shard s if s is affected, else this
+    * [[probeLayout]]'s graph of shard s, picked by partition index
+    * (narrow, no exchange).
     * The added vectors are validated inside the build
     * ([[VectorIndex.AppendCheck]]), so the rebuild's exchange is the
     * rewrite's only one. */
@@ -536,9 +527,9 @@ class VectorIndex private (
     // so the inputs can be dropped after it
     val next = try {
       val check = if (newVectors == null) null
-        else VectorIndex.AppendCheck(rows.sparkSession, if (meta.nonEmpty) dimension else -1)
+        else VectorIndex.AppendCheck(spark, if (meta.nonEmpty) dimension else -1)
       val rebuilt = VectorIndex.buildLayout(rebuildInput, params, numShards, check)
-      val idx = VectorIndex.inMemory(rows.sparkSession, params, numShards,
+      val idx = VectorIndex.inMemory(spark, params, numShards,
         new VectorIndex.ShardAlignedRDD(VectorIndex.concat(Seq(probeLayout, rebuilt)),
           Array.tabulate(numShards)(s => if (affected(s)) numShards + s else s)))
       if (check != null)
@@ -560,14 +551,14 @@ class VectorIndex private (
     * (null, Nil, null) with nothing cached when no shard is affected.
     * API input is normalized and CACHED (a nondeterministic source
     * re-evaluated between discovery and rebuild would corrupt the
-    * bookkeeping); recovered rows come from cached index rows and are
-    * not cached again. Removed ids enter every plan as DATA — one
-    * relation joined left-semi/left-anti, never a literal In-list — so
+    * bookkeeping); recovered vectors are read off the index
+    * ([[vectors]]) and are not cached again. Removed ids enter every
+    * plan as DATA — one relation joined left-semi/left-anti, never a
+    * literal In-list — so
     * planning cost does not grow with their count (small sets
     * broadcast; large ones shuffle 8-byte keys, never the vectors). */
   private[index] def rewritePrep(removeIds: DataFrame, newVectors: DataFrame,
       normalize: Boolean, cacheInput: Boolean): (DataFrame, Seq[Int], DataFrame) = {
-    val spark = rows.sparkSession
     import spark.implicits._
     val selected = Option(newVectors).map(_.select(col("id").cast("long"), col("embedding")))
     val cachedFresh =
@@ -585,57 +576,53 @@ class VectorIndex private (
     // tombstones for fresh-generation ids that never reached this base)
     val addedIds = added.select(col("id"))
     val touchedIds = removed.fold(addedIds)(r => addedIds.union(
-      rows.toDF().select(col("global_id").as("id")).join(r, Seq("id"), "left_semi")))
+      vectors(embeddings = false).join(r, Seq("id"), "left_semi")))
     // each task sends its own distinct shards: no exchange
     val affected = touchedIds
       .select(VectorIndex.shardOf(col("id"), numShards).as("s"))
       .as[Int].mapPartitions(_.toSet.iterator).collect().toSet
     if (affected.isEmpty) { release(); return (null, Nil, null) }
     val affectedSeq = affected.toSeq
-    val existing = survivors(rows
-      .filter(col("sub_index_id").isin(affectedSeq: _*))
-      .select(col("global_id").as("id"), col("embedding")))
+    val existing = survivors(vectors(affectedSeq))
     val rebuildInput0 = existing.union(added)
     val rebuildInput = if (cacheInput) rebuildInput0.cache() else rebuildInput0
     (cachedFresh, affectedSeq, rebuildInput)
   }
 
-  /** Drop this index's cached data: the one shard-aligned copy of an
-    * in-memory index, or a loaded snapshot's row cache and probe layout.
+  /** Drop this index's graphs, its one cached copy ([[probeLayout]]).
     * Call on a superseded generation after [[append]] — each generation
-    * caches the full row set, so long ingest loops must release old
-    * ones. A driver-built index ([[VectorIndex.buildOnDriver]]) has no
-    * source to recompute from: its rows are released and it must not be
-    * probed again; nor may an index whose layout reads them, such as a
-    * compacted LSM base, once its own copy is dropped. */
-  def unpersist(): Unit = {
+    * caches every shard, so long ingest loops must release old ones. A
+    * driver-built index ([[VectorIndex.buildOnDriver]]) has no source to
+    * recompute from: its graph is released and it must not be probed
+    * again; nor may an index whose layout reads it, such as a compacted
+    * LSM base, once its own copy is dropped. */
+  def unpersist(): Unit =
     // a loaded layout never probed is not made just to be dropped
-    if (inMemoryLayout.nonEmpty || layoutMade) probeLayout.unpersist(false)
-    rows.unpersist()
-  }
+    if (built.nonEmpty || layoutMade) probeLayout.unpersist(false)
 
   /** Materialize the index — the engine-side A5 `optimize` (reference:
     * python_binding/dehnswpy.cpp:18-21, a deep-copy compaction no-op that
-    * exists to settle memory after build): forces the cached rows to
-    * compute so later probes pay no build cost. An in-memory index is
-    * materialized by its build, so this is one read of its cache.
-    * Returns this index, mirroring the reference's returned copy. */
+    * exists to settle memory after build): makes every shard's graph
+    * resident so later probes pay no build or read cost. One job: a
+    * loaded snapshot reads each shard directory once, straight into its
+    * graph; an in-memory index was materialized by its build, so this
+    * reads its cache. Returns this index, mirroring the reference's
+    * returned copy. */
   def optimize(): VectorIndex = {
-    if (inMemoryLayout.isEmpty) rows.count()
     probeLayout.count()
     this
   }
 
   /** Persist the index (reference save/load round trip, one shard at a
     * time: dehnsw.h:666-844, exercised at dehnsw_example.cpp:208-228):
-    * [[probeLayout]] is written one directory per shard,
+    * the [[probeLayout]] graphs are written one directory per shard,
     * `rows/sub_index_id=s/` ([[VectorIndex.writeShards]]), beside the
     * meta and params sidecars, `meta.json` last
     * ([[VectorIndex.publish]]). Saving a loaded flat snapshot is its
     * migration to that layout. */
   def save(path: String): Unit =
-    VectorIndex.publish(rows.sparkSession, path, params, numShards, indexId) {
-      VectorIndex.writeShards(rows.sparkSession, probeLayout, s"$path/rows")
+    VectorIndex.publish(spark, path, params, numShards, indexId) {
+      VectorIndex.writeShards(spark, probeLayout, s"$path/rows")
       (meta, knownDim)
     }
 }
@@ -659,31 +646,6 @@ object VectorIndex {
       if (w != 0 && gt.get((q, r)).exists(d <= _)) hits(w) += 1
     }
     (hits.toMap.withDefaultValue(0), gt.size)
-  }
-
-  /** Resolve the resident graph for a shard, rehydrating STREAMING from
-    * the row iterator on a cache miss (one row live at a time — never a
-    * materialized row buffer beside the graph; the buffered form OOM'd
-    * the 128-shard 100M probe). Returns null for a shard that holds no
-    * vectors. When the graph is already resident the iterator is left
-    * unconsumed — skipping costs nothing. */
-  private[index] def shardGraphFor(
-      rit: Iterator[IndexRow], iid: String, shardId: Int, params: IndexParams,
-      metaMap: Map[Int, ShardMeta]): SubIndexGraph = {
-    val cached = ShardGraphCache.peek(iid, shardId)
-    if (cached != null) return cached
-    metaMap.get(shardId) match {
-      case None =>
-        require(rit.isEmpty, s"shard $shardId has rows but no meta entry")
-        null
-      case Some(m) =>
-        if (rit.isEmpty) {
-          require(m.n_vectors == 0,
-            s"shard $shardId: empty partition, meta says ${m.n_vectors} rows")
-          null
-        } else ShardGraphCache.getOrRehydrate(iid, shardId)(
-          rehydrateStreaming(params, m, m.n_vectors.toInt, rit))
-    }
   }
 
   /** A local (query_id, rank, neighbor_id, distance) relation. */
@@ -750,27 +712,25 @@ object VectorIndex {
 
   /** The per-shard candidate core of every probe. The probe layouts of
     * `members` are concatenated (a single index is its own layout), and
-    * each task maps its partition back to (member, shard), rehydrates or
-    * cache-hits that shard's graph and probes each query group at every
-    * width, `live` dropping deleted ids inside the kernel: one
-    * [[ShardCandidates]] per group. The queries are either a broadcast
-    * chunk, one group for every partition (`Left`), or keyed by the
-    * partition they were shuffled to (`Right`), in groups of 2048; a
-    * partition without queries then reads no rows. The graph carries
-    * reusable search scratch, so a group's probes run inside its lock. A
-    * query of another dimension than the shard's is rejected by id. */
+    * each task maps its partition back to (member, shard), takes that
+    * shard's graph (resident, or read or rebuilt into its block) and
+    * probes each query group at every width, `live` dropping deleted ids
+    * inside the kernel: one [[ShardCandidates]] per group. The queries
+    * are either a broadcast chunk, one group for every partition
+    * (`Left`), or keyed by the partition they were shuffled to
+    * (`Right`), in groups of 2048; a partition without queries then
+    * probes nothing. The graph carries reusable search scratch, so a
+    * group's probes run inside its lock. A query of another dimension
+    * than the shard's is rejected by id. */
   private[index] def shardCandidates(members: Seq[VectorIndex],
       queries: Either[Broadcast[Array[(Long, Array[Float])]], RDD[(Int, (Long, Array[Float]))]],
       k: Int, widths: Array[Int], live: Long => Boolean): RDD[ShardCandidates] = {
     val offsets = members.map(_.numShards).scanLeft(0)(_ + _).toArray
-    val info = members.map(m =>
-      (m.indexId, m.params, m.meta.map(x => x.sub_index_id -> x).toMap)).toArray
-    def probe(pid: Int, rit: Iterator[IndexRow], groups: Iterator[Array[(Long, Array[Float])]]) = {
+    val aug = members.map(m => if (m.params.augmentForMips) 1 else 0).toArray
+    def probe(pid: Int, git: Iterator[SubIndexGraph], groups: Iterator[Array[(Long, Array[Float])]]) = {
       var m = 0
       while (offsets(m + 1) <= pid) m += 1
-      val (iid, params, metaMap) = info(m)
-      val g = shardGraphFor(rit, iid, pid - offsets(m), params, metaMap)
-      val aug = if (params.augmentForMips) 1 else 0
+      val g = if (git.hasNext) git.next() else null
       groups.map { group =>
         val slots = new mutable.ArrayBuilder.ofInt
         val dists = new mutable.ArrayBuilder.ofDouble
@@ -778,7 +738,7 @@ object VectorIndex {
         if (g != null) g.synchronized {
           for (((id, q), i) <- group.iterator.zipWithIndex) {
             require(q.length == g.dim,
-              s"query $id has ${q.length - aug} components, the index takes ${g.dim - aug}")
+              s"query $id has ${q.length - aug(m)} components, the index takes ${g.dim - aug(m)}")
             for ((w, wi) <- widths.iterator.zipWithIndex; (d, gid) <- g.topK(q, k, w, live)) {
               slots += i * widths.length + wi; dists += d; ids += gid
             }
@@ -792,11 +752,11 @@ object VectorIndex {
       // the partition index of the layout union itself — not the task's
       // partition id, which counts from the start of any union of chunks
       case Left(chunk) =>
-        layout.mapPartitionsWithIndex((pid, rit) => probe(pid, rit, Iterator.single(chunk.value)))
-      case Right(replicated) => layout.zipPartitions(replicated) { (rit, qit) =>
+        layout.mapPartitionsWithIndex((pid, git) => probe(pid, git, Iterator.single(chunk.value)))
+      case Right(replicated) => layout.zipPartitions(replicated) { (git, qit) =>
         val qs = qit.buffered
         if (!qs.hasNext) Iterator.empty
-        else probe(qs.head._1, rit, qs.map(_._2).grouped(2048).map(_.toArray))
+        else probe(qs.head._1, git, qs.map(_._2).grouped(2048).map(_.toArray))
       }
     }
   }
@@ -804,7 +764,7 @@ object VectorIndex {
   /** The layouts' partitions one after another. `RDD.union` would instead
     * zip them partition by partition when every layout declares the same
     * partitioner, as [[ShardAlignedRDD]]s of equal shard count do. */
-  private def concat(layouts: Seq[RDD[IndexRow]]): RDD[IndexRow] =
+  private def concat(layouts: Seq[RDD[SubIndexGraph]]): RDD[SubIndexGraph] =
     if (layouts.size == 1) layouts.head
     else new org.apache.spark.rdd.UnionRDD(layouts.head.context, layouts)
 
@@ -829,7 +789,7 @@ object VectorIndex {
   private[graft] def probeNow(
       members: Seq[VectorIndex], batch: Array[(Long, Array[Float])], k: Int,
       searchWidth: Int, maxChunk: Int, live: Long => Boolean): DataFrame = {
-    val spark = members.head.rows.sparkSession
+    val spark = members.head.spark
     val sc = spark.sparkContext
     val params = members.head.params
     val qids = batch.map(_._1).distinct.sorted
@@ -856,15 +816,18 @@ object VectorIndex {
 
   /** The LAZY form of [[probeNow]]: the same candidate core, merged by
     * the SQL top-k ([[TopK.topKMerge]]), and no job runs until the result
-    * is consumed. Candidates carry the synthetic id query_id × |widths| +
-    * width position, so the merge is per (query, width). Batches over
-    * `maxBatch` are broadcast in chunks. */
+    * is consumed. The batch is validated first ([[validateQueries]]), so a
+    * bad query vector is rejected by id before any job. Candidates carry
+    * the synthetic id query_id × |widths| + width position, so the merge
+    * is per (query, width). Batches over `maxBatch` are broadcast in
+    * chunks. */
   private[index] def probeLazy(
       members: Seq[VectorIndex], batch: Array[(Long, Array[Float])], k: Int,
       widths: Array[Int], maxBatch: Int, live: Long => Boolean): DataFrame = {
-    val spark = members.head.rows.sparkSession
+    val spark = members.head.spark
     import spark.implicits._
     if (batch.isEmpty) return resultFrame(spark, Nil)
+    validateQueries(batch)
     val params = members.head.params
     val w = widths.length
     val candidateChunks = batch.grouped(math.max(maxBatch, 1)).map { raw =>
@@ -892,7 +855,7 @@ object VectorIndex {
     * broadcast ships to every executor. */
   private[index] def probeDistributed(members: Seq[VectorIndex], queries: DataFrame,
       k: Int, searchWidth: Int, live: Long => Boolean): DataFrame = {
-    val spark = members.head.rows.sparkSession
+    val spark = members.head.spark
     import spark.implicits._
     val params = members.head.params
     val n = members.map(_.numShards).sum
@@ -1103,18 +1066,18 @@ object VectorIndex {
   /** The shard build of every distributed writer (in-memory builds,
     * rewrites, [[buildTo]], [[appendTo]]): (id, embedding) rows → shard
     * assignment (id % numShards) → one graph build per shard, in its own
-    * partition → an RDD whose partition s holds exactly shard s, the
-    * layout the probes read and [[writeShards]] writes. An empty input,
+    * partition → an RDD whose partition s holds exactly shard s's graph,
+    * the layout the probes read and [[writeShards]] writes. An empty input,
     * which Spark plans as a relation of no partitions, gives `numShards`
     * empty ones. `check` and `report`, when given, see every shard as it
     * is built. */
   private[index] def buildLayout(df: DataFrame, params: IndexParams,
       numShards: Int, check: AppendCheck = null,
-      report: BuiltShards = null): RDD[IndexRow] = {
+      report: BuiltShards = null): RDD[SubIndexGraph] = {
     val p = params
     val built = shardSorted(df, numShards).rdd.mapPartitions(buildGrouped(_, p, check, report))
     if (built.partitions.nonEmpty) built
-    else df.sparkSession.sparkContext.parallelize(Seq.empty[IndexRow], numShards)
+    else df.sparkSession.sparkContext.parallelize(Seq.empty[SubIndexGraph], numShards)
   }
 
   /** One partition of shard builds ([[buildShard]] per run of equal
@@ -1125,7 +1088,7 @@ object VectorIndex {
     * would silently share a shard id) — fail the task instead. */
   private def buildGrouped(it: Iterator[(Long, Array[Float], Int)],
       p: IndexParams, check: AppendCheck = null,
-      report: BuiltShards = null): Iterator[IndexRow] = {
+      report: BuiltShards = null): Iterator[SubIndexGraph] = {
     // consecutive rows share sub_index_id after the sort. Dimension is
     // fixed at index creation (SURVEY §1.1): the partition's first row
     // sets it for every shard the partition builds.
@@ -1146,9 +1109,9 @@ object VectorIndex {
       }
       if (check != null && check.rejects(vecs)) Iterator.empty
       else {
-        val (meta, rows) = buildShard(shardId, vecs, p, dim)
-        if (report != null) report.shards.add((meta, dim))
-        rows
+        val g = buildShard(shardId, vecs, p, dim)
+        if (report != null) report.shards.add((metaOf(g), dim))
+        Iterator.single(g)
       }
     }
   }
@@ -1213,59 +1176,59 @@ object VectorIndex {
   }
 
   /** An in-memory index over `layout`, whose partition s must hold
-    * exactly shard s: the layout is its one cached copy (memory and
-    * disk: it may read rows that are released once it is filled, see
-    * [[DriverRowsRDD]]), backing both [[VectorIndex!.rows]] and
-    * [[VectorIndex!.probeLayout]]. ONE pass fills the cache, checks that
-    * every row sits in its own shard's partition and reads the shard
-    * meta; a failed pass drops what it cached. */
+    * shard s's graph or nothing: the layout is its one cached copy,
+    * persisted at memory and disk (its lineage is a rebuild, and it may
+    * read graphs that are released once it is filled, see
+    * [[DriverGraphRDD]]). ONE pass fills the cache, checks that each
+    * partition holds at most the graph of its own shard and reads the
+    * shard meta off the graphs; a failed pass drops what it cached. */
   private def inMemory(spark: SparkSession, params: IndexParams, numShards: Int,
-      layout: RDD[IndexRow]): VectorIndex = {
-    import spark.implicits._
+      layout: RDD[SubIndexGraph]): VectorIndex = {
     require(layout.partitions.length == numShards,
       s"shard layout has ${layout.partitions.length} partitions for $numShards shards")
     layout.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val shards = try layout.mapPartitionsWithIndex((s, it) => Iterator(shardMetaOf(s, it))).collect()
       catch { case t: Throwable => layout.unpersist(false); throw t }
-    val idx = new VectorIndex(params, numShards, spark.createDataset(layout),
-      shards.flatMap(_._1), java.util.UUID.randomUUID().toString)
-    idx.inMemoryLayout = Some(layout)
-    idx.knownDim = shards.map(_._2).max
+    fromGraphs(spark, params, numShards, layout, shards.flatten)
+  }
+
+  /** An index over the graphs `layout` holds, whose meta and dimensions
+    * are `shards`. */
+  private def fromGraphs(spark: SparkSession, params: IndexParams, numShards: Int,
+      layout: RDD[SubIndexGraph], shards: Array[(ShardMeta, Int)]): VectorIndex = {
+    val idx = new VectorIndex(params, numShards, shards.map(_._1),
+      java.util.UUID.randomUUID().toString, spark, Some(layout), null, false)
+    idx.knownDim = shards.map(_._2).maxOption.getOrElse(-1)
+    ShardGraphCache.register(idx.indexId, layout)
     idx
   }
 
-  /** Shard `shard`'s meta and dimension (-1 if empty) from its rows, every
-    * one of which must belong to it. The entry is the lowest offset on
-    * the top layer, as the kernel records it at promotion
-    * (dehnsw.h:495-499); a shard built in two partitions repeats offsets,
-    * so its largest offset falls short of n - 1. */
-  private def shardMetaOf(shard: Int, rows: Iterator[IndexRow]): (Option[ShardMeta], Int) = {
-    var (n, layers, entry, maxOffset, dim) = (0L, -1, -1, -1, -1)
-    rows.foreach { r =>
-      require(r.sub_index_id == shard, s"a row of shard ${r.sub_index_id} sits in the " +
-        s"partition of shard $shard: the layout is not shard-aligned")
-      n += 1
-      dim = r.embedding.length
-      if (r.layer > layers || r.layer == layers && r.offset < entry) {
-        layers = r.layer; entry = r.offset
-      }
-      maxOffset = math.max(maxOffset, r.offset)
+  /** Shard `shard`'s meta and dimension, read off the graph in its
+    * partition, if any: at most one, and of that shard. */
+  private def shardMetaOf(shard: Int, graphs: Iterator[SubIndexGraph]): Option[(ShardMeta, Int)] = {
+    val gs = graphs.toArray
+    require(gs.length <= 1, s"shard $shard was built ${gs.length} times (corpus mis-partitioned?)")
+    gs.headOption.map { g =>
+      require(g.shardId == shard, s"the graph of shard ${g.shardId} sits in the partition " +
+        s"of shard $shard: the layout is not shard-aligned")
+      (metaOf(g), g.dim)
     }
-    require(maxOffset == n - 1, s"shard $shard has $n rows but max offset $maxOffset — " +
-      "shard built in multiple partitions (corpus mis-partitioned?)")
-    (if (n == 0) None else Some(ShardMeta(shard, n, layers, entry)), dim)
   }
+
+  /** A graph's shard meta. The entry is the lowest offset on the top
+    * layer, as the kernel records it at promotion (dehnsw.h:495-499). */
+  private[index] def metaOf(g: SubIndexGraph): ShardMeta =
+    ShardMeta(g.shardId, g.count, g.layerCount, g.entryOffset)
 
   /** Build ONE shard's graph: the kernel loop of both build paths, the
     * distributed per-partition build ([[buildGrouped]]) and the
     * driver build of a small LSM generation ([[buildOnDriver]]). `vecs`
     * must be id-ascending, the order the kernel is deterministic in, of
     * dimension `dim` and finite: a NaN vector would enter every top-k of
-    * its shard and never be evicted. Returns the shard's meta, read off
-    * the graph, and its dehydrated rows. */
+    * its shard and never be evicted. */
   private[index] def buildShard(shardId: Int,
       vecs: collection.IndexedSeq[(Long, Array[Float])], params: IndexParams,
-      dim: Int): (ShardMeta, Iterator[IndexRow]) = {
+      dim: Int): SubIndexGraph = {
     var prevId = Long.MinValue
     vecs.foreach { case (id, v) =>
       require(id > prevId, s"ids not ascending within shard $shardId: $id after $prevId " +
@@ -1277,31 +1240,25 @@ object VectorIndex {
       require(c == dim, s"non-finite embedding at id=$id: component $c is ${v(c)}")
       prevId = id
     }
-    val g = new SubIndexGraph(params, vecs.length)
+    val g = new SubIndexGraph(params, vecs.length, shardId)
     vecs.foreach { case (id, v) => g.insert(id, v) }
-    (ShardMeta(shardId, g.count, g.layerCount, g.entryOffset), dehydrate(shardId, g))
+    g
   }
 
   /** Build a ONE-shard index on the driver from id-ascending vectors
     * that are already transformed ([[IndexParams.transformCorpusVector]]):
     * the small-LSM-generation path. The graph is built here by
-    * [[buildShard]], the meta is read off it, and the dehydrated rows
-    * become a [[DriverRowsRDD]] of exactly one partition, which backs
-    * [[rows]] and is the probe layout too. Building runs no job, and the
-    * first probe runs no exchange. The rows stay on the driver until
-    * [[unpersist]] releases them, which compaction does for every
-    * generation it folds. */
+    * [[buildShard]], the meta is read off it, and the graph is broadcast
+    * as a [[DriverGraphRDD]] of exactly one partition, the probe layout.
+    * Building runs no job, and the first probe runs no exchange. The
+    * graph stays on the driver until [[unpersist]] releases it, which
+    * compaction does for every generation it folds. */
   private[index] def buildOnDriver(spark: SparkSession,
       vecs: IndexedSeq[(Long, Array[Float])], params: IndexParams): VectorIndex = {
-    import spark.implicits._
-    val dim = vecs.head._2.length
-    val (meta, built) = buildShard(0, vecs, params, dim)
-    val layout = new DriverRowsRDD(spark.sparkContext, spark.sparkContext.broadcast(built.toArray))
-    val idx = new VectorIndex(params, 1, spark.createDataset(layout), Array(meta),
-      java.util.UUID.randomUUID().toString)
-    idx.inMemoryLayout = Some(layout)
-    idx.knownDim = dim
-    idx
+    val g = buildShard(0, vecs, params, vecs.head._2.length)
+    fromGraphs(spark, params, 1,
+      new DriverGraphRDD(spark.sparkContext, spark.sparkContext.broadcast(g)),
+      Array((metaOf(g), g.dim)))
   }
 
   /** Derive the SQ8 quantization range from the corpus itself: the global
@@ -1390,10 +1347,10 @@ object VectorIndex {
   /** Bulk build (reference O1 insert loop, parallelized across shards:
     * one task per shard). Input df must have columns (id LONG, embedding
     * ARRAY<FLOAT>). The corpus moves through ONE exchange, which puts
-    * shard s in partition s; the built rows stay there, cached once at
-    * memory and disk, and that copy is both [[VectorIndex!.rows]] and the
-    * probe layout, so no probe moves them again. Builds eagerly: the pass
-    * that fills the cache reads the shard meta. */
+    * shard s in partition s; the built graphs stay there, cached once at
+    * memory and disk as the probe layout, so no probe moves or rebuilds
+    * them. Builds eagerly: the pass that fills the cache reads the shard
+    * meta off the graphs. */
   def build(df: DataFrame, params: IndexParams, numShards: Int): VectorIndex =
     inMemory(df.sparkSession, params, numShards,
       buildLayout(normalizeInput(df, params), params, numShards))
@@ -1404,13 +1361,15 @@ object VectorIndex {
     * cache, no serialized eviction spill; exactly one on-disk copy.
     * The build tasks report each shard's meta ([[BuiltShards]]), so
     * nothing is read back: two jobs, the exchange and the write. The
-    * sidecars follow, `meta.json` last ([[publish]]).
-    * Returns the LOADED index over that parquet (lazy cache, rehydrated
-    * per probe), whose first probe reads each shard's directory in place.
+    * sidecars follow, `meta.json` last ([[publish]]). No write task puts
+    * a block into the block store.
+    * Returns the LOADED index over that parquet, whose first probe (or
+    * [[VectorIndex!.optimize]]) reads each shard's directory once,
+    * straight into its resident graph.
     *
     * This is the decade-scale disk mitigation measured in SCALE.md: at
     * 100M x 64d the MEMORY_AND_DISK cache spill of a cached build
-    * (Kryo-serialized rows evicted wholesale) is several times the
+    * (serialized rows evicted wholesale) was several times the
     * compressed parquet footprint and can exhaust a single node's local
     * disk before the first probe runs. On a cluster the same call is
     * simply "build and publish the index snapshot" — the handle every
@@ -1424,12 +1383,7 @@ object VectorIndex {
         report = report), s"$path/rows")
       report.result()
     }
-    // one knob for "too big for a second copy": when the probe layout
-    // cache is off, the row Dataset cache (MEMORY_AND_DISK — another
-    // full copy) must be off too, or the mitigation is undone
-    load(spark, path, cache = !spark.conf
-      .get("spark.graft.probeLayoutStorage", "MEMORY_ONLY")
-      .equalsIgnoreCase("NONE"))
+    load(spark, path)
   }
 
   /** Shard-scoped append PUBLISHING a new snapshot — the incremental-
@@ -1442,14 +1396,14 @@ object VectorIndex {
     *  - COMPUTE: only affected shards re-insert ([[buildLayout]] over
     *    the affected slice ∪ fresh); every other shard's graph is reused
     *    verbatim, meta included.
-    *  - I/O: the rebuilt shards are written by [[writeShards]], and each
+    *  - I/O: the rebuilt graphs are written by [[writeShards]], and each
     *    untouched shard's `rows/sub_index_id=s/` directory is HARDLINKED
     *    into the new snapshot whole — zero bytes moved; on a store
     *    without links (or cross-device) it falls back to a byte copy,
     *    which on object stores is the server-side-copy fast path. A flat
     *    snapshot written before the shard directories has nothing to
-    *    link: its kept shards go through the same writer, from its probe
-    *    layout, so the new snapshot is laid out by shard either way.
+    *    link: its kept shards go through the same writer, from its graphs
+    *    (uncached), so the new snapshot is laid out by shard either way.
     *
     * One build-and-write pass that reads nothing back: three jobs, the
     * affected-shard discovery, the exchange and the write. The added
@@ -1464,7 +1418,7 @@ object VectorIndex {
     *
     * The old snapshot is left untouched (still servable — snapshots are
     * immutable generations; retire it when traffic drains). Returns the
-    * loaded handle over `newPath`, same cache knob as [[buildTo]].
+    * loaded handle over `newPath`, as [[buildTo]] does.
     *
     * Reference contract: the ref's `add` path (dehnsw.h:558-608) grows
     * one in-memory index; at 100 TB the index is a published artifact,
@@ -1474,7 +1428,7 @@ object VectorIndex {
       newVectors: DataFrame, newPath: String): VectorIndex = {
     val hconf = spark.sessionState.newHadoopConf()
     requireDistinctPaths(hconf, oldPath, newPath, "appendTo")
-    val old = load(spark, oldPath, cache = false)
+    val old = load(spark, oldPath)
     val params = old.params
     val numShards = old.numShards
     // shared discover/recover half ([[rewritePrep]]); the existing-rows
@@ -1496,28 +1450,23 @@ object VectorIndex {
       try {
         val rebuilt = buildLayout(rebuildInput, params, numShards, check, report)
         writeShards(spark,
-          if (old.shardDirs.nonEmpty) rebuilt
-          else new ShardAlignedRDD(concat(Seq(old.probeLayout, rebuilt)),
+          if (old.byShard) rebuilt
+          else new ShardAlignedRDD(concat(Seq(old.snapshotGraphs(), rebuilt)),
             Array.tabulate(numShards)(s => if (affected(s)) numShards + s else s)),
           newRows)
-      } finally {
-        fresh.unpersist()
-        old.unpersist()
-      }
+      } finally fresh.unpersist()
       check.verify()
       val (rebuiltMeta, builtDim) = report.result()
       require(rebuiltMeta.map(_.sub_index_id).toSet == affected,
         s"shards ${affectedSeq.sorted.mkString(", ")} were rebuilt, but their build " +
           s"reported ${rebuiltMeta.map(_.sub_index_id).mkString(", ")}")
       // kept shard directories: hardlinked whole
-      for (dir <- old.shardDirs; s <- old.meta.map(_.sub_index_id) if !affected(s))
-        linkOrCopyTree(hconf, s"$dir/sub_index_id=$s", s"$newRows/sub_index_id=$s")
+      if (old.byShard) for (s <- old.meta.map(_.sub_index_id) if !affected(s))
+        linkOrCopyTree(hconf, s"${old.rowsDir}/sub_index_id=$s", s"$newRows/sub_index_id=$s")
       ((old.meta.filterNot(m => affected(m.sub_index_id)) ++ rebuiltMeta).sortBy(_.sub_index_id),
         if (dim > 0) dim else builtDim)
     }
-    load(spark, newPath, cache = !spark.conf
-      .get("spark.graft.probeLayoutStorage", "MEMORY_ONLY")
-      .equalsIgnoreCase("NONE"))
+    load(spark, newPath)
   }
 
   /** Publish the snapshot at `path` with `meta.json` as its commit
@@ -1563,30 +1512,31 @@ object VectorIndex {
     Sidecar.writeLines(spark, s"$path/meta.json", meta.toSeq)
   }
 
-  /** One shard's driver-held rows as a one-partition RDD read from a
+  /** One shard's driver-built graph as a one-partition RDD read from a
     * broadcast. A task carries the broadcast handle and an executor
-    * fetches the rows once; a parallelized collection would instead ship
-    * them, Java-serialized, with every task of every probe (about 9 ms
-    * per 250 64-d rows), and could never free them while a plan refers
-    * to it.
+    * fetches the graph once; a parallelized collection would instead ship
+    * it with every task of every probe, and could never free it while a
+    * plan refers to it.
     *
-    * The rows have no other source, so [[unpersist]] releases them for
+    * The graph has no other source, so [[unpersist]] releases it for
     * good: the broadcast is destroyed and dropped, and what is left is
     * an empty shell. A compacted base keeps that shell in its lineage,
-    * which its cached rows (memory and disk, see `rewrite`) never
+    * which its cached graphs (memory and disk, see `rewrite`) never
     * recompute. */
-  private[index] class DriverRowsRDD(sc: org.apache.spark.SparkContext,
-      @volatile private var shard: org.apache.spark.broadcast.Broadcast[Array[IndexRow]])
-    extends RDD[IndexRow](sc, Nil) {
+  private[index] class DriverGraphRDD(sc: org.apache.spark.SparkContext,
+      @volatile private var shard: org.apache.spark.broadcast.Broadcast[SubIndexGraph])
+    extends RDD[SubIndexGraph](sc, Nil) {
     val broadcastId: Long = shard.id
+    /** The graph, until it is released. */
+    def resident: Option[SubIndexGraph] = Option(shard).map(_.value)
     override protected def getPartitions: Array[org.apache.spark.Partition] =
       Array(new ShardZero)
     override def compute(split: org.apache.spark.Partition,
-        ctx: org.apache.spark.TaskContext): Iterator[IndexRow] = {
-      val rows = shard
-      if (rows == null) throw new IllegalStateException(
-        s"the driver-built rows of RDD $id were released (their generation was compacted or unpersisted)")
-      rows.value.iterator
+        ctx: org.apache.spark.TaskContext): Iterator[SubIndexGraph] = {
+      val g = shard
+      if (g == null) throw new IllegalStateException(
+        s"the driver-built graph of RDD $id was released (its generation was compacted or unpersisted)")
+      Iterator.single(g.value)
     }
     override def unpersist(blocking: Boolean = false): this.type = synchronized {
       if (shard != null) { shard.destroy(); shard = null }
@@ -1606,16 +1556,15 @@ object VectorIndex {
     * property the probe core relies on: [[shardCandidates]] reads its
     * partition index as the shard, or zips it with queries shuffled by
     * [[ShardPartitioner]]:
-    * partition s reads partition `perm(s)` of the parent: the per-shard
-    * directory scans of a loaded snapshot ([[readShards]]), or the union
-    * of an old layout and its rebuilt shards ([[VectorIndex!.rewrite]],
-    * [[appendTo]] onto a flat snapshot). Purity is enforced
-    * per ROW (a mis-packed parent partition would otherwise hydrate a
-    * graph from another shard's rows — silent corruption, so it is a
-    * hard error). */
+    * partition s reads partition `perm(s)` of the parent: a loaded
+    * snapshot's graphs ([[rehydrateShards]]), or the union of an old
+    * layout and its rebuilt shards ([[VectorIndex!.rewrite]],
+    * [[appendTo]] onto a flat snapshot). Purity is enforced per graph (a
+    * mis-packed parent partition would otherwise serve another shard's
+    * graph — silent corruption, so it is a hard error). */
   private class ShardAlignedRDD(
-      parent: RDD[IndexRow], perm: Array[Int])
-    extends RDD[IndexRow](parent.context,
+      parent: RDD[SubIndexGraph], perm: Array[Int])
+    extends RDD[SubIndexGraph](parent.context,
       Seq(new org.apache.spark.NarrowDependency(parent) {
         def getParents(p: Int): Seq[Int] = Seq(perm(p))
       })) {
@@ -1623,36 +1572,39 @@ object VectorIndex {
       Some(new ShardPartitioner(perm.length))
     override protected def getPartitions: Array[org.apache.spark.Partition] =
       Array.tabulate[org.apache.spark.Partition](perm.length)(s =>
-        new ShardAlignedPartition(s, firstParent[IndexRow].partitions(perm(s))))
+        new ShardAlignedPartition(s, firstParent[SubIndexGraph].partitions(perm(s))))
     override def compute(split: org.apache.spark.Partition,
-        ctx: org.apache.spark.TaskContext): Iterator[IndexRow] = {
+        ctx: org.apache.spark.TaskContext): Iterator[SubIndexGraph] = {
       val p = split.asInstanceOf[ShardAlignedPartition]
       val shardId = p.index
-      firstParent[IndexRow].iterator(p.parent, ctx).map { r =>
-        require(r.sub_index_id == shardId,
-          s"sharded layout violation: a row of shard ${r.sub_index_id} " +
+      firstParent[SubIndexGraph].iterator(p.parent, ctx).map { g =>
+        require(g.shardId == shardId,
+          s"sharded layout violation: the graph of shard ${g.shardId} " +
             s"appeared in the partition serving shard $shardId")
-        r
+        g
       }
     }
     override protected def getPreferredLocations(
         split: org.apache.spark.Partition): Seq[String] =
-      firstParent[IndexRow].preferredLocations(
+      firstParent[SubIndexGraph].preferredLocations(
         split.asInstanceOf[ShardAlignedPartition].parent)
   }
 
-  /** Write a shard-aligned layout (partition s holds exactly shard s) to
-    * `dir`, one directory per shard, `sub_index_id=s/`, holding the one
-    * file written by the task of partition s; an empty shard writes
-    * nothing. The rows are declared sorted by shard within each
-    * partition, which one shard per partition makes true, so the write
-    * plans no Sort above the build: a Sort would buffer a whole shard
-    * beside its graph. The write is the one query planned: the rows are
-    * serialized in its tasks, not through a Dataset planned first. */
+  /** Write a shard-aligned layout (partition s holds shard s's graph or
+    * nothing) to `dir`, one directory per shard, `sub_index_id=s/`,
+    * holding the one file written by the task of partition s; an empty
+    * shard writes nothing. Each graph is dehydrated inside its write
+    * task, the rows streaming into the file. The rows are declared sorted
+    * by shard within each partition, which one shard per partition makes
+    * true, so the write plans no Sort above the build: a Sort would
+    * buffer a whole shard beside its graph. The write is the one query
+    * planned: the rows are serialized in its tasks, not through a Dataset
+    * planned first. */
   private[index] def writeShards(spark: SparkSession,
-      layout: RDD[IndexRow], dir: String): Unit =
+      layout: RDD[SubIndexGraph], dir: String): Unit =
     org.apache.spark.sql.graft.GraftSqlBridge
-      .sortedFrame(spark, layout, org.apache.spark.sql.Encoders.product[IndexRow], "sub_index_id")
+      .sortedFrame(spark, layout.flatMap(dehydrate),
+        org.apache.spark.sql.Encoders.product[IndexRow], "sub_index_id")
       .write.mode("overwrite").partitionBy("sub_index_id").parquet(dir)
 
   /** The columns of an [[IndexRow]]: a shard directory's files hold all
@@ -1662,12 +1614,12 @@ object VectorIndex {
   /** A snapshot's `rows/` directory as index rows, flat or laid out by
     * shard, read with the known schema: no footer is read to infer it,
     * and a snapshot of no rows reads as empty. */
-  private def readRows(spark: SparkSession, dir: String): Dataset[IndexRow] = {
+  private[index] def readRows(spark: SparkSession, dir: String): Dataset[IndexRow] = {
     import spark.implicits._
     spark.read.schema(rowSchema).parquet(dir).as[IndexRow]
   }
 
-  /** The probe layout of a snapshot laid out by [[writeShards]]:
+  /** The rows of a snapshot laid out by [[writeShards]], by shard:
     * partition s reads the files of `dir/sub_index_id=s/` whole, and the
     * shard id is the partition index. One listing finds every shard's
     * files and one file scan reads them all, with no query planned, so
@@ -1675,8 +1627,8 @@ object VectorIndex {
     * grows with the shard count (a scan planned per shard costs ~65 ms
     * of driver time and ~30 KB of lineage per shard). A shard without
     * meta gets an empty partition, and so does one whose directory is
-    * missing: its probe then fails on the row count its meta promises,
-    * never serving a partial index. */
+    * missing: its graph then fails on the row count its meta promises
+    * ([[rehydrateShards]]), never serving a partial index. */
   private[index] def readShards(spark: SparkSession, dir: String,
       meta: Array[ShardMeta], numShards: Int): RDD[IndexRow] = {
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -1698,8 +1650,7 @@ object VectorIndex {
     val read = org.apache.spark.sql.graft.GraftSqlBridge.readParquetGroups(spark,
       org.apache.spark.sql.types.StructType(rowSchema.filterNot(_.name == "sub_index_id")),
       groups, Map("parquet.hadoop.vectored.io.enabled" -> "false"))
-    new ShardAlignedRDD(read.mapPartitionsWithIndex((s, it) => it.map(storedRow(s, _))),
-      Array.range(0, numShards))
+    read.mapPartitionsWithIndex((s, it) => it.map(storedRow(s, _)))
   }
 
   /** Shard `shard`'s [[IndexRow]] from a row of its directory's files:
@@ -1740,13 +1691,33 @@ object VectorIndex {
   /** Bulk build from a [[writeBucketedCorpus]] table with ZERO Exchange and
     * ZERO Sort: the bucketed scan already delivers each shard's rows
     * co-located (one bucket file per bucket, never split) and
-    * (sub_index_id, id)-sorted, so the plan is scan → mapPartitions.
-    * Plan-guarded in PlanShapeSpec; the grouped/sorted input contract is
-    * additionally enforced in-task ([[buildGrouped]]) and a shard split
-    * across partitions is caught by [[BuiltShards]], which also supplies
-    * the meta. */
+    * (sub_index_id, id)-sorted, so the build is scan → mapPartitions
+    * ([[bucketedInput]], plan-guarded in PlanShapeSpec; the grouped and
+    * sorted input contract is also enforced in-task by [[buildGrouped]]).
+    * A bucket may hold several shards, so one exchange of the built
+    * graphs then puts shard s in partition s, where a shard split across
+    * buckets fails the meta pass. */
   def buildFromBucketed(
       spark: SparkSession, table: String, params: IndexParams): VectorIndex = {
+    val (input, numShards) = bucketedInput(spark, table, params)
+    val p = params
+    val rows = input.queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getArray(1).toFloatArray(), r.getInt(2)))
+    inMemory(spark, params, numShards, rows.mapPartitions(buildGrouped(_, p))
+      .keyBy(_.shardId).partitionBy(new ShardPartitioner(numShards)).values)
+  }
+
+  /** A [[writeBucketedCorpus]] table's (id, embedding, shard) rows as
+    * [[buildFromBucketed]] reads them, and its bucket count. Bucketed
+    * corpora hold RAW vectors, so the API-boundary transform (cosine
+    * normalization / MIPS augmentation) is a narrow map here. The plan is
+    * made here, with the bucketed scan kept: a scan and a map, no
+    * Exchange and no Sort. (DisableUnnecessaryBucketedScan would demote
+    * the scan to ordinary file splits, as nothing above a map "needs"
+    * bucketing, and a split bucket file puts part of a shard in each of
+    * two partitions.) */
+  private[graft] def bucketedInput(spark: SparkSession, table: String,
+      params: IndexParams): (Dataset[(Long, Array[Float], Int)], Int) = {
     val cat = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
     val spec = cat.bucketSpec.getOrElse(
@@ -1754,12 +1725,6 @@ object VectorIndex {
     require(spec.bucketColumnNames == Seq("sub_index_id") &&
       spec.sortColumnNames.take(2) == Seq("sub_index_id", "id"),
       s"$table bucket spec ${spec} does not match writeBucketedCorpus layout")
-    val numShards = spec.numBuckets
-    // DisableUnnecessaryBucketedScan would demote the scan to ordinary
-    // file splits (nothing above a mapPartitions "needs" bucketing), and a
-    // split bucket file puts half a shard in each of two partitions — the
-    // conf must be off while THIS plan is forced (the build materializes
-    // the rows inside this window).
     val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
@@ -1770,17 +1735,11 @@ object VectorIndex {
           col("sub_index_id").cast("int"))
         .as[(Long, Array[Float], Int)]
       val p = params
-      val report = BuiltShards(spark)
-      // bucketed corpora hold RAW vectors — the API-boundary transform
-      // (cosine normalization / MIPS augmentation) happens here (narrow
-      // map, keeps the no-Exchange/no-Sort plan)
-      val cached = (if (p.transformsInput)
+      val input = if (p.transformsInput)
           src.map { case (id, v, s) => (id, p.transformCorpusVector(v), s) }
-        else src).mapPartitions(buildGrouped(_, p, report = report)).cache()
-      // one pass fills the cache, the builds in its result stage
-      cached.foreachPartition((_: Iterator[IndexRow]) => ())
-      new VectorIndex(params, numShards, cached, report.result()._1,
-        java.util.UUID.randomUUID().toString)
+        else src
+      input.queryExecution.executedPlan
+      (input, spec.numBuckets)
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -1790,23 +1749,19 @@ object VectorIndex {
   /** Load a saved index (reference O10). The sidecars are read first: a
     * missing `meta.json`, the commit point of every publish, is an
     * IllegalArgumentException naming it. The index dimension is preset
-    * from `params.json` when it records one. Rows
+    * from `params.json` when it records one. Nothing else is read: rows
     * written one directory per shard ([[VectorIndex!.save]], [[buildTo]],
-    * [[appendTo]]) are read in place by the first probe; a flat `rows/`,
-    * as older versions wrote it, is laid out by an exchange instead.
-    * @param cache cache the row Dataset (default). Pass `false` for a
-    *               corpus-scale index probed a bounded number of times:
-    *               Dataset.cache is MEMORY_AND_DISK, i.e. a second
-    *               uncompressed copy of an index already materialized as
-    *               compressed parquet — at 100M rows that copy alone
-    *               exceeds a single node's local-disk pool (SCALE.md);
-    *               pair with `spark.graft.probeLayoutStorage=NONE`. */
+    * [[appendTo]]) are read in place, straight into the graphs, by the
+    * first probe ([[VectorIndex!.probeLayout]]); a flat `rows/`, as older
+    * versions wrote it, is laid out by an exchange instead.
+    * @param cache kept for source compatibility; it selects nothing. The
+    *              graphs are the one cached copy, held at memory only and
+    *              re-read when Spark's storage memory cannot hold them. */
   def load(spark: SparkSession, path: String, cache: Boolean = true): VectorIndex = {
     val meta = Sidecar.readLines[ShardMeta](spark, s"$path/meta.json")
       .getOrElse(throw new IllegalArgumentException(s"missing $path/meta.json"))
       .toArray.sortBy(_.sub_index_id)
     val pf = Sidecar.readRequired[Sidecar.IndexParamsFile](spark, s"$path/params.json")
-    val rows = readRows(spark, s"$path/rows")
     val metric = DistanceMetric.all.find(_.name == pf.metric).getOrElse(
       sys.error(s"$path/params.json: unknown metric '${pf.metric}'"))
     val schedule = pf.schedule.split(";").toSeq.filter(_.nonEmpty)
@@ -1817,25 +1772,25 @@ object VectorIndex {
     val params = IndexParams(metric, pf.minimumConnect, pf.relaxedMonotonicity,
       pf.step, pf.subIndexBound, schedule, pf.quantized, pf.quantLo, pf.quantHi,
       pf.normalizeForCosine, pf.augmentForMips, pf.mipsMaxNorm)
-    // fresh cache identity per load: reusing the persisted id would let a
-    // probe of the loaded index hit executor-cached graphs built from the
-    // ORIGINAL in-memory index (same JVM), silently bypassing the loaded
-    // rows — the save/load invariance gate must exercise the load path
-    val idx = new VectorIndex(params, pf.numShards, if (cache) rows.cache() else rows, meta,
-      pf.indexId + "#load-" + java.util.UUID.randomUUID().toString)
-    pf.dimension.foreach(idx.knownDim = _)
     // a flat snapshot holds its part files at the top of rows/
     val dir = new org.apache.hadoop.fs.Path(s"$path/rows")
     val flat = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
       .exists(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-    if (!flat) idx.shardDirs = Some(dir.toString)
+    // a fresh identity per load: the graphs of each load are its own, not
+    // those of the index that wrote the snapshot nor of another load
+    val idx = new VectorIndex(params, pf.numShards, meta,
+      pf.indexId + "#load-" + java.util.UUID.randomUUID().toString, spark, None,
+      dir.toString, !flat)
+    pf.dimension.foreach(idx.knownDim = _)
     idx
   }
 
-  private[index] def dehydrate(shardId: Int, g: SubIndexGraph): Iterator[IndexRow] =
+  /** Shard `g.shardId`'s rows, read off its graph: what a snapshot stores
+    * and [[VectorIndex!.rows]] shows. */
+  private[graft] def dehydrate(g: SubIndexGraph): Iterator[IndexRow] =
     (0 until g.count).iterator.map { o =>
       IndexRow(
-        shardId, o, g.globalIds(o), g.layerOf(o), g.vecAt(o),
+        g.shardId, o, g.globalIds(o), g.layerOf(o), g.vecAt(o),
         g.out(o).map(el => (0 until el.size).map(i => OutEdge(el.ds(i), el.ns(i))).toSeq).toSeq,
         // adjacency arrays use swap-removal, so normalize to nbr order for
         // a canonical (rebuild-stable) persisted form
@@ -1843,9 +1798,25 @@ object VectorIndex {
           .sortBy(_.nbr).toSeq).toSeq)
     }
 
-  private[index] def rehydrate(
-      params: IndexParams, m: ShardMeta, shardRows: Seq[IndexRow]): SubIndexGraph =
-    rehydrateStreaming(params, m, shardRows.length, shardRows.iterator)
+  /** Rows laid out by shard (partition s holds shard s's rows)
+    * rehydrated into one graph per non-empty partition, each checked
+    * against `meta`: a shard with rows must have a meta entry, and its
+    * row count must be the one the entry records. */
+  private def rehydrateShards(rows: RDD[IndexRow], params: IndexParams,
+      meta: Array[ShardMeta], numShards: Int): RDD[SubIndexGraph] = {
+    val metaMap = meta.map(m => m.sub_index_id -> m).toMap
+    new ShardAlignedRDD(rows.mapPartitionsWithIndex { (s, it) =>
+      metaMap.get(s) match {
+        case None =>
+          require(it.isEmpty, s"shard $s has rows but no meta entry")
+          Iterator.empty
+        case Some(m) if it.isEmpty =>
+          require(m.n_vectors == 0, s"shard $s: empty partition, meta says ${m.n_vectors} rows")
+          Iterator.empty
+        case Some(m) => Iterator.single(rehydrateStreaming(params, m, m.n_vectors.toInt, it))
+      }
+    }, Array.range(0, numShards))
+  }
 
   /** Single-pass rehydration from an iterator: each IndexRow is copied
     * into the graph's primitive structures and becomes garbage
@@ -1854,16 +1825,20 @@ object VectorIndex {
     * alongside the graph. At 780k-row shards the buffered form costs
     * >1 GB per concurrent task; 32 concurrent probe tasks of buffered
     * rehydration OOM'd the 100M probe JVM (SCALE.md). Capacity comes
-    * from the count, which the probe paths read from ShardMeta. */
-  private[index] def rehydrateStreaming(
+    * from the count, which the probe paths read from ShardMeta. Every row
+    * must belong to the meta's shard. */
+  private def rehydrateStreaming(
       params: IndexParams, m: ShardMeta, n: Int,
       shardRows: Iterator[IndexRow]): SubIndexGraph = {
-    val g = new SubIndexGraph(params, n)
+    val g = new SubIndexGraph(params, n, m.sub_index_id)
     g.count = n
     g.layerCount = m.layer_count
     g.entryOffset = m.entry_offset
     var seen = 0
     for (r <- shardRows) {
+      require(r.sub_index_id == m.sub_index_id,
+        s"sharded layout violation: a row of shard ${r.sub_index_id} " +
+          s"appeared in the partition serving shard ${m.sub_index_id}")
       seen += 1
       val o = r.offset
       g.globalIds(o) = r.global_id

@@ -708,9 +708,8 @@ object HybridRetrieval {
 
   /** [[serveFromSnapshots]] over ALREADY-LOADED handles — the long-lived
     * server's steady state: load both artifacts once, serve every batch
-    * on the same pair (the vector handle's shard graphs stay resident in
-    * the executor cache across batches; each fresh load would get a
-    * fresh cache identity and re-rehydrate). */
+    * on the same pair (the vector handle's shard graphs stay resident
+    * across batches; each fresh load would read them again). */
   def serveFromLoaded(vidx: graft.index.VectorIndex,
       lexIndex: DataFrame, lexStats: DataFrame,
       queriesText: DataFrame, queriesEmb: DataFrame,

@@ -73,6 +73,30 @@ object GraftSqlBridge {
     new FileScanRDD(cs, read, parts, schema)
   }
 
+  /** The value cached as partition `split` of RDD `rddId` when this JVM's
+    * memory store holds it (`blockManager` is `private[spark]`), else
+    * None. Takes no block lock: the block may be dropped meanwhile. */
+  def residentValue(rddId: Int, split: Int): Option[Any] =
+    org.apache.spark.SparkEnv.get.blockManager.memoryStore
+      .getValues(org.apache.spark.storage.RDDBlockId(rddId, split)).flatMap(_.nextOption())
+
+  /** Remove every cached partition of RDD `rddId` from the block stores
+    * of the whole cluster, keeping its storage level, so that its next
+    * computation caches it again. Returns how many partitions were
+    * cached. The block managers are asked for their blocks: the master's
+    * own listing reads its block maps off its endpoint thread, and
+    * failed with a ConcurrentModificationException under concurrent
+    * block updates. */
+  def dropRddBlocks(rddId: Int): Int = {
+    val master = org.apache.spark.SparkEnv.get.blockManager.master
+    val held = master.getMatchingBlockIds({
+      case org.apache.spark.storage.RDDBlockId(id, _) => id == rddId
+      case _ => false
+    }, askStorageEndpoints = true).distinct.size
+    master.removeRdd(rddId, blocking = true)
+    held
+  }
+
   /** The logical plan backing a DataFrame. */
   def logicalPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan

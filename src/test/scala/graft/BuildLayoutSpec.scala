@@ -42,8 +42,8 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
       .toSeq.sortBy(_._1)
       .map { case (s, vs) =>
         val sorted = vs.sortBy(_._1).toIndexedSeq
-        val (m, rows) = VectorIndex.buildShard(s, sorted, p, sorted.head._2.length)
-        (rows.toSeq, m)
+        val g = VectorIndex.buildShard(s, sorted, p, sorted.head._2.length)
+        (VectorIndex.dehydrate(g).toSeq, VectorIndex.metaOf(g))
       }
     (built.flatMap(_._1), built.map(_._2))
   }

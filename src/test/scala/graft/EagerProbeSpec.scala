@@ -15,8 +15,9 @@ import graft.index.{IndexParams, LsmVectorIndex, VectorIndex}
   * for row — ranks and distances included — for every storage and
   * metric, LSM members and tombstones, short results, ties, empty
   * batches and chunked batches. The routed batch is also the
-  * query-vector boundary: a bad vector is rejected before any job runs;
-  * the driverless probe rejects it in its tasks, naming the query. */
+  * query-vector boundary: a bad vector is rejected before any job runs,
+  * as it is by the lazy probe; the driverless probe rejects it in its
+  * tasks, naming the query. */
 class EagerProbeSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val emb = Tables.embeddings(spark, sfDir)
@@ -166,6 +167,29 @@ class EagerProbeSpec extends AnyFunSuite with SparkSuite {
       val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
         .map(e => String.valueOf(e.getMessage)).toSeq
       assert(messages.exists(_.contains("query 7 ")), s"$name $what: ${messages.head}")
+    }
+    lsm.unpersist(); idx.unpersist()
+  }
+
+  test("the lazy probe rejects a missing, non-finite or ragged query vector before any job") {
+    val idx = VectorIndex.build(corpus, p, numShards = 2)
+    val lsm = LsmVectorIndex(idx, compactThreshold = 1000000)
+      .ingest(slice(400, 420)).delete(Seq(25L))
+    val v = batch(0)._2
+    val bad = Seq(
+      "NaN" -> (7L, v.updated(3, Float.NaN)),
+      "Infinity" -> (7L, v.updated(0, Float.PositiveInfinity)),
+      "no embedding" -> (7L, null: Array[Float]),
+      "ragged" -> (7L, v.take(v.length - 1)))
+    for ((what, q) <- bad; (name, probe) <- Seq[(String, Array[(Long, Array[Float])] => DataFrame)](
+        "queryBatch" -> (idx.queryBatch(_, 10, 16)),
+        "queryBatchMultiWidth" -> (idx.queryBatchMultiWidth(_, 10, Seq(4, 16))),
+        "probeBatch" -> (idx.probeBatch(_, 10, 16)),
+        "LsmVectorIndex.queryBatch" -> (lsm.queryBatch(_, 10, 16)))) {
+      val b = batch.filter(_._1 != 7L) :+ q
+      val (err, jobs) = jobsDuring(intercept[IllegalArgumentException](probe(b).collect()))
+      assert(err.getMessage.contains("query 7 "), s"$name $what: ${err.getMessage}")
+      assert(jobs == 0, s"$name $what: $jobs jobs ran before the rejection")
     }
     lsm.unpersist(); idx.unpersist()
   }

@@ -771,7 +771,7 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
     for (cycle <- 0 until 3) {
       val from = 300 + 60 * cycle
       lsm = lsm.ingest(slice(from, from + 20)).ingest(slice(from + 20, from + 40))
-      val held = lsm.generations.flatMap(_.driverRowsBroadcastId)
+      val held = lsm.generations.flatMap(_.driverGraphBroadcastId)
       assert(held.size == 2 && held.forall(DriverBlocks.holdsBroadcast),
         s"cycle $cycle: the live generations' rows must be on the driver")
       lsm = lsm.ingest(slice(from + 40, from + 60)) // 60 fresh: compacts
@@ -791,9 +791,9 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
     def genOf(n: Int) = LsmVectorIndex(empty, compactThreshold = Long.MaxValue)
       .ingest(rows.take(n).toDF("id", "embedding")).generations.last
     val atBound = genOf(LsmVectorIndex.DriverBuildRows)
-    assert(atBound.driverRowsBroadcastId.nonEmpty, "a batch at the bound is built on the driver")
+    assert(atBound.driverGraphBroadcastId.nonEmpty, "a batch at the bound is built on the driver")
     val over = genOf(rows.length)
-    assert(over.driverRowsBroadcastId.isEmpty && over.numShards == 1)
+    assert(over.driverGraphBroadcastId.isEmpty && over.numShards == 1)
     assert(sameIndex(over, VectorIndex.build(rows.toDF("id", "embedding"), params, numShards = 1)))
     atBound.unpersist(); over.unpersist()
   }

@@ -90,10 +90,12 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("v20 bucketed corpus build runs with zero Exchange and zero Sort") {
-    // the cached build plan (InMemoryRelation prints the plan it captured
-    // when buildFromBucketed forced it) must be scan → mapPartitions: a
-    // bucketed scan, no Exchange, no Sort anywhere
-    val p = Queries.v20Index(spark, sfDir).rows.queryExecution.executedPlan.toString
+    // the plan the build's mapPartitions reads (buildFromBucketed plans
+    // it through bucketedInput) must be a bucketed scan, no Exchange, no
+    // Sort anywhere
+    Queries.ensureBucketedCorpus(spark, sfDir)
+    val p = graft.index.VectorIndex.bucketedInput(spark, Queries.corpusTableName(sfDir),
+      graft.index.IndexParams())._1.queryExecution.executedPlan.toString
     assert(p.contains("Bucketed: true"), s"scan not bucketed:\n${p.take(3000)}")
     assert(!p.contains("Exchange"), s"build plan still shuffles:\n${p.take(3000)}")
     assert("\\bSort\\b".r.findFirstIn(p).isEmpty, s"build plan still sorts:\n${p.take(3000)}")

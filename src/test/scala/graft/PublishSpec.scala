@@ -111,6 +111,56 @@ class PublishSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("appendTo from a buildTo handle still live runs 3 jobs and persists nothing") {
+    withDir { dir =>
+      // not unpersisted: a cache this handle registered lazily would be
+      // filled by the append's read of g0
+      val built = VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, s"$dir/g0")
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val (appended, work) = workDuring(VectorIndex.appendTo(spark, s"$dir/g0",
+        frame(vectors(400L until 500L)), s"$dir/g1"))
+      assert(work.jobs <= 3, s"appendTo ran $work")
+      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+        "appendTo left a persisted RDD")
+      Seq(built, appended).foreach(_.unpersist())
+    }
+  }
+
+  test("work counter: buildTo then optimize runs 3 jobs: the exchange, the write, one graph read") {
+    withDir { dir =>
+      val (idx, work) = workDuring(
+        VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, s"$dir/g0").optimize())
+      assert(work.jobs <= 3, s"buildTo(...).optimize() ran $work")
+      idx.unpersist()
+    }
+  }
+
+  test("residency: probes read resident graphs; evicted or lost ones are re-read or rebuilt exactly") {
+    import org.apache.spark.graft.DriverBlocks
+    val qs = frame(vectors(10000L until 10100L)).withColumnRenamed("id", "query_id")
+    def answers(idx: VectorIndex) = idx.query(qs, 10, 8).collect().map(_.toSeq).toSeq
+    withDir { dir =>
+      val loaded = VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, s"$dir/g0")
+        .optimize()
+      val (want, warm) = workDuring(answers(loaded))
+      assert(warm.jobs == 1 && warm.inputBytes == 0, s"a probe after optimize() ran $warm")
+      assert(ShardGraphCache.evict(loaded.indexId) == 4)
+      val (again, cold) = workDuring(answers(loaded))
+      assert(cold.inputBytes > 0, s"the probe after evict ran $cold")
+      assert(again == want, "the probe after evict answers differently")
+
+      // a lost block: the loaded shard is re-read, the built one rebuilt
+      val mem = VectorIndex.build(frame(vectors(0L until 400L)), params, 4)
+      for ((name, idx) <- Seq("loaded" -> loaded, "build" -> mem)) {
+        assert(DriverBlocks.dropRddBlock(idx.probeLayout.id, 2), s"$name: shard 2 was not resident")
+        assert(ShardGraphCache.peek(idx.indexId, 2) == null, s"$name: peek sees a dropped block")
+        assert(answers(idx) == want, s"$name: the recomputed shard answers differently")
+        assert(ShardGraphCache.peek(idx.indexId, 2) != null, s"$name: the recomputed shard is not resident")
+      }
+      Seq(loaded, mem).foreach(_.unpersist())
+    }
+  }
+
   test("appendTo rows and meta equal build over the union: float, SQ8, cosine, MIPS, schedule") {
     val cases = Seq(
       "float" -> params,

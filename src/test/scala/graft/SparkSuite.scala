@@ -17,8 +17,11 @@ object SparkSuite {
     s
   }
 
-  /** Spark work counted by [[SparkSuite.workDuring]]. */
-  final case class Work(jobs: Int, stages: Int, shuffleWriteBytes: Long, shuffles: Int)
+  /** Spark work counted by [[SparkSuite.workDuring]]. `inputBytes` is the
+    * file bytes read through Hadoop's FileSystem: a task's
+    * `inputMetrics.bytesRead` would count cached blocks it reads too. */
+  final case class Work(jobs: Int, stages: Int, shuffleWriteBytes: Long, shuffles: Int,
+      inputBytes: Long)
 }
 
 trait SparkSuite {
@@ -34,8 +37,8 @@ trait SparkSuite {
 
   /** Run `f` and count the Spark work it started: jobs, SUBMITTED stages
     * (a stage whose output is already materialized is skipped, not
-    * submitted), shuffle bytes written and shuffles (submitted stages
-    * that write one). */
+    * submitted), shuffle bytes written, shuffles (submitted stages
+    * that write one) and file bytes read. */
   def workDuring[T](f: => T): (T, SparkSuite.Work) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -56,11 +59,20 @@ trait SparkSuite {
     }
     org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(l)
+    val read0 = fileBytesRead
     val r = try {
       val r = f
       org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
       r
     } finally spark.sparkContext.removeSparkListener(l)
-    (r, SparkSuite.Work(jobs.get, stages.get, shuffled.get, shuffles.get))
+    (r, SparkSuite.Work(jobs.get, stages.get, shuffled.get, shuffles.get,
+      fileBytesRead - read0))
+  }
+
+  /** Bytes read so far through Hadoop's FileSystem, every scheme. */
+  private def fileBytesRead: Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.iterator().asScala
+      .map(s => Option(s.getLong("bytesRead")).fold(0L)(_.longValue)).sum
   }
 }

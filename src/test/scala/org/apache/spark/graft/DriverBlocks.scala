@@ -1,7 +1,7 @@
 package org.apache.spark.graft
 
 import org.apache.spark.SparkEnv
-import org.apache.spark.storage.BroadcastBlockId
+import org.apache.spark.storage.{BroadcastBlockId, RDDBlockId}
 
 /** Spec access to driver internals that are `private[spark]`: the block
   * manager and a stage's shuffle. */
@@ -18,4 +18,13 @@ object DriverBlocks {
       case BroadcastBlockId(b, _) => b == id
       case _ => false
     }.nonEmpty
+
+  /** Drop partition `split` of RDD `rddId` from this JVM's block store,
+    * as a lost executor would; true if it was held. */
+  def dropRddBlock(rddId: Int, split: Int): Boolean = {
+    val id = RDDBlockId(rddId, split)
+    val held = SparkEnv.get.blockManager.getStatus(id).nonEmpty
+    SparkEnv.get.blockManager.removeBlock(id)
+    held
+  }
 }
