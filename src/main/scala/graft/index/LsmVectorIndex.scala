@@ -68,7 +68,10 @@ final class LsmVectorIndex private (
     // generations (and possibly the base) the background rewrite is still
     // reading, and the eventual swap would fail its base-identity require.
     asyncPending: java.util.concurrent.atomic.AtomicBoolean =
-      new java.util.concurrent.atomic.AtomicBoolean(false))
+      new java.util.concurrent.atomic.AtomicBoolean(false),
+    // the broadcast of `tombstones`, shared with the handles ingest
+    // derives (the set is the same)
+    private val tombstoneCopy: LsmVectorIndex.TombstoneCopy = new LsmVectorIndex.TombstoneCopy)
     extends Serializable with AnnProbe {
 
   override def probeId: String =
@@ -137,7 +140,7 @@ final class LsmVectorIndex private (
       } else buildDistributed(input, dim)
     val next = new LsmVectorIndex(
       base, generations :+ gen, compactThreshold, genShardSize, ownsBase,
-      tombstones, deleteThreshold, asyncPending)
+      tombstones, deleteThreshold, asyncPending, tombstoneCopy)
     // Auto-compaction is suppressed while an async fold is outstanding —
     // the swap returned by compactAsync absorbs those generations instead.
     if (next.freshCount >= compactThreshold && !asyncPending.get()) next.compact()
@@ -167,39 +170,34 @@ final class LsmVectorIndex private (
   /** Fold every generation into the base and purge every tombstone in
     * ONE shard-scoped rewrite: a shard gaining a live fresh id or holding
     * a tombstoned id is rebuilt once from its survivors plus its live
-    * fresh ids; the rest keep graphs and meta verbatim. The rebuilt shards
-    * are the only graphs built: the new base's cached graphs are its
-    * probe layout, so its first probe runs no exchange. Exact-mode probe
-    * results are unchanged (the result equals a build over the live set)
-    * and probes stop paying the liveness filter. The tombstones reach
-    * the plan as a one-column relation, not a literal id list, so the
-    * driver's per-execution cost does not grow with their count.
-    * Generations this index built are unpersisted, the graph of a
-    * driver-built one released for good; so is a base a previous
-    * compaction created, once it is replaced. */
+    * fresh ids; the rest keep graphs and meta verbatim. One Spark job
+    * that plans no query ([[VectorIndex.rewriteShards]]): the fresh rows,
+    * read off the generations' graphs, and the tombstone ids are the
+    * only data shuffled, and each base shard's task finds out itself
+    * whether it changes. The rebuilt shards are the only graphs built:
+    * the new base's cached graphs are its probe layout, so its first
+    * probe runs no exchange. Exact-mode probe results are unchanged (the
+    * result equals a build over the live set) and probes stop paying the
+    * liveness filter. Generations this index built are unpersisted, the
+    * graph of a driver-built one released for good; so is a base a
+    * previous compaction created, once it is replaced, and the tombstone
+    * broadcast. */
   def compact(): LsmVectorIndex = {
     require(!asyncPending.get(),
       "compact() while a compactAsync fold is outstanding would unpersist " +
         "the snapshot generations (and owned base) the background rewrite " +
         "is reading — apply the returned swap instead, or let it fail first")
     if (generations.isEmpty && tombstones.isEmpty) return this
-    val spark = probeSession
-    import spark.implicits._
-    val dead = if (tombstones.isEmpty) null else tombstones.toSeq.toDF("id")
-    val newBase = base.rewrite(dead, freshVectors(generations),
-      normalize = false) // materializes before we unpersist
+    val dead = if (tombstones.isEmpty) null
+      else probeSession.sparkContext.parallelize(tombstones.toSeq, base.numShards)
+    val newBase = base.rewrite(dead, LsmVectorIndex.rowsOf(generations)) // materializes before we unpersist
     val replaced = newBase ne base
     generations.foreach(_.unpersist())
     if (ownsBase && replaced) base.unpersist()
+    tombstoneCopy.release()
     new LsmVectorIndex(newBase, Vector.empty, compactThreshold, genShardSize,
       ownsBase || replaced, Set.empty, deleteThreshold, asyncPending)
   }
-
-  /** The (id, embedding) pairs of `gens` for the rewrite (null if none),
-    * read off their graphs. */
-  private def freshVectors(gens: Vector[VectorIndex]): DataFrame =
-    if (gens.isEmpty) null
-    else gens.map(_.vectors()).reduce(_ union _)
 
   /** Logical DELETE (tombstoning) — the index-lifecycle face the
     * reference has no answer to: ids stop appearing in any probe result
@@ -217,7 +215,7 @@ final class LsmVectorIndex private (
       s"${ts.size} tombstones exceed the 2^20 liveness-filter bound " +
         "(driver set + ~8 MB broadcast sizing) — " +
         "compact() (or lower deleteThreshold) to purge physically")
-    unpersistTombstoneBc() // this handle is superseded; free its copy
+    tombstoneCopy.release() // this handle is superseded; free its copy
     val next = new LsmVectorIndex(base, generations, compactThreshold,
       genShardSize, ownsBase, ts, deleteThreshold, asyncPending)
     if (ts.size >= deleteThreshold && !asyncPending.get()) next.compact()
@@ -249,7 +247,7 @@ final class LsmVectorIndex private (
       : scala.concurrent.Future[LsmVectorIndex => LsmVectorIndex] = {
     val snapshot = generations
     if (snapshot.isEmpty) return scala.concurrent.Future.successful(identity)
-    val freshVecs = freshVectors(snapshot)
+    val freshVecs = LsmVectorIndex.rowsOf(snapshot)
     val oldBase = base
     val owned = ownsBase
     val pending = asyncPending
@@ -257,7 +255,7 @@ final class LsmVectorIndex private (
       "a compactAsync fold is already outstanding on this lineage")
     scala.concurrent.Future {
       val newBase =
-        try oldBase.rewrite(null, freshVecs, normalize = false) // materializes before any unpersist
+        try oldBase.rewrite(null, freshVecs) // materializes before any unpersist
         catch { case e: Throwable => pending.set(false); throw e }
       // 0 = fresh, 1 = applied, 2 = abandoned: a FIRST misapply abandons
       // the fold (drop its output, re-enable compaction) instead of
@@ -299,7 +297,7 @@ final class LsmVectorIndex private (
         pending.set(false)
         new LsmVectorIndex(newBase, later.generations.drop(snapshot.length),
           later.compactThreshold, later.genShardSize, ownsBase = true,
-          later.tombstones, later.deleteThreshold, pending)
+          later.tombstones, later.deleteThreshold, pending, later.tombstoneCopy)
       }
     }
   }
@@ -344,43 +342,16 @@ final class LsmVectorIndex private (
   /** The base and every generation that holds a shard. */
   private def probeMembers: Seq[VectorIndex] = (base +: generations).filter(_.meta.nonEmpty)
 
-  /** The tombstone set as ONE broadcast sorted primitive array, created
-    * lazily on first probe and shared by every subsequent query on this
-    * handle — tombstones are immutable per instance ([[delete]] returns
-    * a new handle), so a long-lived serving loop reuses the single
-    * executor-resident copy instead of accumulating one broadcast per
-    * queryBatch call. */
-  @transient private var tombstoneBcRef
-      : org.apache.spark.broadcast.Broadcast[Array[Long]] = null
-  private def tombstoneBc
-      : org.apache.spark.broadcast.Broadcast[Array[Long]] = synchronized {
-    if (tombstoneBcRef == null) {
-      val sorted = tombstones.toArray
-      java.util.Arrays.sort(sorted)
-      tombstoneBcRef = probeSession.sparkContext.broadcast(sorted)
-    }
-    tombstoneBcRef
-  }
-
-  /** Release this handle's executor-resident tombstone copies (no-op if
-    * never probed). [[delete]] calls it on the superseded handle so a
-    * long-lived delete-heavy loop holds ONE live broadcast, not one per
-    * derived handle until driver GC. unpersist (not destroy): the old
-    * handle stays probe-able — executors just refetch on next use. */
-  private def unpersistTombstoneBc(): Unit = synchronized {
-    if (tombstoneBcRef != null) tombstoneBcRef.unpersist(false)
-  }
-
   /** Kernel liveness filter from the tombstone set: null (no filtering
     * overhead anywhere in the kernel loop) when nothing is deleted;
     * otherwise a primitive-sorted-array binary search behind the
-    * per-handle [[tombstoneBc]] broadcast — O(log t) per candidate with
-    * zero boxing, every probe task sharing the one executor-resident
-    * copy instead of each closure dragging a Set[Long] through task
-    * serialization. */
+    * set's one broadcast ([[LsmVectorIndex.TombstoneCopy]]) — O(log t)
+    * per candidate with zero boxing, every probe task sharing the one
+    * executor-resident copy instead of each closure dragging a Set[Long]
+    * through task serialization. */
   private def liveFilter: Long => Boolean = {
     if (tombstones.isEmpty) return null
-    val bc = tombstoneBc
+    val bc = tombstoneCopy.get(probeSession.sparkContext, tombstones)
     gid => java.util.Arrays.binarySearch(bc.value, gid) < 0
   }
 
@@ -394,6 +365,7 @@ final class LsmVectorIndex private (
   def unpersist(): Unit = {
     generations.foreach(_.unpersist())
     if (ownsBase) base.unpersist()
+    tombstoneCopy.release()
   }
 
   /** Persist the whole generational state: base + each generation through
@@ -415,6 +387,39 @@ object LsmVectorIndex {
     * distributed, after a collect of at most this many rows plus one:
     * about 2 MB of 64-d vectors, 25 MB of 768-d ones. */
   private[graft] val DriverBuildRows: Int = 8192
+
+  /** The (id, embedding) rows of `gens` (null if none), read off their
+    * graphs: the fresh rows a compaction folds in. */
+  private def rowsOf(gens: Vector[VectorIndex]): org.apache.spark.rdd.RDD[(Long, Array[Float])] =
+    if (gens.isEmpty) null
+    else gens.head.probeSession.sparkContext.union(gens.map(_.probeLayout))
+      .flatMap(VectorIndex.vectorsOf)
+
+  /** The tombstone set as ONE broadcast sorted primitive array, made on
+    * the first probe and shared by every later probe of the handles that
+    * hold the set, those [[LsmVectorIndex.ingest]] derives included: a
+    * serving loop reuses one resident copy instead of accumulating one
+    * per call or per batch. [[release]] destroys it when a delete or
+    * compaction supersedes the set, so a loop holds ONE live tombstone
+    * broadcast; a superseded handle probed again broadcasts its set anew,
+    * and a lazy probe result of it must be consumed before that call. */
+  private[index] final class TombstoneCopy extends Serializable {
+    @transient private var bc: org.apache.spark.broadcast.Broadcast[Array[Long]] = null
+
+    def get(sc: org.apache.spark.SparkContext, ids: Set[Long])
+        : org.apache.spark.broadcast.Broadcast[Array[Long]] = synchronized {
+      if (bc == null) {
+        val sorted = ids.toArray
+        java.util.Arrays.sort(sorted)
+        bc = sc.broadcast(sorted)
+      }
+      bc
+    }
+
+    def release(): Unit = synchronized {
+      if (bc != null) { bc.destroy(); bc = null }
+    }
+  }
 
   /** What [[LsmVectorIndex.ingest]] validates about a batch, gathered on
     * the driver from the collected rows or by one aggregation over the

@@ -444,29 +444,7 @@ class VectorIndex private (
       if (byShard) VectorIndex.readShards(spark, rowsDir, meta, numShards)
       else rows.rdd.map(r => (r.sub_index_id, r))
         .partitionBy(new VectorIndex.ShardPartitioner(numShards)).values,
-      params, meta, numShards)
-
-  /** The index's (id, embedding) pairs, of `shards` only when given, and
-    * the ids alone when `embeddings` is false: the values
-    * [[VectorIndex.dehydrate]] writes, read off an in-memory index's
-    * graphs without their adjacency, or by a column- and
-    * directory-pruned scan of a loaded snapshot. */
-  private[index] def vectors(shards: Seq[Int] = null, embeddings: Boolean = true): DataFrame = {
-    import spark.implicits._
-    built match {
-      case Some(graphs) =>
-        val keep = Option(shards).map(_.toSet)
-        val kept = graphs.filter(g => keep.forall(_(g.shardId)))
-        if (embeddings)
-          kept.flatMap(g => Iterator.range(0, g.count).map(o => (g.globalIds(o), g.vecAt(o))))
-            .toDF("id", "embedding")
-        else kept.flatMap(g => g.globalIds.iterator.take(g.count)).toDF("id")
-      case None =>
-        val all = rows.toDF()
-        (if (shards == null) all else all.filter(col("sub_index_id").isin(shards: _*)))
-          .select(col("global_id").as("id") +: (if (embeddings) Seq(col("embedding")) else Nil): _*)
-    }
-  }
+      params, meta)
 
   /** [[query]]'s driverless probe ([[VectorIndex.probeDistributed]]),
     * whatever the batch size. Prefer [[query]] for small batches: one
@@ -479,7 +457,7 @@ class VectorIndex private (
     * append = partition rebuild). Because shard assignment is id % shards
     * and the kernel is deterministic in ascending-id insertion order, the
     * result is IDENTICAL to rebuilding the whole index from the union of
-    * old and new vectors — untouched shards' rows are reused as-is.
+    * old and new vectors — untouched shards' graphs are reused as-is.
     *
     * New ids must be disjoint from existing ones and from each other
     * (validated), and dimensions must match the index (validated).
@@ -488,7 +466,7 @@ class VectorIndex private (
     * index stays valid and keeps its caches; drop them with [[unpersist]]
     * when a superseded generation is no longer needed. */
   def append(newVectors: DataFrame): VectorIndex =
-    rewrite(null, newVectors, normalize = true)
+    rewrite(null, VectorIndex.inputRows(newVectors, params))
 
   /** Shard-scoped physical DELETE (the reference's API stops at
     * insert/query/optimize/save): [[append]]'s economics in reverse —
@@ -497,96 +475,37 @@ class VectorIndex private (
     * absent ids returns this index itself (deletes are idempotent, the
     * LSM contract upstream relies on it). Input: one `id LONG` column. */
   def remove(removeIds: DataFrame): VectorIndex =
-    rewrite(removeIds, null, normalize = false)
+    rewrite(VectorIndex.inputIds(removeIds), null)
 
   /** The one shard-scoped rewrite behind [[append]], [[remove]] and LSM
-    * compaction: drop `removeIds` (`id`; null = none) and add
-    * `newVectors` (`id`, `embedding`; null = none). Each affected shard
-    * (it gains a surviving new id, or holds a removed id) is rebuilt ONCE
-    * from (existing − removed) ∪ (added − removed); the others keep rows
-    * and meta verbatim. The kernel is deterministic in ascending-id
-    * order, so the result equals [[VectorIndex.build]] over the live set
-    * bit for bit. No affected shard returns this index. `normalize` =
-    * false marks INTERNALLY RECOVERED vectors (generation rows, already
-    * transformed at ingest): re-transforming would drift last bits.
-    *
-    * The result's one cached copy is its probe layout: partition s is
-    * the rebuilt graph of shard s if s is affected, else this
-    * [[probeLayout]]'s graph of shard s, picked by partition index
-    * (narrow, no exchange).
-    * The added vectors are validated inside the build
-    * ([[VectorIndex.AppendCheck]]), so the rebuild's exchange is the
-    * rewrite's only one. */
-  private[index] def rewrite(removeIds: DataFrame, newVectors: DataFrame,
-      normalize: Boolean): VectorIndex = {
-    val (fresh, affectedSeq, rebuildInput) =
-      rewritePrep(removeIds, newVectors, normalize, cacheInput = true)
-    if (affectedSeq.isEmpty) return this
-    val affected = affectedSeq.toSet
-    // the layout pass materializes every partition, kept ones included,
-    // so the inputs can be dropped after it
-    val next = try {
-      val check = if (newVectors == null) null
-        else VectorIndex.AppendCheck(spark, if (meta.nonEmpty) dimension else -1)
-      val rebuilt = VectorIndex.buildLayout(rebuildInput, params, numShards, check)
-      val idx = VectorIndex.inMemory(spark, params, numShards,
-        new VectorIndex.ShardAlignedRDD(VectorIndex.concat(Seq(probeLayout, rebuilt)),
-          Array.tabulate(numShards)(s => if (affected(s)) numShards + s else s)))
-      if (check != null)
-        try check.verify() catch { case t: Throwable => idx.unpersist(); throw t }
-      idx
-    } finally {
-      if (fresh != null) fresh.unpersist()
-      rebuildInput.unpersist()
+    * compaction: drop `removed` ids (null = none) and add `added` rows
+    * (null = none), both already transformed, in ONE job
+    * ([[VectorIndex.rewriteShards]] over this [[probeLayout]]). Each
+    * affected shard (it gains a surviving added id, or holds a removed
+    * id) is rebuilt once; the others keep their graphs and meta. The
+    * result equals [[VectorIndex.build]] over the live set bit for bit,
+    * and its one cached copy is its probe layout. No affected shard
+    * returns this index. The added rows are validated inside the build
+    * ([[VectorIndex.AppendCheck]]). */
+  private[index] def rewrite(removed: RDD[Long], added: RDD[(Long, Array[Float])]): VectorIndex = {
+    val sc = spark.sparkContext
+    val check = if (added == null) null
+      else VectorIndex.AppendCheck(spark, if (meta.nonEmpty) dimension else -1)
+    val report = VectorIndex.BuiltShards(spark)
+    val next = VectorIndex.inMemory(spark, params, numShards, VectorIndex.rewriteShards(
+      Left(probeLayout), Option(added).getOrElse(sc.emptyRDD), Option(removed).getOrElse(sc.emptyRDD),
+      params, numShards, check, report))
+    // unchanged: nothing rebuilt, and no shard emptied out of meta
+    val unchanged = try {
+      if (check != null) check.verify()
+      report.result()._1.isEmpty && next.meta.length == meta.length
+    } catch { case t: Throwable => next.unpersist(); throw t }
+    if (unchanged) { next.unpersist(); this }
+    else {
+      // a rewrite never changes the dimension
+      if (next.knownDim <= 0) next.knownDim = knownDim
+      next
     }
-    // a rewrite never changes the dimension
-    if (next.knownDim <= 0) next.knownDim = knownDim
-    next
-  }
-
-  /** Discover/recover front half shared by [[rewrite]] and
-    * [[VectorIndex.appendTo]], which differ only in the rebuilt-rows
-    * SINK (in-memory cache vs parquet write). Returns (the fresh batch if
-    * it was cached, else null; affected shards; rebuild input), or
-    * (null, Nil, null) with nothing cached when no shard is affected.
-    * API input is normalized and CACHED (a nondeterministic source
-    * re-evaluated between discovery and rebuild would corrupt the
-    * bookkeeping); recovered vectors are read off the index
-    * ([[vectors]]) and are not cached again. Removed ids enter every
-    * plan as DATA — one relation joined left-semi/left-anti, never a
-    * literal In-list — so
-    * planning cost does not grow with their count (small sets
-    * broadcast; large ones shuffle 8-byte keys, never the vectors). */
-  private[index] def rewritePrep(removeIds: DataFrame, newVectors: DataFrame,
-      normalize: Boolean, cacheInput: Boolean): (DataFrame, Seq[Int], DataFrame) = {
-    import spark.implicits._
-    val selected = Option(newVectors).map(_.select(col("id").cast("long"), col("embedding")))
-    val cachedFresh =
-      if (normalize) selected.map(VectorIndex.normalizeInput(_, params).cache()).orNull
-      else null
-    val fresh = Option(cachedFresh).orElse(selected).getOrElse(
-      spark.emptyDataset[(Long, Array[Float])].toDF("id", "embedding"))
-    def release(): Unit = if (cachedFresh != null) cachedFresh.unpersist()
-    val removed = Option(removeIds).map(_.select(col("id").cast("long")))
-    def survivors(df: DataFrame): DataFrame =
-      removed.fold(df)(r => df.join(r, Seq("id"), "left_anti"))
-    val added = survivors(fresh)
-    // only removed ids actually PRESENT can change a shard: hashing the
-    // raw request set would rebuild shards that lose nothing (e.g. LSM
-    // tombstones for fresh-generation ids that never reached this base)
-    val addedIds = added.select(col("id"))
-    val touchedIds = removed.fold(addedIds)(r => addedIds.union(
-      vectors(embeddings = false).join(r, Seq("id"), "left_semi")))
-    // each task sends its own distinct shards: no exchange
-    val affected = touchedIds
-      .select(VectorIndex.shardOf(col("id"), numShards).as("s"))
-      .as[Int].mapPartitions(_.toSet.iterator).collect().toSet
-    if (affected.isEmpty) { release(); return (null, Nil, null) }
-    val affectedSeq = affected.toSeq
-    val existing = survivors(vectors(affectedSeq))
-    val rebuildInput0 = existing.union(added)
-    val rebuildInput = if (cacheInput) rebuildInput0.cache() else rebuildInput0
-    (cachedFresh, affectedSeq, rebuildInput)
   }
 
   /** Drop this index's graphs, its one cached copy ([[probeLayout]]).
@@ -763,7 +682,7 @@ object VectorIndex {
 
   /** The layouts' partitions one after another. `RDD.union` would instead
     * zip them partition by partition when every layout declares the same
-    * partitioner, as [[ShardAlignedRDD]]s of equal shard count do. */
+    * partitioner, as loaded snapshots of equal shard count do. */
   private def concat(layouts: Seq[RDD[SubIndexGraph]]): RDD[SubIndexGraph] =
     if (layouts.size == 1) layouts.head
     else new org.apache.spark.rdd.UnionRDD(layouts.head.context, layouts)
@@ -1043,9 +962,9 @@ object VectorIndex {
     override def hashCode: Int = n
   }
 
-  /** The shard-assignment expression — single source of truth for build
-    * AND append's affected-shard discovery (divergence would classify
-    * touched shards as untouched and corrupt the merge). */
+  /** The shard-assignment expression of the builds; the rewrite core's
+    * `Math.floorMod(id, numShards)` must agree with it (divergence would
+    * route an added id away from the shard a build puts it in). */
   private[index] def shardOf(id: org.apache.spark.sql.Column, numShards: Int) =
     pmod(id, lit(numShards)).cast("int")
 
@@ -1063,32 +982,28 @@ object VectorIndex {
       .as[(Long, Array[Float], Int)]
   }
 
-  /** The shard build of every distributed writer (in-memory builds,
-    * rewrites, [[buildTo]], [[appendTo]]): (id, embedding) rows → shard
-    * assignment (id % numShards) → one graph build per shard, in its own
-    * partition → an RDD whose partition s holds exactly shard s's graph,
-    * the layout the probes read and [[writeShards]] writes. An empty input,
-    * which Spark plans as a relation of no partitions, gives `numShards`
-    * empty ones. `check` and `report`, when given, see every shard as it
-    * is built. */
+  /** The shard build of every distributed build ([[build]],
+    * [[buildTo]]): (id, embedding) rows → shard assignment
+    * (id % numShards) → one graph build per shard, in its own partition →
+    * an RDD whose partition s holds exactly shard s's graph, the layout
+    * the probes read and [[writeShards]] writes. An empty input, which
+    * Spark plans as a relation of no partitions, gives `numShards` empty
+    * ones. `report`, when given, sees every shard as it is built. */
   private[index] def buildLayout(df: DataFrame, params: IndexParams,
-      numShards: Int, check: AppendCheck = null,
-      report: BuiltShards = null): RDD[SubIndexGraph] = {
+      numShards: Int, report: BuiltShards = null): RDD[SubIndexGraph] = {
     val p = params
-    val built = shardSorted(df, numShards).rdd.mapPartitions(buildGrouped(_, p, check, report))
+    val built = shardSorted(df, numShards).rdd.mapPartitions(buildGrouped(_, p, report))
     if (built.partitions.nonEmpty) built
     else df.sparkSession.sparkContext.parallelize(Seq.empty[SubIndexGraph], numShards)
   }
 
   /** One partition of shard builds ([[buildShard]] per run of equal
-    * shard ids), each shard first passed through `check` and its meta
-    * then added to `report`, for each one given.
+    * shard ids), each shard's meta added to `report` when given.
     * A shard revisited after a different shard in the same
     * partition means the ordering contract is broken (two partial graphs
     * would silently share a shard id) — fail the task instead. */
   private def buildGrouped(it: Iterator[(Long, Array[Float], Int)],
-      p: IndexParams, check: AppendCheck = null,
-      report: BuiltShards = null): Iterator[SubIndexGraph] = {
+      p: IndexParams, report: BuiltShards = null): Iterator[SubIndexGraph] = {
     // consecutive rows share sub_index_id after the sort. Dimension is
     // fixed at index creation (SURVEY §1.1): the partition's first row
     // sets it for every shard the partition builds.
@@ -1107,24 +1022,112 @@ object VectorIndex {
         val r = bit.next()
         vecs += ((r._1, r._2))
       }
-      if (check != null && check.rejects(vecs)) Iterator.empty
-      else {
-        val g = buildShard(shardId, vecs, p, dim)
-        if (report != null) report.shards.add((metaOf(g), dim))
-        Iterator.single(g)
-      }
+      val g = buildShard(shardId, vecs, p, dim)
+      if (report != null) report.shards.add((metaOf(g), dim))
+      Iterator.single(g)
     }
   }
+
+  /** One change routed to its shard by [[rewriteShards]]: an added row,
+    * or a removed id (`vec` null). */
+  private final case class Change(id: Long, vec: Array[Float], removed: Boolean)
+
+  /** The one shard rewrite core, under [[VectorIndex!.rewrite]] (append,
+    * remove and LSM compaction) and [[appendTo]]. The `added` rows and
+    * `removed` ids, tagged, move through ONE shuffle keyed by shard
+    * (`id % numShards`, [[ShardPartitioner]]), zipped with `base`, whose
+    * partition s holds shard s: its graph (`Left`: an in-memory layout or
+    * a flat snapshot's graphs) or its stored (id, embedding) rows
+    * (`Right`: a snapshot's shard directory, read only if the shard
+    * changes; such a base takes no removals). Nothing is planned, and no
+    * survivor moves. Partition s finds out itself whether shard s
+    * changes ([[rewriteShard]]); partition s of the result holds shard
+    * s's graph, or nothing for an empty shard or unchanged stored rows.
+    * `check`, when given, sees every changed shard's rows, and `report`
+    * the meta of every rebuilt one. */
+  private[index] def rewriteShards(
+      base: Either[RDD[SubIndexGraph], RDD[(Long, Array[Float])]],
+      added: RDD[(Long, Array[Float])], removed: RDD[Long], params: IndexParams,
+      numShards: Int, check: AppendCheck, report: BuiltShards): RDD[SubIndexGraph] = {
+    val (p, n) = (params, numShards)
+    val changes = added.map { case (id, v) => (Math.floorMod(id, n), Change(id, v, removed = false)) }
+      .union(removed.map(id => (Math.floorMod(id, n), Change(id, null, removed = true))))
+      .partitionBy(new ShardPartitioner(n))
+    base match {
+      case Left(graphs) => graphs.zipPartitions(changes) { (git, cs) =>
+        val g = if (git.hasNext) git.next() else null
+        rewriteShard(g, if (g == null) Iterator.empty else vectorsOf(g), cs, p, check, report)
+      }
+      case Right(rows) => rows.zipPartitions(changes)(rewriteShard(null, _, _, p, check, report))
+    }
+  }
+
+  /** One partition of [[rewriteShards]]: shard s's graph `g` (or null),
+    * its stored rows `stored` and its changes. With no change, `g` is
+    * passed through and `stored` is never read. A shard changes when it
+    * gains an added id not also removed, or `g` holds a removed id; it is
+    * then rebuilt from its surviving and live added rows, id-ascending —
+    * or emits nothing when none is left or `check` rejects them. */
+  private def rewriteShard(g: SubIndexGraph, stored: Iterator[(Long, Array[Float])],
+      changes: Iterator[(Int, Change)], p: IndexParams, check: AppendCheck,
+      report: BuiltShards): Iterator[SubIndexGraph] = {
+    val cs = changes.buffered
+    if (!cs.hasNext) return Option(g).iterator
+    val shardId = cs.head._1
+    val gone = mutable.HashSet.empty[Long]
+    val live = mutable.ArrayBuffer.empty[(Long, Array[Float])]
+    cs.foreach { case (_, c) => if (c.removed) gone += c.id else live += ((c.id, c.vec)) }
+    live.filterInPlace(r => !gone(r._1))
+    if (live.isEmpty && (g == null ||
+        !gone.exists(id => java.util.Arrays.binarySearch(g.globalIds, 0, g.count, id) >= 0)))
+      return Option(g).iterator
+    val vecs = mutable.ArrayBuffer.from(stored.filterNot(r => gone(r._1))) ++= live
+    vecs.sortInPlaceBy(_._1)
+    if (vecs.isEmpty || (check != null && check.rejects(vecs))) Iterator.empty
+    else {
+      val dim = if (check != null && check.dim > 0) check.dim else vecs.head._2.length
+      val built = buildShard(shardId, vecs, p, dim)
+      if (report != null) report.shards.add((metaOf(built), dim))
+      Iterator.single(built)
+    }
+  }
+
+  /** A graph's (id, embedding) pairs in offset order, which is ascending
+    * id: what [[dehydrate]] stores of them. */
+  private[index] def vectorsOf(g: SubIndexGraph): Iterator[(Long, Array[Float])] =
+    Iterator.range(0, g.count).map(o => (g.globalIds(o), g.vecAt(o)))
+
+  /** A caller's (id, embedding) rows, read once by one select and the
+    * API-boundary transform ([[IndexParams.transformCorpusVector]], as
+    * [[normalizeInput]] applies it to a build's input). The rows are
+    * taken off the planned query, not through `Dataset.rdd`, which Spark
+    * reports as an SQL execution of its own. */
+  private def inputRows(df: DataFrame, params: IndexParams): RDD[(Long, Array[Float])] = {
+    val p = params
+    df.select(col("id").cast("long"), col("embedding").cast("array<float>"))
+      .queryExecution.toRdd.map { r =>
+        require(!r.isNullAt(0), "appended rows must carry an id")
+        val v = if (r.isNullAt(1)) null else r.getArray(1).toFloatArray()
+        (r.getLong(0), if (v != null && p.transformsInput) p.transformCorpusVector(v) else v)
+      }
+  }
+
+  /** The ids of a caller's `id` column, read as [[inputRows]] reads rows;
+    * a null id removes nothing. */
+  private def inputIds(df: DataFrame): RDD[Long] =
+    df.select(col("id").cast("long")).queryExecution.toRdd
+      .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
 
   /** The checks on vectors added to an index ([[VectorIndex!.rewrite]],
     * [[appendTo]]): each must have the index dimension `dim` (unchecked
     * while the index is empty, -1), and no id may repeat, within the
-    * batch or against the index. Both run them INSIDE their build, the
-    * one validation of an append: every copy of an id lands in the same
-    * shard, adjacent after the build's id sort, so a shard counts its own
-    * violations into the accumulators and is not built if it has any;
-    * [[verify]] then throws on the driver, after the pass that ran the
-    * build (the rewrite's cache fill, appendTo's write). */
+    * batch or against the index. Both run them INSIDE their rewrite
+    * ([[rewriteShards]]), the one validation of an append: every copy of
+    * an id lands in the same shard, adjacent after the shard's id sort,
+    * so a shard counts its own violations into the accumulators and is
+    * not built if it has any; [[verify]] then throws on the driver, after
+    * the pass that ran the rewrite (the rewrite's cache fill, appendTo's
+    * write). */
   private[index] final case class AppendCheck(dim: Int,
       badDims: org.apache.spark.util.LongAccumulator,
       clashes: org.apache.spark.util.LongAccumulator) {
@@ -1141,9 +1144,10 @@ object VectorIndex {
   /** The meta and dimension of every non-empty shard a build's tasks
     * built, as [[buildShard]] read them off the graphs: how [[buildTo]]
     * and [[appendTo]] take the meta of the rows they write without
-    * reading them back. The builds run in the write job's result stage,
-    * whose task updates Spark applies once per partition, so a shard
-    * reported twice was built in two tasks. */
+    * reading them back, and how [[VectorIndex!.rewrite]] tells that a
+    * shard was rebuilt. The builds run in the result stage of the job
+    * that writes or caches them, whose task updates Spark applies once
+    * per partition, so a shard reported twice was built in two tasks. */
   private[index] final case class BuiltShards(
       shards: org.apache.spark.util.CollectionAccumulator[(ShardMeta, Int)]) {
     /** The reported meta by shard id, and the dimension (-1 when no shard
@@ -1379,8 +1383,8 @@ object VectorIndex {
     val spark = df.sparkSession
     val report = BuiltShards(spark)
     publish(spark, path, params, numShards, java.util.UUID.randomUUID().toString) {
-      writeShards(spark, buildLayout(normalizeInput(df, params), params, numShards,
-        report = report), s"$path/rows")
+      writeShards(spark, buildLayout(normalizeInput(df, params), params, numShards, report),
+        s"$path/rows")
       report.result()
     }
     load(spark, path)
@@ -1393,28 +1397,29 @@ object VectorIndex {
     * land the result at `newPath` while moving as few untouched bytes
     * as possible. Untouched work is skipped at two levels:
     *
-    *  - COMPUTE: only affected shards re-insert ([[buildLayout]] over
-    *    the affected slice ∪ fresh); every other shard's graph is reused
-    *    verbatim, meta included.
-    *  - I/O: the rebuilt graphs are written by [[writeShards]], and each
-    *    untouched shard's `rows/sub_index_id=s/` directory is HARDLINKED
-    *    into the new snapshot whole — zero bytes moved; on a store
-    *    without links (or cross-device) it falls back to a byte copy,
-    *    which on object stores is the server-side-copy fast path. A flat
+    *  - COMPUTE: only affected shards re-insert ([[rewriteShards]]);
+    *    every other shard's graph is reused verbatim, meta included.
+    *  - I/O: a shard that receives no row reads nothing, and its
+    *    `rows/sub_index_id=s/` directory is HARDLINKED into the new
+    *    snapshot whole — zero bytes moved; on a store without links (or
+    *    cross-device) it falls back to a byte copy, which on object
+    *    stores is the server-side-copy fast path. An affected shard reads
+    *    only the (id, embedding) columns of its directory. A flat
     *    snapshot written before the shard directories has nothing to
-    *    link: its kept shards go through the same writer, from its graphs
-    *    (uncached), so the new snapshot is laid out by shard either way.
+    *    link: its kept shards go through the same writer, from its
+    *    graphs (uncached), so the new snapshot is laid out by shard
+    *    either way.
     *
-    * One build-and-write pass that reads nothing back: three jobs, the
-    * affected-shard discovery, the exchange and the write. The added
-    * vectors are validated inside the build ([[AppendCheck]]) and the
-    * rebuilt shards' meta comes from their build tasks ([[BuiltShards]]);
-    * the index dimension comes from the old `params.json` (a snapshot
-    * written without that key pays one one-row read). Rows are written
-    * before the check passes, so `meta.json` is the commit point
-    * ([[publish]]): a rejected batch deletes the rows it wrote and throws
-    * the checks' IllegalArgumentException, and `newPath` is left without
-    * `meta.json`, which [[load]] refuses.
+    * One job, the write, whose tasks find their shard's changes, rebuild
+    * it and write it; it reads nothing back. The added vectors are
+    * validated inside the build ([[AppendCheck]]) and the rebuilt shards'
+    * meta comes from their build tasks ([[BuiltShards]]); the index
+    * dimension comes from the old `params.json` (a snapshot written
+    * without that key pays one one-row read). Rows are written before the
+    * check passes, so `meta.json` is the commit point ([[publish]]): a
+    * rejected batch — an empty one included, which rebuilds no shard —
+    * deletes the rows it wrote and throws an IllegalArgumentException,
+    * and `newPath` is left without `meta.json`, which [[load]] refuses.
     *
     * The old snapshot is left untouched (still servable — snapshots are
     * immutable generations; retire it when traffic drains). Returns the
@@ -1429,41 +1434,28 @@ object VectorIndex {
     val hconf = spark.sessionState.newHadoopConf()
     requireDistinctPaths(hconf, oldPath, newPath, "appendTo")
     val old = load(spark, oldPath)
-    val params = old.params
-    val numShards = old.numShards
-    // shared discover/recover half ([[rewritePrep]]); the existing-rows
-    // isin predicate prunes the scan to the affected shards' directories
-    val (fresh, affectedSeq, rebuildInput) =
-      old.rewritePrep(null, newVectors, normalize = true, cacheInput = false)
-    if (affectedSeq.isEmpty)
-      throw new IllegalArgumentException("appendTo over an empty batch")
-    val affected = affectedSeq.toSet
+    val (params, numShards) = (old.params, old.numShards)
     val newRows = s"$newPath/rows"
     publish(spark, newPath, params, numShards, java.util.UUID.randomUUID().toString) {
       // existing rows always match, and a clashing id hashes into an
       // affected shard, so checking the rebuilt shards covers old-vs-new
-      // AND new-vs-new clashes. Unpersist in finally: a rejected batch or
-      // a failed write must not leak the cached batch.
+      // AND new-vs-new clashes
       val dim = if (old.meta.nonEmpty) old.dimension else -1
       val check = AppendCheck(spark, dim)
       val report = BuiltShards(spark)
-      try {
-        val rebuilt = buildLayout(rebuildInput, params, numShards, check, report)
-        writeShards(spark,
-          if (old.byShard) rebuilt
-          else new ShardAlignedRDD(concat(Seq(old.snapshotGraphs(), rebuilt)),
-            Array.tabulate(numShards)(s => if (affected(s)) numShards + s else s)),
-          newRows)
-      } finally fresh.unpersist()
+      val base =
+        if (old.byShard) Right(readShardVectors(spark, old.rowsDir, old.meta, numShards))
+        else Left(old.snapshotGraphs())
+      writeShards(spark, rewriteShards(base, inputRows(newVectors, params),
+        spark.sparkContext.emptyRDD, params, numShards, check, report), newRows)
       check.verify()
       val (rebuiltMeta, builtDim) = report.result()
-      require(rebuiltMeta.map(_.sub_index_id).toSet == affected,
-        s"shards ${affectedSeq.sorted.mkString(", ")} were rebuilt, but their build " +
-          s"reported ${rebuiltMeta.map(_.sub_index_id).mkString(", ")}")
+      if (rebuiltMeta.isEmpty) throw new IllegalArgumentException("appendTo over an empty batch")
+      val rebuilt = rebuiltMeta.map(_.sub_index_id).toSet
       // kept shard directories: hardlinked whole
-      if (old.byShard) for (s <- old.meta.map(_.sub_index_id) if !affected(s))
+      if (old.byShard) for (s <- old.meta.map(_.sub_index_id) if !rebuilt(s))
         linkOrCopyTree(hconf, s"${old.rowsDir}/sub_index_id=$s", s"$newRows/sub_index_id=$s")
-      ((old.meta.filterNot(m => affected(m.sub_index_id)) ++ rebuiltMeta).sortBy(_.sub_index_id),
+      ((old.meta.filterNot(m => rebuilt(m.sub_index_id)) ++ rebuiltMeta).sortBy(_.sub_index_id),
         if (dim > 0) dim else builtDim)
     }
     load(spark, newPath)
@@ -1546,48 +1538,27 @@ object VectorIndex {
 
   private class ShardZero extends org.apache.spark.Partition { override def index: Int = 0 }
 
-  /** Partition stub for [[ShardAlignedRDD]]: target index == shard id,
-    * wrapping the parent partition that holds that shard. */
-  private class ShardAlignedPartition(
-      override val index: Int, val parent: org.apache.spark.Partition)
-    extends org.apache.spark.Partition
-
-  /** Narrow re-indexing so that partition index == shard id — the
-    * property the probe core relies on: [[shardCandidates]] reads its
+  /** A loaded snapshot's graphs ([[rehydrateShards]]), declared laid
+    * out by [[ShardPartitioner]]: partition index == shard id, the
+    * property the probe core relies on ([[shardCandidates]] reads its
     * partition index as the shard, or zips it with queries shuffled by
-    * [[ShardPartitioner]]:
-    * partition s reads partition `perm(s)` of the parent: a loaded
-    * snapshot's graphs ([[rehydrateShards]]), or the union of an old
-    * layout and its rebuilt shards ([[VectorIndex!.rewrite]],
-    * [[appendTo]] onto a flat snapshot). Purity is enforced per graph (a
-    * mis-packed parent partition would otherwise serve another shard's
-    * graph — silent corruption, so it is a hard error). */
-  private class ShardAlignedRDD(
-      parent: RDD[SubIndexGraph], perm: Array[Int])
-    extends RDD[SubIndexGraph](parent.context,
-      Seq(new org.apache.spark.NarrowDependency(parent) {
-        def getParents(p: Int): Seq[Int] = Seq(perm(p))
-      })) {
+    * that partitioner). Purity is enforced per graph (a mis-packed
+    * partition would otherwise serve another shard's graph — silent
+    * corruption, so it is a hard error). */
+  private class ShardAlignedRDD(parent: RDD[SubIndexGraph])
+    extends RDD[SubIndexGraph](parent) {
     override val partitioner: Option[org.apache.spark.Partitioner] =
-      Some(new ShardPartitioner(perm.length))
+      Some(new ShardPartitioner(parent.partitions.length))
     override protected def getPartitions: Array[org.apache.spark.Partition] =
-      Array.tabulate[org.apache.spark.Partition](perm.length)(s =>
-        new ShardAlignedPartition(s, firstParent[SubIndexGraph].partitions(perm(s))))
+      firstParent[SubIndexGraph].partitions
     override def compute(split: org.apache.spark.Partition,
-        ctx: org.apache.spark.TaskContext): Iterator[SubIndexGraph] = {
-      val p = split.asInstanceOf[ShardAlignedPartition]
-      val shardId = p.index
-      firstParent[SubIndexGraph].iterator(p.parent, ctx).map { g =>
-        require(g.shardId == shardId,
+        ctx: org.apache.spark.TaskContext): Iterator[SubIndexGraph] =
+      firstParent[SubIndexGraph].iterator(split, ctx).map { g =>
+        require(g.shardId == split.index,
           s"sharded layout violation: the graph of shard ${g.shardId} " +
-            s"appeared in the partition serving shard $shardId")
+            s"appeared in the partition serving shard ${split.index}")
         g
       }
-    }
-    override protected def getPreferredLocations(
-        split: org.apache.spark.Partition): Seq[String] =
-      firstParent[SubIndexGraph].preferredLocations(
-        split.asInstanceOf[ShardAlignedPartition].parent)
   }
 
   /** Write a shard-aligned layout (partition s holds shard s's graph or
@@ -1621,16 +1592,34 @@ object VectorIndex {
 
   /** The rows of a snapshot laid out by [[writeShards]], by shard:
     * partition s reads the files of `dir/sub_index_id=s/` whole, and the
-    * shard id is the partition index. One listing finds every shard's
-    * files and one file scan reads them all, with no query planned, so
-    * neither the driver's work nor the lineage each probe task carries
-    * grows with the shard count (a scan planned per shard costs ~65 ms
-    * of driver time and ~30 KB of lineage per shard). A shard without
-    * meta gets an empty partition, and so does one whose directory is
-    * missing: its graph then fails on the row count its meta promises
-    * ([[rehydrateShards]]), never serving a partial index. */
+    * shard id is the partition index ([[scanShards]]). */
   private[index] def readShards(spark: SparkSession, dir: String,
-      meta: Array[ShardMeta], numShards: Int): RDD[IndexRow] = {
+      meta: Array[ShardMeta], numShards: Int): RDD[IndexRow] =
+    scanShards(spark, dir, meta, numShards,
+      org.apache.spark.sql.types.StructType(rowSchema.filterNot(_.name == "sub_index_id")))
+      .mapPartitionsWithIndex((s, it) => it.map(storedRow(s, _)))
+
+  /** [[readShards]] pruned to the (id, embedding) columns: what a
+    * rewrite reads of a changed shard's stored rows. */
+  private def readShardVectors(spark: SparkSession, dir: String,
+      meta: Array[ShardMeta], numShards: Int): RDD[(Long, Array[Float])] =
+    scanShards(spark, dir, meta, numShards, org.apache.spark.sql.types.StructType(
+      rowSchema.filter(f => f.name == "global_id" || f.name == "embedding")))
+      .map(r => (r.getLong(0), r.getArray(1).toFloatArray()))
+
+  /** The `schema` columns of a snapshot's shard directories, partition s
+    * reading `dir/sub_index_id=s/`, and only once its rows are asked for.
+    * One listing finds every shard's files and one file scan reads them
+    * all, with no query planned, so neither the driver's work nor the
+    * lineage each task carries grows with the shard count (a scan planned
+    * per shard costs ~65 ms of driver time and ~30 KB of lineage per
+    * shard). A shard without meta gets an empty partition, and so does
+    * one whose directory is missing: its graph then fails on the row
+    * count its meta promises ([[rehydrateShards]]), never serving a
+    * partial index. */
+  private def scanShards(spark: SparkSession, dir: String, meta: Array[ShardMeta],
+      numShards: Int, schema: org.apache.spark.sql.types.StructType)
+      : RDD[org.apache.spark.sql.catalyst.InternalRow] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val files = mutable.Map.empty[String, Seq[org.apache.hadoop.fs.FileStatus]].withDefaultValue(Nil)
     val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
@@ -1647,10 +1636,8 @@ object VectorIndex {
     // its shard over minutes while it rehydrates the graph, and the
     // vectored path bounds each prefetched range at 300 s (measured at
     // the 100M decade: the probe died on a read timeout)
-    val read = org.apache.spark.sql.graft.GraftSqlBridge.readParquetGroups(spark,
-      org.apache.spark.sql.types.StructType(rowSchema.filterNot(_.name == "sub_index_id")),
-      groups, Map("parquet.hadoop.vectored.io.enabled" -> "false"))
-    read.mapPartitionsWithIndex((s, it) => it.map(storedRow(s, _)))
+    org.apache.spark.sql.graft.GraftSqlBridge.readParquetGroups(spark, schema, groups,
+      Map("parquet.hadoop.vectored.io.enabled" -> "false"))
   }
 
   /** Shard `shard`'s [[IndexRow]] from a row of its directory's files:
@@ -1803,7 +1790,7 @@ object VectorIndex {
     * against `meta`: a shard with rows must have a meta entry, and its
     * row count must be the one the entry records. */
   private def rehydrateShards(rows: RDD[IndexRow], params: IndexParams,
-      meta: Array[ShardMeta], numShards: Int): RDD[SubIndexGraph] = {
+      meta: Array[ShardMeta]): RDD[SubIndexGraph] = {
     val metaMap = meta.map(m => m.sub_index_id -> m).toMap
     new ShardAlignedRDD(rows.mapPartitionsWithIndex { (s, it) =>
       metaMap.get(s) match {
@@ -1815,7 +1802,7 @@ object VectorIndex {
           Iterator.empty
         case Some(m) => Iterator.single(rehydrateStreaming(params, m, m.n_vectors.toInt, it))
       }
-    }, Array.range(0, numShards))
+    })
   }
 
   /** Single-pass rehydration from an iterator: each IndexRow is copied

@@ -10,9 +10,9 @@ import graft.SparkSuite
   * the commit point.
   *  - A directory whose publish was rejected or failed part-way is
   *    refused by `load`; a stale `meta.json` never meets new rows.
-  *  - `appendTo` onto all 4 shards runs 3 jobs (affected-shard
-  *    discovery, the exchange, the write), and `buildTo` none after its
-  *    write.
+  *  - `appendTo` onto all 4 shards runs 1 job, its write, in which each
+  *    shard's task finds and rebuilds its own changes; `buildTo` runs
+  *    none after its write.
   *  - The published rows and meta equal [[VectorIndex.build]] over the
   *    union bit for bit.
   *  - `params.json` records the index dimension, and a snapshot written
@@ -93,7 +93,7 @@ class PublishSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("work counter: appendTo onto all 4 shards runs 3 jobs, and buildTo none after its write") {
+  test("work counter: appendTo onto all 4 shards runs 1 job, and buildTo none after its write") {
     withDir { dir =>
       val (built, buildWork) = workDuring(
         VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, s"$dir/g0"))
@@ -105,13 +105,13 @@ class PublishSpec extends AnyFunSuite with SparkSuite {
       val (appended, appendWork) = workDuring(VectorIndex.appendTo(spark, s"$dir/g0",
         frame(vectors(400L until 500L)), s"$dir/g1"))
       assert(appended.meta.length == 4 && appended.meta.map(_.n_vectors).sum == 500)
-      // affected-shard discovery, the exchange, the write
-      assert(appendWork.jobs <= 3, s"appendTo ran $appendWork")
+      // the write, whose tasks rebuild the shards their changes reach
+      assert(appendWork.jobs <= 1, s"appendTo ran $appendWork")
       appended.unpersist()
     }
   }
 
-  test("appendTo from a buildTo handle still live runs 3 jobs and persists nothing") {
+  test("appendTo from a buildTo handle still live runs 1 job and persists nothing") {
     withDir { dir =>
       // not unpersisted: a cache this handle registered lazily would be
       // filled by the append's read of g0
@@ -119,7 +119,7 @@ class PublishSpec extends AnyFunSuite with SparkSuite {
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       val (appended, work) = workDuring(VectorIndex.appendTo(spark, s"$dir/g0",
         frame(vectors(400L until 500L)), s"$dir/g1"))
-      assert(work.jobs <= 3, s"appendTo ran $work")
+      assert(work.jobs <= 1, s"appendTo ran $work")
       assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
         "appendTo left a persisted RDD")
       Seq(built, appended).foreach(_.unpersist())
@@ -197,7 +197,7 @@ class PublishSpec extends AnyFunSuite with SparkSuite {
       val (appended, work) = workDuring(VectorIndex.appendTo(spark, s"$dir/g0",
         frame(vectors(400L until 500L)), s"$dir/g1"))
       // one more job: the one-row read of the dimension
-      assert(work.jobs <= 4, s"appendTo ran $work")
+      assert(work.jobs <= 2, s"appendTo ran $work")
       assert(paramsText(s"$dir/g1").contains("\"dimension\":8"), paramsText(s"$dir/g1"))
       val full = VectorIndex.build(frame(vectors(0L until 500L)), params, 4)
       assert(appended.meta.toSeq == full.meta.toSeq && canon(appended) == canon(full))

@@ -19,9 +19,11 @@ object SparkSuite {
 
   /** Spark work counted by [[SparkSuite.workDuring]]. `inputBytes` is the
     * file bytes read through Hadoop's FileSystem: a task's
-    * `inputMetrics.bytesRead` would count cached blocks it reads too. */
+    * `inputMetrics.bytesRead` would count cached blocks it reads too.
+    * `sqlExecutions` counts the Dataset actions and writes that ran a
+    * planned query. */
   final case class Work(jobs: Int, stages: Int, shuffleWriteBytes: Long, shuffles: Int,
-      inputBytes: Long)
+      inputBytes: Long, sqlExecutions: Int)
 }
 
 trait SparkSuite {
@@ -38,7 +40,7 @@ trait SparkSuite {
   /** Run `f` and count the Spark work it started: jobs, SUBMITTED stages
     * (a stage whose output is already materialized is skipped, not
     * submitted), shuffle bytes written, shuffles (submitted stages
-    * that write one) and file bytes read. */
+    * that write one), file bytes read and SQL executions. */
   def workDuring[T](f: => T): (T, SparkSuite.Work) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -57,16 +59,29 @@ trait SparkSuite {
         if (e.taskMetrics != null)
           shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val q = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        executions.incrementAndGet()
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        executions.incrementAndGet()
+    }
     org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(l)
+    spark.listenerManager.register(q)
     val read0 = fileBytesRead
     val r = try {
       val r = f
       org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
       r
-    } finally spark.sparkContext.removeSparkListener(l)
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      spark.listenerManager.unregister(q)
+    }
     (r, SparkSuite.Work(jobs.get, stages.get, shuffled.get, shuffles.get,
-      fileBytesRead - read0))
+      fileBytesRead - read0, executions.get))
   }
 
   /** Bytes read so far through Hadoop's FileSystem, every scheme. */

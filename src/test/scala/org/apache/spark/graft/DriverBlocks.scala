@@ -19,6 +19,18 @@ object DriverBlocks {
       case _ => false
     }.nonEmpty
 
+  /** The ids of the broadcasts whose whole value the driver holds and
+    * `value` accepts. */
+  def broadcastsHolding(value: Any => Boolean): Set[Long] = {
+    val bm = SparkEnv.get.blockManager
+    bm.getMatchingBlockIds {
+      case BroadcastBlockId(_, field) => field.isEmpty
+      case _ => false
+    }.collect { case b: BroadcastBlockId
+      if bm.memoryStore.getValues(b).flatMap(_.nextOption()).exists(value) => b.broadcastId
+    }.toSet
+  }
+
   /** Drop partition `split` of RDD `rddId` from this JVM's block store,
     * as a lost executor would; true if it was held. */
   def dropRddBlock(rddId: Int, split: Int): Boolean = {
