@@ -663,14 +663,14 @@ object Queries {
   }
 
   // ---------------------------------------------------------------- v20_bucketed_build
-  /** Zero-shuffle index (re)build from a shard-bucketed corpus table —
-    * SCALE.md's "a bucketed corpus table would remove even that exchange"
-    * closed: the one-time `writeBucketedCorpus` lands each shard's rows in
-    * its own sorted bucket file, so every subsequent (re)build is a pure
-    * narrow scan → mapPartitions with NO Exchange and NO Sort
-    * (plan-guarded in PlanShapeSpec, kernel-equality-guarded in
-    * DehnswSpec). The probe contract is v6's: searchWidth=0 must equal the
-    * brute-force oracle exactly. */
+  /** Index (re)build from a shard-bucketed corpus table that moves no
+    * corpus row: the one-time `writeBucketedCorpus` lands each shard's
+    * rows in its own sorted bucket file, so every subsequent (re)build
+    * reads them by a narrow scan → mapPartitions with NO Exchange and NO
+    * Sort (the scan's plan is guarded in PlanShapeSpec, the kernel
+    * equality in DehnswSpec). The built graphs then move through one RDD
+    * shuffle that puts shard s in partition s. The probe contract is
+    * v6's: searchWidth=0 must equal the brute-force oracle exactly. */
   private val bucketedIdxCache = new java.util.concurrent.ConcurrentHashMap[String, VectorIndex]()
   private val corpusBucketed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -1728,7 +1728,7 @@ object Queries {
             ref = Some(FaceArtifact(s"$root/base",
               Map("pool" -> "30", "fetch" -> "scan")))))))
       FaceServer.serve(s, s"$root/snap", embQueries(s, dir), k = 10,
-        target = 0.99, cache = false)
+        target = 0.99)
         .withColumn("distance", round(col("distance"), 6))
         .orderBy(col("query_id"), col("rank"))
         .localCheckpoint(true) // eager: temp snapshot + store deleted below

@@ -39,8 +39,7 @@ object FaceServer {
     * face stages to `_faces_scratch` for the same reason). Graph faces
     * ignore it. */
   def serve(spark: SparkSession, snapPath: String, queries: DataFrame,
-      k: Int, target: Double, cache: Boolean = true,
-      scratch: String = null): DataFrame = {
+      k: Int, target: Double, scratch: String = null): DataFrame = {
     val cal = VectorIndex.readCalibration(spark, snapPath).getOrElse(
       sys.error(s"FaceServer: $snapPath has no calibration.json — run " +
         "calibrateWidthTo (and the faces bench) before face-serving"))
@@ -49,8 +48,7 @@ object FaceServer {
         s"recall $target (faces: ${cal.faces.map(f =>
           s"${f.face}@${f.param}=${f.recall}").mkString(", ")}) — " +
         "lower the target or measure more faces"))
-    serveFace(VectorIndex.load(spark, snapPath, cache), face, queries, k,
-      scratch)
+    serveFace(VectorIndex.load(spark, snapPath), face, queries, k, scratch)
   }
 
   /** Dispatch one specific measured face. Public so a server that

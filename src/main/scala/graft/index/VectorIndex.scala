@@ -131,10 +131,11 @@ case class WidthCalibration(searchWidth: Int, targetRecall: Double, k: Int,
 
 /** Distributed dehnsw index: shard == Spark partition (SURVEY §1.3).
   *
-  * Build: deterministic shard assignment (`global_id % numShards` — unlike
-  * the reference's insertion-order chunking, dehnsw.h:601, but equally
-  * deterministic and shuffle-friendly), graph built partition-locally in
-  * insertion order of ascending id. Parallel across shards — better than
+  * Build: an append onto empty shards. Deterministic shard assignment
+  * (`global_id % numShards` — unlike the reference's insertion-order
+  * chunking, dehnsw.h:601, but equally deterministic and
+  * shuffle-friendly), graph built partition-locally in insertion order
+  * of ascending id. Parallel across shards — better than
   * the reference, which builds shards sequentially.
   *
   * Query: broadcast the query batch, probe every shard (the *intended*
@@ -145,9 +146,9 @@ case class WidthCalibration(searchWidth: Int, targetRecall: Double, k: Int,
   * merge runs on the driver for small batches and as a shuffle for large
   * ones.
   *
-  * Scale notes: each task holds one shard's adjacency (size subIndexBound —
-  * pick it from executor memory); candidates merged are O(queries x
-  * shards x k), never O(rows).
+  * Scale notes: each task holds one shard's graph, about n / numShards
+  * rows (no build reads `subIndexBound`) — pick numShards from executor
+  * memory; candidates merged are O(queries x shards x k), never O(rows).
   */
 class VectorIndex private (
     val params: IndexParams,
@@ -477,9 +478,10 @@ class VectorIndex private (
   def remove(removeIds: DataFrame): VectorIndex =
     rewrite(VectorIndex.inputIds(removeIds), null)
 
-  /** The one shard-scoped rewrite behind [[append]], [[remove]] and LSM
-    * compaction: drop `removed` ids (null = none) and add `added` rows
-    * (null = none), both already transformed, in ONE job
+  /** The one shard-scoped rewrite behind [[VectorIndex.build]],
+    * [[append]], [[remove]] and LSM compaction: drop `removed` ids
+    * (null = none) and add `added` rows (null = none), both already
+    * transformed, in ONE job
     * ([[VectorIndex.rewriteShards]] over this [[probeLayout]]). Each
     * affected shard (it gains a surviving added id, or holds a removed
     * id) is rebuilt once; the others keep their graphs and meta. The
@@ -962,48 +964,19 @@ object VectorIndex {
     override def hashCode: Int = n
   }
 
-  /** The shard-assignment expression of the builds; the rewrite core's
+  /** The shard-assignment expression of a bucketed corpus
+    * ([[writeBucketedCorpus]]); the rewrite core's
     * `Math.floorMod(id, numShards)` must agree with it (divergence would
-    * route an added id away from the shard a build puts it in). */
+    * put a bucketed build's id in another shard than [[build]] does). */
   private[index] def shardOf(id: org.apache.spark.sql.Column, numShards: Int) =
     pmod(id, lit(numShards)).cast("int")
 
-  /** The build input laid out for the shard builds: (id, embedding, shard)
-    * rows, shard s in partition s (`repartitionById`: the shard id IS the
-    * partition, so every shard gets a task of its own, where a hash
-    * repartition packs several shards into one task), id-sorted. */
-  private def shardSorted(df: DataFrame, numShards: Int): Dataset[(Long, Array[Float], Int)] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("id").cast("long"), col("embedding"))
-      .withColumn("sub_index_id", shardOf(col("id"), numShards))
-      .repartitionById(numShards, col("sub_index_id"))
-      .sortWithinPartitions(col("sub_index_id"), col("id"))
-      .as[(Long, Array[Float], Int)]
-  }
-
-  /** The shard build of every distributed build ([[build]],
-    * [[buildTo]]): (id, embedding) rows → shard assignment
-    * (id % numShards) → one graph build per shard, in its own partition →
-    * an RDD whose partition s holds exactly shard s's graph, the layout
-    * the probes read and [[writeShards]] writes. An empty input, which
-    * Spark plans as a relation of no partitions, gives `numShards` empty
-    * ones. `report`, when given, sees every shard as it is built. */
-  private[index] def buildLayout(df: DataFrame, params: IndexParams,
-      numShards: Int, report: BuiltShards = null): RDD[SubIndexGraph] = {
-    val p = params
-    val built = shardSorted(df, numShards).rdd.mapPartitions(buildGrouped(_, p, report))
-    if (built.partitions.nonEmpty) built
-    else df.sparkSession.sparkContext.parallelize(Seq.empty[SubIndexGraph], numShards)
-  }
-
-  /** One partition of shard builds ([[buildShard]] per run of equal
-    * shard ids), each shard's meta added to `report` when given.
-    * A shard revisited after a different shard in the same
+  /** One partition of a bucketed build ([[buildShard]] per run of equal
+    * shard ids). A shard revisited after a different shard in the same
     * partition means the ordering contract is broken (two partial graphs
     * would silently share a shard id) — fail the task instead. */
   private def buildGrouped(it: Iterator[(Long, Array[Float], Int)],
-      p: IndexParams, report: BuiltShards = null): Iterator[SubIndexGraph] = {
+      p: IndexParams): Iterator[SubIndexGraph] = {
     // consecutive rows share sub_index_id after the sort. Dimension is
     // fixed at index creation (SURVEY §1.1): the partition's first row
     // sets it for every shard the partition builds.
@@ -1022,9 +995,7 @@ object VectorIndex {
         val r = bit.next()
         vecs += ((r._1, r._2))
       }
-      val g = buildShard(shardId, vecs, p, dim)
-      if (report != null) report.shards.add((metaOf(g), dim))
-      Iterator.single(g)
+      Iterator.single(buildShard(shardId, vecs, p, dim))
     }
   }
 
@@ -1032,8 +1003,9 @@ object VectorIndex {
     * or a removed id (`vec` null). */
   private final case class Change(id: Long, vec: Array[Float], removed: Boolean)
 
-  /** The one shard rewrite core, under [[VectorIndex!.rewrite]] (append,
-    * remove and LSM compaction) and [[appendTo]]. The `added` rows and
+  /** The one shard rewrite core, under [[VectorIndex!.rewrite]] (build,
+    * append, remove and LSM compaction), [[buildTo]] and [[appendTo]]; a
+    * build is the rewrite of `numShards` empty shards. The `added` rows and
     * `removed` ids, tagged, move through ONE shuffle keyed by shard
     * (`id % numShards`, [[ShardPartitioner]]), zipped with `base`, whose
     * partition s holds shard s: its graph (`Left`: an in-memory layout or
@@ -1097,11 +1069,11 @@ object VectorIndex {
   private[index] def vectorsOf(g: SubIndexGraph): Iterator[(Long, Array[Float])] =
     Iterator.range(0, g.count).map(o => (g.globalIds(o), g.vecAt(o)))
 
-  /** A caller's (id, embedding) rows, read once by one select and the
-    * API-boundary transform ([[IndexParams.transformCorpusVector]], as
-    * [[normalizeInput]] applies it to a build's input). The rows are
-    * taken off the planned query, not through `Dataset.rdd`, which Spark
-    * reports as an SQL execution of its own. */
+  /** A caller's (id, embedding) rows, a build's corpus or an append's
+    * batch, read once by one select and the API-boundary transform
+    * ([[IndexParams.transformCorpusVector]]). The rows are taken off the
+    * planned query, not through `Dataset.rdd`, which Spark reports as an
+    * SQL execution of its own. */
   private def inputRows(df: DataFrame, params: IndexParams): RDD[(Long, Array[Float])] = {
     val p = params
     df.select(col("id").cast("long"), col("embedding").cast("array<float>"))
@@ -1224,10 +1196,11 @@ object VectorIndex {
   private[index] def metaOf(g: SubIndexGraph): ShardMeta =
     ShardMeta(g.shardId, g.count, g.layerCount, g.entryOffset)
 
-  /** Build ONE shard's graph: the kernel loop of both build paths, the
-    * distributed per-partition build ([[buildGrouped]]) and the
-    * driver build of a small LSM generation ([[buildOnDriver]]). `vecs`
-    * must be id-ascending, the order the kernel is deterministic in, of
+  /** Build ONE shard's graph: the kernel loop of the rewrite core
+    * ([[rewriteShard]], under every build from a DataFrame and every
+    * append), the bucketed build ([[buildGrouped]]) and the driver build
+    * of a small LSM generation ([[buildOnDriver]]). `vecs` must be
+    * id-ascending, the order the kernel is deterministic in, of
     * dimension `dim` and finite: a NaN vector would enter every top-k of
     * its shard and never be evicted. */
   private[index] def buildShard(shardId: Int,
@@ -1330,13 +1303,14 @@ object VectorIndex {
   }
 
   /** User-supplied vectors transformed iff the params ask for an
-    * API-boundary transform (cosine normalization / MIPS augmentation) —
-    * applied ONLY to fresh API input (build/buildTo/append/bucketed
-    * corpus), never to internally recovered rows: re-applying a float
+    * API-boundary transform (cosine normalization / MIPS augmentation),
+    * as [[inputRows]] transforms a build's corpus: what
+    * [[buildAutoQuantized]] calibrates over. Only fresh API input is
+    * transformed, never internally recovered rows: re-applying a float
     * transform drifts its last bits, which would break the
     * append-rebuild == full-rebuild and save/load bit invariants. A
     * narrow typed map — adds no exchange anywhere. */
-  private[index] def normalizeInput(df: DataFrame, params: IndexParams): DataFrame =
+  private def normalizeInput(df: DataFrame, params: IndexParams): DataFrame =
     if (!params.transformsInput) df
     else {
       val spark = df.sparkSession
@@ -1350,23 +1324,32 @@ object VectorIndex {
 
   /** Bulk build (reference O1 insert loop, parallelized across shards:
     * one task per shard). Input df must have columns (id LONG, embedding
-    * ARRAY<FLOAT>). The corpus moves through ONE exchange, which puts
-    * shard s in partition s; the built graphs stay there, cached once at
-    * memory and disk as the probe layout, so no probe moves or rebuilds
-    * them. Builds eagerly: the pass that fills the cache reads the shard
-    * meta off the graphs. */
-  def build(df: DataFrame, params: IndexParams, numShards: Int): VectorIndex =
-    inMemory(df.sparkSession, params, numShards,
-      buildLayout(normalizeInput(df, params), params, numShards))
+    * ARRAY<FLOAT>). A build is an append onto `numShards` empty shards
+    * ([[VectorIndex!.rewrite]]): one job of one shuffle
+    * ([[rewriteShards]]), no query planned. Shard s is built in
+    * partition s, and its graph stays there, cached once at memory and
+    * disk as the probe layout. A repeated id is rejected as an append
+    * rejects one ([[AppendCheck]]), leaving nothing cached. */
+  def build(df: DataFrame, params: IndexParams, numShards: Int): VectorIndex = {
+    val spark = df.sparkSession
+    fromGraphs(spark, params, numShards, emptyLayout(spark, numShards), Array.empty)
+      .rewrite(null, inputRows(df, params))
+  }
+
+  /** `numShards` empty shards: the base a build rewrites. */
+  private def emptyLayout(spark: SparkSession, numShards: Int): RDD[SubIndexGraph] =
+    spark.sparkContext.parallelize(Seq.empty[SubIndexGraph], numShards)
 
   /** Build STRAIGHT TO STORAGE: index rows stream from the build tasks
     * (one per shard) directly into compressed parquet, one file per shard
     * under `rows/sub_index_id=s/` ([[writeShards]]) — no cluster-wide
     * cache, no serialized eviction spill; exactly one on-disk copy.
-    * The build tasks report each shard's meta ([[BuiltShards]]), so
-    * nothing is read back: two jobs, the exchange and the write. The
-    * sidecars follow, `meta.json` last ([[publish]]). No write task puts
-    * a block into the block store.
+    * The write's tasks build the shards as [[build]] does
+    * ([[rewriteShards]] over empty shards) and report each shard's meta
+    * ([[BuiltShards]]), so nothing is read back: one job, the write. The
+    * sidecars follow, `meta.json` last ([[publish]]), so a repeated id,
+    * rejected after the write ([[AppendCheck]]), leaves no snapshot. No
+    * write task puts a block into the block store.
     * Returns the LOADED index over that parquet, whose first probe (or
     * [[VectorIndex!.optimize]]) reads each shard's directory once,
     * straight into its resident graph.
@@ -1381,10 +1364,12 @@ object VectorIndex {
   def buildTo(df: DataFrame, params: IndexParams, numShards: Int,
       path: String): VectorIndex = {
     val spark = df.sparkSession
+    val check = AppendCheck(spark, -1)
     val report = BuiltShards(spark)
     publish(spark, path, params, numShards, java.util.UUID.randomUUID().toString) {
-      writeShards(spark, buildLayout(normalizeInput(df, params), params, numShards, report),
-        s"$path/rows")
+      writeShards(spark, rewriteShards(Left(emptyLayout(spark, numShards)), inputRows(df, params),
+        spark.sparkContext.emptyRDD, params, numShards, check, report), s"$path/rows")
+      check.verify()
       report.result()
     }
     load(spark, path)
@@ -1658,12 +1643,13 @@ object VectorIndex {
   }
 
   /** One-time write of a shard-bucketed corpus table: rows land in
-    * `numShards` buckets keyed by `sub_index_id` (the same `id % numShards`
-    * assignment [[build]] uses — [[shardOf]] is the single source of
-    * truth), each bucket one file sorted by (sub_index_id, id). A build
-    * from this table ([[buildFromBucketed]]) then needs NO Exchange and NO
-    * Sort — at 100 TB this is the difference between re-shuffling the
-    * whole corpus on every (re)build and a pure narrow scan. The
+    * `numShards` buckets keyed by `sub_index_id` ([[shardOf]]: the same
+    * `id % numShards` assignment [[build]] makes), each bucket one file
+    * sorted by (sub_index_id, id). A build from this table
+    * ([[buildFromBucketed]]) then moves NO corpus row and sorts nothing —
+    * at 100 TB this is the difference between re-shuffling the whole
+    * corpus on every (re)build and a narrow scan whose one exchange
+    * moves the built graphs. The
     * pre-write repartition matches the bucket hash, so each task emits
     * exactly one bucket file (no tasks x buckets small-file explosion). */
   def writeBucketedCorpus(df: DataFrame, table: String, numShards: Int): Unit = {

@@ -670,14 +670,11 @@ object HybridRetrieval {
     * @param queriesText (query_id, text) — the lexical leg's batch
     * @param queriesEmb (query_id, embedding) — the dense leg's batch
     * @param n per-leg ranking depth; k fused output depth
-    * @param cacheIndex cache the vector index rows (long-lived server);
-    *   default off — the bounded-probe, disk-resident serving shape
     */
   def serveFromSnapshots(spark: org.apache.spark.sql.SparkSession,
       vectorIndexPath: String, bm25IndexPath: String,
       queriesText: DataFrame, queriesEmb: DataFrame,
-      n: Int, k: Int, searchWidth: Int,
-      cacheIndex: Boolean = false): DataFrame = {
+      n: Int, k: Int, searchWidth: Int): DataFrame = {
     // the CalibratedWidth sentinel: default to the snapshot's persisted
     // operating point (calibrateWidthTo), exact scan when never calibrated
     val sw =
@@ -685,7 +682,7 @@ object HybridRetrieval {
         graft.index.VectorIndex.readCalibration(spark, vectorIndexPath)
           .map(_.searchWidth).getOrElse(0)
       else searchWidth
-    val vidx = graft.index.VectorIndex.load(spark, vectorIndexPath, cache = cacheIndex)
+    val vidx = graft.index.VectorIndex.load(spark, vectorIndexPath)
     if (isSplitSnapshot(spark, bm25IndexPath))
       serveFromLoaded(vidx, openBm25Index(spark, bm25IndexPath),
         queriesText, queriesEmb, n, k, sw)

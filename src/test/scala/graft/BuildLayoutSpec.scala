@@ -190,6 +190,39 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("work counter: build runs 1 job of 1 shuffle and no query; buildTo 1 job, its write") {
+    val dir = java.nio.file.Files.createTempDirectory("build_layout_work_").toString
+    try {
+      val corpus = frame(vectors(0L until 400L))
+      val (idx, build) = workDuring(VectorIndex.build(corpus, params, numShards = 4))
+      assert(build.jobs == 1 && build.shuffles == 1 && build.sqlExecutions == 0,
+        s"build ran $build")
+      idx.unpersist()
+      val (snap, buildTo) = workDuring(VectorIndex.buildTo(corpus, params, 4, s"$dir/snap"))
+      assert(buildTo.jobs == 1 && buildTo.sqlExecutions == 1, s"buildTo ran $buildTo")
+      assert(snap.meta.map(_.n_vectors).sum == 400)
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
+  test("a corpus that repeats an id is rejected by build and buildTo as an append is") {
+    val dir = java.nio.file.Files.createTempDirectory("build_layout_dup_").toString
+    try {
+      // ids 7 and 42 twice: one clash each, in two shards
+      val corpus = frame(vectors((0L until 100L) ++ Seq(7L, 42L)))
+      val message = "appended ids must be disjoint from the index and unique (2 clashes)"
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val built = intercept[IllegalArgumentException](VectorIndex.build(corpus, params, 4))
+      assert(built.getMessage.endsWith(message), built.getMessage)
+      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+        "a rejected build left a persisted RDD")
+      val published = intercept[IllegalArgumentException](
+        VectorIndex.buildTo(corpus, params, 4, s"$dir/snap"))
+      assert(published.getMessage.endsWith(message), published.getMessage)
+      assert(!new java.io.File(s"$dir/snap/meta.json").exists, "a rejected buildTo wrote meta.json")
+      assert(!new java.io.File(s"$dir/snap/rows").exists, "a rejected buildTo left its rows")
+    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
   test("a clashing or wrongly-sized append is rejected and leaves nothing cached") {
     import spark.implicits._
     val idx = VectorIndex.build(frame(vectors(0L until 100L)), params, numShards = 4)

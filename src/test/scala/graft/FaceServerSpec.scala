@@ -68,21 +68,18 @@ class FaceServerSpec extends AnyFunSuite with SparkSuite {
         df.select("query_id", "rank", "neighbor_id")
           .as[(Long, Int, Long)].collect().toSet
       // target 0.99 → only exact qualifies
-      assert(pairs(FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.99,
-          cache = false))
+      assert(pairs(FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.99))
         === pairs(idx.query(qdf, 10, 0)))
       // target 0.95 → refine (20 ms) beats exact (100 ms)
-      assert(pairs(FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.95,
-          cache = false))
+      assert(pairs(FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.95))
         === pairs(idx.queryRefinedFromStore(qdf, s"$dir/base", 10,
           pool = 40, searchWidth = 4)))
       // target 0.85 → beam (10 ms) is cheapest
-      assert(pairs(FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.85,
-          cache = false))
+      assert(pairs(FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.85))
         === pairs(idx.query(qdf, 10, 8)))
       // no face meets 0.999+ → clear error naming the faces
       val none = intercept[RuntimeException] {
-        FaceServer.serve(spark, s"$dir/snap", qdf, 10, 1.1, cache = false)
+        FaceServer.serve(spark, s"$dir/snap", qdf, 10, 1.1)
       }
       assert(none.getMessage.contains("no measured face"))
       // a refine face WITHOUT its structured artifact must not silently
@@ -90,12 +87,12 @@ class FaceServerSpec extends AnyFunSuite with SparkSuite {
       VectorIndex.writeCalibration(spark, s"$dir/snap", cal0.copy(faces =
         Seq(FacePoint("refine", 4, 0.98, 20.0, "pool=40 (pre-structured)"))))
       val noRef = intercept[RuntimeException] {
-        FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.95, cache = false)
+        FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.95)
       }
       assert(noRef.getMessage.contains("no structured artifact"))
       // an uncalibrated snapshot is an error, not a default serve
       val bare = intercept[RuntimeException] {
-        FaceServer.serve(spark, s"$dir/nothere", qdf, 10, 0.9, cache = false)
+        FaceServer.serve(spark, s"$dir/nothere", qdf, 10, 0.9)
       }
       assert(bare.getMessage.contains("calibration"))
     } finally graft.streaming.StreamingOps.deleteRecursively(dir)
@@ -162,8 +159,7 @@ class FaceServerSpec extends AnyFunSuite with SparkSuite {
         FacePoint("ivfpq_global", numCents, 1.0, 50.0, "spec",
           Some(FaceArtifact(snapDir,
             Map("base" -> s"$dir/base", "pool" -> s"$n")))))))
-      val served = FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.99,
-          cache = false)
+      val served = FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.99)
         .select("query_id", "rank", "neighbor_id")
         .as[(Long, Int, Long)].collect().toSet
       assert(served === want, "ivfpq face must serve codes+model+store")
@@ -172,7 +168,7 @@ class FaceServerSpec extends AnyFunSuite with SparkSuite {
         FacePoint("ivfpq_global", numCents, 1.0, 50.0, "spec",
           Some(FaceArtifact(snapDir, Map("pool" -> s"$n")))))))
       val noBase = intercept[RuntimeException] {
-        FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.99, cache = false)
+        FaceServer.serve(spark, s"$dir/snap", qdf, 10, 0.99)
       }
       assert(noBase.getMessage.contains("'base' knob"))
     } finally {

@@ -12,7 +12,7 @@ import graft.SparkSuite
   *    refused by `load`; a stale `meta.json` never meets new rows.
   *  - `appendTo` onto all 4 shards runs 1 job, its write, in which each
   *    shard's task finds and rebuilds its own changes; `buildTo` runs
-  *    none after its write.
+  *    1, its write, whose tasks build the shards.
   *  - The published rows and meta equal [[VectorIndex.build]] over the
   *    union bit for bit.
   *  - `params.json` records the index dimension, and a snapshot written
@@ -93,12 +93,12 @@ class PublishSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("work counter: appendTo onto all 4 shards runs 1 job, and buildTo none after its write") {
+  test("work counter: appendTo onto all 4 shards runs 1 job, and buildTo 1, its write") {
     withDir { dir =>
       val (built, buildWork) = workDuring(
         VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, s"$dir/g0"))
-      // the exchange that lays shard s in partition s, then the write
-      assert(buildWork.jobs <= 2, s"buildTo ran $buildWork")
+      // the write, whose tasks build the shards their rows reach
+      assert(buildWork.jobs <= 1, s"buildTo ran $buildWork")
       // its cached rows would be filled by the append's read of g0
       built.unpersist()
       // contiguous ids touch every shard
@@ -126,11 +126,11 @@ class PublishSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("work counter: buildTo then optimize runs 3 jobs: the exchange, the write, one graph read") {
+  test("work counter: buildTo then optimize runs 2 jobs: the write, one graph read") {
     withDir { dir =>
       val (idx, work) = workDuring(
         VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, s"$dir/g0").optimize())
-      assert(work.jobs <= 3, s"buildTo(...).optimize() ran $work")
+      assert(work.jobs <= 2, s"buildTo(...).optimize() ran $work")
       idx.unpersist()
     }
   }
