@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *    just the batch — work is O(batch) and the sealed base is untouched
   *    (object-identity guaranteed, spec-gated). A batch that fits one
   *    generation shard (`genShardSize`) and at most
-  *    [[LsmVectorIndex.DriverBuildRows]] rows is collected once and its
+  *    [[LsmVectorIndex.DriverBuildRows]] rows is read once and its
   *    graph built on the DRIVER and broadcast as one driver-held
   *    partition, the probe layout; a larger batch is built by the
   *    distributed build, one generation shard per `genShardSize`
@@ -108,9 +108,10 @@ final class LsmVectorIndex private (
     * threshold. O(batch) work — the base and prior generations are reused
     * as-is.
     *
-    * One bounded collect (`limit(bound + 1)`, `bound` the smaller of
-    * `genShardSize` and [[LsmVectorIndex.DriverBuildRows]]) picks the
-    * path:
+    * One bounded read of at most `bound + 1` rows, `bound` the smaller
+    * of `genShardSize` and [[LsmVectorIndex.DriverBuildRows]], through
+    * the plan `batch` already holds ([[VectorIndex.takeVectors]]: no
+    * query is planned for it) picks the path:
     *  - a batch of at most `bound` rows is validated and built ON
     *    THE DRIVER ([[VectorIndex.buildOnDriver]]): the same kernel loop
     *    a one-shard build task runs, so no parallelism is lost, and no
@@ -118,16 +119,14 @@ final class LsmVectorIndex private (
     *    partition that its first probe reads without an exchange;
     *  - a larger batch is cached, validated in one aggregation and built
     *    distributed, `genShardSize` vectors per generation shard, after
-    *    a wasted collect of at most `DriverBuildRows + 1` rows.
+    *    a wasted read of at most `DriverBuildRows + 1` rows.
     * Either way the batch is rejected, naming an id, when an id is
     * missing or repeated, or an embedding is missing, non-finite or of
     * another dimension than the index's. */
   def ingest(batch: DataFrame): LsmVectorIndex = {
     val spark = batch.sparkSession
-    val input = batch.select(col("id").cast("long"), col("embedding"))
     val bound = math.min(genShardSize, LsmVectorIndex.DriverBuildRows.toLong).toInt
-    val head = input.limit(bound + 1).collect()
-      .map(r => (r.getAs[java.lang.Long](0), VectorIndex.floatsAt(r, 1)))
+    val head = VectorIndex.takeVectors(batch, "id", bound + 1)
     if (head.isEmpty) return this
     val dim = inputDim
     val gen =
@@ -137,7 +136,7 @@ final class LsmVectorIndex private (
         VectorIndex.buildOnDriver(spark, head
           .map { case (id, v) => (id.longValue, p.transformCorpusVector(v)) }
           .sortBy(_._1).toIndexedSeq, p)
-      } else buildDistributed(input, dim)
+      } else buildDistributed(batch.select(col("id").cast("long"), col("embedding")), dim)
     val next = new LsmVectorIndex(
       base, generations :+ gen, compactThreshold, genShardSize, ownsBase,
       tombstones, deleteThreshold, asyncPending, tombstoneCopy)

@@ -6,6 +6,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge
 
 import graft.functions.DistanceMetric
 import graft.operators.{TopK, TopKBuffer}
@@ -200,17 +201,23 @@ class VectorIndex private (
     * connected-component walk); > 0 = ANN beam with early termination.
     * Returns (query_id, rank, neighbor_id, distance).
     *
-    * Routing: one `limit(maxBatch + 1)` collect. A batch of at most
-    * `maxBatch` queries is answered EAGERLY, before this returns: one
-    * Spark job probes every shard, each task ships at most k candidates
-    * per query, and the driver merges them into the final top-k
-    * ([[VectorIndex.probeNow]]). The result is a local relation, so
-    * collecting it runs no further job. The driver then holds at most
-    * `maxBatch` query vectors and `maxBatch × k` result rows. The batch
-    * is validated there first: a missing, ragged or non-finite query
-    * vector throws an IllegalArgumentException naming its query id. A
-    * larger batch never transits the driver beyond that collect and is
-    * answered lazily by the driverless shuffled probe
+    * Routing: at most `maxBatch + 1` query rows are read through the
+    * plan `queries` already holds ([[VectorIndex.takeVectors]]), so a
+    * call plans no query of its own; `query_id` and `embedding` resolve
+    * as `col` resolves them, and `query_id` is cast as `cast("long")`
+    * casts it. The read takes every column of `queries` as its plan
+    * produces them: pass only the two columns when others are wide.
+    * A batch of at most `maxBatch` queries is answered
+    * EAGERLY, before this returns: one Spark job probes every shard,
+    * each task ships at most k candidates per query, and the driver
+    * merges them into the final top-k ([[VectorIndex.probeNow]]). The
+    * result is a local relation, so collecting it runs no further job.
+    * The driver then holds at most `maxBatch` query vectors and
+    * `maxBatch × k` result rows. The batch is validated there first: a
+    * null query_id, or a missing, ragged or non-finite query vector,
+    * throws an IllegalArgumentException (naming the query id where there
+    * is one). A larger batch never transits the driver beyond that read
+    * and is answered lazily by the driverless shuffled probe
     * ([[VectorIndex.probeDistributed]]), whose tasks reject such a vector
     * by id. */
   def query(queries: DataFrame, k: Int, searchWidth: Int, maxBatch: Int = 100000): DataFrame =
@@ -569,39 +576,63 @@ object VectorIndex {
     (hits.toMap.withDefaultValue(0), gt.size)
   }
 
-  /** A local (query_id, rank, neighbor_id, distance) relation. */
+  /** A local (query_id, rank, neighbor_id, distance) relation over
+    * rows of (Long, Int, Long, Double), wrapped as they are. */
   private[index] def resultFrame(spark: SparkSession,
-      rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
     import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("query_id", LongType, nullable = false),
-      StructField("rank", IntegerType, nullable = false),
-      StructField("neighbor_id", LongType, nullable = false),
-      StructField("distance", DoubleType, nullable = false))))
+    GraftSqlBridge.dataFrame(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(StructType(Seq(
+        StructField("query_id", LongType, nullable = false),
+        StructField("rank", IntegerType, nullable = false),
+        StructField("neighbor_id", LongType, nullable = false),
+        StructField("distance", DoubleType, nullable = false)))), rows))
   }
 
-  /** Collect at most `maxBatch + 1` rows of a query relation: the batch,
+  /** Read at most `maxBatch + 1` queries ([[takeVectors]]): the batch,
     * validated and sorted by id, when it holds at most `maxBatch`
     * queries; None when it is larger (the caller then probes without the
-    * driver). */
+    * driver). A query without a query_id is rejected. */
   private[index] def routeBatch(queries: DataFrame, maxBatch: Int)
       : Option[Array[(Long, Array[Float])]] = {
-    val head = queries
-      .select(col("query_id").cast("long"), col("embedding"))
-      .limit(maxBatch + 1).collect()
-      .map(r => (r.getLong(0), floatsAt(r, 1)))
+    val head = takeVectors(queries, "query_id", maxBatch + 1)
     if (head.length > maxBatch) None
     else {
-      val batch = head.sortBy(_._1)
+      val unnamed = head.count(_._1 == null)
+      require(unnamed == 0, s"queries must carry a query_id ($unnamed without)")
+      val batch = head.map { case (id, v) => (id.longValue, v) }.sortBy(_._1)
       validateQueries(batch)
       Some(batch)
     }
   }
 
-  /** Field `i` of a collected row as a float array; null stays null. */
-  private[index] def floatsAt(r: org.apache.spark.sql.Row, i: Int): Array[Float] =
-    if (r.isNullAt(i)) null else r.getSeq[Float](i).toArray
+  /** The first `n` rows of `df` as (id, embedding) pairs, read through
+    * the plan its Dataset already holds ([[GraftSqlBridge.take]]), so no
+    * query is planned per call. `idColumn` and `embedding` resolve as
+    * `col` resolves them; the id is cast as `cast("long")` casts it, and
+    * a null id or embedding stays null. An embedding that is not
+    * array<float> is rejected before any row is read. The one trade-off:
+    * the read takes `df`'s columns as its plan produces them, with no
+    * pruning of extra columns. */
+  private[index] def takeVectors(df: DataFrame, idColumn: String, n: Int)
+      : Array[(java.lang.Long, Array[Float])] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
+    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
+    val conf = df.sparkSession.sessionState.conf
+    val id = Cast(GraftSqlBridge.boundColumn(df, idColumn), LongType,
+      Some(conf.sessionLocalTimeZone), EvalMode.fromSQLConf(conf))
+    require(id.checkInputDataTypes().isSuccess,
+      s"$idColumn of type ${id.child.dataType.simpleString} cannot be cast to bigint")
+    val emb = GraftSqlBridge.boundColumn(df, "embedding")
+    emb.dataType match {
+      case ArrayType(FloatType, _) =>
+      case t => throw new IllegalArgumentException(s"embedding must be array<float>, not ${t.simpleString}")
+    }
+    val j = emb.ordinal
+    GraftSqlBridge.take(df, n).map { r =>
+      (id.eval(r).asInstanceOf[java.lang.Long], if (r.isNullAt(j)) null else r.getArray(j).toFloatArray())
+    }
+  }
 
   /** Reject a driver-held batch holding a query vector [[checkQuery]]
     * rejects, or one whose length differs from the batch's first. */
@@ -730,7 +761,7 @@ object VectorIndex {
     }
     resultFrame(spark, qids.indices.flatMap { i =>
       bufs(i).sortedPairs.iterator.zipWithIndex.map {
-        case ((d, id), r) => org.apache.spark.sql.Row(qids(i), r + 1, id, d)
+        case ((d, id), r) => org.apache.spark.sql.catalyst.InternalRow(qids(i), r + 1, id, d)
       }
     })
   }

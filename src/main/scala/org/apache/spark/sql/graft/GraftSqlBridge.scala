@@ -26,6 +26,32 @@ object GraftSqlBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The first `n` rows of `df`, read through the QueryExecution its
+    * Dataset already holds (`executeTake` under one SQL execution, as
+    * `Dataset.collect` runs its plan): no query is analysed, optimized
+    * or planned here, and once `df`'s own plan was planned, none at all.
+    * A local relation is read with no job; a larger plan is scanned a
+    * few partitions at a time, scaling up as a `limit(n)` does. The rows
+    * hold every column of `df`, in its order: nothing is pruned. */
+  def take(df: org.apache.spark.sql.DataFrame, n: Int): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("take"))(
+      qe.executedPlan.executeTake(n))
+  }
+
+  /** Column `name` of `df`, bound to the rows [[take]] returns. It is
+    * resolved as `col(name)` resolves it, with the session's resolver
+    * (case-insensitive by default); a missing column throws the same
+    * AnalysisException, and reads no row. */
+  def boundColumn(df: org.apache.spark.sql.DataFrame, name: String)
+      : org.apache.spark.sql.catalyst.expressions.BoundReference = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val a = ds.resolve(name)
+    val i = ds.queryExecution.analyzed.output.indexWhere(_.exprId == a.exprId)
+    if (i < 0) throw new IllegalArgumentException(s"$name is not a column of ${ds.schema.simpleString}")
+    org.apache.spark.sql.catalyst.expressions.BoundReference(i, a.dataType, nullable = true)
+  }
+
   /** `rdd`'s objects as rows of `enc`'s schema, declared sorted by
     * `column` within each partition (the caller's guarantee; it is not
     * checked), so a plan that requires that order, such as a write

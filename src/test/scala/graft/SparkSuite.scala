@@ -14,16 +14,30 @@ object SparkSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    org.apache.spark.sql.graft.GraftSqlBridge.addOptimizerRule(s, OptimizerRuns)
     s
+  }
+
+  /** A no-op optimizer rule that counts its applications: one per
+    * optimization of a plan on the suite session. */
+  object OptimizerRuns extends org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+    val count = new java.util.concurrent.atomic.AtomicLong(0)
+    def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+        : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+      count.incrementAndGet()
+      plan
+    }
   }
 
   /** Spark work counted by [[SparkSuite.workDuring]]. `inputBytes` is the
     * file bytes read through Hadoop's FileSystem: a task's
     * `inputMetrics.bytesRead` would count cached blocks it reads too.
     * `sqlExecutions` counts the Dataset actions and writes that ran a
-    * planned query. */
+    * planned query, and `optimizerRuns` the plans optimized on the suite
+    * session ([[SparkSuite.OptimizerRuns]]). */
   final case class Work(jobs: Int, stages: Int, shuffleWriteBytes: Long, shuffles: Int,
-      inputBytes: Long, sqlExecutions: Int)
+      inputBytes: Long, sqlExecutions: Int, optimizerRuns: Long)
 }
 
 trait SparkSuite {
@@ -40,7 +54,8 @@ trait SparkSuite {
   /** Run `f` and count the Spark work it started: jobs, SUBMITTED stages
     * (a stage whose output is already materialized is skipped, not
     * submitted), shuffle bytes written, shuffles (submitted stages
-    * that write one), file bytes read and SQL executions. */
+    * that write one), file bytes read, SQL executions and optimizer
+    * runs. */
   def workDuring[T](f: => T): (T, SparkSuite.Work) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -72,6 +87,7 @@ trait SparkSuite {
     spark.sparkContext.addSparkListener(l)
     spark.listenerManager.register(q)
     val read0 = fileBytesRead
+    val optimized0 = SparkSuite.OptimizerRuns.count.get
     val r = try {
       val r = f
       org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
@@ -81,7 +97,7 @@ trait SparkSuite {
       spark.listenerManager.unregister(q)
     }
     (r, SparkSuite.Work(jobs.get, stages.get, shuffled.get, shuffles.get,
-      fileBytesRead - read0, executions.get))
+      fileBytesRead - read0, executions.get, SparkSuite.OptimizerRuns.count.get - optimized0))
   }
 
   /** Bytes read so far through Hadoop's FileSystem, every scheme. */
