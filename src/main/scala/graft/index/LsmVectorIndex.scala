@@ -108,10 +108,12 @@ final class LsmVectorIndex private (
     * threshold. O(batch) work — the base and prior generations are reused
     * as-is.
     *
-    * One bounded read of at most `bound + 1` rows, `bound` the smaller
-    * of `genShardSize` and [[LsmVectorIndex.DriverBuildRows]], through
-    * the plan `batch` already holds ([[VectorIndex.takeVectors]]: no
-    * query is planned for it) picks the path:
+    * One bounded read that keeps at most `bound + 1` rows, `bound` the
+    * smaller of `genShardSize` and [[LsmVectorIndex.DriverBuildRows]],
+    * through the plan `batch` already holds ([[VectorIndex.takeVectors]]:
+    * no query is planned for it; one job when `batch` has at most 4
+    * partitions and `bound` rows, none for a local relation) picks the
+    * path:
     *  - a batch of at most `bound` rows is validated and built ON
     *    THE DRIVER ([[VectorIndex.buildOnDriver]]): the same kernel loop
     *    a one-shard build task runs, so no parallelism is lost, and no
@@ -119,7 +121,9 @@ final class LsmVectorIndex private (
     *    partition that its first probe reads without an exchange;
     *  - a larger batch is cached, validated in one aggregation and built
     *    distributed, `genShardSize` vectors per generation shard, after
-    *    a wasted read of at most `DriverBuildRows + 1` rows.
+    *    a wasted read that moves at most `bound + 1` rows plus one per
+    *    task to the driver ([[GraftSqlBridge.take]] states the one
+    *    exception).
     * Either way the batch is rejected, naming an id, when an id is
     * missing or repeated, or an embedding is missing, non-finite or of
     * another dimension than the index's. */
@@ -383,8 +387,9 @@ final class LsmVectorIndex private (
 object LsmVectorIndex {
   /** The most rows [[LsmVectorIndex.ingest]] builds on the driver; a
     * smaller `genShardSize` bounds it further. A batch over it is built
-    * distributed, after a collect of at most this many rows plus one:
-    * about 2 MB of 64-d vectors, 25 MB of 768-d ones. */
+    * distributed, after a read that moves at most this many rows plus
+    * one, and one more per task: about 2 MB of 64-d vectors, 25 MB of
+    * 768-d ones. */
   private[graft] val DriverBuildRows: Int = 8192
 
   /** The (id, embedding) rows of `gens` (null if none), read off their

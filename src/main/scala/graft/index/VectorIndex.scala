@@ -201,13 +201,17 @@ class VectorIndex private (
     * connected-component walk); > 0 = ANN beam with early termination.
     * Returns (query_id, rank, neighbor_id, distance).
     *
-    * Routing: at most `maxBatch + 1` query rows are read through the
-    * plan `queries` already holds ([[VectorIndex.takeVectors]]), so a
-    * call plans no query of its own; `query_id` and `embedding` resolve
-    * as `col` resolves them, and `query_id` is cast as `cast("long")`
-    * casts it. The read takes every column of `queries` as its plan
-    * produces them: pass only the two columns when others are wide.
-    * A batch of at most `maxBatch` queries is answered
+    * Routing: one bounded read of the plan `queries` already holds
+    * ([[VectorIndex.takeVectors]]) keeps every query row when there are
+    * at most `maxBatch`, so a call plans no query of its own: no job for
+    * a local relation, one for a relation of at most 4 partitions, and
+    * at most `maxBatch + 1` rows plus one per task moved to the driver
+    * ([[GraftSqlBridge.take]] states the bound and its one exception).
+    * `query_id` and `embedding` resolve as `col` resolves them, and
+    * `query_id` is cast as `cast("long")` casts it. The read takes every
+    * column of `queries` as its plan produces them: pass only the two
+    * columns when others are wide. A batch of at most `maxBatch`
+    * queries is answered
     * EAGERLY, before this returns: one Spark job probes every shard,
     * each task ships at most k candidates per query, and the driver
     * merges them into the final top-k ([[VectorIndex.probeNow]]). The
@@ -589,13 +593,14 @@ object VectorIndex {
         StructField("distance", DoubleType, nullable = false)))), rows))
   }
 
-  /** Read at most `maxBatch + 1` queries ([[takeVectors]]): the batch,
-    * validated and sorted by id, when it holds at most `maxBatch`
-    * queries; None when it is larger (the caller then probes without the
-    * driver). A query without a query_id is rejected. */
+  /** Read at most `maxBatch + 1` queries ([[takeVectors]]; at most
+    * `Int.MaxValue`): the batch, validated and sorted by id, when it
+    * holds at most `maxBatch` queries; None when it is larger (the
+    * caller then probes without the driver). A query without a query_id
+    * is rejected. */
   private[index] def routeBatch(queries: DataFrame, maxBatch: Int)
       : Option[Array[(Long, Array[Float])]] = {
-    val head = takeVectors(queries, "query_id", maxBatch + 1)
+    val head = takeVectors(queries, "query_id", math.min(maxBatch + 1L, Int.MaxValue).toInt)
     if (head.length > maxBatch) None
     else {
       val unnamed = head.count(_._1 == null)
@@ -606,15 +611,17 @@ object VectorIndex {
     }
   }
 
-  /** The first `n` rows of `df` as (id, embedding) pairs, read through
-    * the plan its Dataset already holds ([[GraftSqlBridge.take]]), so no
-    * query is planned per call. `idColumn` and `embedding` resolve as
-    * `col` resolves them; the id is cast as `cast("long")` casts it, and
-    * a null id or embedding stays null. An embedding that is not
-    * array<float> is rejected before any row is read. The one trade-off:
-    * the read takes `df`'s columns as its plan produces them, with no
-    * pruning of extra columns. */
-  private[index] def takeVectors(df: DataFrame, idColumn: String, n: Int)
+  /** Every row of `df` when it holds fewer than `n`, otherwise `n` rows
+    * (which ones unspecified; both callers then discard them), as (id,
+    * embedding) pairs. They are read through the plan its Dataset already
+    * holds ([[GraftSqlBridge.take]]), so no query is planned per call.
+    * `idColumn` and `embedding` resolve as `col` resolves them; the id
+    * is cast as `cast("long")` casts it, and a null id or embedding
+    * stays null. An embedding that is not array<float> is rejected
+    * before any row is read. The one trade-off: the read takes `df`'s
+    * columns as its plan produces them, with no pruning of extra
+    * columns. */
+  private[graft] def takeVectors(df: DataFrame, idColumn: String, n: Int)
       : Array[(java.lang.Long, Array[Float])] = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
     import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}

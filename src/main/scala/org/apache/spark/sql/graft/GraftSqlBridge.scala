@@ -26,17 +26,73 @@ object GraftSqlBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** The first `n` rows of `df`, read through the QueryExecution its
-    * Dataset already holds (`executeTake` under one SQL execution, as
+  /** Every row of `df` when it holds fewer than `n`, otherwise `n` rows,
+    * which ones unspecified. They are read through the QueryExecution
+    * its Dataset already holds, under one SQL execution (as
     * `Dataset.collect` runs its plan): no query is analysed, optimized
     * or planned here, and once `df`'s own plan was planned, none at all.
-    * A local relation is read with no job; a larger plan is scanned a
-    * few partitions at a time, scaling up as a `limit(n)` does. The rows
-    * hold every column of `df`, in its order: nothing is pruned. */
+    * A local relation is read with no job. Any other plan is read in
+    * passes of ONE job each ([[takeInPasses]]): one pass when it has at
+    * most `spark.sql.limit.scaleUpFactor` partitions (4 by default) and
+    * fewer than `n` rows; a skewed or wider one takes more. In all, at
+    * most `n` rows plus one per task of the last pass reach the driver;
+    * the one exception is a resumed partition of a shuffle's output,
+    * which sends its earlier rows again. The rows hold every column of
+    * `df`, in its order: nothing is pruned. */
   def take(df: org.apache.spark.sql.DataFrame, n: Int): Array[org.apache.spark.sql.catalyst.InternalRow] = {
     val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("take"))(
-      qe.executedPlan.executeTake(n))
+      qe.executedPlan match {
+        case local: org.apache.spark.sql.execution.LocalTableScanExec => local.executeTake(n)
+        case plan => takeInPasses(plan.execute(), n,
+          math.max(qe.sparkSession.sessionState.conf.limitScaleUpFactor, 2))
+      })
+  }
+
+  /** At most `n` rows of `rdd`, as [[take]] states them. The first pass
+    * reads the first `factor` partitions; each later pass, run only
+    * while fewer than `n` rows are held, grows that window by `factor`
+    * (as a limit's scale-up does) and resumes every partition of it not
+    * read to its end. In a pass each task returns at most
+    * ⌈left / tasks⌉ rows, `left` the rows still wanted, and whether its
+    * partition holds more, so a pass moves at most `left + tasks` rows
+    * and no row moves twice. A partition whose row order a recomputation
+    * may change (a shuffle's output) is resumed from its start instead,
+    * its earlier rows replaced, so that no row is kept twice. Rows are
+    * copied, as a scan reuses its row buffer. */
+  private def takeInPasses(rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      n: Int, factor: Int): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val parts = rdd.partitions.length
+    val kept = Array.fill(parts)(Array.empty[InternalRow])
+    val open = Array.fill(parts)(true) // may hold rows beyond `kept`
+    val resumable = rdd.outputDeterministicLevel == org.apache.spark.rdd.DeterministicLevel.DETERMINATE
+    var held = 0L
+    var window = math.min(parts, factor)
+    var tasks = (0 until window).filter(open)
+    while (held < n && tasks.nonEmpty) {
+      val quota = (n - held + tasks.size - 1) / tasks.size
+      val from = Array.tabulate(parts)(p => if (resumable) kept(p).length else 0)
+      val upTo = Array.tabulate(parts)(p => kept(p).length - from(p) + quota)
+      val res = rdd.sparkContext.runJob(rdd,
+        (ctx: org.apache.spark.TaskContext, it: Iterator[InternalRow]) => {
+          val p = ctx.partitionId()
+          var skipped = 0
+          while (skipped < from(p) && it.hasNext) { it.next(); skipped += 1 }
+          val rows = Array.newBuilder[InternalRow]
+          var taken = 0L
+          while (taken < upTo(p) && it.hasNext) { rows += it.next().copy(); taken += 1 }
+          (rows.result(), it.hasNext)
+        }, tasks)
+      for ((p, (rows, more)) <- tasks.zip(res)) {
+        held += rows.length + from(p) - kept(p).length
+        kept(p) = kept(p).take(from(p)) ++ rows
+        open(p) = more
+      }
+      window = math.min(parts.toLong, window.toLong * factor).toInt
+      tasks = (0 until window).filter(open)
+    }
+    kept.iterator.flatten.take(n).toArray
   }
 
   /** Column `name` of `df`, bound to the rows [[take]] returns. It is

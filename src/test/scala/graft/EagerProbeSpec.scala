@@ -194,6 +194,24 @@ class EagerProbeSpec extends AnyFunSuite with SparkSuite {
     lsm.unpersist(); idx.unpersist()
   }
 
+  test("work counter: an eager probe reads a 4-partition query relation in 1 job, a local one in none") {
+    import spark.implicits._
+    val idx = VectorIndex.build(slice(20, 300), p, numShards = 4)
+    val lsm = LsmVectorIndex(idx, compactThreshold = 1000000).ingest(slice(300, 340))
+    val spread = spark.sparkContext.parallelize(batch.toSeq, 4).toDF("query_id", "embedding")
+    for ((name, probe) <- Seq[(String, DataFrame => DataFrame)](
+        "VectorIndex" -> (idx.query(_, 10, 16)), "LsmVectorIndex" -> (lsm.query(_, 10, 16)))) {
+      probe(queryDf(batch)).collect() // lays out the members
+      for ((what, queries, jobs) <- Seq((s"$name, 4 partitions", spread, 2),
+          (s"$name, local relation", queryDf(batch), 1))) {
+        val (res, work) = workDuring(probe(queries).collect())
+        assert(res.length == batch.length * 10, what)
+        assert(work.jobs == jobs && work.stages == jobs && work.shuffles == 0, s"$what: $work")
+      }
+    }
+    lsm.unpersist(); idx.unpersist()
+  }
+
   test("work counter: a driverless probe is one job of 3 stages and 2 shuffles, LSM or not") {
     val idx = VectorIndex.build(slice(20, 300), p, numShards = 4)
     val lsm = LsmVectorIndex(idx, compactThreshold = 1000000)

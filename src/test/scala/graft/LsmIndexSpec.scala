@@ -715,12 +715,15 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
     lsm.unpersist()
   }
 
-  test("work counter: a small ingest runs at most 2 jobs and no exchange") {
+  test("work counter: a small ingest of a 4-partition batch runs 1 job and no exchange") {
+    import spark.implicits._
     // the first ingest reads the base dimension once
     val lsm0 = LsmVectorIndex(baseIdx, compactThreshold = 1000000).ingest(slice(300, 350))
-    val (lsm1, ingest) = workDuring(lsm0.ingest(slice(350, 400)))
-    assert(ingest.jobs <= 2 && ingest.stages == ingest.jobs && ingest.shuffleWriteBytes == 0,
+    val batch = spark.sparkContext.parallelize(localRows(350, 400).toSeq, 4).toDF("id", "embedding")
+    val (lsm1, ingest) = workDuring(lsm0.ingest(batch))
+    assert(ingest.jobs == 1 && ingest.stages == 1 && ingest.shuffleWriteBytes == 0,
       s"small ingest ran $ingest")
+    assert(lsm1.freshCount == 100)
     lsm1.unpersist()
   }
 

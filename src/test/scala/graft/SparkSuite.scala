@@ -34,10 +34,11 @@ object SparkSuite {
     * file bytes read through Hadoop's FileSystem: a task's
     * `inputMetrics.bytesRead` would count cached blocks it reads too.
     * `sqlExecutions` counts the Dataset actions and writes that ran a
-    * planned query, and `optimizerRuns` the plans optimized on the suite
-    * session ([[SparkSuite.OptimizerRuns]]). */
+    * planned query, `optimizerRuns` the plans optimized on the suite
+    * session ([[SparkSuite.OptimizerRuns]]), and `resultBytes` the
+    * serialized task results sent to the driver (the tasks' `resultSize`). */
   final case class Work(jobs: Int, stages: Int, shuffleWriteBytes: Long, shuffles: Int,
-      inputBytes: Long, sqlExecutions: Int, optimizerRuns: Long)
+      inputBytes: Long, sqlExecutions: Int, optimizerRuns: Long, resultBytes: Long)
 }
 
 trait SparkSuite {
@@ -54,13 +55,14 @@ trait SparkSuite {
   /** Run `f` and count the Spark work it started: jobs, SUBMITTED stages
     * (a stage whose output is already materialized is skipped, not
     * submitted), shuffle bytes written, shuffles (submitted stages
-    * that write one), file bytes read, SQL executions and optimizer
-    * runs. */
+    * that write one), file bytes read, SQL executions, optimizer runs
+    * and task result bytes. */
   def workDuring[T](f: => T): (T, SparkSuite.Work) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
     val shuffles = new java.util.concurrent.atomic.AtomicInteger(0)
+    val results = new java.util.concurrent.atomic.AtomicLong(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
@@ -71,8 +73,10 @@ trait SparkSuite {
           shuffles.incrementAndGet()
       }
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
+        if (e.taskMetrics != null) {
           shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+          results.addAndGet(e.taskMetrics.resultSize)
+        }
     }
     val executions = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -97,7 +101,8 @@ trait SparkSuite {
       spark.listenerManager.unregister(q)
     }
     (r, SparkSuite.Work(jobs.get, stages.get, shuffled.get, shuffles.get,
-      fileBytesRead - read0, executions.get, SparkSuite.OptimizerRuns.count.get - optimized0))
+      fileBytesRead - read0, executions.get, SparkSuite.OptimizerRuns.count.get - optimized0,
+      results.get))
   }
 
   /** Bytes read so far through Hadoop's FileSystem, every scheme. */
