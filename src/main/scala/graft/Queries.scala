@@ -663,14 +663,15 @@ object Queries {
   }
 
   // ---------------------------------------------------------------- v20_bucketed_build
-  /** Index (re)build from a shard-bucketed corpus table that moves no
-    * corpus row: the one-time `writeBucketedCorpus` lands each shard's
-    * rows in its own sorted bucket file, so every subsequent (re)build
-    * reads them by a narrow scan → mapPartitions with NO Exchange and NO
-    * Sort (the scan's plan is guarded in PlanShapeSpec, the kernel
-    * equality in DehnswSpec). The built graphs then move through one RDD
-    * shuffle that puts shard s in partition s. The probe contract is
-    * v6's: searchWidth=0 must equal the brute-force oracle exactly. */
+  /** Index (re)build from a shard-bucketed corpus table: the one-time
+    * `writeBucketedCorpus` lands each shard's rows in its own sorted
+    * bucket file, and every (re)build reads them through a bucketed scan
+    * whose plan has NO Exchange and NO Sort (guarded in PlanShapeSpec).
+    * The rows then take the build's own route: one RDD shuffle puts
+    * shard s's rows in partition s, where the shard is built, as
+    * `VectorIndex.build` does (1 job, 1 shuffle; kernel equality in
+    * DehnswSpec). The probe contract is v6's: searchWidth=0 must equal
+    * the brute-force oracle exactly. */
   private val bucketedIdxCache = new java.util.concurrent.ConcurrentHashMap[String, VectorIndex]()
   private val corpusBucketed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -1660,11 +1661,10 @@ object Queries {
     * save the session-shared index as a snapshot (one directory per
     * shard, `rows/sub_index_id=s/`), load it, and exact-probe. The
     * loaded [[VectorIndex!.probeLayout]] must read each shard's directory
-    * in place — no shuffle in its lineage, where a flat snapshot pays one
-    * of ~2.5× its parquet bytes in every serving JVM. The layout must be
+    * in place, with no shuffle in its lineage. The layout must be
     * invisible in the results, so v4's brute-force oracle applies
     * unchanged; the ShardPartitioner, the missing-directory failure and
-    * the flat-snapshot load are spec-gated in ShardedLayoutSpec. */
+    * the refusal of a flat snapshot are spec-gated in ShardedLayoutSpec. */
   def v68ShardedLayout(s: SparkSession, dir: String): DataFrame = {
     val path = java.nio.file.Files
       .createTempDirectory("graft_shl_").toString

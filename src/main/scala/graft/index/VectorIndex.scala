@@ -164,10 +164,7 @@ class VectorIndex private (
       * a loaded snapshot. */
     @transient private val built: Option[RDD[SubIndexGraph]],
     /** A loaded snapshot's `rows/` directory; null for an in-memory index. */
-    @transient private val rowsDir: String,
-    /** Whether `rowsDir` holds one directory per shard, as every writer
-      * lays it out, rather than the flat part files of older versions. */
-    @transient private val byShard: Boolean) extends Serializable with AnnProbe {
+    @transient private val rowsDir: String) extends Serializable with AnnProbe {
 
   override def probeId: String = indexId
   override def probeMetric: graft.functions.DistanceMetric = params.metric
@@ -332,19 +329,25 @@ class VectorIndex private (
     import spark.implicits._
     val w = widths.length
     require(w >= 1, "need at least one width")
-    require(batch.forall(_._1 >= 0), "multi-width probe requires non-negative query ids")
+    // the largest id whose merge key id × w + (w - 1) fits a long
+    val maxId = (Long.MaxValue - (w - 1)) / w
+    batch.foreach { case (id, _) =>
+      require(id >= 0 && id <= maxId,
+        s"query $id is outside [0, $maxId], the query ids a $w-width probe can merge")
+    }
     if (batch.isEmpty) {
       return spark.emptyDataset[(Int, Long, Int, Long, Double)]
         .toDF("search_width", "query_id", "rank", "neighbor_id", "distance")
     }
     val widthArr = widths.toArray
     // the merge runs per (query, width): the width index rides in the low
-    // bits of the synthetic query id the probe emits (query_id * w + wi)
+    // digits of the synthetic query id the probe emits (query_id * w + wi),
+    // decoded in exact integer arithmetic
     VectorIndex.probeLazy(Seq(this), batch, k, widthArr, maxBatch, null)
       .select(
         element_at(typedLit(widthArr), (col("query_id") % w).cast("int") + 1)
           .as("search_width"),
-        (col("query_id") / w).cast("long").as("query_id"),
+        expr(s"query_id div $w").as("query_id"),
         col("rank"), col("neighbor_id"), col("distance"))
   }
 
@@ -441,22 +444,15 @@ class VectorIndex private (
     * query call, at memory only: partition s reads `rows/sub_index_id=s/`
     * ([[VectorIndex.readShards]]) straight into the graph, and a block
     * that did not fit, or was lost, is read the same way again by the
-    * next probe. A flat snapshot written before that layout is laid out
-    * by one exchange of its rows instead. */
+    * next probe. A flat snapshot, as written before the shard
+    * directories, is refused here, on the driver. */
   @transient private[graft] lazy val probeLayout: RDD[SubIndexGraph] = built.getOrElse {
+    val graphs = VectorIndex.rehydrateShards(VectorIndex.readShards(spark, rowsDir, meta, numShards),
+      params, meta).persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     layoutMade = true
-    val graphs = snapshotGraphs().persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     ShardGraphCache.register(indexId, graphs)
     graphs
   }
-
-  /** A loaded snapshot's graphs, uncached ([[probeLayout]]). */
-  private def snapshotGraphs(): RDD[SubIndexGraph] =
-    VectorIndex.rehydrateShards(
-      if (byShard) VectorIndex.readShards(spark, rowsDir, meta, numShards)
-      else rows.rdd.map(r => (r.sub_index_id, r))
-        .partitionBy(new VectorIndex.ShardPartitioner(numShards)).values,
-      params, meta)
 
   /** [[query]]'s driverless probe ([[VectorIndex.probeDistributed]]),
     * whatever the batch size. Prefer [[query]] for small batches: one
@@ -550,8 +546,7 @@ class VectorIndex private (
     * the [[probeLayout]] graphs are written one directory per shard,
     * `rows/sub_index_id=s/` ([[VectorIndex.writeShards]]), beside the
     * meta and params sidecars, `meta.json` last
-    * ([[VectorIndex.publish]]). Saving a loaded flat snapshot is its
-    * migration to that layout. */
+    * ([[VectorIndex.publish]]). */
   def save(path: String): Unit =
     VectorIndex.publish(spark, path, params, numShards, indexId) {
       VectorIndex.writeShards(spark, probeLayout, s"$path/rows")
@@ -1002,54 +997,27 @@ object VectorIndex {
     override def hashCode: Int = n
   }
 
-  /** The shard-assignment expression of a bucketed corpus
-    * ([[writeBucketedCorpus]]); the rewrite core's
-    * `Math.floorMod(id, numShards)` must agree with it (divergence would
-    * put a bucketed build's id in another shard than [[build]] does). */
+  /** The shard column of a bucketed corpus ([[writeBucketedCorpus]]),
+    * which the table is bucketed and sorted by: it decides only which
+    * rows share a bucket (all of a shard's rows share one), since a build
+    * routes each row by `Math.floorMod(id, numShards)` itself
+    * ([[rewriteShards]]). */
   private[index] def shardOf(id: org.apache.spark.sql.Column, numShards: Int) =
     pmod(id, lit(numShards)).cast("int")
-
-  /** One partition of a bucketed build ([[buildShard]] per run of equal
-    * shard ids). A shard revisited after a different shard in the same
-    * partition means the ordering contract is broken (two partial graphs
-    * would silently share a shard id) — fail the task instead. */
-  private def buildGrouped(it: Iterator[(Long, Array[Float], Int)],
-      p: IndexParams): Iterator[SubIndexGraph] = {
-    // consecutive rows share sub_index_id after the sort. Dimension is
-    // fixed at index creation (SURVEY §1.1): the partition's first row
-    // sets it for every shard the partition builds.
-    var dim = -1
-    val bit = it.buffered
-    val built = mutable.BitSet.empty
-    Iterator.continually(bit).takeWhile(_.hasNext).flatMap { _ =>
-      val shardId = bit.head._3
-      require(!built.contains(shardId),
-        s"input rows not grouped by sub_index_id: shard $shardId reappeared " +
-          "after another shard (bucketed corpus unsorted or mis-bucketed?)")
-      built += shardId
-      if (dim < 0) dim = bit.head._2.length
-      val vecs = mutable.ArrayBuffer.empty[(Long, Array[Float])]
-      while (bit.hasNext && bit.head._3 == shardId) {
-        val r = bit.next()
-        vecs += ((r._1, r._2))
-      }
-      Iterator.single(buildShard(shardId, vecs, p, dim))
-    }
-  }
 
   /** One change routed to its shard by [[rewriteShards]]: an added row,
     * or a removed id (`vec` null). */
   private final case class Change(id: Long, vec: Array[Float], removed: Boolean)
 
-  /** The one shard rewrite core, under [[VectorIndex!.rewrite]] (build,
-    * append, remove and LSM compaction), [[buildTo]] and [[appendTo]]; a
-    * build is the rewrite of `numShards` empty shards. The `added` rows and
-    * `removed` ids, tagged, move through ONE shuffle keyed by shard
-    * (`id % numShards`, [[ShardPartitioner]]), zipped with `base`, whose
-    * partition s holds shard s: its graph (`Left`: an in-memory layout or
-    * a flat snapshot's graphs) or its stored (id, embedding) rows
-    * (`Right`: a snapshot's shard directory, read only if the shard
-    * changes; such a base takes no removals). Nothing is planned, and no
+  /** The one shard rewrite core, under [[VectorIndex!.rewrite]] (every
+    * in-memory build, append, remove and LSM compaction), [[buildTo]] and
+    * [[appendTo]]; a build is the rewrite of `numShards` empty shards. The
+    * `added` rows and `removed` ids, tagged, move through ONE shuffle
+    * keyed by shard (`id % numShards`, [[ShardPartitioner]]), zipped with
+    * `base`, whose partition s holds shard s: its graph (`Left`: an
+    * in-memory layout) or its stored (id, embedding) rows (`Right`: a
+    * snapshot's shard directory, read only if the shard changes; such a
+    * base takes no removals). Nothing is planned, and no
     * survivor moves. Partition s finds out itself whether shard s
     * changes ([[rewriteShard]]); partition s of the result holds shard
     * s's graph, or nothing for an empty shard or unchanged stored rows.
@@ -1108,18 +1076,23 @@ object VectorIndex {
     Iterator.range(0, g.count).map(o => (g.globalIds(o), g.vecAt(o)))
 
   /** A caller's (id, embedding) rows, a build's corpus or an append's
-    * batch, read once by one select and the API-boundary transform
-    * ([[IndexParams.transformCorpusVector]]). The rows are taken off the
-    * planned query, not through `Dataset.rdd`, which Spark reports as an
-    * SQL execution of its own. */
-  private def inputRows(df: DataFrame, params: IndexParams): RDD[(Long, Array[Float])] = {
+    * batch, read once by one select ([[plannedRows]]). */
+  private def inputRows(df: DataFrame, params: IndexParams): RDD[(Long, Array[Float])] =
+    plannedRows(df.select(col("id").cast("long"), col("embedding").cast("array<float>")), params)
+
+  /** The (id: long, embedding: array<float>) pairs in the first two
+    * columns of `input`, through the API-boundary transform
+    * ([[IndexParams.transformCorpusVector]]): the one place a corpus is
+    * transformed on its way into a distributed build or append. The rows
+    * are taken off `input`'s planned query, as planned, not through
+    * `Dataset.rdd`, which Spark reports as an SQL execution of its own. */
+  private def plannedRows(input: DataFrame, params: IndexParams): RDD[(Long, Array[Float])] = {
     val p = params
-    df.select(col("id").cast("long"), col("embedding").cast("array<float>"))
-      .queryExecution.toRdd.map { r =>
-        require(!r.isNullAt(0), "appended rows must carry an id")
-        val v = if (r.isNullAt(1)) null else r.getArray(1).toFloatArray()
-        (r.getLong(0), if (v != null && p.transformsInput) p.transformCorpusVector(v) else v)
-      }
+    input.queryExecution.toRdd.map { r =>
+      require(!r.isNullAt(0), "appended rows must carry an id")
+      val v = if (r.isNullAt(1)) null else r.getArray(1).toFloatArray()
+      (r.getLong(0), if (v != null && p.transformsInput) p.transformCorpusVector(v) else v)
+    }
   }
 
   /** The ids of a caller's `id` column, read as [[inputRows]] reads rows;
@@ -1211,7 +1184,7 @@ object VectorIndex {
   private def fromGraphs(spark: SparkSession, params: IndexParams, numShards: Int,
       layout: RDD[SubIndexGraph], shards: Array[(ShardMeta, Int)]): VectorIndex = {
     val idx = new VectorIndex(params, numShards, shards.map(_._1),
-      java.util.UUID.randomUUID().toString, spark, Some(layout), null, false)
+      java.util.UUID.randomUUID().toString, spark, Some(layout), null)
     idx.knownDim = shards.map(_._2).maxOption.getOrElse(-1)
     ShardGraphCache.register(idx.indexId, layout)
     idx
@@ -1235,10 +1208,10 @@ object VectorIndex {
     ShardMeta(g.shardId, g.count, g.layerCount, g.entryOffset)
 
   /** Build ONE shard's graph: the kernel loop of the rewrite core
-    * ([[rewriteShard]], under every build from a DataFrame and every
-    * append), the bucketed build ([[buildGrouped]]) and the driver build
-    * of a small LSM generation ([[buildOnDriver]]). `vecs` must be
-    * id-ascending, the order the kernel is deterministic in, of
+    * ([[rewriteShard]], under every build from a DataFrame or a bucketed
+    * table and every append) and of the driver build of a small LSM
+    * generation ([[buildOnDriver]]). `vecs` must be id-ascending, the
+    * order the kernel is deterministic in, of
     * dimension `dim` and finite: a NaN vector would enter every top-k of
     * its shard and never be evicted. */
   private[index] def buildShard(shardId: Int,
@@ -1246,8 +1219,7 @@ object VectorIndex {
       dim: Int): SubIndexGraph = {
     var prevId = Long.MinValue
     vecs.foreach { case (id, v) =>
-      require(id > prevId, s"ids not ascending within shard $shardId: $id after $prevId " +
-        "(bucketed corpus unsorted, or duplicate ids?)")
+      require(id > prevId, s"ids not ascending within shard $shardId: $id after $prevId")
       require(v.length == dim,
         s"embedding dimension mismatch at id=$id: got ${v.length}, index dimension is $dim")
       var c = 0
@@ -1368,11 +1340,15 @@ object VectorIndex {
     * partition s, and its graph stays there, cached once at memory and
     * disk as the probe layout. A repeated id is rejected as an append
     * rejects one ([[AppendCheck]]), leaving nothing cached. */
-  def build(df: DataFrame, params: IndexParams, numShards: Int): VectorIndex = {
-    val spark = df.sparkSession
+  def build(df: DataFrame, params: IndexParams, numShards: Int): VectorIndex =
+    buildRows(df.sparkSession, inputRows(df, params), params, numShards)
+
+  /** [[build]] over rows already read and transformed: the rewrite of
+    * `numShards` empty shards. */
+  private def buildRows(spark: SparkSession, rows: RDD[(Long, Array[Float])],
+      params: IndexParams, numShards: Int): VectorIndex =
     fromGraphs(spark, params, numShards, emptyLayout(spark, numShards), Array.empty)
-      .rewrite(null, inputRows(df, params))
-  }
+      .rewrite(null, rows)
 
   /** `numShards` empty shards: the base a build rewrites. */
   private def emptyLayout(spark: SparkSession, numShards: Int): RDD[SubIndexGraph] =
@@ -1428,10 +1404,8 @@ object VectorIndex {
     *    cross-device) it falls back to a byte copy, which on object
     *    stores is the server-side-copy fast path. An affected shard reads
     *    only the (id, embedding) columns of its directory. A flat
-    *    snapshot written before the shard directories has nothing to
-    *    link: its kept shards go through the same writer, from its
-    *    graphs (uncached), so the new snapshot is laid out by shard
-    *    either way.
+    *    snapshot, as written before the shard directories, is refused
+    *    before any job ([[scanShards]]).
     *
     * One job, the write, whose tasks find their shard's changes, rebuild
     * it and write it; it reads nothing back. The added vectors are
@@ -1460,23 +1434,21 @@ object VectorIndex {
     val (params, numShards) = (old.params, old.numShards)
     val newRows = s"$newPath/rows"
     publish(spark, newPath, params, numShards, java.util.UUID.randomUUID().toString) {
+      val base = readShardVectors(spark, old.rowsDir, old.meta, numShards)
       // existing rows always match, and a clashing id hashes into an
       // affected shard, so checking the rebuilt shards covers old-vs-new
       // AND new-vs-new clashes
       val dim = if (old.meta.nonEmpty) old.dimension else -1
       val check = AppendCheck(spark, dim)
       val report = BuiltShards(spark)
-      val base =
-        if (old.byShard) Right(readShardVectors(spark, old.rowsDir, old.meta, numShards))
-        else Left(old.snapshotGraphs())
-      writeShards(spark, rewriteShards(base, inputRows(newVectors, params),
+      writeShards(spark, rewriteShards(Right(base), inputRows(newVectors, params),
         spark.sparkContext.emptyRDD, params, numShards, check, report), newRows)
       check.verify()
       val (rebuiltMeta, builtDim) = report.result()
       if (rebuiltMeta.isEmpty) throw new IllegalArgumentException("appendTo over an empty batch")
       val rebuilt = rebuiltMeta.map(_.sub_index_id).toSet
       // kept shard directories: hardlinked whole
-      if (old.byShard) for (s <- old.meta.map(_.sub_index_id) if !rebuilt(s))
+      for (s <- old.meta.map(_.sub_index_id) if !rebuilt(s))
         linkOrCopyTree(hconf, s"${old.rowsDir}/sub_index_id=$s", s"$newRows/sub_index_id=$s")
       ((old.meta.filterNot(m => rebuilt(m.sub_index_id)) ++ rebuiltMeta).sortBy(_.sub_index_id),
         if (dim > 0) dim else builtDim)
@@ -1605,9 +1577,10 @@ object VectorIndex {
     * but `sub_index_id`, which the directory name carries. */
   private lazy val rowSchema = org.apache.spark.sql.Encoders.product[IndexRow].schema
 
-  /** A snapshot's `rows/` directory as index rows, flat or laid out by
-    * shard, read with the known schema: no footer is read to infer it,
-    * and a snapshot of no rows reads as empty. */
+  /** A snapshot's `rows/` directory as index rows, read with the known
+    * schema (the shard id from each `sub_index_id=s/` directory name): no
+    * footer is read to infer it, and a snapshot of no rows reads as
+    * empty. [[VectorIndex!.rows]] reads it; no probe does. */
   private[index] def readRows(spark: SparkSession, dir: String): Dataset[IndexRow] = {
     import spark.implicits._
     spark.read.schema(rowSchema).parquet(dir).as[IndexRow]
@@ -1639,18 +1612,26 @@ object VectorIndex {
     * shard). A shard without meta gets an empty partition, and so does
     * one whose directory is missing: its graph then fails on the row
     * count its meta promises ([[rehydrateShards]]), never serving a
-    * partial index. */
+    * partial index. A data file directly under `dir` is the flat layout
+    * written before the shard directories: an IllegalArgumentException
+    * naming the snapshot and its migration, before any job. */
   private def scanShards(spark: SparkSession, dir: String, meta: Array[ShardMeta],
       numShards: Int, schema: org.apache.spark.sql.types.StructType)
       : RDD[org.apache.spark.sql.catalyst.InternalRow] = {
     val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val top = fs.makeQualified(root)
     val files = mutable.Map.empty[String, Seq[org.apache.hadoop.fs.FileStatus]].withDefaultValue(Nil)
-    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
+    val it = fs.listFiles(root, true)
     while (it.hasNext) {
       val f = it.next()
       val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith("."))
+      if (!name.startsWith("_") && !name.startsWith(".")) {
+        require(f.getPath.getParent != top, s"snapshot ${root.getParent} is flat (part files " +
+          "directly under rows/), a layout no longer read: migrate it with load(old).save(new) " +
+          "on a version that reads it (commit 6adea2e or earlier)")
         files(f.getPath.getParent.getName) :+= f
+      }
     }
     val withMeta = meta.map(_.sub_index_id).toSet
     val groups = (0 until numShards).map(s =>
@@ -1684,10 +1665,8 @@ object VectorIndex {
     * `numShards` buckets keyed by `sub_index_id` ([[shardOf]]: the same
     * `id % numShards` assignment [[build]] makes), each bucket one file
     * sorted by (sub_index_id, id). A build from this table
-    * ([[buildFromBucketed]]) then moves NO corpus row and sorts nothing —
-    * at 100 TB this is the difference between re-shuffling the whole
-    * corpus on every (re)build and a narrow scan whose one exchange
-    * moves the built graphs. The
+    * ([[buildFromBucketed]]) reads it with no exchange or sort planned,
+    * then routes its rows through the one shuffle [[build]] runs. The
     * pre-write repartition matches the bucket hash, so each task emits
     * exactly one bucket file (no tasks x buckets small-file explosion). */
   def writeBucketedCorpus(df: DataFrame, table: String, numShards: Int): Unit = {
@@ -1699,36 +1678,29 @@ object VectorIndex {
       .saveAsTable(table)
   }
 
-  /** Bulk build from a [[writeBucketedCorpus]] table with ZERO Exchange and
-    * ZERO Sort: the bucketed scan already delivers each shard's rows
-    * co-located (one bucket file per bucket, never split) and
-    * (sub_index_id, id)-sorted, so the build is scan → mapPartitions
-    * ([[bucketedInput]], plan-guarded in PlanShapeSpec; the grouped and
-    * sorted input contract is also enforced in-task by [[buildGrouped]]).
-    * A bucket may hold several shards, so one exchange of the built
-    * graphs then puts shard s in partition s, where a shard split across
-    * buckets fails the meta pass. */
+  /** Bulk build from a [[writeBucketedCorpus]] table, with as many shards
+    * as it has buckets: [[build]] over the rows of the table's bucketed scan
+    * ([[bucketedInput]], whose plan, a scan and a projection with no
+    * Exchange and no Sort, PlanShapeSpec guards). Like [[build]] it runs
+    * one job of one shuffle ([[rewriteShards]]), which routes each row to
+    * its shard, and rejects a repeated id as an append does
+    * ([[AppendCheck]]), leaving nothing cached. */
   def buildFromBucketed(
       spark: SparkSession, table: String, params: IndexParams): VectorIndex = {
-    val (input, numShards) = bucketedInput(spark, table, params)
-    val p = params
-    val rows = input.queryExecution.toRdd
-      .map(r => (r.getLong(0), r.getArray(1).toFloatArray(), r.getInt(2)))
-    inMemory(spark, params, numShards, rows.mapPartitions(buildGrouped(_, p))
-      .keyBy(_.shardId).partitionBy(new ShardPartitioner(numShards)).values)
+    val (_, rows, numShards) = bucketedInput(spark, table, params)
+    buildRows(spark, rows, params, numShards)
   }
 
-  /** A [[writeBucketedCorpus]] table's (id, embedding, shard) rows as
-    * [[buildFromBucketed]] reads them, and its bucket count. Bucketed
-    * corpora hold RAW vectors, so the API-boundary transform (cosine
-    * normalization / MIPS augmentation) is a narrow map here. The plan is
-    * made here, with the bucketed scan kept: a scan and a map, no
-    * Exchange and no Sort. (DisableUnnecessaryBucketedScan would demote
-    * the scan to ordinary file splits, as nothing above a map "needs"
-    * bucketing, and a split bucket file puts part of a shard in each of
-    * two partitions.) */
+  /** A [[writeBucketedCorpus]] table as [[buildFromBucketed]] reads it:
+    * the planned (id, embedding, sub_index_id) scan, its (id, embedding)
+    * rows read off that plan as planned and transformed
+    * ([[plannedRows]]), and its bucket count. The plan is made here, with
+    * the bucketed scan kept: a scan and a projection, no Exchange and no
+    * Sort. (DisableUnnecessaryBucketedScan would demote the scan to
+    * ordinary file splits, as nothing above it "needs" bucketing; the
+    * scan stays bucketed only while it outputs the bucket column.) */
   private[graft] def bucketedInput(spark: SparkSession, table: String,
-      params: IndexParams): (Dataset[(Long, Array[Float], Int)], Int) = {
+      params: IndexParams): (DataFrame, RDD[(Long, Array[Float])], Int) = {
     val cat = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
     val spec = cat.bucketSpec.getOrElse(
@@ -1740,17 +1712,10 @@ object VectorIndex {
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
     try {
-      import spark.implicits._
-      val src = spark.table(table)
-        .select(col("id").cast("long"), col("embedding"),
-          col("sub_index_id").cast("int"))
-        .as[(Long, Array[Float], Int)]
-      val p = params
-      val input = if (p.transformsInput)
-          src.map { case (id, v, s) => (id, p.transformCorpusVector(v), s) }
-        else src
+      val input = spark.table(table).select(col("id").cast("long"),
+        col("embedding").cast("array<float>"), col("sub_index_id"))
       input.queryExecution.executedPlan
-      (input, spec.numBuckets)
+      (input, plannedRows(input, params), spec.numBuckets)
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -1760,11 +1725,12 @@ object VectorIndex {
   /** Load a saved index (reference O10). The sidecars are read first: a
     * missing `meta.json`, the commit point of every publish, is an
     * IllegalArgumentException naming it. The index dimension is preset
-    * from `params.json` when it records one. Nothing else is read: rows
-    * written one directory per shard ([[VectorIndex!.save]], [[buildTo]],
-    * [[appendTo]]) are read in place, straight into the graphs, by the
-    * first probe ([[VectorIndex!.probeLayout]]); a flat `rows/`, as older
-    * versions wrote it, is laid out by an exchange instead.
+    * from `params.json` when it records one. Nothing else is read, and
+    * no directory is listed: the rows, one directory per shard
+    * ([[VectorIndex!.save]], [[buildTo]], [[appendTo]]), are read in
+    * place, straight into the graphs, by the first probe
+    * ([[VectorIndex!.probeLayout]]), which refuses a flat `rows/` as
+    * older versions wrote it.
     * @param cache kept for source compatibility; it selects nothing. The
     *              graphs are the one cached copy, held at memory only and
     *              re-read when Spark's storage memory cannot hold them. */
@@ -1783,15 +1749,11 @@ object VectorIndex {
     val params = IndexParams(metric, pf.minimumConnect, pf.relaxedMonotonicity,
       pf.step, pf.subIndexBound, schedule, pf.quantized, pf.quantLo, pf.quantHi,
       pf.normalizeForCosine, pf.augmentForMips, pf.mipsMaxNorm)
-    // a flat snapshot holds its part files at the top of rows/
-    val dir = new org.apache.hadoop.fs.Path(s"$path/rows")
-    val flat = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
-      .exists(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
     // a fresh identity per load: the graphs of each load are its own, not
     // those of the index that wrote the snapshot nor of another load
     val idx = new VectorIndex(params, pf.numShards, meta,
       pf.indexId + "#load-" + java.util.UUID.randomUUID().toString, spark, None,
-      dir.toString, !flat)
+      new org.apache.hadoop.fs.Path(s"$path/rows").toString)
     pf.dimension.foreach(idx.knownDim = _)
     idx
   }

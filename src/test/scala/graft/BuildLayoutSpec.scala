@@ -223,6 +223,35 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
     } finally graft.streaming.StreamingOps.deleteRecursively(dir)
   }
 
+  test("work counter: a bucketed build runs 1 job of 1 shuffle, writing at most 1.1x what build writes") {
+    val tab = "bucketed_work"
+    try {
+      val corpus = frame(vectors(0L until 400L))
+      VectorIndex.writeBucketedCorpus(corpus, tab, 4)
+      val (idx, build) = workDuring(VectorIndex.build(corpus, params, numShards = 4))
+      val (bkt, bucketed) = workDuring(VectorIndex.buildFromBucketed(spark, tab, params))
+      assert(bucketed.jobs == 1 && bucketed.shuffles == 1, s"bucketed build ran $bucketed")
+      assert(bucketed.shuffleWriteBytes <= build.shuffleWriteBytes * 1.1,
+        s"bucketed build shuffled ${bucketed.shuffleWriteBytes} B, build ${build.shuffleWriteBytes} B")
+      assert(bkt.meta.toSeq == idx.meta.toSeq)
+      Seq(idx, bkt).foreach(_.unpersist())
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tab")
+  }
+
+  test("a bucketed corpus that repeats an id is rejected as an append is, leaving nothing cached") {
+    val tab = "bucketed_dup"
+    try {
+      // ids 7 and 42 twice: one clash each, in two shards
+      VectorIndex.writeBucketedCorpus(frame(vectors((0L until 100L) ++ Seq(7L, 42L))), tab, 4)
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val e = intercept[IllegalArgumentException](VectorIndex.buildFromBucketed(spark, tab, params))
+      assert(e.getMessage.endsWith(
+        "appended ids must be disjoint from the index and unique (2 clashes)"), e.getMessage)
+      assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+        "a rejected bucketed build left a persisted RDD")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tab")
+  }
+
   test("a clashing or wrongly-sized append is rejected and leaves nothing cached") {
     import spark.implicits._
     val idx = VectorIndex.build(frame(vectors(0L until 100L)), params, numShards = 4)

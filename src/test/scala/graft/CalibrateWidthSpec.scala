@@ -229,4 +229,33 @@ class CalibrateWidthSpec extends AnyFunSuite with SparkSuite {
         }
     } finally graft.streaming.StreamingOps.deleteRecursively(dir)
   }
+
+  test("large query ids decode exactly: multi-width rows and the calibrateWidth curve do not depend on the id") {
+    import spark.implicits._
+    val dim = 8
+    val idx = VectorIndex.build(vecs(600, dim, 13).toSeq.toDF("id", "embedding"),
+      IndexParams(minimumConnect = 4, relaxedMonotonicity = 16, step = 4), numShards = 2)
+    val sample = vecs(30, dim, 101)
+    // calibrateWidth's default: width 0 plus 9 widths, 10 in all
+    val widths = Seq(2, 4, 8, 16, 32, 64, 128, 256, 512)
+    def shifted(offset: Long) = sample.map { case (id, v) => (id + offset, v) }
+    def rows(offset: Long) = idx.queryBatchMultiWidth(shifted(offset), 10, 0 +: widths)
+      .collect().map(r => (r.getInt(0), r.getLong(1) - offset, r.getInt(2), r.getLong(3))).toSet
+    val small = rows(0L)
+    val (_, smallCurve) = idx.calibrateWidth(sample, 10, 0.9, widths)
+    assert(small.size == 30 * 10 * 10)
+    for (offset <- Seq(1000000000000000L, 3000000000000007L, 10000000000000000L)) {
+      assert(rows(offset) == small, s"ids offset by $offset decode to other rows")
+      assert(idx.calibrateWidth(shifted(offset), 10, 0.9, widths)._2 == smallCurve,
+        s"ids offset by $offset change the calibration curve")
+    }
+    // the largest id whose merge key (id x 10 + width position) fits a long
+    val top = (Long.MaxValue - 9) / 10
+    assert(rows(top - 29) == small, "the largest ids decode to other rows")
+    val (e, jobs) = jobsDuring(intercept[IllegalArgumentException](
+      idx.queryBatchMultiWidth(shifted(top - 28), 10, 0 +: widths)))
+    assert(e.getMessage.contains(s"query ${top + 1}"), e.getMessage)
+    assert(jobs == 0, s"the rejection ran $jobs jobs")
+    idx.unpersist()
+  }
 }

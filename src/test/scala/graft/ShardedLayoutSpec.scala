@@ -7,19 +7,20 @@ import org.apache.spark.sql.functions._
 import graft.index.{IndexParams, IndexRow, VectorIndex}
 
 /** Gates for the one snapshot layout, `rows/sub_index_id=s/` with one
-  * file per non-empty shard, and for the flat layout of snapshots
-  * written before it, which still load:
+  * file per non-empty shard:
   *  - equivalence: rows, meta and every probe face (exact, beam,
-  *    driverless distributed, multi-width) of a native snapshot equal
-  *    those of a flat one and of the in-memory build;
+  *    driverless distributed, multi-width) of a snapshot equal those of
+  *    the in-memory build, and `save` writes one directory per non-empty
+  *    shard, bit-identical;
   *  - plan property: a loaded snapshot's probe layout has NO shuffle
   *    dependency and carries the ShardPartitioner (queryDistributed's zip
   *    relies on partition index == shard id); its first probe is one job
-  *    of one stage, and buildTo's write plans no Sort above the build;
-  *  - legacy: appendTo onto a flat snapshot equals a build over the
-  *    union, and `load(flat).save(new)` migrates it;
+  *    of one stage, `load` lists no directory, and buildTo's write plans
+  *    no Sort above the build;
   *  - safety: a deleted shard directory fails the probe, naming the
-  *    shard, and a snapshot without meta.json is refused. */
+  *    shard, a snapshot without meta.json is refused, and so is a flat
+  *    snapshot (part files directly under rows/, as written before the
+  *    shard directories), naming its migration, before any job. */
 class ShardedLayoutSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
@@ -80,36 +81,29 @@ class ShardedLayoutSpec extends AnyFunSuite with SparkSuite {
     ).map(_.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet)
   }
 
-  test("sharded layout: shuffle-free aligned probe == legacy probe on every face") {
+  test("sharded layout: shuffle-free aligned probe == in-memory build on every face") {
     withDir { dir =>
       val mem = VectorIndex.build(corpus(0L until 900L), params, numShards = 4)
-      writeFlat(mem, s"$dir/flat")
       val native = VectorIndex.buildTo(corpus(0L until 900L), params, 4, s"$dir/native")
-      val flat = VectorIndex.load(spark, s"$dir/flat", cache = false)
       val files = shardFiles(s"$dir/native")
       assert(files.keySet == (0 until 4).map(s => s"sub_index_id=$s").toSet &&
         files.values.forall(_.length == 1), s"one file per shard directory: $files")
-      assert(shardFiles(s"$dir/flat").keySet == Set(""), "premise: the flat snapshot is flat")
 
       // rows, adjacency and meta are bit-identical to the in-memory build
-      assert(native.meta.toSeq == mem.meta.toSeq && flat.meta.toSeq == mem.meta.toSeq)
+      assert(native.meta.toSeq == mem.meta.toSeq)
       assert(canon(native) == canon(mem), "native snapshot rows differ from the build")
-      assert(canon(flat) == canon(mem), "flat snapshot rows differ from the build")
       assert(canon(native.probeLayout.flatMap(VectorIndex.dehydrate).collect().toSeq) == canon(mem),
         "the shard directories' probe layout differs from the build")
 
       // plan property: narrow, aligned, shard-partitioned
       val layout = native.probeLayout
       assert(layout.partitions.length === 4)
-      assert(layout.partitioner.nonEmpty, "aligned layout must carry the partitioner")
+      assert(layout.partitioner.exists(_.numPartitions == 4),
+        "aligned layout must carry the shard partitioner")
       assert(!hasShuffle(layout), "a native snapshot's probe layout must not shuffle")
-      assert(hasShuffle(flat.probeLayout), "premise: a flat snapshot's layout shuffles")
 
-      val want = probes(mem)
-      Seq("native" -> native, "flat" -> flat).foreach { case (name, idx) =>
-        probes(idx).zip(want).zipWithIndex.foreach { case ((got, w), i) =>
-          assert(got === w, s"probe face $i of the $name snapshot differs from the build")
-        }
+      probes(native).zip(probes(mem)).zipWithIndex.foreach { case ((got, w), i) =>
+        assert(got === w, s"probe face $i of the snapshot differs from the build")
       }
       mem.unpersist()
     }
@@ -121,7 +115,6 @@ class ShardedLayoutSpec extends AnyFunSuite with SparkSuite {
       val loaded = VectorIndex.load(spark, s"$dir/snap", cache = false)
       val qdf = queries.toDF("query_id", "embedding")
       val (res, probe) = workDuring(loaded.query(qdf, 10, 8).collect())
-      // a flat snapshot runs 2 stages here: the layout exchange, then the probe
       assert(probe.jobs == 1 && probe.stages == 1 && probe.shuffleWriteBytes == 0,
         s"first probe after load ran $probe")
       assert(res.length == 60)
@@ -148,39 +141,49 @@ class ShardedLayoutSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("appendTo onto a flat snapshot equals a build over the union and writes shard directories") {
-    withDir { dir =>
-      val base = corpus(0L until 600L)
-      // new ids on residues {1, 2} of 4
-      val batch = corpus((0L until 60L).map(i => 1000L + 4 * (i / 2) + 1 + i % 2))
-      val old = VectorIndex.build(base, params, numShards = 4)
-      writeFlat(old, s"$dir/flat")
-      val appended = VectorIndex.appendTo(spark, s"$dir/flat", batch, s"$dir/next")
-      val full = VectorIndex.build(base.union(batch), params, numShards = 4)
-      assert(appended.meta.toSeq == full.meta.toSeq)
-      assert(canon(appended) == canon(full))
-      assert(shardFiles(s"$dir/next").keySet == (0 until 4).map(s => s"sub_index_id=$s").toSet)
-      assert(shardFiles(s"$dir/next").values.forall(_.length == 1))
-      assert(!hasShuffle(appended.probeLayout))
-      assert(probes(appended) == probes(full))
-      Seq(old, full).foreach(_.unpersist())
-    }
-  }
-
-  test("load(flat).save(new) writes one directory per non-empty shard, bit-identical") {
+  test("save of a sparse in-memory index writes one directory per non-empty shard, bit-identical") {
     withDir { dir =>
       // 8 shards over ids on residues {1, 2, 5}: five shards are empty
       val sparse = corpus((0L until 90L).map(i => 8 * (i / 3) + Seq(1, 2, 5)((i % 3).toInt)))
       val mem = VectorIndex.build(sparse, params, numShards = 8)
+      mem.save(s"$dir/saved")
+      assert(shardFiles(s"$dir/saved").keySet == Set(1, 2, 5).map(s => s"sub_index_id=$s"))
+      assert(shardFiles(s"$dir/saved").values.forall(_.length == 1))
+      val saved = VectorIndex.load(spark, s"$dir/saved", cache = false)
+      assert(saved.meta.toSeq == mem.meta.toSeq)
+      assert(canon(saved) == canon(mem))
+      assert(saved.probeLayout.partitions.length == 8 && !hasShuffle(saved.probeLayout))
+      assert(probes(saved) == probes(mem))
+      mem.unpersist()
+    }
+  }
+
+  test("load lists no directory: it reads the sidecars alone") {
+    withDir { dir =>
+      VectorIndex.buildTo(corpus(0L until 400L), params, 4, s"$dir/snap").unpersist()
+      val (idx, load) = workDuring(VectorIndex.load(spark, listfs(s"$dir/snap"), cache = false))
+      assert(load.listings == 0 && load.jobs == 0, s"load ran $load")
+      assert(idx.meta.map(_.n_vectors).sum == 400)
+    }
+  }
+
+  test("a flat snapshot is refused by its first probe and by appendTo, naming the migration, before any job") {
+    withDir { dir =>
+      val mem = VectorIndex.build(corpus(0L until 200L), params, numShards = 4)
       writeFlat(mem, s"$dir/flat")
-      VectorIndex.load(spark, s"$dir/flat", cache = false).save(s"$dir/migrated")
-      assert(shardFiles(s"$dir/migrated").keySet == Set(1, 2, 5).map(s => s"sub_index_id=$s"))
-      assert(shardFiles(s"$dir/migrated").values.forall(_.length == 1))
-      val migrated = VectorIndex.load(spark, s"$dir/migrated", cache = false)
-      assert(migrated.meta.toSeq == mem.meta.toSeq)
-      assert(canon(migrated) == canon(mem))
-      assert(migrated.probeLayout.partitions.length == 8 && !hasShuffle(migrated.probeLayout))
-      assert(probes(migrated) == probes(mem))
+      assert(shardFiles(s"$dir/flat").keySet == Set(""), "premise: the snapshot is flat")
+      val flat = VectorIndex.load(spark, s"$dir/flat", cache = false)
+      val qdf = queries.toDF("query_id", "embedding")
+      val (probed, probe) = workDuring(intercept[IllegalArgumentException](flat.query(qdf, 10, 8)))
+      val (appended, append) = workDuring(intercept[IllegalArgumentException](
+        VectorIndex.appendTo(spark, s"$dir/flat", corpus(1000L until 1010L), s"$dir/next")))
+      Seq(probed, appended).foreach { e =>
+        assert(e.getMessage.contains(s"$dir/flat") && e.getMessage.contains("load(old).save(new)"),
+          e.getMessage)
+      }
+      assert(probe.jobs == 0 && append.jobs == 0, s"the refusals ran $probe and $append")
+      assert(!new java.io.File(s"$dir/next/meta.json").exists, "a refused appendTo wrote meta.json")
+      flat.unpersist()
       mem.unpersist()
     }
   }

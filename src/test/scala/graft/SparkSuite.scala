@@ -35,15 +35,50 @@ object SparkSuite {
     * `inputMetrics.bytesRead` would count cached blocks it reads too.
     * `sqlExecutions` counts the Dataset actions and writes that ran a
     * planned query, `optimizerRuns` the plans optimized on the suite
-    * session ([[SparkSuite.OptimizerRuns]]), and `resultBytes` the
-    * serialized task results sent to the driver (the tasks' `resultSize`). */
+    * session ([[SparkSuite.OptimizerRuns]]), `resultBytes` the
+    * serialized task results sent to the driver (the tasks' `resultSize`),
+    * and `listings` the directories listed under the `listfs:` scheme
+    * ([[ListingFs]], on the driver and in tasks). */
   final case class Work(jobs: Int, stages: Int, shuffleWriteBytes: Long, shuffles: Int,
-      inputBytes: Long, sqlExecutions: Int, optimizerRuns: Long, resultBytes: Long)
+      inputBytes: Long, sqlExecutions: Int, optimizerRuns: Long, resultBytes: Long,
+      listings: Long)
 }
+
+/** The local filesystem under the `listfs:` scheme ([[SparkSuite.listfs]]),
+  * counting its directory listings: Hadoop's own statistics count none.
+  * `listFiles` and `listLocatedStatus` list through `listStatus`, so each
+  * directory they visit counts once. The statuses carry default
+  * permissions: the local ones load theirs from a `file:` path. */
+class ListingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("listfs:///")
+  override def getScheme: String = "listfs"
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ListingFs.calls.incrementAndGet()
+    super.listStatus(f).map(s => new org.apache.hadoop.fs.FileStatus(
+      s.getLen, s.isDirectory, s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath))
+  }
+}
+
+object ListingFs {
+  val calls = new java.util.concurrent.atomic.AtomicLong(0)
+}
+
+/** [[ListingFs]] for the FileContext API (sidecar renames). */
+class ListingAfs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+  extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new ListingFs, conf, "listfs", false)
 
 trait SparkSuite {
   lazy val spark: SparkSession = SparkSuite.session
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** The local `path` under the `listfs:` scheme, whose directory
+    * listings [[workDuring]] counts ([[ListingFs]]). */
+  def listfs(path: String): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.listfs.impl", classOf[ListingFs].getName)
+    conf.set("fs.AbstractFileSystem.listfs.impl", classOf[ListingAfs].getName)
+    s"listfs://$path"
+  }
 
   /** Run `f` and count the Spark jobs it started (the work counter the
     * probe specs pin). */
@@ -55,8 +90,8 @@ trait SparkSuite {
   /** Run `f` and count the Spark work it started: jobs, SUBMITTED stages
     * (a stage whose output is already materialized is skipped, not
     * submitted), shuffle bytes written, shuffles (submitted stages
-    * that write one), file bytes read, SQL executions, optimizer runs
-    * and task result bytes. */
+    * that write one), file bytes read, SQL executions, optimizer runs,
+    * task result bytes and `listfs:` directory listings. */
   def workDuring[T](f: => T): (T, SparkSuite.Work) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -92,6 +127,7 @@ trait SparkSuite {
     spark.listenerManager.register(q)
     val read0 = fileBytesRead
     val optimized0 = SparkSuite.OptimizerRuns.count.get
+    val listed0 = ListingFs.calls.get
     val r = try {
       val r = f
       org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
@@ -102,7 +138,7 @@ trait SparkSuite {
     }
     (r, SparkSuite.Work(jobs.get, stages.get, shuffled.get, shuffles.get,
       fileBytesRead - read0, executions.get, SparkSuite.OptimizerRuns.count.get - optimized0,
-      results.get))
+      results.get, ListingFs.calls.get - listed0))
   }
 
   /** Bytes read so far through Hadoop's FileSystem, every scheme. */
