@@ -374,10 +374,18 @@ final class LsmVectorIndex private (
   /** Persist the whole generational state: base + each generation through
     * [[VectorIndex.save]] (parquet rows + sidecars) plus one manifest.
     * Loading restores an equivalent handle mid-stream — ingest, probe and
-    * compaction pick up exactly where the saved state left off. */
+    * compaction pick up exactly where the saved state left off. The
+    * manifest, deleted first and written last, is the commit point; a
+    * member loaded from a directory the save writes is refused first. */
   def save(path: String): Unit = {
-    base.save(s"$path/base")
-    generations.zipWithIndex.foreach { case (g, i) => g.save(s"$path/gen-$i") }
+    val members = (base -> s"$path/base") +:
+      generations.zipWithIndex.map { case (g, i) => g -> s"$path/gen-$i" }
+    val hconf = probeSession.sessionState.newHadoopConf()
+    for ((m, _) <- members if m.stored != null; (_, target) <- members)
+      VectorIndex.requireDistinctPaths(hconf, m.stored.path, target, "LsmVectorIndex.save")
+    val manifest = new org.apache.hadoop.fs.Path(s"$path/lsm.json")
+    manifest.getFileSystem(hconf).delete(manifest, false)
+    members.foreach { case (m, target) => m.save(target) }
     Sidecar.write(probeSession, s"$path/lsm.json",
       Sidecar.LsmFile(generations.length, compactThreshold, genShardSize,
         deleteThreshold, tombstones.toArray.sorted))

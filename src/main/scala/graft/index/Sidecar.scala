@@ -41,6 +41,15 @@ object Sidecar {
       @JsonDeserialize(contentAs = classOf[java.lang.Integer])
       dimension: Option[Int] = None)
 
+  /** A vector snapshot `meta.json` line: a shard's [[ShardMeta]] keys,
+    * then the name and length of its one file in `rows/sub_index_id=s/`
+    * (`file`, `bytes`; absent from lines written before they were named). */
+  case class MetaLine(sub_index_id: Int, n_vectors: Long, layer_count: Int,
+      entry_offset: Int, file: Option[String] = None,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) bytes: Option[Long] = None) {
+    def meta: ShardMeta = ShardMeta(sub_index_id, n_vectors, layer_count, entry_offset)
+  }
+
   /** `calibration.json` ([[WidthCalibration]]); no `faces` key when the
     * table is empty. */
   case class CalibrationFile(search_width: Int, target_recall: Double,

@@ -52,9 +52,10 @@ object ShardGraphCache {
     layoutOf(indexId).fold(0)(l => org.apache.spark.sql.graft.GraftSqlBridge.dropRddBlocks(l.id))
 }
 
-/** One persisted index row: a vector plus its per-layer adjacency
-  * (FIXTURES.md §4; arrays-of-structs instead of maps for encoder
-  * friendliness). */
+/** One index row as [[VectorIndex!.rows]] shows it: a vector plus its
+  * per-layer adjacency (arrays-of-structs instead of maps for encoder
+  * friendliness). A snapshot stores every column but `edges`, which
+  * loading derives from `out` (FIXTURES.md §4). */
 case class IndexRow(
     sub_index_id: Int,
     offset: Int,
@@ -163,8 +164,8 @@ class VectorIndex private (
       * ([[VectorIndex.inMemory]], [[VectorIndex.buildOnDriver]]); None for
       * a loaded snapshot. */
     @transient private val built: Option[RDD[SubIndexGraph]],
-    /** A loaded snapshot's `rows/` directory; null for an in-memory index. */
-    @transient private val rowsDir: String) extends Serializable with AnnProbe {
+    /** A loaded snapshot's rows; null for an in-memory index. */
+    @transient private[index] val stored: VectorIndex.StoredRows) extends Serializable with AnnProbe {
 
   override def probeId: String = indexId
   override def probeMetric: graft.functions.DistanceMetric = params.metric
@@ -182,11 +183,11 @@ class VectorIndex private (
   /** Stored vector dimension, reused by every append. An in-memory index
     * reads it in its build, a rewrite of an index that knew it starts out
     * knowing it, and a loaded snapshot takes it from `params.json`; a
-    * snapshot written without that key reads it once from its first row
-    * (one job). Only valid when the index is non-empty — callers guard
-    * on meta.nonEmpty. */
+    * snapshot written without that key reads it once from one row of one
+    * shard's file ([[VectorIndex.storedDimension]], one job). Only valid
+    * when the index is non-empty — callers guard on meta.nonEmpty. */
   def dimension: Int = {
-    if (knownDim <= 0) knownDim = rows.select(size(col("embedding"))).head.getInt(0)
+    if (knownDim <= 0) knownDim = VectorIndex.storedDimension(spark, stored, meta, numShards)
     knownDim
   }
   // <= 0 = not read yet (a deserialized handle holds 0)
@@ -418,14 +419,13 @@ class VectorIndex private (
   }
 
   /** The index rows (vectors and adjacency) as an uncached view, for
-    * statistics and benches: a loaded snapshot's parquet, or an
-    * in-memory index's graphs dehydrated on every read. No probe reads
-    * it. */
-  @transient lazy val rows: Dataset[IndexRow] = built match {
-    case Some(graphs) =>
-      import spark.implicits._
-      spark.createDataset(graphs.flatMap(VectorIndex.dehydrate))
-    case None => VectorIndex.readRows(spark, rowsDir)
+    * statistics and benches: the graphs dehydrated on every read, a
+    * loaded snapshot's read as a probe reads them
+    * ([[VectorIndex.StoredGraphs]]) but not cached. No probe reads it. */
+  @transient lazy val rows: Dataset[IndexRow] = {
+    import spark.implicits._
+    spark.createDataset(built.getOrElse(new VectorIndex.StoredGraphs(spark, stored, params, meta, numShards))
+      .flatMap(VectorIndex.dehydrate))
   }
 
   /** Set once a loaded index has made its [[probeLayout]]. */
@@ -441,14 +441,14 @@ class VectorIndex private (
     * partition at a level its source sets. An in-memory index's build
     * filled it at memory and disk, and a lost block is rebuilt from its
     * lineage. A LOADED snapshot makes it on first probe, not once per
-    * query call, at memory only: partition s reads `rows/sub_index_id=s/`
-    * ([[VectorIndex.readShards]]) straight into the graph, and a block
+    * query call, at memory only: partition s reads shard s's file
+    * ([[VectorIndex.StoredGraphs]]) straight into the graph, and a block
     * that did not fit, or was lost, is read the same way again by the
     * next probe. A flat snapshot, as written before the shard
     * directories, is refused here, on the driver. */
   @transient private[graft] lazy val probeLayout: RDD[SubIndexGraph] = built.getOrElse {
-    val graphs = VectorIndex.rehydrateShards(VectorIndex.readShards(spark, rowsDir, meta, numShards),
-      params, meta).persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    val graphs = new VectorIndex.StoredGraphs(spark, stored, params, meta, numShards)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     layoutMade = true
     ShardGraphCache.register(indexId, graphs)
     graphs
@@ -500,14 +500,14 @@ class VectorIndex private (
     val sc = spark.sparkContext
     val check = if (added == null) null
       else VectorIndex.AppendCheck(spark, if (meta.nonEmpty) dimension else -1)
-    val report = VectorIndex.BuiltShards(spark)
+    val rebuilt = sc.longAccumulator
     val next = VectorIndex.inMemory(spark, params, numShards, VectorIndex.rewriteShards(
       Left(probeLayout), Option(added).getOrElse(sc.emptyRDD), Option(removed).getOrElse(sc.emptyRDD),
-      params, numShards, check, report))
+      params, numShards, check, rebuilt))
     // unchanged: nothing rebuilt, and no shard emptied out of meta
     val unchanged = try {
       if (check != null) check.verify()
-      report.result()._1.isEmpty && next.meta.length == meta.length
+      rebuilt.value == 0 && next.meta.length == meta.length
     } catch { case t: Throwable => next.unpersist(); throw t }
     if (unchanged) { next.unpersist(); this }
     else {
@@ -532,7 +532,7 @@ class VectorIndex private (
     * python_binding/dehnswpy.cpp:18-21, a deep-copy compaction no-op that
     * exists to settle memory after build): makes every shard's graph
     * resident so later probes pay no build or read cost. One job: a
-    * loaded snapshot reads each shard directory once, straight into its
+    * loaded snapshot reads each shard's file once, straight into its
     * graph; an in-memory index was materialized by its build, so this
     * reads its cache. Returns this index, mirroring the reference's
     * returned copy. */
@@ -543,15 +543,18 @@ class VectorIndex private (
 
   /** Persist the index (reference save/load round trip, one shard at a
     * time: dehnsw.h:666-844, exercised at dehnsw_example.cpp:208-228):
-    * the [[probeLayout]] graphs are written one directory per shard,
-    * `rows/sub_index_id=s/` ([[VectorIndex.writeShards]]), beside the
-    * meta and params sidecars, `meta.json` last
-    * ([[VectorIndex.publish]]). */
-  def save(path: String): Unit =
-    VectorIndex.publish(spark, path, params, numShards, indexId) {
-      VectorIndex.writeShards(spark, probeLayout, s"$path/rows")
-      (meta, knownDim)
+    * one job whose task s writes shard s's [[probeLayout]] graph to one
+    * file in `rows/sub_index_id=s/` ([[VectorIndex.writeShards]]), then
+    * the sidecars, `meta.json` last ([[VectorIndex.publish]]). A loaded
+    * index refuses its own snapshot as the target before anything is
+    * deleted: the publish would delete the rows it reads. */
+  def save(path: String): Unit = {
+    Option(stored).foreach(s => VectorIndex.requireDistinctPaths(
+      spark.sessionState.newHadoopConf(), s.path, path, "save"))
+    VectorIndex.publish(spark, path, params, numShards, indexId) { rows =>
+      VectorIndex.writeShards(spark, probeLayout, rows)
     }
+  }
 }
 
 object VectorIndex {
@@ -879,15 +882,12 @@ object VectorIndex {
   /** Hardlink (both ends local) or copy every data file under `srcDir`
     * into `dstDir`, preserving the partition-directory structure: zero
     * bytes moved on a local store; on an object store the copy is the
-    * server-side-copy fast path. The kept-file discipline shared by
-    * [[appendTo]] (each untouched shard directory) and
-    * [[graft.operators.HybridRetrieval.appendBm25]]. */
+    * server-side-copy fast path: how
+    * [[graft.operators.HybridRetrieval.appendBm25]] keeps files. */
   private[graft] def linkOrCopyTree(conf: org.apache.hadoop.conf.Configuration,
       srcDir: String, dstDir: String): Unit = {
     val src = new org.apache.hadoop.fs.Path(srcDir)
     val fs = src.getFileSystem(conf)
-    val dst = new org.apache.hadoop.fs.Path(dstDir)
-    val dstFs = dst.getFileSystem(conf)
     // relative paths computed against the QUALIFIED source: listFiles
     // returns qualified paths, so stripping an unqualified (relative /
     // "./"-spelled) srcDir would silently nest the whole source layout
@@ -900,19 +900,17 @@ object VectorIndex {
       if (f.isFile && !name.startsWith("_") && !name.startsWith(".")) {
         val rel = f.getPath.toUri.getPath.stripPrefix(srcPrefix)
           .stripPrefix("/")
-        val out = new org.apache.hadoop.fs.Path(dst, rel)
-        dstFs.mkdirs(out.getParent)
-        linkOrCopyFile(fs, f.getPath, dstFs, out, conf)
+        linkOrCopyFile(conf, f.getPath, new org.apache.hadoop.fs.Path(dstDir, rel))
       }
     }
   }
 
-  /** Hardlink `src` to `dst` when both ends are local filesystems (zero
-    * bytes moved), else a FileSystem copy. */
-  private def linkOrCopyFile(
-      fs: org.apache.hadoop.fs.FileSystem, src: org.apache.hadoop.fs.Path,
-      dstFs: org.apache.hadoop.fs.FileSystem, dst: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
+  /** Hardlink `src` to `dst`, making `dst`'s directory, when both ends
+    * are local filesystems (zero bytes moved), else a FileSystem copy. */
+  private def linkOrCopyFile(conf: org.apache.hadoop.conf.Configuration,
+      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit = {
+    val (fs, dstFs) = (src.getFileSystem(conf), dst.getFileSystem(conf))
+    dstFs.mkdirs(dst.getParent)
     val linked = fs.getScheme == "file" && dstFs.getScheme == "file" && (try {
       java.nio.file.Files.createLink(
         java.nio.file.Paths.get(dst.toUri.getPath),
@@ -925,7 +923,7 @@ object VectorIndex {
     * absolute, ".", scheme-default spellings): publishing a "new"
     * snapshot over its own source would destroy the rows mid-read. Same
     * string on two different stores is legal. Shared by the append
-    * publishers. */
+    * publishers and by `save`. */
   private[graft] def requireDistinctPaths(
       hconf: org.apache.hadoop.conf.Configuration, oldPath: String,
       newPath: String, op: String): Unit = {
@@ -934,7 +932,7 @@ object VectorIndex {
       hp.getFileSystem(hconf).makeQualified(hp)
     }
     require(qualified(oldPath) != qualified(newPath),
-      s"$op publishes a NEW snapshot: newPath must differ from oldPath")
+      s"$op publishes a NEW snapshot: $newPath is its own source $oldPath")
   }
 
   /** Sentinel searchWidth for "use the snapshot's persisted calibration"
@@ -1016,17 +1014,18 @@ object VectorIndex {
     * keyed by shard (`id % numShards`, [[ShardPartitioner]]), zipped with
     * `base`, whose partition s holds shard s: its graph (`Left`: an
     * in-memory layout) or its stored (id, embedding) rows (`Right`: a
-    * snapshot's shard directory, read only if the shard changes; such a
+    * snapshot's shard file, read only if the shard changes; such a
     * base takes no removals). Nothing is planned, and no
     * survivor moves. Partition s finds out itself whether shard s
     * changes ([[rewriteShard]]); partition s of the result holds shard
     * s's graph, or nothing for an empty shard or unchanged stored rows.
-    * `check`, when given, sees every changed shard's rows, and `report`
-    * the meta of every rebuilt one. */
+    * `check`, when given, sees every changed shard's rows, and
+    * `rebuilt`, when given, counts the rebuilt shards. */
   private[index] def rewriteShards(
       base: Either[RDD[SubIndexGraph], RDD[(Long, Array[Float])]],
       added: RDD[(Long, Array[Float])], removed: RDD[Long], params: IndexParams,
-      numShards: Int, check: AppendCheck, report: BuiltShards): RDD[SubIndexGraph] = {
+      numShards: Int, check: AppendCheck,
+      rebuilt: org.apache.spark.util.LongAccumulator): RDD[SubIndexGraph] = {
     val (p, n) = (params, numShards)
     val changes = added.map { case (id, v) => (Math.floorMod(id, n), Change(id, v, removed = false)) }
       .union(removed.map(id => (Math.floorMod(id, n), Change(id, null, removed = true))))
@@ -1034,9 +1033,9 @@ object VectorIndex {
     base match {
       case Left(graphs) => graphs.zipPartitions(changes) { (git, cs) =>
         val g = if (git.hasNext) git.next() else null
-        rewriteShard(g, if (g == null) Iterator.empty else vectorsOf(g), cs, p, check, report)
+        rewriteShard(g, if (g == null) Iterator.empty else vectorsOf(g), cs, p, check, rebuilt)
       }
-      case Right(rows) => rows.zipPartitions(changes)(rewriteShard(null, _, _, p, check, report))
+      case Right(rows) => rows.zipPartitions(changes)(rewriteShard(null, _, _, p, check, rebuilt))
     }
   }
 
@@ -1048,7 +1047,7 @@ object VectorIndex {
     * or emits nothing when none is left or `check` rejects them. */
   private def rewriteShard(g: SubIndexGraph, stored: Iterator[(Long, Array[Float])],
       changes: Iterator[(Int, Change)], p: IndexParams, check: AppendCheck,
-      report: BuiltShards): Iterator[SubIndexGraph] = {
+      rebuilt: org.apache.spark.util.LongAccumulator): Iterator[SubIndexGraph] = {
     val cs = changes.buffered
     if (!cs.hasNext) return Option(g).iterator
     val shardId = cs.head._1
@@ -1064,9 +1063,8 @@ object VectorIndex {
     if (vecs.isEmpty || (check != null && check.rejects(vecs))) Iterator.empty
     else {
       val dim = if (check != null && check.dim > 0) check.dim else vecs.head._2.length
-      val built = buildShard(shardId, vecs, p, dim)
-      if (report != null) report.shards.add((metaOf(built), dim))
-      Iterator.single(built)
+      if (rebuilt != null) rebuilt.add(1)
+      Iterator.single(buildShard(shardId, vecs, p, dim))
     }
   }
 
@@ -1109,8 +1107,8 @@ object VectorIndex {
     * an id lands in the same shard, adjacent after the shard's id sort,
     * so a shard counts its own violations into the accumulators and is
     * not built if it has any; [[verify]] then throws on the driver, after
-    * the pass that ran the rewrite (the rewrite's cache fill, appendTo's
-    * write). */
+    * the pass that ran the rewrite (the rewrite's cache fill, the write
+    * of buildTo and appendTo). */
   private[index] final case class AppendCheck(dim: Int,
       badDims: org.apache.spark.util.LongAccumulator,
       clashes: org.apache.spark.util.LongAccumulator) {
@@ -1122,32 +1120,6 @@ object VectorIndex {
       bad + dup > 0
     }
     def verify(): Unit = AppendCheck.require(dim, badDims.value, clashes.value)
-  }
-
-  /** The meta and dimension of every non-empty shard a build's tasks
-    * built, as [[buildShard]] read them off the graphs: how [[buildTo]]
-    * and [[appendTo]] take the meta of the rows they write without
-    * reading them back, and how [[VectorIndex!.rewrite]] tells that a
-    * shard was rebuilt. The builds run in the result stage of the job
-    * that writes or caches them, whose task updates Spark applies once
-    * per partition, so a shard reported twice was built in two tasks. */
-  private[index] final case class BuiltShards(
-      shards: org.apache.spark.util.CollectionAccumulator[(ShardMeta, Int)]) {
-    /** The reported meta by shard id, and the dimension (-1 when no shard
-      * was built). */
-    def result(): (Array[ShardMeta], Int) = {
-      import scala.jdk.CollectionConverters._
-      val all = shards.value.asScala.toArray.sortBy(_._1.sub_index_id)
-      val twice = all.map(_._1.sub_index_id).diff(all.map(_._1.sub_index_id).distinct)
-      require(twice.isEmpty, s"shards ${twice.distinct.mkString(", ")} were built more " +
-        "than once (corpus mis-partitioned?)")
-      (all.map(_._1), all.headOption.fold(-1)(_._2))
-    }
-  }
-
-  private[index] object BuiltShards {
-    def apply(spark: SparkSession): BuiltShards =
-      BuiltShards(spark.sparkContext.collectionAccumulator[(ShardMeta, Int)])
   }
 
   private[index] object AppendCheck {
@@ -1174,7 +1146,8 @@ object VectorIndex {
     require(layout.partitions.length == numShards,
       s"shard layout has ${layout.partitions.length} partitions for $numShards shards")
     layout.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shards = try layout.mapPartitionsWithIndex((s, it) => Iterator(shardMetaOf(s, it))).collect()
+    val shards = try layout.mapPartitionsWithIndex((s, it) =>
+        Iterator(graphOf(s, it).map(g => (metaOf(g), g.dim)))).collect()
       catch { case t: Throwable => layout.unpersist(false); throw t }
     fromGraphs(spark, params, numShards, layout, shards.flatten)
   }
@@ -1190,15 +1163,15 @@ object VectorIndex {
     idx
   }
 
-  /** Shard `shard`'s meta and dimension, read off the graph in its
-    * partition, if any: at most one, and of that shard. */
-  private def shardMetaOf(shard: Int, graphs: Iterator[SubIndexGraph]): Option[(ShardMeta, Int)] = {
+  /** The graph in shard `shard`'s partition, if any: at most one, and
+    * of that shard. */
+  private def graphOf(shard: Int, graphs: Iterator[SubIndexGraph]): Option[SubIndexGraph] = {
     val gs = graphs.toArray
     require(gs.length <= 1, s"shard $shard was built ${gs.length} times (corpus mis-partitioned?)")
     gs.headOption.map { g =>
       require(g.shardId == shard, s"the graph of shard ${g.shardId} sits in the partition " +
         s"of shard $shard: the layout is not shard-aligned")
-      (metaOf(g), g.dim)
+      g
     }
   }
 
@@ -1356,17 +1329,17 @@ object VectorIndex {
 
   /** Build STRAIGHT TO STORAGE: index rows stream from the build tasks
     * (one per shard) directly into compressed parquet, one file per shard
-    * under `rows/sub_index_id=s/` ([[writeShards]]) — no cluster-wide
+    * in `rows/sub_index_id=s/` ([[writeShards]]) — no cluster-wide
     * cache, no serialized eviction spill; exactly one on-disk copy.
-    * The write's tasks build the shards as [[build]] does
-    * ([[rewriteShards]] over empty shards) and report each shard's meta
-    * ([[BuiltShards]]), so nothing is read back: one job, the write. The
-    * sidecars follow, `meta.json` last ([[publish]]), so a repeated id,
-    * rejected after the write ([[AppendCheck]]), leaves no snapshot. No
-    * write task puts a block into the block store.
+    * ONE job, no query planned: its tasks build the shards as [[build]]
+    * does ([[rewriteShards]] over empty shards), write them and return
+    * their meta and files, so nothing is read back. The sidecars follow,
+    * `meta.json` last ([[publish]]), so a repeated id, rejected after
+    * the write ([[AppendCheck]]), leaves no snapshot. No write task puts
+    * a block into the block store.
     * Returns the LOADED index over that parquet, whose first probe (or
-    * [[VectorIndex!.optimize]]) reads each shard's directory once,
-    * straight into its resident graph.
+    * [[VectorIndex!.optimize]]) reads each shard's file once, straight
+    * into its resident graph.
     *
     * This is the decade-scale disk mitigation measured in SCALE.md: at
     * 100M x 64d the MEMORY_AND_DISK cache spill of a cached build
@@ -1379,12 +1352,11 @@ object VectorIndex {
       path: String): VectorIndex = {
     val spark = df.sparkSession
     val check = AppendCheck(spark, -1)
-    val report = BuiltShards(spark)
-    publish(spark, path, params, numShards, java.util.UUID.randomUUID().toString) {
-      writeShards(spark, rewriteShards(Left(emptyLayout(spark, numShards)), inputRows(df, params),
-        spark.sparkContext.emptyRDD, params, numShards, check, report), s"$path/rows")
+    publish(spark, path, params, numShards, java.util.UUID.randomUUID().toString) { rows =>
+      val written = writeShards(spark, rewriteShards(Left(emptyLayout(spark, numShards)),
+        inputRows(df, params), spark.sparkContext.emptyRDD, params, numShards, check, null), rows)
       check.verify()
-      report.result()
+      written
     }
     load(spark, path)
   }
@@ -1398,20 +1370,19 @@ object VectorIndex {
     *
     *  - COMPUTE: only affected shards re-insert ([[rewriteShards]]);
     *    every other shard's graph is reused verbatim, meta included.
-    *  - I/O: a shard that receives no row reads nothing, and its
-    *    `rows/sub_index_id=s/` directory is HARDLINKED into the new
-    *    snapshot whole — zero bytes moved; on a store without links (or
-    *    cross-device) it falls back to a byte copy, which on object
-    *    stores is the server-side-copy fast path. An affected shard reads
-    *    only the (id, embedding) columns of its directory. A flat
-    *    snapshot, as written before the shard directories, is refused
-    *    before any job ([[scanShards]]).
+    *  - I/O: a shard that receives no row reads nothing, and its one
+    *    file is HARDLINKED into the new snapshot under its name — zero
+    *    bytes moved; on a store without links (or cross-device) it falls
+    *    back to a byte copy, which on object stores is the
+    *    server-side-copy fast path. An affected shard reads only the
+    *    (id, embedding) columns of its file. No directory is listed
+    *    ([[shardFiles]]).
     *
-    * One job, the write, whose tasks find their shard's changes, rebuild
-    * it and write it; it reads nothing back. The added vectors are
-    * validated inside the build ([[AppendCheck]]) and the rebuilt shards'
-    * meta comes from their build tasks ([[BuiltShards]]); the index
-    * dimension comes from the old `params.json` (a snapshot written
+    * One job, no query planned, whose tasks find their shard's changes,
+    * rebuild it and write it; it reads nothing back. The added vectors
+    * are validated inside the build ([[AppendCheck]]) and the rebuilt
+    * shards' meta and files are the job's results ([[writeShards]]); the
+    * index dimension comes from the old `params.json` (a snapshot written
     * without that key pays one one-row read). Rows are written before the
     * check passes, so `meta.json` is the commit point ([[publish]]): a
     * rejected batch — an empty one included, which rebuilds no shard —
@@ -1432,61 +1403,73 @@ object VectorIndex {
     requireDistinctPaths(hconf, oldPath, newPath, "appendTo")
     val old = load(spark, oldPath)
     val (params, numShards) = (old.params, old.numShards)
-    val newRows = s"$newPath/rows"
-    publish(spark, newPath, params, numShards, java.util.UUID.randomUUID().toString) {
-      val base = readShardVectors(spark, old.rowsDir, old.meta, numShards)
+    publish(spark, newPath, params, numShards, java.util.UUID.randomUUID().toString) { newRows =>
+      val files = shardFiles(spark, old.stored, old.meta, numShards)
+      val base = scanShards(spark, files, storedSchema.filter(f => f.name == "global_id" ||
+        f.name == "embedding")).map(r => (r.getLong(0), r.getArray(1).toFloatArray()))
       // existing rows always match, and a clashing id hashes into an
       // affected shard, so checking the rebuilt shards covers old-vs-new
       // AND new-vs-new clashes
       val dim = if (old.meta.nonEmpty) old.dimension else -1
       val check = AppendCheck(spark, dim)
-      val report = BuiltShards(spark)
-      writeShards(spark, rewriteShards(Right(base), inputRows(newVectors, params),
-        spark.sparkContext.emptyRDD, params, numShards, check, report), newRows)
+      val rebuilt = writeShards(spark, rewriteShards(Right(base), inputRows(newVectors, params),
+        spark.sparkContext.emptyRDD, params, numShards, check, null), newRows)
       check.verify()
-      val (rebuiltMeta, builtDim) = report.result()
-      if (rebuiltMeta.isEmpty) throw new IllegalArgumentException("appendTo over an empty batch")
-      val rebuilt = rebuiltMeta.map(_.sub_index_id).toSet
-      // kept shard directories: hardlinked whole
-      for (s <- old.meta.map(_.sub_index_id) if !rebuilt(s))
-        linkOrCopyTree(hconf, s"${old.rowsDir}/sub_index_id=$s", s"$newRows/sub_index_id=$s")
-      ((old.meta.filterNot(m => rebuilt(m.sub_index_id)) ++ rebuiltMeta).sortBy(_.sub_index_id),
-        if (dim > 0) dim else builtDim)
+      if (rebuilt.isEmpty) throw new IllegalArgumentException("appendTo over an empty batch")
+      val ids = rebuilt.map(_.meta.sub_index_id).toSet
+      // kept shards: their one file hardlinked under its name
+      val kept = old.meta.filterNot(m => ids(m.sub_index_id)).map { m =>
+        val s = m.sub_index_id
+        require(files(s).length == 1, s"shard $s of $oldPath has ${files(s).length} files, not one: " +
+          "migrate it with load(old).save(new)")
+        val f = files(s).head.getPath
+        linkOrCopyFile(hconf, f, new org.apache.hadoop.fs.Path(s"$newRows/sub_index_id=$s/${f.getName}"))
+        ShardWrite(m, dim, f.getName, files(s).head.getLen)
+      }
+      (kept ++ rebuilt).sortBy(_.meta.sub_index_id)
     }
     load(spark, newPath)
   }
 
+  /** One written shard: its meta and dimension, and the name and length
+    * of its one file in `rows/sub_index_id=s/`. */
+  private[index] final case class ShardWrite(meta: ShardMeta, dim: Int, file: String, bytes: Long)
+
   /** Publish the snapshot at `path` with `meta.json` as its commit
-    * point: any `meta.json` there is deleted before `write` writes the
-    * first row, and the new one is written last, after `params.json`.
-    * `write` writes `rows/` and returns the meta and the stored dimension
-    * (<= 0 when unknown). [[load]] refuses a directory without
-    * `meta.json`, so a publish that fails or is rejected at any step
-    * never pairs a stale `meta.json` with new rows; short of a crash,
-    * its rows are deleted too. */
+    * point: any `meta.json` there is deleted first, then `rows/` with any
+    * file an earlier publish left; `write` writes the shards into the
+    * `rows/` it is given and returns them, and the new `meta.json`,
+    * naming their files, is written last, after `params.json`. [[load]]
+    * refuses a directory without `meta.json`, so a publish that fails or
+    * is rejected at any step never pairs a stale `meta.json` with new
+    * rows; short of a crash, its rows are deleted too. */
   private[index] def publish(spark: SparkSession, path: String, params: IndexParams,
-      numShards: Int, indexId: String)(write: => (Array[ShardMeta], Int)): Unit = {
-    val metaFile = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-    val fs = metaFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(metaFile, false)
+      numShards: Int, indexId: String)(write: String => Array[ShardWrite]): Unit = {
+    val rows = new org.apache.hadoop.fs.Path(s"$path/rows")
+    val fs = rows.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/meta.json"), false)
+    fs.delete(rows, true)
     try {
-      val (meta, dim) = write
-      writeMetaAndParams(spark, path, meta, params, numShards, indexId,
-        Some(dim).filter(_ > 0))
+      val shards = write(rows.toString)
+      writeMetaAndParams(spark, path, shards.map(_.meta), params, numShards, indexId,
+        shards.map(_.dim).maxOption.filter(_ > 0),
+        shards.map(w => w.meta.sub_index_id -> (w.file, w.bytes)).toMap)
     } catch { case t: Throwable =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/rows"), true)
+      fs.delete(rows, true)
       throw t
     }
   }
 
-  /** Params + meta sidecars next to an already-written `rows` parquet,
-    * `meta.json` last: the commit point of [[publish]]. meta is numShards
-    * tiny records — one small file write through the Hadoop FS API (works
-    * for hdfs://, s3a://, file:, ...), not a Spark job. */
+  /** Params + meta sidecars next to an already-written `rows/`,
+    * `meta.json` last: the commit point of [[publish]]. A meta line names
+    * its shard's file and length in `files` (shard id -> both), if any.
+    * meta is numShards tiny records — one small file write through the
+    * Hadoop FS API (works for hdfs://, s3a://, file:, ...), not a Spark
+    * job. */
   private[graft] def writeMetaAndParams(
       spark: SparkSession, path: String, meta: Array[ShardMeta],
       p: IndexParams, numShards: Int, indexId: String,
-      dimension: Option[Int] = None): Unit = {
+      dimension: Option[Int] = None, files: Map[Int, (String, Long)] = Map.empty): Unit = {
     // schedule as from:M:RM triples — build provenance AND an append
     // contract (append rebuilds shards with the same schedule)
     val sched = p.schedule
@@ -1496,7 +1479,9 @@ object VectorIndex {
       p.metric.name, p.minimumConnect, p.relaxedMonotonicity, p.step,
       p.subIndexBound, numShards, sched, p.quantized, p.quantLo, p.quantHi,
       p.normalizeForCosine, p.augmentForMips, p.mipsMaxNorm, indexId, dimension))
-    Sidecar.writeLines(spark, s"$path/meta.json", meta.toSeq)
+    Sidecar.writeLines(spark, s"$path/meta.json", meta.toSeq.map(m => Sidecar.MetaLine(m.sub_index_id,
+      m.n_vectors, m.layer_count, m.entry_offset, files.get(m.sub_index_id).map(_._1),
+      files.get(m.sub_index_id).map(_._2))))
   }
 
   /** One shard's driver-built graph as a one-partition RDD read from a
@@ -1533,133 +1518,108 @@ object VectorIndex {
 
   private class ShardZero extends org.apache.spark.Partition { override def index: Int = 0 }
 
-  /** A loaded snapshot's graphs ([[rehydrateShards]]), declared laid
-    * out by [[ShardPartitioner]]: partition index == shard id, the
-    * property the probe core relies on ([[shardCandidates]] reads its
-    * partition index as the shard, or zips it with queries shuffled by
-    * that partitioner). Purity is enforced per graph (a mis-packed
-    * partition would otherwise serve another shard's graph — silent
-    * corruption, so it is a hard error). */
-  private class ShardAlignedRDD(parent: RDD[SubIndexGraph])
-    extends RDD[SubIndexGraph](parent) {
-    override val partitioner: Option[org.apache.spark.Partitioner] =
-      Some(new ShardPartitioner(parent.partitions.length))
-    override protected def getPartitions: Array[org.apache.spark.Partition] =
-      firstParent[SubIndexGraph].partitions
-    override def compute(split: org.apache.spark.Partition,
-        ctx: org.apache.spark.TaskContext): Iterator[SubIndexGraph] =
-      firstParent[SubIndexGraph].iterator(split, ctx).map { g =>
-        require(g.shardId == split.index,
-          s"sharded layout violation: the graph of shard ${g.shardId} " +
-            s"appeared in the partition serving shard ${split.index}")
-        g
-      }
-  }
-
   /** Write a shard-aligned layout (partition s holds shard s's graph or
-    * nothing) to `dir`, one directory per shard, `sub_index_id=s/`,
-    * holding the one file written by the task of partition s; an empty
-    * shard writes nothing. Each graph is dehydrated inside its write
-    * task, the rows streaming into the file. The rows are declared sorted
-    * by shard within each partition, which one shard per partition makes
-    * true, so the write plans no Sort above the build: a Sort would
-    * buffer a whole shard beside its graph. The write is the one query
-    * planned: the rows are serialized in its tasks, not through a Dataset
-    * planned first. */
+    * nothing) to `dir` in ONE job that plans no query: the task of
+    * partition s writes shard s's graph, if any, to one new file
+    * `sub_index_id=s/part-<s>-<unique per task attempt>.parquet` with
+    * Spark's parquet writer ([[GraftSqlBridge.parquetWriter]]), and
+    * returns its [[ShardWrite]]. A job has one result per partition, so
+    * no shard reports twice, and a file a failed attempt left is in no
+    * result. */
   private[index] def writeShards(spark: SparkSession,
-      layout: RDD[SubIndexGraph], dir: String): Unit =
-    org.apache.spark.sql.graft.GraftSqlBridge
-      .sortedFrame(spark, layout.flatMap(dehydrate),
-        org.apache.spark.sql.Encoders.product[IndexRow], "sub_index_id")
-      .write.mode("overwrite").partitionBy("sub_index_id").parquet(dir)
-
-  /** The columns of an [[IndexRow]]: a shard directory's files hold all
-    * but `sub_index_id`, which the directory name carries. */
-  private lazy val rowSchema = org.apache.spark.sql.Encoders.product[IndexRow].schema
-
-  /** A snapshot's `rows/` directory as index rows, read with the known
-    * schema (the shard id from each `sub_index_id=s/` directory name): no
-    * footer is read to infer it, and a snapshot of no rows reads as
-    * empty. [[VectorIndex!.rows]] reads it; no probe does. */
-  private[index] def readRows(spark: SparkSession, dir: String): Dataset[IndexRow] = {
-    import spark.implicits._
-    spark.read.schema(rowSchema).parquet(dir).as[IndexRow]
+      layout: RDD[SubIndexGraph], dir: String): Array[ShardWrite] = {
+    val write = GraftSqlBridge.parquetWriter(spark, storedSchema)
+    spark.sparkContext.runJob(layout, (task: org.apache.spark.TaskContext, it: Iterator[SubIndexGraph]) =>
+      graphOf(task.partitionId(), it).map { g =>
+        val file = f"part-${g.shardId}%05d-${java.util.UUID.randomUUID()}.parquet"
+        ShardWrite(metaOf(g), g.dim, file, write(s"$dir/sub_index_id=${g.shardId}/$file", storedRows(g)))
+      }).flatten
   }
 
-  /** The rows of a snapshot laid out by [[writeShards]], by shard:
-    * partition s reads the files of `dir/sub_index_id=s/` whole, and the
-    * shard id is the partition index ([[scanShards]]). */
-  private[index] def readShards(spark: SparkSession, dir: String,
-      meta: Array[ShardMeta], numShards: Int): RDD[IndexRow] =
-    scanShards(spark, dir, meta, numShards,
-      org.apache.spark.sql.types.StructType(rowSchema.filterNot(_.name == "sub_index_id")))
-      .mapPartitionsWithIndex((s, it) => it.map(storedRow(s, _)))
+  /** The columns of a shard's file: an [[IndexRow]]'s but `sub_index_id`,
+    * which the directory name carries, and `edges`, which loading derives
+    * ([[rehydrateStreaming]]); files written before hold it, unread. */
+  private lazy val storedSchema = org.apache.spark.sql.types.StructType(
+    org.apache.spark.sql.Encoders.product[IndexRow].schema
+      .filterNot(f => f.name == "sub_index_id" || f.name == "edges"))
 
-  /** [[readShards]] pruned to the (id, embedding) columns: what a
-    * rewrite reads of a changed shard's stored rows. */
-  private def readShardVectors(spark: SparkSession, dir: String,
-      meta: Array[ShardMeta], numShards: Int): RDD[(Long, Array[Float])] =
-    scanShards(spark, dir, meta, numShards, org.apache.spark.sql.types.StructType(
-      rowSchema.filter(f => f.name == "global_id" || f.name == "embedding")))
-      .map(r => (r.getLong(0), r.getArray(1).toFloatArray()))
+  /** Graph `g`'s rows in [[storedSchema]], by offset, made by hand: the
+    * mirror of how [[rehydrateStreaming]] reads them. */
+  private def storedRows(g: SubIndexGraph): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    Iterator.range(0, g.count).map(o => InternalRow(o, g.globalIds(o), g.layerOf(o),
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(g.vecAt(o)),
+      new GenericArrayData(g.out(o).map(el => new GenericArrayData(
+        Array.tabulate[Any](el.size)(i => InternalRow(el.ds(i), el.ns(i))))).toArray[Any])))
+  }
 
-  /** The `schema` columns of a snapshot's shard directories, partition s
-    * reading `dir/sub_index_id=s/`, and only once its rows are asked for.
-    * One listing finds every shard's files and one file scan reads them
-    * all, with no query planned, so neither the driver's work nor the
-    * lineage each task carries grows with the shard count (a scan planned
-    * per shard costs ~65 ms of driver time and ~30 KB of lineage per
-    * shard). A shard without meta gets an empty partition, and so does
-    * one whose directory is missing: its graph then fails on the row
-    * count its meta promises ([[rehydrateShards]]), never serving a
-    * partial index. A data file directly under `dir` is the flat layout
-    * written before the shard directories: an IllegalArgumentException
-    * naming the snapshot and its migration, before any job. */
-  private def scanShards(spark: SparkSession, dir: String, meta: Array[ShardMeta],
-      numShards: Int, schema: org.apache.spark.sql.types.StructType)
-      : RDD[org.apache.spark.sql.catalyst.InternalRow] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val top = fs.makeQualified(root)
-    val files = mutable.Map.empty[String, Seq[org.apache.hadoop.fs.FileStatus]].withDefaultValue(Nil)
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        require(f.getPath.getParent != top, s"snapshot ${root.getParent} is flat (part files " +
-          "directly under rows/), a layout no longer read: migrate it with load(old).save(new) " +
-          "on a version that reads it (commit 6adea2e or earlier)")
-        files(f.getPath.getParent.getName) :+= f
-      }
-    }
+  /** A loaded snapshot at `path`, and the file `meta.json` names for each
+    * shard (shard id -> name and length); None when it names none, as
+    * written before the files were named. */
+  private[index] final case class StoredRows(path: String, named: Option[Map[Int, (String, Long)]])
+
+  /** The stored dimension of a non-empty loaded snapshot, read from one
+    * row of one shard's file: one job of one task. */
+  private def storedDimension(spark: SparkSession, stored: StoredRows,
+      meta: Array[ShardMeta], numShards: Int): Int = {
+    require(stored != null && meta.nonEmpty, "the dimension of an empty index is unknown")
+    val first = shardFiles(spark, stored, meta, numShards).find(_.nonEmpty).toSeq.map(_.take(1))
+    scanShards(spark, first, storedSchema.filter(_.name == "embedding"))
+      .map(_.getArray(0).numElements()).take(1).head
+  }
+
+  /** Each shard's files, shard s at position s (none without meta). A
+    * snapshot whose `meta.json` names its files is read from exactly
+    * those, a file status made from each name and length: nothing is
+    * listed, and a file a retried or late task attempt wrote is never
+    * read. One that names none, written before the files were named,
+    * is found by one listing of `rows/` (`load(old).save(new)` migrates
+    * it), which refuses a data file directly under `rows/`, the flat
+    * layout written before the shard directories, naming the snapshot
+    * and its migration. */
+  private def shardFiles(spark: SparkSession, stored: StoredRows, meta: Array[ShardMeta],
+      numShards: Int): IndexedSeq[Seq[org.apache.hadoop.fs.FileStatus]] = {
     val withMeta = meta.map(_.sub_index_id).toSet
-    val groups = (0 until numShards).map(s =>
-      if (withMeta(s)) files(s"sub_index_id=$s") else Nil)
+    val files: Int => Seq[org.apache.hadoop.fs.FileStatus] = stored.named match {
+      case Some(named) => s => named.get(s).toSeq.map { case (name, bytes) =>
+        new org.apache.hadoop.fs.FileStatus(bytes, false, 0, 0, 0,
+          new org.apache.hadoop.fs.Path(s"${stored.path}/rows/sub_index_id=$s/$name"))
+      }
+      case None =>
+        val root = new org.apache.hadoop.fs.Path(s"${stored.path}/rows")
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val top = fs.makeQualified(root)
+        val listed = mutable.Map.empty[String, Seq[org.apache.hadoop.fs.FileStatus]].withDefaultValue(Nil)
+        val it = fs.listFiles(root, true)
+        while (it.hasNext) {
+          val f = it.next()
+          val name = f.getPath.getName
+          if (!name.startsWith("_") && !name.startsWith(".")) {
+            require(f.getPath.getParent != top, s"snapshot ${root.getParent} is flat (part files " +
+              "directly under rows/), a layout no longer read: migrate it with load(old).save(new) " +
+              "on a version that reads it (commit 6adea2e or earlier)")
+            listed(f.getPath.getParent.getName) :+= f
+          }
+        }
+        s => listed(s"sub_index_id=$s")
+    }
+    (0 until numShards).map(s => if (withMeta(s)) files(s) else Nil)
+  }
+
+  /** The `schema` columns of the file groups `files`, partition s reading
+    * `files(s)` once its rows are asked for: one file scan, no query
+    * planned, so neither the driver's work nor a task's lineage grows
+    * with the shard count (a scan planned per shard costs ~65 ms of
+    * driver time and ~30 KB of lineage per shard). */
+  private def scanShards(spark: SparkSession, files: Seq[Seq[org.apache.hadoop.fs.FileStatus]],
+      schema: Seq[org.apache.spark.sql.types.StructField]): RDD[org.apache.spark.sql.catalyst.InternalRow] =
     // classic stream reads, NOT Hadoop vectored IO: a probe task drains
     // its shard over minutes while it rehydrates the graph, and the
     // vectored path bounds each prefetched range at 300 s (measured at
     // the 100M decade: the probe died on a read timeout)
-    org.apache.spark.sql.graft.GraftSqlBridge.readParquetGroups(spark, schema, groups,
+    GraftSqlBridge.readParquetGroups(spark, org.apache.spark.sql.types.StructType(schema), files,
       Map("parquet.hadoop.vectored.io.enabled" -> "false"))
-  }
-
-  /** Shard `shard`'s [[IndexRow]] from a row of its directory's files:
-    * offset, global_id, layer, embedding, out, edges (the [[rowSchema]]
-    * order). Converted by hand, not by a planned deserializer, so the
-    * probe layout's lineage stays the file scan alone. */
-  private def storedRow(shard: Int,
-      r: org.apache.spark.sql.catalyst.InternalRow): IndexRow = {
-    def layers[T](a: org.apache.spark.sql.catalyst.util.ArrayData)(
-        edge: org.apache.spark.sql.catalyst.InternalRow => T): Seq[Seq[T]] =
-      Seq.tabulate(a.numElements()) { l =>
-        val es = a.getArray(l)
-        Seq.tabulate(es.numElements())(e => edge(es.getStruct(e, 2)))
-      }
-    IndexRow(shard, r.getInt(0), r.getLong(1), r.getInt(2), r.getArray(3).toFloatArray(),
-      layers(r.getArray(4))(e => OutEdge(e.getDouble(0), e.getInt(1))),
-      layers(r.getArray(5))(e => EdgeRef(e.getInt(0), e.getInt(1))))
-  }
 
   /** One-time write of a shard-bucketed corpus table: rows land in
     * `numShards` buckets keyed by `sub_index_id` ([[shardOf]]: the same
@@ -1726,18 +1686,18 @@ object VectorIndex {
     * missing `meta.json`, the commit point of every publish, is an
     * IllegalArgumentException naming it. The index dimension is preset
     * from `params.json` when it records one. Nothing else is read, and
-    * no directory is listed: the rows, one directory per shard
-    * ([[VectorIndex!.save]], [[buildTo]], [[appendTo]]), are read in
-    * place, straight into the graphs, by the first probe
-    * ([[VectorIndex!.probeLayout]]), which refuses a flat `rows/` as
-    * older versions wrote it.
+    * no directory is listed: the rows, one file per shard named in
+    * `meta.json` ([[VectorIndex!.save]], [[buildTo]], [[appendTo]]), are
+    * read in place, straight into the graphs, by the first probe
+    * ([[VectorIndex!.probeLayout]]); an older `meta.json` that names no
+    * files leaves them to one listing there ([[shardFiles]]).
     * @param cache kept for source compatibility; it selects nothing. The
     *              graphs are the one cached copy, held at memory only and
     *              re-read when Spark's storage memory cannot hold them. */
   def load(spark: SparkSession, path: String, cache: Boolean = true): VectorIndex = {
-    val meta = Sidecar.readLines[ShardMeta](spark, s"$path/meta.json")
+    val lines = Sidecar.readLines[Sidecar.MetaLine](spark, s"$path/meta.json")
       .getOrElse(throw new IllegalArgumentException(s"missing $path/meta.json"))
-      .toArray.sortBy(_.sub_index_id)
+      .sortBy(_.sub_index_id)
     val pf = Sidecar.readRequired[Sidecar.IndexParamsFile](spark, s"$path/params.json")
     val metric = DistanceMetric.all.find(_.name == pf.metric).getOrElse(
       sys.error(s"$path/params.json: unknown metric '${pf.metric}'"))
@@ -1749,87 +1709,99 @@ object VectorIndex {
     val params = IndexParams(metric, pf.minimumConnect, pf.relaxedMonotonicity,
       pf.step, pf.subIndexBound, schedule, pf.quantized, pf.quantLo, pf.quantHi,
       pf.normalizeForCosine, pf.augmentForMips, pf.mipsMaxNorm)
+    val named = Option.when(lines.forall(l => l.file.nonEmpty && l.bytes.nonEmpty))(
+      lines.map(l => l.sub_index_id -> (l.file.get, l.bytes.get)).toMap)
     // a fresh identity per load: the graphs of each load are its own, not
     // those of the index that wrote the snapshot nor of another load
-    val idx = new VectorIndex(params, pf.numShards, meta,
+    val idx = new VectorIndex(params, pf.numShards, lines.map(_.meta).toArray,
       pf.indexId + "#load-" + java.util.UUID.randomUUID().toString, spark, None,
-      new org.apache.hadoop.fs.Path(s"$path/rows").toString)
+      StoredRows(new org.apache.hadoop.fs.Path(path).toString, named))
     pf.dimension.foreach(idx.knownDim = _)
     idx
   }
 
-  /** Shard `g.shardId`'s rows, read off its graph: what a snapshot stores
-    * and [[VectorIndex!.rows]] shows. */
+  /** Shard `g.shardId`'s rows, read off its graph: what
+    * [[VectorIndex!.rows]] shows. `edges` is normalized to ascending
+    * `nbr`, the order a loaded graph holds it in. */
   private[graft] def dehydrate(g: SubIndexGraph): Iterator[IndexRow] =
     (0 until g.count).iterator.map { o =>
       IndexRow(
         g.shardId, o, g.globalIds(o), g.layerOf(o), g.vecAt(o),
         g.out(o).map(el => (0 until el.size).map(i => OutEdge(el.ds(i), el.ns(i))).toSeq).toSeq,
         // adjacency arrays use swap-removal, so normalize to nbr order for
-        // a canonical (rebuild-stable) persisted form
+        // a canonical (rebuild-stable) form
         g.edges(o).map(al => (0 until al.size).map(i => EdgeRef(al.nbrs(i), al.rcs(i)))
           .sortBy(_.nbr).toSeq).toSeq)
     }
 
-  /** Rows laid out by shard (partition s holds shard s's rows)
-    * rehydrated into one graph per non-empty partition, each checked
-    * against `meta`: a shard with rows must have a meta entry, and its
-    * row count must be the one the entry records. */
-  private def rehydrateShards(rows: RDD[IndexRow], params: IndexParams,
-      meta: Array[ShardMeta]): RDD[SubIndexGraph] = {
-    val metaMap = meta.map(m => m.sub_index_id -> m).toMap
-    new ShardAlignedRDD(rows.mapPartitionsWithIndex { (s, it) =>
-      metaMap.get(s) match {
-        case None =>
-          require(it.isEmpty, s"shard $s has rows but no meta entry")
-          Iterator.empty
-        case Some(m) if it.isEmpty =>
-          require(m.n_vectors == 0, s"shard $s: empty partition, meta says ${m.n_vectors} rows")
-          Iterator.empty
-        case Some(m) => Iterator.single(rehydrateStreaming(params, m, m.n_vectors.toInt, it))
+  /** A loaded snapshot's graphs, not cached: partition s reads shard s's
+    * files ([[shardFiles]]; none for a shard without meta) straight into
+    * its graph ([[rehydrateStreaming]]), whose row count must be the one
+    * its meta records, so a missing file, read as empty, fails. Declared
+    * laid out by [[ShardPartitioner]]: partition index == shard id, the
+    * property the probe core relies on ([[shardCandidates]]). */
+  private class StoredGraphs(spark: SparkSession, stored: StoredRows, params: IndexParams,
+      meta: Array[ShardMeta], numShards: Int) extends RDD[SubIndexGraph](
+      GraftSqlBridge.withConfOverrides(spark, "spark.sql.files.ignoreMissingFiles" -> "true")(
+        scanShards(spark, shardFiles(spark, stored, meta, numShards), storedSchema))) {
+    private val byShard = meta.map(m => m.sub_index_id -> m).toMap
+    override val partitioner: Option[org.apache.spark.Partitioner] = Some(new ShardPartitioner(numShards))
+    override protected def getPartitions: Array[org.apache.spark.Partition] =
+      firstParent[org.apache.spark.sql.catalyst.InternalRow].partitions
+    override def compute(split: org.apache.spark.Partition,
+        ctx: org.apache.spark.TaskContext): Iterator[SubIndexGraph] = {
+      val rows = firstParent[org.apache.spark.sql.catalyst.InternalRow].iterator(split, ctx)
+      byShard.get(split.index).iterator.map { m =>
+        require(rows.hasNext, s"shard ${split.index}: empty partition, meta says ${m.n_vectors} rows")
+        rehydrateStreaming(params, m, rows)
       }
-    })
+    }
   }
 
-  /** Single-pass rehydration from an iterator: each IndexRow is copied
-    * into the graph's primitive structures and becomes garbage
-    * immediately — per-task live memory is ONE graph plus one row,
-    * instead of a fully-materialized buffer of object-heavy rows
-    * alongside the graph. At 780k-row shards the buffered form costs
-    * >1 GB per concurrent task; 32 concurrent probe tasks of buffered
-    * rehydration OOM'd the 100M probe JVM (SCALE.md). Capacity comes
-    * from the count, which the probe paths read from ShardMeta. Every row
-    * must belong to the meta's shard. */
-  private def rehydrateStreaming(
-      params: IndexParams, m: ShardMeta, n: Int,
-      shardRows: Iterator[IndexRow]): SubIndexGraph = {
+  /** Single-pass rehydration of shard `m`'s stored rows: each row is
+    * copied straight into the graph's primitive structures as it is read,
+    * so a task holds ONE graph plus one row (a buffer of object rows
+    * beside the graph costs >1 GB per task at 780k-row shards, and OOM'd
+    * the 100M probe JVM, SCALE.md). The rows must number the meta's
+    * count. The undirected adjacency is then derived from the out-lists:
+    * a pair's refcount is the number of directed out-edges between the
+    * two, the build's invariant (KernelInvariantSpec), and each list is
+    * ascending by neighbor, as snapshots stored it, so the search walks
+    * a loaded graph as it walked a stored one. */
+  private def rehydrateStreaming(params: IndexParams, m: ShardMeta,
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]): SubIndexGraph = {
+    val n = m.n_vectors.toInt
     val g = new SubIndexGraph(params, n, m.sub_index_id)
     g.count = n
     g.layerCount = m.layer_count
     g.entryOffset = m.entry_offset
     var seen = 0
-    for (r <- shardRows) {
-      require(r.sub_index_id == m.sub_index_id,
-        s"sharded layout violation: a row of shard ${r.sub_index_id} " +
-          s"appeared in the partition serving shard ${m.sub_index_id}")
+    for (r <- rows) {
       seen += 1
-      val o = r.offset
-      g.globalIds(o) = r.global_id
-      g.setVec(o, r.embedding)
-      g.layerOf(o) = r.layer
-      g.out(o) = mutable.ArrayBuffer.from(r.out.map { layer =>
-        val el = new EdgeList(math.max(layer.size, 4))
-        layer.foreach(e => el.insert(e.dist, e.nbr))
+      val o = r.getInt(0)
+      g.globalIds(o) = r.getLong(1)
+      g.layerOf(o) = r.getInt(2)
+      g.setVec(o, r.getArray(3).toFloatArray())
+      val layers = r.getArray(4)
+      g.out(o) = mutable.ArrayBuffer.tabulate(layers.numElements()) { l =>
+        val es = layers.getArray(l)
+        val el = new EdgeList(math.max(es.numElements(), 4))
+        (0 until es.numElements()).map(es.getStruct(_, 2)).foreach(e => el.insert(e.getDouble(0), e.getInt(1)))
         el
-      })
-      g.edges(o) = mutable.ArrayBuffer.from(r.edges.map { layer =>
-        val al = new AdjList(math.max(layer.size, 4))
-        layer.foreach(e => al.add(e.nbr, e.rc))
-        al
-      })
+      }
     }
-    require(seen == n,
-      s"shard ${m.sub_index_id}: rehydrated $seen rows, meta says $n")
+    require(seen == n, s"shard ${m.sub_index_id}: rehydrated $seen rows, meta says $n")
+    // each directed out-edge, seen from both ends
+    val ends = Array.tabulate(n)(o => Array.fill(g.out(o).length)(new mutable.ArrayBuilder.ofInt))
+    for (o <- 0 until n; l <- g.out(o).indices)
+      g.out(o)(l).foreachEntry { (_, nbr) => ends(o)(l) += nbr; ends(nbr)(l) += o }
+    for (o <- 0 until n) g.edges(o) = mutable.ArrayBuffer.from(ends(o).map { b =>
+      val nbrs = b.result()
+      java.util.Arrays.sort(nbrs)
+      val al = new AdjList(math.max(nbrs.length, 4))
+      for (x <- nbrs) if (al.size > 0 && al.nbrs(al.size - 1) == x) al.rcs(al.size - 1) += 1 else al.add(x, 1)
+      al
+    })
     g
   }
 }

@@ -9,8 +9,10 @@ import graft.operators.TopKBuffer
 /** ScalaCheck properties for the kernel-level pieces (SURVEY §5: exact-mode
   * equivalence, permutation invariance, bounded-heap correctness). Kernel
   * objects are exercised directly — no Spark jobs — so the generators can
-  * run hundreds of cases. */
-class PropertySpec extends AnyFunSuite {
+  * run hundreds of cases. The adversarial save/load round trips at the
+  * end run on Spark: degenerate shapes, SQ8, cosine and MIPS must load
+  * as they were saved, adjacency included. */
+class PropertySpec extends AnyFunSuite with SparkSuite {
 
   private def check(p: Prop): Unit = {
     val res = org.scalacheck.Test.check(
@@ -199,5 +201,104 @@ class PropertySpec extends AnyFunSuite {
       xs.foreach(one.add(_, 1L, 0L))
       merged.sortedEntries.toSeq == one.sortedEntries.toSeq
     })
+  }
+
+  /** A corpus of `n` seeded `dim`-d vectors in [-1, 1), ids from `from`. */
+  private def seeded(n: Int, dim: Int, from: Long = 0L): Seq[(Long, Array[Float])] = {
+    val r = new scala.util.Random(n * 31 + dim)
+    (0 until n).map(i => (from + i, Array.fill(dim)(r.nextFloat() * 2 - 1)))
+  }
+
+  private def frame(rows: Seq[(Long, Array[Float])], id: String = "id") = {
+    import spark.implicits._
+    rows.toDF(id, "embedding")
+  }
+
+  /** `idx`'s rows, edges included, and meta, in comparable form. */
+  private def stored(idx: graft.index.VectorIndex) =
+    (idx.rows.collect().toSeq.map(r => (r.sub_index_id, r.offset, r.global_id, r.layer,
+      r.embedding.toSeq, r.out, r.edges)).sortBy(t => (t._1, t._2)), idx.meta.toSeq)
+
+  /** `idx`'s answers to `qs`: (query, rank, neighbor, distance). */
+  private def answers(idx: graft.index.VectorIndex, qs: Seq[(Long, Array[Float])], k: Int,
+      width: Int): Seq[(Long, Int, Long, Double)] =
+    idx.query(frame(qs, "query_id"), k, width).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq.sorted
+
+  private def withDir(f: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_roundtrip_").toString
+    try f(dir) finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
+  test("save/load round trip of adversarial indexes: rows, edges, meta and probes equal") {
+    val base = IndexParams(minimumConnect = 4, relaxedMonotonicity = 8, step = 2)
+    val cases = Seq(
+      ("dim 1", base, seeded(60, 1), 4),
+      ("all-equal vectors", base, (0L until 40L).map(i => (i, Array(0.5f, -0.25f, 1f))), 4),
+      ("k > n", base, seeded(6, 4), 2),
+      // ids on residues {1, 2, 5} of 8 shards: five shards are empty
+      ("empty shards", base, seeded(9, 4).map { case (i, v) => (8 * (i / 3) + Seq(1, 2, 5)((i % 3).toInt), v) }, 8),
+      ("SQ8", base.copy(quantized = true, quantLo = -1f, quantHi = 1f), seeded(80, 8), 4),
+      ("cosine", base.copy(normalizeForCosine = true), seeded(80, 8), 4),
+      ("MIPS", base.copy(augmentForMips = true, mipsMaxNorm = 3f), seeded(80, 8), 4))
+    for ((name, p, corpus, shards) <- cases) withDir { dir =>
+      val qs = seeded(5, corpus.head._2.length, from = 1000L)
+      val mem = graft.index.VectorIndex.build(frame(corpus), p, shards)
+      mem.save(dir)
+      val loaded = graft.index.VectorIndex.load(spark, dir, cache = false)
+      assert(stored(loaded) == stored(mem), s"$name: rows or meta differ after load")
+      for (width <- Seq(0, 8))
+        assert(answers(loaded, qs, 10, width) == answers(mem, qs, 10, width),
+          s"$name: the width-$width probe differs after load")
+      if (name == "k > n") assert(answers(loaded, qs, 10, 0).length == qs.length * corpus.length)
+      Seq(mem, loaded).foreach(_.unpersist())
+    }
+  }
+
+  test("width-0 cosine and MIPS probes of a loaded index rank as brute force does") {
+    val base = IndexParams(minimumConnect = 4, relaxedMonotonicity = 8, step = 2)
+    val corpus = seeded(80, 8)
+    val qs = seeded(5, 8, from = 1000L)
+    def dot(a: Array[Float], b: Array[Float]) = a.indices.map(i => a(i).toDouble * b(i)).sum
+    def cosine(a: Array[Float], b: Array[Float]) = dot(a, b) / math.sqrt(dot(a, a) * dot(b, b))
+    for ((name, p, similarity) <- Seq(
+        ("cosine", base.copy(normalizeForCosine = true), cosine _),
+        ("MIPS", base.copy(augmentForMips = true, mipsMaxNorm = 3f), dot _))) withDir { dir =>
+      graft.index.VectorIndex.build(frame(corpus), p, 4).save(dir)
+      val loaded = graft.index.VectorIndex.load(spark, dir, cache = false)
+      val got = answers(loaded, qs, 10, 0).map(a => (a._1, a._2, a._3))
+      val want = qs.flatMap { case (q, v) =>
+        corpus.sortBy { case (id, x) => (-similarity(v, x), id) }.take(10).zipWithIndex
+          .map { case ((id, _), r) => (q, r + 1, id) }
+      }
+      assert(got == want, s"$name: the exact probe is not brute force")
+      loaded.unpersist()
+    }
+  }
+
+  test("a zero vector under cosine: at normalized distance |q|² = 1 in memory and after load") {
+    // pinned behaviour: normalization leaves a zero vector zero, so it sits
+    // at squared distance |q|² (cosine distance 0.5) from every unit query,
+    // and a zero query sees every unit corpus vector at 1 and a zero one at 0
+    val p = IndexParams(minimumConnect = 4, relaxedMonotonicity = 8, step = 2,
+      normalizeForCosine = true)
+    val corpus = (0L, Array.fill(8)(0f)) +: seeded(40, 8, from = 1L)
+    val qs = (100L, Array.fill(8)(0f)) +: seeded(4, 8, from = 101L)
+    withDir { dir =>
+      val mem = graft.index.VectorIndex.build(frame(corpus), p, 4)
+      mem.save(dir)
+      val loaded = graft.index.VectorIndex.load(spark, dir, cache = false)
+      assert(stored(loaded) == stored(mem))
+      for (idx <- Seq(mem, loaded)) {
+        val all = answers(idx, qs, corpus.length, 0)
+        assert(all == answers(mem, qs, corpus.length, 0))
+        val (zeroQuery, unitQueries) = all.partition(_._1 == 100L)
+        assert(zeroQuery.head == ((100L, 1, 0L, 0.0)), zeroQuery.head)
+        assert(zeroQuery.tail.forall(a => math.abs(a._4 - 1.0) < 1e-6), zeroQuery.tail)
+        assert(unitQueries.filter(_._3 == 0L).forall(a => math.abs(a._4 - 1.0) < 1e-6))
+        assert(unitQueries.count(_._3 == 0L) == 4)
+      }
+      Seq(mem, loaded).foreach(_.unpersist())
+    }
   }
 }

@@ -16,7 +16,13 @@ import graft.SparkSuite
   *  - The published rows and meta equal [[VectorIndex.build]] over the
   *    union bit for bit.
   *  - `params.json` records the index dimension, and a snapshot written
-  *    without it still appends. */
+  *    without it still appends.
+  *  - Each shard directory holds the one file `meta.json` names, and no
+  *    committer file; a stray part file is never read, and the next
+  *    publish into the path removes it.
+  *  - `save` onto the snapshot a handle was loaded from is refused before
+  *    anything is deleted, and an LSM save that fails part-way leaves a
+  *    directory `LsmVectorIndex.load` refuses, naming `lsm.json`. */
 class PublishSpec extends AnyFunSuite with SparkSuite {
 
   private val params = IndexParams(minimumConnect = 4, relaxedMonotonicity = 16, step = 2)
@@ -205,6 +211,124 @@ class PublishSpec extends AnyFunSuite with SparkSuite {
         frame(vectors(500L until 502L, dim = 9)), s"$dir/g2"))
       assert(wrong.getMessage.contains("must match index dimension 8 (2 mismatching rows)"))
       Seq(appended, full).foreach(_.unpersist())
+    }
+  }
+
+  /** Shard id -> the file and length `meta.json` names for it. */
+  private def named(path: String): Map[Int, (String, Long)] =
+    Sidecar.readLines[Sidecar.MetaLine](spark, s"$path/meta.json").get
+      .map(l => l.sub_index_id -> (l.file.get, l.bytes.get)).toMap
+
+  /** Every file and directory under `dir`, as paths relative to it. */
+  private def tree(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.walk(root).iterator().asScala.map(root.relativize(_).toString).toSeq
+  }
+
+  test("each shard directory holds the one file meta.json names, and no committer file") {
+    withDir { dir =>
+      val mem = VectorIndex.build(frame(vectors((0L until 300L).filter(_ % 4 != 3))), params, 4)
+      mem.save(s"$dir/saved")
+      VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, s"$dir/g0").unpersist()
+      VectorIndex.appendTo(spark, s"$dir/g0", frame(vectors((400L until 500L).filter(_ % 4 == 1))),
+        s"$dir/g1").unpersist()
+      for (path <- Seq(s"$dir/saved", s"$dir/g0", s"$dir/g1")) {
+        val files = named(path)
+        val meta = VectorIndex.load(spark, path, cache = false).meta
+        assert(files.keySet == meta.map(_.sub_index_id).toSet, s"$path: $files")
+        assert(new java.io.File(s"$path/rows").list().toSet == files.keySet.map(s => s"sub_index_id=$s"))
+        for ((s, (file, bytes)) <- files) {
+          val shardDir = new java.io.File(s"$path/rows/sub_index_id=$s")
+          // a local file's checksum is its hidden sibling
+          assert(shardDir.list().filterNot(_.startsWith(".")).toSeq == Seq(file), s"$path shard $s")
+          assert(file.startsWith(f"part-$s%05d-") && file.endsWith(".parquet"), file)
+          assert(new java.io.File(shardDir, file).length == bytes, s"$path shard $s: length")
+        }
+        assert(!tree(path).exists(f => f.contains("_SUCCESS") || f.contains("_temporary")), tree(path))
+      }
+      // the kept shards of the append are the same files, linked under their names
+      Seq(0, 2, 3).foreach(s => assert(named(s"$dir/g1")(s) == named(s"$dir/g0")(s)))
+      mem.unpersist()
+    }
+  }
+
+  test("a stray part file in a shard directory is never read, and the next publish removes it") {
+    withDir { dir =>
+      val g0 = s"$dir/g0"
+      VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, g0).unpersist()
+      val qs = frame(vectors(10000L until 10020L)).withColumnRenamed("id", "query_id")
+      def answers(path: String) = {
+        val idx = VectorIndex.load(spark, path, cache = false)
+        try (canon(idx), idx.query(qs, 10, 8).collect().map(_.toSeq).toSeq) finally idx.unpersist()
+      }
+      val before = answers(g0)
+      // a late task attempt's file: shard 0's rows, in shard 1's directory
+      val stray = java.nio.file.Paths.get(s"$g0/rows/sub_index_id=1/part-00001-late-attempt.parquet")
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$g0/rows/sub_index_id=0/${named(g0)(0)._1}"), stray)
+      assert(answers(g0) == before, "the stray file was read")
+      val appended = VectorIndex.appendTo(spark, g0, frame(vectors(400L until 440L)), s"$dir/g1")
+      val full = VectorIndex.build(frame(vectors(0L until 440L)), params, 4)
+      assert(appended.meta.toSeq == full.meta.toSeq && canon(appended) == canon(full))
+      Seq(appended, full).foreach(_.unpersist())
+      VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, g0).unpersist()
+      assert(!java.nio.file.Files.exists(stray), "the next publish left the stray file")
+      assert(answers(g0) == before)
+    }
+  }
+
+  test("save onto the snapshot a handle was loaded from is refused, and the snapshot stays whole") {
+    withDir { dir =>
+      val path = s"$dir/snap"
+      VectorIndex.buildTo(frame(vectors(0L until 400L)), params, 4, path).unpersist()
+      val qs = frame(vectors(10000L until 10020L)).withColumnRenamed("id", "query_id")
+      val want = VectorIndex.load(spark, path, cache = false).query(qs, 10, 8).collect().toSeq
+      // never probed: its rows are still only on disk
+      for (spelling <- Seq(path, s"$dir/./snap")) {
+        val e = intercept[IllegalArgumentException](
+          VectorIndex.load(spark, path, cache = false).save(spelling))
+        assert(e.getMessage.contains("own source"), e.getMessage)
+      }
+      assert(VectorIndex.load(spark, path, cache = false).query(qs, 10, 8).collect().toSeq == want)
+
+      // an LSM whose members were loaded from the target is refused before lsm.json is touched
+      val lsm = s"$dir/lsm"
+      val base = VectorIndex.build(frame(vectors(0L until 200L)), params, 4)
+      LsmVectorIndex(base, compactThreshold = 1000000L).ingest(frame(vectors(200L until 210L))).save(lsm)
+      val e = intercept[IllegalArgumentException](LsmVectorIndex.load(spark, lsm).save(lsm))
+      assert(e.getMessage.contains("own source"), e.getMessage)
+      val reloaded = LsmVectorIndex.load(spark, lsm)
+      assert(reloaded.base.meta.map(_.n_vectors).sum + reloaded.generations.map(_.meta.map(_.n_vectors).sum).sum == 210)
+      base.unpersist()
+    }
+  }
+
+  test("an LSM save that fails part-way leaves a directory LsmVectorIndex.load refuses, naming lsm.json") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failwrite.impl", classOf[FailingWriteFs].getName)
+    conf.set("fs.AbstractFileSystem.failwrite.impl", classOf[FailingWriteAfs].getName)
+    withDir { dir =>
+      val path = s"failwrite://$dir/lsm"
+      def lsm(n: Long, gens: Int) = (0 until gens).foldLeft(
+          LsmVectorIndex(VectorIndex.build(frame(vectors(0L until n)), params, 4), compactThreshold = 1000000L)) {
+        (l, g) => l.ingest(frame(vectors(n + 10L * g until n + 10L * (g + 1))))
+      }
+      try {
+        val a = lsm(200L, 3)
+        a.save(path)
+        assert(LsmVectorIndex.load(spark, path).generations.length == 3)
+        val b = lsm(100L, 1)
+        FailingWriteFs.target = "lsm.json"
+        intercept[java.io.IOException](b.save(path))
+        FailingWriteFs.target = "\u0000"
+        val e = intercept[IllegalArgumentException](LsmVectorIndex.load(spark, path))
+        assert(e.getMessage.contains("lsm.json"), e.getMessage)
+        Seq(a, b).foreach { l => l.unpersist(); l.base.unpersist() }
+      } finally {
+        FailingWriteFs.target = "\u0000"
+        conf.unset("fs.failwrite.impl")
+        conf.unset("fs.AbstractFileSystem.failwrite.impl")
+      }
     }
   }
 }

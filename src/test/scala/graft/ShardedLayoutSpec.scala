@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.index.{IndexParams, IndexRow, VectorIndex}
 
 /** Gates for the one snapshot layout, `rows/sub_index_id=s/` with one
-  * file per non-empty shard:
+  * file per non-empty shard, named in `meta.json`:
   *  - equivalence: rows, meta and every probe face (exact, beam,
   *    driverless distributed, multi-width) of a snapshot equal those of
   *    the in-memory build, and `save` writes one directory per non-empty
@@ -15,8 +15,11 @@ import graft.index.{IndexParams, IndexRow, VectorIndex}
   *  - plan property: a loaded snapshot's probe layout has NO shuffle
   *    dependency and carries the ShardPartitioner (queryDistributed's zip
   *    relies on partition index == shard id); its first probe is one job
-  *    of one stage, `load` lists no directory, and buildTo's write plans
-  *    no Sort above the build;
+  *    of one stage; `load`, a cold probe and an `appendTo` list no
+  *    directory; buildTo and save plan no query;
+  *  - legacy: a snapshot whose `meta.json` names no files (written with
+  *    `edges`, through Spark's partitioned write) loads, answers and
+  *    appends as a named one does, found by one listing;
   *  - safety: a deleted shard directory fails the probe, naming the
   *    shard, a snapshot without meta.json is refused, and so is a flat
   *    snapshot (part files directly under rows/, as written before the
@@ -48,6 +51,15 @@ class ShardedLayoutSpec extends AnyFunSuite with SparkSuite {
   private def writeFlat(idx: VectorIndex, path: String): Unit = {
     idx.rows.write.parquet(s"$path/rows")
     VectorIndex.writeMetaAndParams(spark, path, idx.meta, idx.params, idx.numShards, idx.indexId)
+  }
+
+  /** A snapshot as written before `meta.json` named its files: the rows,
+    * `edges` included, through Spark's write partitioned by shard, then
+    * sidecars whose meta lines name no file. */
+  private def writeLegacy(idx: VectorIndex, path: String): Unit = {
+    idx.rows.write.partitionBy("sub_index_id").parquet(s"$path/rows")
+    VectorIndex.writeMetaAndParams(spark, path, idx.meta, idx.params, idx.numShards, idx.indexId,
+      Some(dim))
   }
 
   /** Index rows in a comparable form, adjacency included. */
@@ -121,23 +133,17 @@ class ShardedLayoutSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("buildTo's write plans no Sort above the shard build") {
+  test("buildTo and save plan no query: one job, whose tasks write the shard files") {
     withDir { dir =>
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val l = new org.apache.spark.sql.util.QueryExecutionListener {
-        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-          plans.add(qe.executedPlan.treeString)
-        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(l)
-      try {
-        VectorIndex.buildTo(corpus(0L until 200L), params, 4, s"$dir/snap").unpersist()
-        org.apache.spark.sql.graft.GraftSqlBridge.drainListenerBus(spark)
-      } finally spark.listenerManager.unregister(l)
-      import scala.jdk.CollectionConverters._
-      val writes = plans.asScala.filter(_.contains("WriteFiles")).toSeq
-      assert(writes.length == 1, s"expected one write plan, saw ${writes.length}")
-      assert(!writes.head.contains(" Sort ["), s"the shard write sorts:\n${writes.head}")
+      val (built, buildTo) = workDuring(
+        VectorIndex.buildTo(corpus(0L until 200L), params, 4, s"$dir/snap"))
+      val mem = VectorIndex.build(corpus(0L until 200L), params, numShards = 4)
+      val (_, save) = workDuring(mem.save(s"$dir/saved"))
+      for ((name, w) <- Seq("buildTo" -> buildTo, "save" -> save))
+        assert(w.jobs == 1 && w.sqlExecutions == 0, s"$name ran $w")
+      // buildTo's one optimized plan is the select that reads its corpus
+      assert(buildTo.optimizerRuns == 1 && save.optimizerRuns == 0, s"buildTo ran $buildTo, save $save")
+      Seq(built, mem).foreach(_.unpersist())
     }
   }
 
@@ -164,6 +170,57 @@ class ShardedLayoutSpec extends AnyFunSuite with SparkSuite {
       val (idx, load) = workDuring(VectorIndex.load(spark, listfs(s"$dir/snap"), cache = false))
       assert(load.listings == 0 && load.jobs == 0, s"load ran $load")
       assert(idx.meta.map(_.n_vectors).sum == 400)
+    }
+  }
+
+  test("a cold probe and an appendTo of a snapshot whose meta.json names its files list no directory") {
+    withDir { dir =>
+      VectorIndex.buildTo(corpus(0L until 400L), params, 4, s"$dir/g0").unpersist()
+      val qdf = queries.toDF("query_id", "embedding")
+      val loaded = VectorIndex.load(spark, listfs(s"$dir/g0"), cache = false)
+      val (_, cold) = workDuring(loaded.query(qdf, 10, 8).collect())
+      assert(cold.listings == 0 && cold.jobs == 1, s"the cold probe ran $cold")
+      // ids on residues {0, 1}: shards 2 and 3 are kept, their files linked
+      val (appended, append) = workDuring(VectorIndex.appendTo(spark, listfs(s"$dir/g0"),
+        corpus((400L until 500L).filter(_ % 4 < 2)), listfs(s"$dir/g1")))
+      assert(append.listings == 0 && append.jobs == 1, s"appendTo ran $append")
+      assert(appended.meta.map(_.n_vectors).sum == 450)
+      loaded.unpersist()
+    }
+  }
+
+  test("a snapshot whose meta.json names no files loads, answers and appends as a named one") {
+    withDir { dir =>
+      val mem = VectorIndex.build(corpus(0L until 400L), params, numShards = 4)
+      writeLegacy(mem, s"$dir/legacy")
+      assert(!scala.io.Source.fromFile(s"$dir/legacy/meta.json").mkString.contains("file"),
+        "premise: meta.json names no files")
+      assert(spark.read.parquet(s"$dir/legacy/rows").columns.contains("edges"),
+        "premise: the files store edges")
+      val legacy = VectorIndex.load(spark, s"$dir/legacy", cache = false)
+      assert(legacy.meta.toSeq == mem.meta.toSeq)
+      assert(canon(legacy) == canon(mem), "the legacy snapshot's rows differ from the build")
+      assert(probes(legacy) == probes(mem))
+
+      // the one listing: rows/ and each shard directory
+      val qdf = queries.toDF("query_id", "embedding")
+      val (_, cold) = workDuring(
+        VectorIndex.load(spark, listfs(s"$dir/legacy"), cache = false).query(qdf, 10, 8).collect())
+      assert(cold.listings == 5, s"the cold probe ran $cold")
+
+      // an appendTo onto 2 of its 4 shards writes a snapshot that names every file
+      val added = (400L until 500L).filter(_ % 4 < 2)
+      val (appended, append) = workDuring(VectorIndex.appendTo(spark, listfs(s"$dir/legacy"),
+        corpus(added), s"$dir/next"))
+      assert(append.listings == 5 && append.jobs == 1, s"appendTo ran $append")
+      val lines = scala.io.Source.fromFile(s"$dir/next/meta.json").getLines().toSeq
+      assert(lines.length == 4 && lines.forall(l => l.contains("\"file\"") && l.contains("\"bytes\"")),
+        lines.mkString("\n"))
+      val full = VectorIndex.build(corpus((0L until 400L) ++ added), params, numShards = 4)
+      assert(appended.meta.toSeq == full.meta.toSeq)
+      assert(canon(appended) == canon(full), "the appended snapshot's rows differ from the build")
+      assert(probes(appended) == probes(full))
+      Seq(mem, legacy, appended, full).foreach(_.unpersist())
     }
   }
 
