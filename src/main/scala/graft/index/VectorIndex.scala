@@ -906,17 +906,23 @@ object VectorIndex {
   }
 
   /** Hardlink `src` to `dst`, making `dst`'s directory, when both ends
-    * are local filesystems (zero bytes moved), else a FileSystem copy. */
+    * are local filesystems (zero bytes moved), else a FileSystem copy.
+    * A hardlinked file takes its `.crc` checksum sibling along, when it
+    * has one, so reads of `dst` stay verified; a copy writes its own. */
   private def linkOrCopyFile(conf: org.apache.hadoop.conf.Configuration,
       src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit = {
     val (fs, dstFs) = (src.getFileSystem(conf), dst.getFileSystem(conf))
     dstFs.mkdirs(dst.getParent)
+    def local(p: org.apache.hadoop.fs.Path) = java.nio.file.Paths.get(p.toUri.getPath)
     val linked = fs.getScheme == "file" && dstFs.getScheme == "file" && (try {
-      java.nio.file.Files.createLink(
-        java.nio.file.Paths.get(dst.toUri.getPath),
-        java.nio.file.Paths.get(src.toUri.getPath)); true
+      java.nio.file.Files.createLink(local(dst), local(src)); true
     } catch { case _: Exception => false })
     if (!linked) org.apache.hadoop.fs.FileUtil.copy(fs, src, dstFs, dst, false, conf)
+    else {
+      val crc = local(src).resolveSibling(s".${src.getName}.crc")
+      if (java.nio.file.Files.exists(crc))
+        java.nio.file.Files.createLink(local(dst).resolveSibling(s".${dst.getName}.crc"), crc)
+    }
   }
 
   /** Reject two path strings that alias the SAME location (relative vs

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.Sessionize.{Event, Session}
@@ -11,11 +14,16 @@ import graft.operators.Sessionize.{Event, Session}
   * the parquet file drives the stream synchronously (memory sink +
   * processAllAvailable — guide pattern), so batch oracles apply; the same
   * plan runs unchanged against a live file/kafka source.
+  *
+  * Every operator runs through one run scope ([[runStream]]): one
+  * checkpoint, the run's confs, drained to completion. The stateless
+  * foreachBatch operators write through one parquet sink
+  * ([[runBatchSink]]); a source path streams through one stager
+  * ([[sourceStream]]), and a relation through one slicer
+  * ([[withSlices]]).
   */
 object StreamingOps {
 
-  /** Streaming read of the events parquet (ts type normalized the same
-    * way as Tables.events: nanos-as-long converted, native micros as-is). */
   private val stagedSources =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   // footer-read schema inference is a Spark job — pay it once per path,
@@ -23,20 +31,51 @@ object StreamingOps {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
+  /** The stream of the parquet source at `path`: the one stager of every
+    * operator that reads a source path. A directory, which is what Spark
+    * writes by default, streams in place. The file-stream source requires
+    * a directory, so a single file is staged as a symlink in a temp
+    * directory, memoized per path and deleted at JVM exit. */
+  private def sourceStream(spark: SparkSession, path: String): DataFrame = {
+    val schema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+    val dir = stagedSources.computeIfAbsent(path, p => {
+      val hp = new Path(p)
+      if (hp.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(hp).isDirectory) p
+      else {
+        val d = Files.createTempDirectory("graft_stream_src_")
+        Files.createSymbolicLink(d.resolve("data.parquet"), Paths.get(p).toAbsolutePath)
+        deleteAtExit(d.toString)
+      }
+    })
+    spark.readStream.schema(schema).parquet(dir)
+  }
+
+  /** Streaming read of the events parquet (ts type normalized the same
+    * way as Tables.events: nanos-as-long converted, native micros as-is).
+    * The nanos conf is set BEFORE schema inference, so a fresh session
+    * whose first events query is any of these operators infers the same
+    * schema. */
   private def eventsStream(spark: SparkSession, eventsPath: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = schemaCache.computeIfAbsent(eventsPath,
-      p => spark.read.parquet(p).schema)
-    // the file-stream source requires a directory; stage a symlink to the
-    // single parquet file in a temp dir (memoized per source path)
-    val dir = stagedSources.computeIfAbsent(eventsPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("events.parquet"), java.nio.file.Paths.get(eventsPath))
-      d.toString
-    })
-    graft.Tables.normalizeEventTs(spark.readStream.schema(schema).parquet(dir))
+    graft.Tables.normalizeEventTs(sourceStream(spark, eventsPath))
   }
+
+  /** Temp directories deleted at JVM exit: the staged sources, and the
+    * sinks that the returned DataFrames read LAZILY (possibly long after
+    * the call), so eager deletion would break the result. Without it a
+    * long-lived session accumulates one orphan dir per streaming query.
+    * One shutdown hook sweeps them all. */
+  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  private lazy val exitCleanupHook: Unit = {
+    sys.addShutdownHook { exitDirs.forEach(d => deleteRecursively(d)) }
+    ()
+  }
+  private def deleteAtExit(dir: String): String = {
+    exitCleanupHook
+    exitDirs.add(dir)
+    dir
+  }
+  private[graft] def deletedAtExit(dir: String): Boolean = exitDirs.contains(dir)
 
   /** One-time streaming-engine warmup (untimed bench prepare): a 3-row
     * MemoryStream aggregation runs a full micro-batch cycle, initializing
@@ -50,13 +89,7 @@ object StreamingOps {
       import spark.implicits._
       val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int](spark)
       ms.addData(1, 2, 3)
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_warm_ckpt_")
-      val q = ms.toDF().groupBy(col("value")).count()
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("graft_stream_warm")
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
+      runFinite(spark, ms.toDF().groupBy(col("value")).count(), "complete", 0)
     }
 
   /** Scoped leg timer for the `-Dgraft.stream.profile` flag of
@@ -88,46 +121,99 @@ object StreamingOps {
         }
     } finally q.stop()
 
-  /** Run a finite streaming plan to completion into an in-memory table.
+  /** The one run scope of every streaming operator: starts the query
+    * that `writer` describes on a fresh checkpoint, drains it, and
+    * deletes the checkpoint. The checkpoint goes to tmpfs (/dev/shm) when
+    * writable, else to java.io.tmpdir: the HDFS-backed state store
+    * writes many small delta files per batch, and disk latency dominates
+    * on small state.
     *
-    * Fixed-cost engineering for the micro-batch path:
-    *  - state/shuffle partition count is scoped to `statePartitions` for
-    *    the duration of the run (state-store instances, and hence per-batch
-    *    commit fan-out, scale with it; size it to key cardinality, not to
-    *    the session's scan parallelism — the session value is restored
-    *    afterwards);
-    *  - the checkpoint goes to tmpfs (/dev/shm) when available and is
-    *    deleted after the run (the HDFS-backed store writes many small
-    *    delta files per batch — disk latency dominates on small state).
-    */
+    * For the run, `spark.sql.shuffle.partitions` is `statePartitions`
+    * when positive (state-store instances, and hence per-batch commit
+    * fan-out, scale with it; size it to key cardinality, not to the
+    * session's scan parallelism), and
+    * `spark.sql.streaming.noDataMicroBatches.enabled` is `noDataBatches`
+    * (only event-time timeouts need the no-data batch). Afterwards, a
+    * failed run included, each reads as the caller left it: restored, or
+    * unset if the caller had not set it. `writer` is evaluated inside the
+    * scope, so set-up work it runs plans under the run's confs. This is
+    * the only code that sets a checkpoint or writes those two confs, and
+    * so the one site of the micro-batch floor. */
+  private def runStream(spark: SparkSession, statePartitions: Int, noDataBatches: Boolean = false)(
+      writer: => DataStreamWriter[Row]): Unit = {
+    val confs = ("spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString) +:
+      (if (statePartitions > 0) Seq("spark.sql.shuffle.partitions" -> statePartitions.toString)
+       else Nil)
+    val explicit = spark.conf.getAll // the confs the session has set
+    val callers = confs.map { case (k, _) => k -> explicit.get(k) }
+    val shm = Paths.get("/dev/shm")
+    val ckpt = Files.createTempDirectory(
+      if (Files.isWritable(shm)) shm else Paths.get(System.getProperty("java.io.tmpdir")), "graft_ckpt_")
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      drain(writer.option("checkpointLocation", ckpt.toString).start())
+    } finally {
+      callers.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      deleteRecursively(ckpt.toString)
+    }
+  }
+
+  /** Run a finite streaming plan to completion into an in-memory table
+    * ([[runStream]] with a memory sink); returns that table. */
   private def runFinite(
       spark: SparkSession, plan: DataFrame, mode: String,
-      statePartitions: Int): DataFrame = {
+      statePartitions: Int, noDataBatches: Boolean = false): DataFrame = {
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val shmRoot = java.nio.file.Paths.get("/dev/shm")
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(shmRoot)) shmRoot
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (statePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      val q = plan.writeStream
-        .outputMode(mode).format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      // best-effort cleanup of the per-run checkpoint
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-    }
+    runStream(spark, statePartitions, noDataBatches)(
+      plan.writeStream.outputMode(mode).format("memory").queryName(name))
     spark.table(name)
+  }
+
+  /** The one parquet sink of the stateless foreachBatch operators: each
+    * non-empty micro-batch appends `body(batch)` to a temp sink directory,
+    * run through [[runStream]]. The returned DataFrame reads the sink
+    * lazily, so the directory is deleted at JVM exit, not here. A feed
+    * that writes nothing returns 0 rows with the schema `body` gives an
+    * empty batch: the schema a non-empty feed returns, not a parquet
+    * schema-inference failure. */
+  private def runBatchSink(spark: SparkSession, feed: DataFrame, statePartitions: Int)(
+      body: DataFrame => DataFrame): DataFrame = {
+    val outDir = deleteAtExit(Files.createTempDirectory("graft_stream_sink_").toString)
+    runStream(spark, statePartitions)(feed.writeStream.foreachBatch {
+      (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) body(batch).write.mode("append").parquet(outDir)
+    })
+    val wrote = Option(new java.io.File(outDir).listFiles())
+      .exists(_.exists(_.getName.endsWith(".parquet")))
+    if (wrote) spark.read.parquet(outDir)
+    else spark.read.schema(body(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], feed.schema)).schema).parquet(outDir)
+  }
+
+  /** The one slicer: writes `rows` as the files of a finite feed under
+    * [[scratchDir]] (`slices` files when positive, else the files the
+    * write makes), and passes `run` that feed streamed one file per
+    * trigger, so each file is one micro-batch. The files are deleted when
+    * `run` returns or fails. FileStreamSource delivers files by
+    * modification time, and parallel write tasks race their mtimes, so
+    * the mtimes are rewritten in path order (strictly increasing
+    * seconds): every run streams the same slice sequence. */
+  private def withSlices[T](spark: SparkSession, rows: DataFrame, slices: Int = 0)(
+      run: DataFrame => T): T = {
+    val dir = scratchDir(spark, "graft_stream_slices_")
+    try {
+      (if (slices > 0) rows.repartition(slices) else rows).write.mode("overwrite").parquet(dir)
+      val path = new Path(dir)
+      val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+      fs.listStatus(path).map(_.getPath).filter(_.getName.startsWith("part-"))
+        .sortBy(_.getName).zipWithIndex
+        .foreach { case (p, i) => fs.setTimes(p, 1000000000000L + i * 1000L, -1) }
+      run(spark.readStream.schema(spark.read.parquet(dir).schema)
+        .option("maxFilesPerTrigger", 1).parquet(dir))
+    } finally deleteScratch(spark, dir)
   }
 
   /** Tumbling-window aggregate: (window_start, event_type, n_events,
@@ -136,8 +222,6 @@ object StreamingOps {
     * contract). */
   def hourlyByType(
       spark: SparkSession, eventsPath: String, statePartitions: Int = 0): DataFrame = {
-    // stateless-complete aggregation needs no watermark-driven extra batch
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val agg = eventsStream(spark, eventsPath)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(
@@ -162,9 +246,6 @@ object StreamingOps {
   def streamSessionize(
       spark: SparkSession, eventsPath: String, gapMinutes: Int,
       statePartitions: Int = 0): DataFrame = {
-    // event-time timeouts fire in the watermark-advance (no-data) batch —
-    // it must stay enabled here
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     import spark.implicits._
     val gapMicros = gapMinutes.toLong * 60L * 1000000L
     @inline def micros(t: java.sql.Timestamp): Long =
@@ -212,7 +293,9 @@ object StreamingOps {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
 
-    runFinite(spark, sessions.toDF(), "append", statePartitions)
+    // event-time timeouts fire in the watermark-advance (no-data) batch —
+    // it must stay enabled here
+    runFinite(spark, sessions.toDF(), "append", statePartitions, noDataBatches = true)
   }
 
   /** Streaming exact dedup: emit the first occurrence of each
@@ -222,7 +305,6 @@ object StreamingOps {
     * batch DISTINCT. */
   def streamDedup(
       spark: SparkSession, eventsPath: String, statePartitions: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val dedup = eventsStream(spark, eventsPath)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
@@ -241,7 +323,6 @@ object StreamingOps {
   def streamHeavyHitters(
       spark: SparkSession, eventsPath: String, capacity: Int, k: Int,
       statePartitions: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val agg = eventsStream(spark, eventsPath)
       .select(lpad(col("user_id").cast("string"), 6, "0").as("item"))
       .agg(graft.operators.HeavyHitters.heavyHitters(col("item"), capacity, k).as("hh"))
@@ -263,15 +344,7 @@ object StreamingOps {
   def streamApproxDistinct(
       spark: SparkSession, docsPath: String, p: Int,
       statePartitions: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val schema = schemaCache.computeIfAbsent(docsPath, pth => spark.read.parquet(pth).schema)
-    val srcDir = stagedSources.computeIfAbsent(docsPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("data.parquet"), java.nio.file.Paths.get(docsPath))
-      d.toString
-    })
-    val agg = spark.readStream.schema(schema).parquet(srcDir)
+    val agg = sourceStream(spark, docsPath)
       .select(col("source"),
         explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok"))
       .groupBy(col("source"))
@@ -288,7 +361,6 @@ object StreamingOps {
     * output equals the batch join exactly. */
   def streamStreamJoin(
       spark: SparkSession, eventsPath: String, statePartitions: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val purchases = eventsStream(spark, eventsPath)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("p_ts"))
@@ -310,7 +382,8 @@ object StreamingOps {
     * index: a stream of query vectors is probed against a batch-built
     * [[graft.index.VectorIndex]] inside `foreachBatch` (the idiomatic
     * Structured Streaming pattern for joining a stream against a
-    * non-streamable operator), results appended to a parquet sink. Each
+    * non-streamable operator), results appended to the parquet sink
+    * ([[runBatchSink]]: a feed that selects no query returns 0 rows). Each
     * query's result is independent of micro-batch boundaries, so on a
     * finite source the accumulated sink equals the batch probe exactly —
     * with searchWidth=0 (exact mode) that makes the brute-force kNN SQL
@@ -324,45 +397,10 @@ object StreamingOps {
       spark: SparkSession, embPath: String, idx: graft.index.VectorIndex,
       k: Int, queryPred: org.apache.spark.sql.Column,
       statePartitions: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val schema = schemaCache.computeIfAbsent(embPath, p => spark.read.parquet(p).schema)
-    val srcDir = stagedSources.computeIfAbsent(embPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("data.parquet"), java.nio.file.Paths.get(embPath))
-      d.toString
-    })
-    val queries = spark.readStream.schema(schema).parquet(srcDir)
+    val queries = sourceStream(spark, embPath)
       .filter(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val outDir = java.nio.file.Files.createTempDirectory("graft_stream_ann_").toString
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (statePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      val q = queries.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            idx.query(batch, k, searchWidth = 0)
-              .write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-    }
-    spark.read.parquet(outDir)
+    runBatchSink(spark, queries, statePartitions)(idx.query(_, k, searchWidth = 0))
   }
 
   /** Streaming histogram sketch — the streaming face of the fixed-grid
@@ -374,15 +412,7 @@ object StreamingOps {
   def streamHistogram(
       spark: SparkSession, docsPath: String, lo: Long, hi: Long, bins: Int,
       statePartitions: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val schema = schemaCache.computeIfAbsent(docsPath, p => spark.read.parquet(p).schema)
-    val srcDir = stagedSources.computeIfAbsent(docsPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("data.parquet"), java.nio.file.Paths.get(docsPath))
-      d.toString
-    })
-    val agg = spark.readStream.schema(schema).parquet(srcDir)
+    val agg = sourceStream(spark, docsPath)
       .select(col("source"),
         size(split(col("text"), " ")).cast("long").as("v"))
       .groupBy(col("source"))
@@ -408,11 +438,6 @@ object StreamingOps {
       isCurrent: org.apache.spark.sql.Column,
       lo: Double, hi: Double, bins: Int,
       statePartitions: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // eventsStream (not hand-rolled staging): it sets the nanos-ts legacy
-    // conf BEFORE schema inference and memoizes the staged source dir —
-    // a fresh session whose first events query is this one must not
-    // depend on another events op having run first
     val counts = eventsStream(spark, eventsPath)
       .filter(col(valueCol).isNotNull)
       .select(graft.operators.Drift.numericBucket(valueCol, lo, hi, bins).as("bucket"),
@@ -443,14 +468,6 @@ object StreamingOps {
       refPred: org.apache.spark.sql.Column, numCells: Int,
       statePartitions: Int = 0): DataFrame = {
     import graft.operators.IvfKnn
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val schema = schemaCache.computeIfAbsent(embPath, p => spark.read.parquet(p).schema)
-    val srcDir = stagedSources.computeIfAbsent(embPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("data.parquet"), java.nio.file.Paths.get(embPath))
-      d.toString
-    })
     // same null-embedding exclusion the batch face applies BEFORE
     // sampling — a null row on the stride would NPE centroid collection,
     // and a null max-id row would shift the stride vs batch p6
@@ -459,8 +476,7 @@ object StreamingOps {
         .filter(col(embCol).isNotNull)
         .select(col(idCol).cast("long").as("id"), col(embCol).as("embedding")),
       numCells)
-    val counts = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val counts = sourceStream(spark, embPath)
       .filter(rowsPred)
       .filter(col(embCol).isNotNull)
       .select(IvfKnn.cellExpr(cents, col(embCol)).as("bucket"),
@@ -482,8 +498,8 @@ object StreamingOps {
     * shuffle is the cell equi-join against the (cached) assigned
     * corpus. ZERO streaming state, and each (new, corpus) pair lives
     * entirely in the new row's batch — batch boundaries cannot split a
-    * pair, so the accumulated sink equals the batch screen and an exact
-    * SQL oracle applies. At 100 TB/day this is "reject near-dup
+    * pair, so the accumulated parquet sink ([[runBatchSink]]) equals the
+    * batch screen and an exact SQL oracle applies. At 100 TB/day this is "reject near-dup
     * ingests before they land": cost scales with ingest volume times
     * cell occupancy, never with corpus^2. */
   def streamSemanticDedup(
@@ -492,14 +508,6 @@ object StreamingOps {
       statePartitions: Int = 0): DataFrame = {
     import graft.functions.VectorFunctions
     import graft.operators.IvfKnn
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val schema = schemaCache.computeIfAbsent(embPath, p => spark.read.parquet(p).schema)
-    val srcDir = stagedSources.computeIfAbsent(embPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("data.parquet"), java.nio.file.Paths.get(embPath))
-      d.toString
-    })
     val base = staticCorpus.select(
       col("vec_id").cast("long").as("id"), col("embedding"))
     val cents = IvfKnn.centroids(base, numCells)
@@ -509,57 +517,21 @@ object StreamingOps {
         VectorFunctions.l2Norm(col("embedding")).as("cn"))
       .cache()
     corpusAssigned.count()
-    val stream = spark.readStream.schema(schema).parquet(srcDir).filter(streamPred)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_stream_semdedup_").toString
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (statePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val incoming = IvfKnn.assign(
-              batch.select(col("vec_id").cast("long").as("id"), col("embedding")), cents)
-              .select(col("cell"), col("id").as("new_id"),
-                col("embedding").as("ne"),
-                VectorFunctions.l2Norm(col("embedding")).as("nn"))
-            incoming.join(corpusAssigned, Seq("cell"))
-              .withColumn("cosine_sim",
-                round(graft.functions.VectorFunctions.dotProduct(col("ne"), col("ce")) /
-                  (col("nn") * col("cn")), 6))
-              .filter(col("cosine_sim") >= threshold)
-              .select(col("new_id"), col("corpus_id"), col("cell"), col("cosine_sim"))
-              .write.mode("append").parquet(outDir)
-          }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      corpusAssigned.unpersist()
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
+    def screen(batch: DataFrame) = {
+      val incoming = IvfKnn.assign(
+        batch.select(col("vec_id").cast("long").as("id"), col("embedding")), cents)
+        .select(col("cell"), col("id").as("new_id"),
+          col("embedding").as("ne"),
+          VectorFunctions.l2Norm(col("embedding")).as("nn"))
+      incoming.join(corpusAssigned, Seq("cell"))
+        .withColumn("cosine_sim",
+          round(graft.functions.VectorFunctions.dotProduct(col("ne"), col("ce")) /
+            (col("nn") * col("cn")), 6))
+        .filter(col("cosine_sim") >= threshold)
+        .select(col("new_id"), col("corpus_id"), col("cell"), col("cosine_sim"))
     }
-    // a clean stream may flag nothing — return an empty, correctly-typed
-    // frame instead of failing parquet schema inference on an empty sink
-    val produced = Option(new java.io.File(outDir).listFiles())
-      .exists(_.exists(_.getName.endsWith(".parquet")))
-    if (produced) spark.read.parquet(outDir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("new_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("corpus_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cell", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cosine_sim", org.apache.spark.sql.types.DoubleType))))
+    try runBatchSink(spark, sourceStream(spark, embPath).filter(streamPred), statePartitions)(screen)
+    finally corpusAssigned.unpersist()
   }
 
   /** Streaming contamination check — the ingest-time face of d9
@@ -567,7 +539,7 @@ object StreamingOps {
     * training documents is screened against the (genuinely small,
     * broadcast) eval/benchmark set per micro-batch inside foreachBatch,
     * flagged (train_id, eval_id, n_shared_grams) rows appended to the
-    * sink. A document's n-grams live entirely in its own row, so
+    * parquet sink ([[runBatchSink]]). A document's n-grams live entirely in its own row, so
     * micro-batch boundaries can never split a contamination pair — the
     * accumulated sink equals the batch operator over the full corpus,
     * which is what lets d9's SQL oracle gate the streaming form (s11).
@@ -580,43 +552,8 @@ object StreamingOps {
   def streamContamination(
       spark: SparkSession, docsPath: String, evalDocs: DataFrame, n: Int,
       trainPred: org.apache.spark.sql.Column, statePartitions: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val schema = schemaCache.computeIfAbsent(docsPath, p => spark.read.parquet(p).schema)
-    val srcDir = stagedSources.computeIfAbsent(docsPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("data.parquet"), java.nio.file.Paths.get(docsPath))
-      d.toString
-    })
-    val train = spark.readStream.schema(schema).parquet(srcDir).filter(trainPred)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_stream_contam_").toString
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (statePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      val q = train.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            graft.operators.Dedup.contaminationPairs(batch, evalDocs, n)
-              .write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-    }
-    spark.read.parquet(outDir)
+    runBatchSink(spark, sourceStream(spark, docsPath).filter(trainPred), statePartitions)(
+      graft.operators.Dedup.contaminationPairs(_, evalDocs, n))
   }
 
   /** Streaming multi-vector (maxsim) retrieval — the query-serving face
@@ -632,56 +569,27 @@ object StreamingOps {
     * (query tokens broadcast, corpus tokens never shuffle, both
     * aggregations partial map-side), so query serving costs
     * O(batch x corpus-scan) per trigger and the corpus table can be the
-    * ANN-index form (v40) when the scan itself must go. The staged feed
-    * is written grouped (one row per query) because that is the unit a
-    * retrieval front-end actually emits. */
+    * ANN-index form (v40) when the scan itself must go. The feed is
+    * sliced ([[withSlices]]) grouped, one row per query, because that is
+    * the unit a retrieval front-end actually emits; results go through
+    * the parquet sink ([[runBatchSink]]). */
   def streamMaxSim(
       spark: SparkSession, queryTokens: DataFrame, corpusTokens: DataFrame,
       k: Int, statePartitions: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val grouped = queryTokens
       .groupBy(col("qid"))
       .agg(sort_array(collect_list(struct(col("qvec"), col("embedding"))))
         .as("toks"))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_msq_").toString
-    grouped.write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val queries = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1") // several triggers, whole queries each
-      .parquet(srcDir)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_stream_ms_").toString
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (statePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      val q = queries.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val toks = batch
-              .select(col("qid"), explode(col("toks")).as("t"))
-              .select(col("qid"), col("t.qvec").as("qvec"),
-                col("t.embedding").as("embedding"))
-            graft.operators.MultiVector.maxSimTopK(toks, corpusTokens, k)
-              .write.mode("append").parquet(outDir)
-          }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
+    // several triggers, whole queries each
+    withSlices(spark, grouped) { queries =>
+      runBatchSink(spark, queries, statePartitions) { batch =>
+        val toks = batch
+          .select(col("qid"), explode(col("toks")).as("t"))
+          .select(col("qid"), col("t.qvec").as("qvec"),
+            col("t.embedding").as("embedding"))
+        graft.operators.MultiVector.maxSimTopK(toks, corpusTokens, k)
+      }
     }
-    spark.read.parquet(outDir)
   }
 
   /** Streaming ingest-time sanitize + pack — the text stage a live corpus
@@ -698,14 +606,6 @@ object StreamingOps {
       spark: SparkSession, docsPath: String,
       transform: DataFrame => DataFrame,
       chunkSize: Int, stride: Int, statePartitions: Int = 0): DataFrame = {
-    val schema = schemaCache.computeIfAbsent(docsPath, p => spark.read.parquet(p).schema)
-    val srcDir = stagedSources.computeIfAbsent(docsPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("data.parquet"), java.nio.file.Paths.get(docsPath))
-      d.toString
-    })
-    val docs = spark.readStream.schema(schema).parquet(srcDir)
     def sanitize(b: DataFrame) = {
       import graft.functions.TextFunctions
       transform(b)
@@ -717,68 +617,12 @@ object StreamingOps {
           size(col("c.toks")).as("n_tokens"),
           md5(concat_ws(" ", col("c.toks"))).as("chunk_md5"))
     }
-    runBatchSink(spark, docs, statePartitions,
-      seed = sanitize(spark.read.schema(schema).parquet(srcDir))) {
-      (batch, outDir) => sanitize(batch).write.mode("append").parquet(outDir)
-    }
+    runBatchSink(spark, sourceStream(spark, docsPath), statePartitions)(sanitize)
   }
 
-  /** Shared foreachBatch-to-parquet scaffolding for the zero-state
-    * streaming faces (s17-s20): temp checkpoint (tmpfs when
-    * writable), optional shuffle-partition override restored afterward,
-    * per-batch `body` appending to the sink dir, and an empty-feed
-    * contract — when no batch ever writes, the result is `seed.limit(0)`
-    * (the correct empty schema) instead of a parquet schema-inference
-    * failure. */
-  /** Sink temp dirs registered for JVM-exit cleanup: the returned
-    * DataFrame reads the dir LAZILY (possibly long after this call), so
-    * eager deletion would break the result — but without cleanup a
-    * long-lived session accumulates one orphan dir per streaming query.
-    * One shutdown hook sweeps them all. */
-  private val sinkDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private lazy val sinkCleanupHook: Unit = {
-    sys.addShutdownHook { sinkDirs.forEach(d => deleteRecursively(d)) }
-    ()
-  }
-
-  private def runBatchSink(spark: SparkSession, feed: DataFrame,
-      statePartitions: Int, seed: => DataFrame)(
-      body: (DataFrame, String) => Unit): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_stream_sink_").toString
-    sinkCleanupHook
-    sinkDirs.add(outDir)
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (statePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      val q = feed.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) body(batch, outDir)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-    }
-    val wrote = Option(new java.io.File(outDir).listFiles())
-      .exists(_.exists(_.getName.endsWith(".parquet")))
-    if (wrote) spark.read.parquet(outDir) else seed.limit(0)
-  }
-
-  /** Allocate a fresh scratch directory for streaming accumulation
-    * state that EXECUTORS write to (delta parquet dirs). Driver-local
+  /** Allocate a fresh scratch directory for streaming state that
+    * EXECUTORS write to: accumulation deltas, and the slices
+    * [[withSlices]] streams (the stream's tasks read them). Driver-local
     * java.nio temp dirs are wrong for that in any non-local deployment —
     * each executor would append its files to its own local disk and the
     * publish-time read would silently lose rows — so the root is the
@@ -826,19 +670,11 @@ object StreamingOps {
   def streamZorderIngest(
       spark: SparkSession, rows: DataFrame, xCol: String, yCol: String,
       bits: Int, statePartitions: Int = 0): DataFrame = {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_zq_").toString
-    rows.write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val feed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    def keyed(b: DataFrame) = b.withColumn("zkey",
-      graft.operators.ZOrder.zkey(col(xCol), col(yCol), bits))
-    try runBatchSink(spark, feed, statePartitions, seed = keyed(rows)) {
-      (batch, outDir) =>
-        keyed(batch).sortWithinPartitions(col("zkey"))
-          .write.mode("append").parquet(outDir)
-    } finally deleteRecursively(srcDir)
+    withSlices(spark, rows) { feed =>
+      runBatchSink(spark, feed, statePartitions)(
+        _.withColumn("zkey", graft.operators.ZOrder.zkey(col(xCol), col(yCol), bits))
+          .sortWithinPartitions(col("zkey")))
+    }
   }
 
   /** Streaming MinHash-LSH ingest screen — the lexical near-dup analog
@@ -861,12 +697,6 @@ object StreamingOps {
       .minHashBands(corpusShingles, numHashes, bandSize)
       .select(col("doc_id").as("corpus_id"), col("band_idx"), col("bucket"))
       .cache()
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_mhq_").toString
-    incomingShingles.write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val feed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
     def screen(in: DataFrame) = {
       val inBands = graft.operators.Dedup
         .minHashBands(in, numHashes, bandSize)
@@ -875,12 +705,8 @@ object StreamingOps {
         .select(col("in_id"), col("corpus_id"))
         .distinct() // an in-doc's rows all sit in THIS batch
     }
-    try runBatchSink(spark, feed, statePartitions, seed = screen(incomingShingles)) {
-      (batch, outDir) => screen(batch).write.mode("append").parquet(outDir)
-    } finally {
-      corpusBands.unpersist()
-      deleteRecursively(srcDir)
-    }
+    try withSlices(spark, incomingShingles)(runBatchSink(spark, _, statePartitions)(screen))
+    finally corpusBands.unpersist()
   }
 
   /** Streaming BM25 serving — the query-serving face of the lexical
@@ -900,21 +726,10 @@ object StreamingOps {
     val (index0, stats0) = graft.operators.HybridRetrieval.bm25Index(corpus, maxTokenDf)
     val index = index0.cache()
     val stats = stats0.cache()
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_bmq_").toString
-    queries.write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val feed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1") // several triggers, whole queries each
-      .parquet(srcDir)
-    try runBatchSink(spark, feed, statePartitions,
-      seed = graft.operators.HybridRetrieval.bm25Serve(queries, index, stats, n)) {
-      (batch, outDir) =>
-        graft.operators.HybridRetrieval.bm25Serve(batch, index, stats, n)
-          .write.mode("append").parquet(outDir)
-    } finally {
-      index.unpersist(); stats.unpersist()
-      deleteRecursively(srcDir)
-    }
+    // several triggers, whole queries each
+    try withSlices(spark, queries)(runBatchSink(spark, _, statePartitions)(
+      graft.operators.HybridRetrieval.bm25Serve(_, index, stats, n)))
+    finally { index.unpersist(); stats.unpersist() }
   }
 
   /** Streaming BM25 INGEST — the LSM generation discipline applied to
@@ -984,17 +799,6 @@ object StreamingOps {
     require(appendBasePath == null || publishPath != null,
       "appendBasePath needs a publishPath to publish the next generation to")
     import graft.operators.HybridRetrieval
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (statePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    val srcDir = scratchDir(spark, "graft_bm25_ing_")
-    spark.read.parquet(docsPath).filter(corpusPred)
-      .select(col("doc_id").cast("long"), col("text"))
-      .repartition(sourceSlices).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
     // the two append-only accumulation directories (the ONLY
     // accumulated state beside two driver longs) — executor-written, so
     // allocated under the shared-scratch root, not a driver-local tmp
@@ -1002,63 +806,50 @@ object StreamingOps {
     @volatile var nBatches = 0
     @volatile var nDocs = 0L
     @volatile var sumDl = 0L
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
+    val docs = spark.read.parquet(docsPath).filter(corpusPred)
+      .select(col("doc_id").cast("long"), col("text"))
     try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            // one O(batch) posting delta + one O(batch-vocab) df delta,
-            // APPENDED — the accumulated state is never re-read
-            // mid-stream and never resident anywhere but these files
-            if (appendBasePath == null) {
-              // two consumers of the batch's postings (the delta file and
-              // the df delta) — checkpoint so tokenization runs once
-              val p = timeLeg("bm25ing.postings-ckpt") {
-                HybridRetrieval.rawPostings(batch).localCheckpoint(true) }
-              try {
+      withSlices(spark, docs, sourceSlices) { stream =>
+        runStream(spark, statePartitions)(stream.writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            if (!batch.isEmpty) {
+              // one O(batch) posting delta + one O(batch-vocab) df delta,
+              // APPENDED — the accumulated state is never re-read
+              // mid-stream and never resident anywhere but these files
+              if (appendBasePath == null) {
+                // two consumers of the batch's postings (the delta file and
+                // the df delta) — checkpoint so tokenization runs once
+                val p = timeLeg("bm25ing.postings-ckpt") {
+                  HybridRetrieval.rawPostings(batch).localCheckpoint(true) }
+                try {
+                  timeLeg("bm25ing.write-postings") {
+                    p.write.mode("append").parquet(s"$accDir/postings") }
+                  timeLeg("bm25ing.write-df") {
+                    p.groupBy(col("tok")).agg(count(lit(1)).as("df_b"))
+                      .write.mode("append").parquet(s"$accDir/df") }
+                } finally p.unpersist()
+              } else
+                // append-publish mode folds df from the postings themselves
+                // (appendBm25Pieces) — the per-batch df delta would never be
+                // read, and with one consumer the checkpoint buys nothing:
+                // one job, one tokenization pass, straight to the delta file
                 timeLeg("bm25ing.write-postings") {
-                  p.write.mode("append").parquet(s"$accDir/postings") }
-                timeLeg("bm25ing.write-df") {
-                  p.groupBy(col("tok")).agg(count(lit(1)).as("df_b"))
-                    .write.mode("append").parquet(s"$accDir/df") }
-              } finally p.unpersist()
-            } else
-              // append-publish mode folds df from the postings themselves
-              // (appendBm25Pieces) — the per-batch df delta would never be
-              // read, and with one consumer the checkpoint buys nothing:
-              // one job, one tokenization pass, straight to the delta file
-              timeLeg("bm25ing.write-postings") {
-                HybridRetrieval.rawPostings(batch)
-                  .write.mode("append").parquet(s"$accDir/postings") }
-            val dl = timeLeg("bm25ing.dl-agg") { batch.select(
-              graft.functions.TextFunctions.tokens(col("text")).as("ts"))
-              .agg(count(lit(1)), sum(size(col("ts")))).head }
-            nDocs += dl.getLong(0)
-            sumDl += dl.getLong(1)
-            nBatches += 1
-            // instrumentation hook (batching-invariance spec): fires
-            // after the batch's eager jobs complete
-            if (onBatchEnd != null) onBatchEnd(nBatches)
-          }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      if (statePartitions > 0)
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-      deleteScratch(spark, srcDir)
-    }
-    require(nDocs > 0, "streamBm25Ingest saw an empty corpus stream")
+                  HybridRetrieval.rawPostings(batch)
+                    .write.mode("append").parquet(s"$accDir/postings") }
+              val dl = timeLeg("bm25ing.dl-agg") { batch.select(
+                graft.functions.TextFunctions.tokens(col("text")).as("ts"))
+                .agg(count(lit(1)), sum(size(col("ts")))).head }
+              nDocs += dl.getLong(0)
+              sumDl += dl.getLong(1)
+              nBatches += 1
+              // instrumentation hook (batching-invariance spec): fires
+              // after the batch's eager jobs complete
+              if (onBatchEnd != null) onBatchEnd(nBatches)
+            }
+          })
+      }
+      require(nDocs > 0, "streamBm25Ingest saw an empty corpus stream")
+    } catch { case t: Throwable => deleteScratch(spark, accDir); throw t }
     import spark.implicits._
     // the ONE fold over the accumulated df deltas (publish-time only):
     // Σ batch-vocab rows in, final per-token df out, cap evaluated
@@ -1121,22 +912,10 @@ object StreamingOps {
       weigh: DataFrame => DataFrame,
       idCol: String, weightCol: String, k: Int,
       statePartitions: Int = 0): DataFrame = {
-    val schema = schemaCache.computeIfAbsent(docsPath, p => spark.read.parquet(p).schema)
-    val srcDir = stagedSources.computeIfAbsent(docsPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("data.parquet"), java.nio.file.Paths.get(docsPath))
-      d.toString
-    })
-    val docs = spark.readStream.schema(schema).parquet(srcDir)
     def batchSample(b: DataFrame) =
       graft.operators.Sampling.weightedSample(weigh(b), idCol, weightCol, k)
         .drop("sample_rank") // ranks are only meaningful after the final fold
-    val acc = runBatchSink(spark, docs, statePartitions,
-      seed = batchSample(spark.read.schema(schema).parquet(srcDir))) {
-      (batch, outDir) =>
-        batchSample(batch).write.mode("append").parquet(outDir)
-    }
+    val acc = runBatchSink(spark, sourceStream(spark, docsPath), statePartitions)(batchSample)
     // final fold: re-cut the accumulated per-batch winners
     val top = acc.orderBy(col("sample_key").desc, col(idCol)).limit(k)
     top.withColumn("sample_rank",
@@ -1158,40 +937,15 @@ object StreamingOps {
       baseIndex: graft.index.VectorIndex, queries: DataFrame,
       newVectorsPred: org.apache.spark.sql.Column, k: Int,
       publishPath: String = null): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val schema = schemaCache.computeIfAbsent(embPath, p => spark.read.parquet(p).schema)
-    val srcDir = stagedSources.computeIfAbsent(embPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("data.parquet"), java.nio.file.Paths.get(embPath))
-      d.toString
-    })
-    val newVectors = spark.readStream.schema(schema).parquet(srcDir)
+    val newVectors = sourceStream(spark, embPath)
       .filter(newVectorsPred)
       .select(col("vec_id").as("id"), col("embedding"))
     // the evolving index generation — foreachBatch runs on the driver, so
     // a plain var is the idiomatic accumulator for re-assignable state
     @volatile var current = baseIndex
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    try {
-      val q = newVectors.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) current = current.append(batch)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-    }
+    runStream(spark, 0)(newVectors.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      if (!batch.isEmpty) current = current.append(batch)
+    })
     // with publishPath the stream ENDS in a published snapshot and the
     // probe runs over the LOADED copy (the s26 close applied to the
     // vector family): the gate's hash then covers persistence too
@@ -1216,39 +970,14 @@ object StreamingOps {
       spark: SparkSession, embPath: String,
       lsm0: graft.index.LsmVectorIndex, queries: DataFrame,
       deletePred: org.apache.spark.sql.Column, k: Int): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val schema = schemaCache.computeIfAbsent(embPath, p => spark.read.parquet(p).schema)
-    val srcDir = stagedSources.computeIfAbsent(embPath, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve("data.parquet"), java.nio.file.Paths.get(embPath))
-      d.toString
-    })
-    val deletes = spark.readStream.schema(schema).parquet(srcDir)
+    val deletes = sourceStream(spark, embPath)
       .filter(deletePred)
       .select(col("vec_id").cast("long").as("id"))
     @volatile var current = lsm0
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    try {
-      val q = deletes.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val ids = batch.collect().map(_.getLong(0))
-          if (ids.nonEmpty) current = current.delete(ids)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-    }
+    runStream(spark, 0)(deletes.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      val ids = batch.collect().map(_.getLong(0))
+      if (ids.nonEmpty) current = current.delete(ids)
+    })
     current.query(queries, k, searchWidth = 0)
   }
 
@@ -1257,9 +986,9 @@ object StreamingOps {
     * generation ([[graft.index.LsmVectorIndex.ingest]], O(batch) work —
     * no sealed shard rebuilds), probes run against base + generations via
     * the multi-shard merge, and generations fold into the base once their
-    * total crosses `compactThreshold`. The new-vector slice is staged as
-    * `sourceSlices` files and streamed with maxFilesPerTrigger=1 so the
-    * file source delivers a real multi-batch cadence. Exact-mode probes
+    * total crosses `compactThreshold`. The new-vector slice is written as
+    * `sourceSlices` files streamed one per trigger ([[withSlices]]), so
+    * the file source delivers a real multi-batch cadence. Exact-mode probes
     * are invariant to batch boundaries AND compaction points (merged
     * top-k == flat top-k; append == full rebuild), so the final probe has
     * the plain brute-force SQL oracle. */
@@ -1269,34 +998,13 @@ object StreamingOps {
       newVectorsPred: org.apache.spark.sql.Column, k: Int,
       compactThreshold: Long, sourceSlices: Int = 4,
       publishPath: String = null): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val slice = spark.read.parquet(embPath).filter(newVectorsPred)
       .select(col("vec_id").as("id"), col("embedding"))
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_lsm_src_").toString
-    slice.repartition(sourceSlices).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
     @volatile var current = graft.index.LsmVectorIndex(baseIndex, compactThreshold)
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) current = timeLeg("lsm.ingest") { current.ingest(batch) }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
+    withSlices(spark, slice, sourceSlices) { stream =>
+      runStream(spark, 0)(stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) current = timeLeg("lsm.ingest") { current.ingest(batch) }
+      })
     }
     // with publishPath the stream ENDS in a published generational
     // snapshot ([[graft.index.LsmVectorIndex.save]]: base + generations
@@ -1382,10 +1090,6 @@ object StreamingOps {
       stateFrames: Int = 8): DataFrame = {
     import graft.functions.VectorFunctions
     import graft.index.{IndexParams, LsmVectorIndex, VectorIndex}
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (statePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
     // the affected-only re-cut unions two branches that both descend from
     // the localCheckpointed state (shared attribute ids); Catalyst's
     // union constraint rewriting trips over that self-lineage ("key not
@@ -1401,26 +1105,13 @@ object StreamingOps {
     val all = spark.read.parquet(embPath)
     val base = all.filter(baseCorpusPred)
       .select(col("vec_id").cast("long").as("id"), col("embedding"))
-    val baseIdx = VectorIndex.build(base, params,
-      numShards = math.max(2, if (statePartitions > 0) statePartitions else 2))
-    @volatile var current = LsmVectorIndex(baseIdx, compactThreshold = Long.MaxValue)
+    @volatile var current: LsmVectorIndex = null
     // per-node top-k edge state (src, dst, distance) + the corpus seen so
     // far; both re-materialized per batch (localCheckpoint truncates the
-    // lineage that would otherwise reference expired micro-batch frames)
-    val seedState = noConstraints {
-      baseIdx
-        .query(base.select(col("id").as("query_id"), col("embedding")),
-          kEdges + 1, searchWidth)
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("rr", row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id")).orderBy(col("distance"), col("neighbor_id"))))
-        .filter(col("rr") <= kEdges)
-        .select(col("query_id").as("src"), col("neighbor_id").as("dst"), col("distance"))
-        .localCheckpoint(true)
-    }
+    // lineage that would otherwise reference expired micro-batch frames).
     // EXACT face: one monolithic state frame, re-cut affected srcs and
     // re-materialized per batch (the gate face — exact by induction).
-    @volatile var state = if (searchWidth == 0) seedState else null
+    @volatile var state: DataFrame = null
     // BEAM face: the LSM generation discipline applied to the edge list —
     // state is a SEQUENCE of frames (seed + one delta frame per batch,
     // latest frame per src wins), so the per-batch WRITE is O(delta):
@@ -1428,12 +1119,11 @@ object StreamingOps {
     // never copied. Frames fold back into one (the same latest-wins
     // resolution, run once) when their count crosses `stateFrames` —
     // bounded generations, amortized O(state/stateFrames) per batch.
-    @volatile var frames: Vector[DataFrame] =
-      if (searchWidth == 0) null else Vector(seedState)
+    @volatile var frames: Vector[DataFrame] = null
     // the corpus-so-far accumulator exists ONLY for the exact face's
     // map-side reverse leg; the beam face serves reverse candidates from
     // the index probe and never materializes it
-    @volatile var corpusSoFar = if (searchWidth == 0) base.localCheckpoint(true) else null
+    @volatile var corpusSoFar: DataFrame = null
 
     /** Latest-frame-per-src resolution over the generational state,
       * optionally restricted to a (delta-sized) src set FIRST so the
@@ -1452,38 +1142,35 @@ object StreamingOps {
         .select(col("src"), col("dst"), col("distance"))
     }
 
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_knng_src_").toString
-    all.filter(newVectorsPred)
+    // the slices stream in a pinned order: the exact face is
+    // order-invariant (by induction), but the beam face probes
+    // intermediate index states, so a racing order would make runs
+    // non-reproducible
+    val newVectors = all.filter(newVectorsPred)
       .select(col("vec_id").cast("long").as("id"), col("embedding"))
-      .repartition(sourceSlices).write.mode("overwrite").parquet(srcDir)
-    // pin the micro-batch ORDER: FileStreamSource delivers files by
-    // modification time, and the slices were written by parallel tasks
-    // whose mtimes race — the exact face is order-invariant (by
-    // induction), but the beam face probes intermediate index states, so
-    // a racing order makes runs non-reproducible. Rewrite mtimes in
-    // path-sorted order (strictly increasing seconds) so every run
-    // streams the same slice sequence.
-    locally {
-      import scala.jdk.CollectionConverters._
-      val parts = java.nio.file.Files.list(java.nio.file.Paths.get(srcDir))
-        .iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
-        .toSeq.sortBy(_.getFileName.toString)
-      val base = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
-      parts.zipWithIndex.foreach { case (p, i) =>
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(base.toMillis + i * 1000L))
+    withSlices(spark, newVectors, sourceSlices) { stream => runStream(spark, statePartitions) {
+      // the base build and the seed state run under the run's confs:
+      // the seed window's shuffle sets the state partitioning that every
+      // batch's joins reuse
+      val baseIdx = VectorIndex.build(base, params,
+        numShards = math.max(2, if (statePartitions > 0) statePartitions else 2))
+      current = LsmVectorIndex(baseIdx, compactThreshold = Long.MaxValue)
+      val seedState = noConstraints {
+        baseIdx
+          .query(base.select(col("id").as("query_id"), col("embedding")),
+            kEdges + 1, searchWidth)
+          .filter(col("neighbor_id") =!= col("query_id"))
+          .withColumn("rr", row_number().over(org.apache.spark.sql.expressions.Window
+            .partitionBy(col("query_id")).orderBy(col("distance"), col("neighbor_id"))))
+          .filter(col("rr") <= kEdges)
+          .select(col("query_id").as("src"), col("neighbor_id").as("dst"), col("distance"))
+          .localCheckpoint(true)
       }
-    }
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val ckptRoot =
-      if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptRoot, "graft_ckpt_")
-    try {
-      val q = stream.writeStream
+      if (searchWidth == 0) {
+        state = seedState
+        corpusSoFar = base.localCheckpoint(true)
+      } else frames = Vector(seedState)
+      stream.writeStream
         .foreachBatch { (batch0: DataFrame, _: Long) =>
           if (!batch0.isEmpty) noConstraints {
             val batch = timeLeg("knng.batch-ckpt") {
@@ -1577,21 +1264,7 @@ object StreamingOps {
             }
           }
         }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      drain(q)
-    } finally {
-      if (statePartitions > 0)
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-      // the staged source is fully drained and the state localCheckpointed
-      // — the corpus-sized temp dir is dead weight the moment we return
-      deleteRecursively(srcDir)
-    }
+    }}
     // reciprocal-pair view over the final state — v48's output contract
     // (beam face: one full latest-wins resolution, the only O(state)
     // window the generational path ever runs outside compaction). The
@@ -1612,7 +1285,6 @@ object StreamingOps {
     * batch oracle. */
   def slidingCounts(
       spark: SparkSession, eventsPath: String, statePartitions: Int = 0): DataFrame = {
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val agg = eventsStream(spark, eventsPath)
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))

@@ -192,4 +192,38 @@ class AppendToSpec extends AnyFunSuite with SparkSuite {
       graft.streaming.StreamingOps.deleteRecursively(newRoot)
     }
   }
+
+  test("kept shards keep their checksums: a flipped byte in a hardlinked file fails the probe") {
+    val dim = 8
+    val oldDir = java.nio.file.Files.createTempDirectory("graft_appendto_crc_old_").toString
+    val newRoot = java.nio.file.Files.createTempDirectory("graft_appendto_crc_new_").toString
+    val newDir = s"$newRoot/snap"
+    try {
+      VectorIndex.buildTo(corpus(400, dim, _.toLong), IndexParams(), 4, oldDir)
+      // new ids all land on shard 1: shards 0, 2 and 3 are kept
+      VectorIndex.appendTo(spark, oldDir, corpus(20, dim, i => 1001L + 4L * i), newDir)
+      def shardFiles(s: Int) = new java.io.File(s"$newDir/rows/sub_index_id=$s").listFiles().toSeq
+      for (s <- Seq(0, 2, 3)) {
+        val names = shardFiles(s).map(_.getName).toSet
+        val data = names.filter(_.endsWith(".parquet"))
+        assert(data.size === 1, s"shard $s: $names")
+        assert(names(s".${data.head}.crc"), s"kept shard $s lost its checksum: $names")
+      }
+      // flip one byte of a kept file's footer, in place: the hardlink
+      // shares the inode, and the checksum now disagrees with it
+      val kept = shardFiles(0).find(_.getName.endsWith(".parquet")).get.toPath
+      val bytes = java.nio.file.Files.readAllBytes(kept)
+      bytes(bytes.length - 12) = (bytes(bytes.length - 12) ^ 0x5a).toByte
+      java.nio.file.Files.write(kept, bytes)
+      val qdf = corpus(4, dim, i => 900000L + i).select(col("id").as("query_id"), col("embedding"))
+      val err = intercept[Throwable](
+        VectorIndex.load(spark, newDir, cache = false).query(qdf, 5, searchWidth = 16).collect())
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(e => e.isInstanceOf[org.apache.hadoop.fs.ChecksumException] ||
+        String.valueOf(e.getMessage).contains("ChecksumException")), err.toString)
+    } finally {
+      graft.streaming.StreamingOps.deleteRecursively(oldDir)
+      graft.streaming.StreamingOps.deleteRecursively(newRoot)
+    }
+  }
 }
