@@ -28,7 +28,10 @@ object ParamStep {
   * @param minimumConnect       target out-degree M per node (dehnsw.h:86)
   * @param relaxedMonotonicity  build-time early-termination window (dehnsw.h:84)
   * @param step                 BFS radius for deterministic layer promotion (dehnsw.h:76)
-  * @param subIndexBound        max vectors per shard (dehnsw.h:80)
+  * @param subIndexBound        the reference's max vectors per shard
+  *                             (dehnsw.h:80): recorded in params.json,
+  *                             read by no build (ROADMAP item 3 decides
+  *                             whether it becomes live or goes)
   * @param schedule             optional adaptive M/RM build schedule
   *                             (ascending fromCount; empty = fixed params)
   * @param quantized            SQ8 in-memory storage: shard vectors are

@@ -1,7 +1,6 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** LSM-style generational vector index — the scale-safe streaming-ingest
   * form of the shard contract (reference: source/dehnsw.h:601-609, where a
@@ -19,8 +18,8 @@ import org.apache.spark.sql.functions._
   *    generation shard (`genShardSize`) and at most
   *    [[LsmVectorIndex.DriverBuildRows]] rows is read once and its
   *    graph built on the DRIVER and broadcast as one driver-held
-  *    partition, the probe layout; a larger batch is built by the
-  *    distributed build, one generation shard per `genShardSize`
+  *    partition, the probe layout; a larger batch is built by
+  *    [[VectorIndex.build]], one generation shard per `genShardSize`
   *    vectors. Both yield the graphs and meta of [[VectorIndex.build]];
   *  - '''query''' probes the base and every generation and merges their
   *    per-shard top-k into one top-k per query, as the multi-shard probe
@@ -32,11 +31,11 @@ import org.apache.spark.sql.functions._
   *    pays for. The compacted base equals a full build over the live set,
   *    so exact-mode probes are invariant across compaction (spec-gated).
   *
-  * Each ingested batch is validated eagerly (cheap, O(batch)): unique
-  * ids, and finite embeddings of the index's dimension. Cross-generation
-  * or base clashes would need an O(index) lookup per batch — exactly the
-  * cost this structure avoids — so the rewrite's disjointness check
-  * catches them at compaction time.
+  * Each batch is checked as its build runs ([[VectorIndex.checkIngest]]):
+  * unique ids, and finite embeddings of the index's dimension. Cross-
+  * generation or base clashes would need an O(index) lookup per batch —
+  * exactly the cost this structure avoids — so the rewrite's
+  * disjointness check catches them at compaction time.
   *
   * Memory: a driver-built generation's graph stays on the driver until
   * compaction folds the generation, which releases it, so
@@ -114,33 +113,31 @@ final class LsmVectorIndex private (
     * no query is planned for it; one job when `batch` has at most 4
     * partitions and `bound` rows, none for a local relation) picks the
     * path:
-    *  - a batch of at most `bound` rows is validated and built ON
-    *    THE DRIVER ([[VectorIndex.buildOnDriver]]): the same kernel loop
-    *    a one-shard build task runs, so no parallelism is lost, and no
+    *  - a batch of at most `bound` rows is built ON THE DRIVER
+    *    ([[VectorIndex.buildOnDriver]]): the same check and kernel loop a
+    *    one-shard build task runs, so no parallelism is lost, and no
     *    further job — the generation's graph is one driver-held
     *    partition that its first probe reads without an exchange;
-    *  - a larger batch is cached, validated in one aggregation and built
-    *    distributed, `genShardSize` vectors per generation shard, after
-    *    a wasted read that moves at most `bound + 1` rows plus one per
+    *  - a larger batch is built by [[VectorIndex.build]], `genShardSize`
+    *    vectors per shard, after one job that counts its rows and a
+    *    wasted read that moves at most `bound + 1` rows plus one per
     *    task to the driver ([[GraftSqlBridge.take]] states the one
-    *    exception).
-    * Either way the batch is rejected, naming an id, when an id is
-    * missing or repeated, or an embedding is missing, non-finite or of
-    * another dimension than the index's. */
+    *    exception). Nothing is cached but the built graphs.
+    * Either way a batch with an id missing or repeated, or an embedding
+    * missing, non-finite or of another dimension than the index's, is
+    * rejected naming the smallest offending id. */
   def ingest(batch: DataFrame): LsmVectorIndex = {
-    val spark = batch.sparkSession
     val bound = math.min(genShardSize, LsmVectorIndex.DriverBuildRows.toLong).toInt
     val head = VectorIndex.takeVectors(batch, "id", bound + 1)
     if (head.isEmpty) return this
-    val dim = inputDim
+    // read once per member and carried across rewrites: no job
+    val dim = (base +: generations).find(_.meta.nonEmpty).fold(-1)(_.dimension)
     val gen =
-      if (head.length <= bound) {
-        LsmVectorIndex.validate(LsmVectorIndex.BatchFacts.of(head), dim)
-        val p = base.params
-        VectorIndex.buildOnDriver(spark, head
-          .map { case (id, v) => (id.longValue, p.transformCorpusVector(v)) }
-          .sortBy(_._1).toIndexedSeq, p)
-      } else buildDistributed(batch.select(col("id").cast("long"), col("embedding")), dim)
+      if (head.length <= bound) VectorIndex.buildOnDriver(batch.sparkSession, head, base.params, dim)
+      else {
+        val n = batch.queryExecution.toRdd.count()
+        VectorIndex.build(batch, base.params, ((n + genShardSize - 1) / genShardSize).toInt, dim)
+      }
     val next = new LsmVectorIndex(
       base, generations :+ gen, compactThreshold, genShardSize, ownsBase,
       tombstones, deleteThreshold, asyncPending, tombstoneCopy)
@@ -149,26 +146,6 @@ final class LsmVectorIndex private (
     if (next.freshCount >= compactThreshold && !asyncPending.get()) next.compact()
     else next
   }
-
-  /** A batch over the driver bound: cached, validated in ONE
-    * aggregation and built by the distributed build. The cache is
-    * dropped on every exit; on success the build's meta pass has
-    * materialized the generation's graphs first. */
-  private def buildDistributed(input: DataFrame, dim: Int): VectorIndex = {
-    val fresh = input.cache()
-    try {
-      val facts = LsmVectorIndex.BatchFacts.of(fresh)
-      LsmVectorIndex.validate(facts, dim)
-      VectorIndex.build(fresh, base.params, ((facts.n + genShardSize - 1) / genShardSize).toInt)
-    } finally fresh.unpersist()
-  }
-
-  /** The input dimension the index takes: that of the base, or of the
-    * first generation while the base is empty, less MIPS's augmented
-    * component; -1 while the index holds no vector. Read once per
-    * member and carried across rewrites, so steady ingest pays no job. */
-  private def inputDim: Int = (base +: generations).find(_.meta.nonEmpty)
-    .fold(-1)(_.dimension - (if (base.params.augmentForMips) 1 else 0))
 
   /** Fold every generation into the base and purge every tombstone in
     * ONE shard-scoped rewrite: a shard gaining a live fresh id or holding
@@ -431,58 +408,6 @@ object LsmVectorIndex {
     def release(): Unit = synchronized {
       if (bc != null) { bc.destroy(); bc = null }
     }
-  }
-
-  /** What [[LsmVectorIndex.ingest]] validates about a batch, gathered on
-    * the driver from the collected rows or by one aggregation over the
-    * cached batch, so both paths run the same [[validate]]. Ids name the
-    * smallest offender; a shape is (embedding length, id), and the batch's
-    * narrowest and widest bound every length in it. */
-  private[index] final case class BatchFacts(n: Long, withId: Long, distinct: Long,
-      noEmbedding: Option[Long], nonFinite: Option[Long],
-      narrowest: Option[(Int, Long)], widest: Option[(Int, Long)])
-
-  private[index] object BatchFacts {
-    def of(rows: Array[(java.lang.Long, Array[Float])]): BatchFacts = {
-      val ids = rows.collect { case (id, _) if id != null => id.longValue }.sorted
-      def first(bad: Array[Float] => Boolean) =
-        rows.collect { case (id, v) if id != null && bad(v) => id.longValue }.minOption
-      val shapes = rows.collect { case (id, v) if id != null && v != null => (v.length, id.longValue) }
-      BatchFacts(rows.length, ids.length, ids.indices.count(i => i == 0 || ids(i) != ids(i - 1)),
-        first(_ == null), first(v => v != null && v.exists(x => !java.lang.Float.isFinite(x))),
-        shapes.minOption, shapes.maxOption)
-    }
-
-    def of(batch: DataFrame): BatchFacts = {
-      val (id, emb) = (col("id"), col("embedding"))
-      val shape = when(emb.isNotNull, struct(size(emb), id))
-      val r = batch.agg(count(lit(1)), count(id), count_distinct(id),
-        min(when(emb.isNull, id)),
-        min(when(exists(emb, x => isnan(x) || abs(x) === Float.PositiveInfinity), id)),
-        min(shape), max(shape)).head
-      def idAt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
-      def shapeAt(i: Int) = if (r.isNullAt(i)) None else Some((r.getStruct(i).getInt(0), r.getStruct(i).getLong(1)))
-      BatchFacts(r.getLong(0), r.getLong(1), r.getLong(2), idAt(3), idAt(4), shapeAt(5), shapeAt(6))
-    }
-  }
-
-  /** Reject a batch the index would store wrongly: a row without an id, a
-    * repeated id, or an embedding that is missing, of another dimension
-    * than `dim` (or, while the index is empty, than the rest of the
-    * batch), or non-finite — a NaN is never evicted from a top-k. */
-  private[index] def validate(f: BatchFacts, dim: Int): Unit = {
-    require(f.withId == f.n, s"ingested rows must carry an id (${f.n - f.withId} without)")
-    require(f.distinct == f.withId,
-      s"ingested ids must be unique within the batch (${f.withId - f.distinct} clashes)")
-    f.noEmbedding.foreach(id => throw new IllegalArgumentException(s"ingested id $id has no embedding"))
-    for ((ln, lid) <- f.narrowest; (wn, wid) <- f.widest) {
-      val want = if (dim > 0) dim else ln
-      val expected = if (dim > 0) s"the index dimension is $dim" else s"id $lid has $ln"
-      require(ln == want, s"ingested id $lid has $ln components, $expected")
-      require(wn == want, s"ingested id $wid has $wn components, $expected")
-    }
-    f.nonFinite.foreach(id =>
-      throw new IllegalArgumentException(s"ingested id $id has a non-finite component"))
   }
 
   /** Wrap a sealed base index for generational ingest.

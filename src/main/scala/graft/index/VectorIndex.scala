@@ -467,14 +467,16 @@ class VectorIndex private (
     * result is IDENTICAL to rebuilding the whole index from the union of
     * old and new vectors — untouched shards' graphs are reused as-is.
     *
-    * New ids must be disjoint from existing ones and from each other
-    * (validated), and dimensions must match the index (validated).
-    * Returns a new index with a fresh cache identity — EXCEPT for an
-    * empty batch, which returns this index unchanged (no copy). The old
-    * index stays valid and keeps its caches; drop them with [[unpersist]]
-    * when a superseded generation is no longer needed. */
-  def append(newVectors: DataFrame): VectorIndex =
-    rewrite(null, VectorIndex.inputRows(newVectors, params))
+    * The batch is checked in the rewrite ([[VectorIndex.IngestCheck]]), a
+    * rejection leaving nothing cached. Returns a new index with a fresh
+    * cache identity — EXCEPT for an empty batch, which returns this index
+    * unchanged (no copy). The old index stays valid and keeps its caches;
+    * drop them with [[unpersist]] when a superseded generation is no
+    * longer needed. */
+  def append(newVectors: DataFrame): VectorIndex = {
+    val check = ingestCheck
+    rewrite(null, VectorIndex.inputRows(newVectors, params, check), check)
+  }
 
   /** Shard-scoped physical DELETE (the reference's API stops at
     * insert/query/optimize/save): [[append]]'s economics in reverse —
@@ -494,12 +496,13 @@ class VectorIndex private (
     * id) is rebuilt once; the others keep their graphs and meta. The
     * result equals [[VectorIndex.build]] over the live set bit for bit,
     * and its one cached copy is its probe layout. No affected shard
-    * returns this index. The added rows are validated inside the build
-    * ([[VectorIndex.AppendCheck]]). */
-  private[index] def rewrite(removed: RDD[Long], added: RDD[(Long, Array[Float])]): VectorIndex = {
+    * returns this index. The added rows are checked in the tasks that
+    * rebuild their shards, by `check` or one of this index's dimension
+    * ([[VectorIndex.IngestCheck]]). */
+  private[index] def rewrite(removed: RDD[Long], added: RDD[(Long, Array[Float])],
+      given: VectorIndex.IngestCheck = null): VectorIndex = {
     val sc = spark.sparkContext
-    val check = if (added == null) null
-      else VectorIndex.AppendCheck(spark, if (meta.nonEmpty) dimension else -1)
+    val check = if (added == null) null else Option(given).getOrElse(ingestCheck)
     val rebuilt = sc.longAccumulator
     val next = VectorIndex.inMemory(spark, params, numShards, VectorIndex.rewriteShards(
       Left(probeLayout), Option(added).getOrElse(sc.emptyRDD), Option(removed).getOrElse(sc.emptyRDD),
@@ -516,6 +519,10 @@ class VectorIndex private (
       next
     }
   }
+
+  /** A check of rows added to this index ([[VectorIndex.IngestCheck]]). */
+  private[index] def ingestCheck: VectorIndex.IngestCheck =
+    new VectorIndex.IngestCheck(spark, if (meta.nonEmpty) dimension else -1, params)
 
   /** Drop this index's graphs, its one cached copy ([[probeLayout]]).
     * Call on a superseded generation after [[append]] — each generation
@@ -655,8 +662,15 @@ object VectorIndex {
     * shard's distance order. The message names the query id. */
   private[index] def checkQuery(id: Long, v: Array[Float]): Unit = {
     require(v != null, s"query $id has no embedding")
-    val bad = v.indexWhere(x => !java.lang.Float.isFinite(x))
+    val bad = firstNonFinite(v)
     require(bad < 0, s"query $id has a non-finite component ${v(bad)} at index $bad")
+  }
+
+  /** The position of `v`'s first NaN or infinite component, or -1. */
+  private[index] def firstNonFinite(v: Array[Float]): Int = {
+    var i = 0
+    while (i < v.length && java.lang.Float.isFinite(v(i))) i += 1
+    if (i < v.length) i else -1
   }
 
   /** One task's candidates for one query group, as parallel primitive
@@ -1025,12 +1039,12 @@ object VectorIndex {
     * survivor moves. Partition s finds out itself whether shard s
     * changes ([[rewriteShard]]); partition s of the result holds shard
     * s's graph, or nothing for an empty shard or unchanged stored rows.
-    * `check`, when given, sees every changed shard's rows, and
+    * `check`, when given, checks every changed shard's rows, and
     * `rebuilt`, when given, counts the rebuilt shards. */
   private[index] def rewriteShards(
       base: Either[RDD[SubIndexGraph], RDD[(Long, Array[Float])]],
       added: RDD[(Long, Array[Float])], removed: RDD[Long], params: IndexParams,
-      numShards: Int, check: AppendCheck,
+      numShards: Int, check: IngestCheck,
       rebuilt: org.apache.spark.util.LongAccumulator): RDD[SubIndexGraph] = {
     val (p, n) = (params, numShards)
     val changes = added.map { case (id, v) => (Math.floorMod(id, n), Change(id, v, removed = false)) }
@@ -1052,7 +1066,7 @@ object VectorIndex {
     * then rebuilt from its surviving and live added rows, id-ascending —
     * or emits nothing when none is left or `check` rejects them. */
   private def rewriteShard(g: SubIndexGraph, stored: Iterator[(Long, Array[Float])],
-      changes: Iterator[(Int, Change)], p: IndexParams, check: AppendCheck,
+      changes: Iterator[(Int, Change)], p: IndexParams, check: IngestCheck,
       rebuilt: org.apache.spark.util.LongAccumulator): Iterator[SubIndexGraph] = {
     val cs = changes.buffered
     if (!cs.hasNext) return Option(g).iterator
@@ -1068,9 +1082,8 @@ object VectorIndex {
     vecs.sortInPlaceBy(_._1)
     if (vecs.isEmpty || (check != null && check.rejects(vecs))) Iterator.empty
     else {
-      val dim = if (check != null && check.dim > 0) check.dim else vecs.head._2.length
       if (rebuilt != null) rebuilt.add(1)
-      Iterator.single(buildShard(shardId, vecs, p, dim))
+      Iterator.single(buildShard(shardId, vecs, p))
     }
   }
 
@@ -1081,23 +1094,30 @@ object VectorIndex {
 
   /** A caller's (id, embedding) rows, a build's corpus or an append's
     * batch, read once by one select ([[plannedRows]]). */
-  private def inputRows(df: DataFrame, params: IndexParams): RDD[(Long, Array[Float])] =
-    plannedRows(df.select(col("id").cast("long"), col("embedding").cast("array<float>")), params)
+  private def inputRows(df: DataFrame, params: IndexParams, check: IngestCheck): RDD[(Long, Array[Float])] =
+    plannedRows(df.select(col("id").cast("long"), col("embedding").cast("array<float>")), params, check)
 
   /** The (id: long, embedding: array<float>) pairs in the first two
     * columns of `input`, through the API-boundary transform
-    * ([[IndexParams.transformCorpusVector]]): the one place a corpus is
-    * transformed on its way into a distributed build or append. The rows
-    * are taken off `input`'s planned query, as planned, not through
-    * `Dataset.rdd`, which Spark reports as an SQL execution of its own. */
-  private def plannedRows(input: DataFrame, params: IndexParams): RDD[(Long, Array[Float])] = {
-    val p = params
-    input.queryExecution.toRdd.map { r =>
-      require(!r.isNullAt(0), "appended rows must carry an id")
-      val v = if (r.isNullAt(1)) null else r.getArray(1).toFloatArray()
-      (r.getLong(0), if (v != null && p.transformsInput) p.transformCorpusVector(v) else v)
+    * ([[transformed]]): the one place a corpus is transformed on its way
+    * into a distributed build or append. A row without an id has no
+    * shard: `check` counts it. The rows are taken off `input`'s planned
+    * query, as planned, not through `Dataset.rdd`, which Spark reports as
+    * an SQL execution of its own. */
+  private def plannedRows(input: DataFrame, params: IndexParams,
+      check: IngestCheck): RDD[(Long, Array[Float])] = {
+    val (p, noId) = (params, check.noId)
+    input.queryExecution.toRdd.flatMap { r =>
+      if (r.isNullAt(0)) { noId.add(1); None }
+      else Some((r.getLong(0), transformed(p, if (r.isNullAt(1)) null else r.getArray(1).toFloatArray())))
     }
   }
+
+  /** `v` through the API-boundary transform
+    * ([[IndexParams.transformCorpusVector]]), unless it is missing or
+    * non-finite: [[checkIngest]] rejects it as it came. */
+  private[index] def transformed(p: IndexParams, v: Array[Float]): Array[Float] =
+    if (v == null || !p.transformsInput || firstNonFinite(v) >= 0) v else p.transformCorpusVector(v)
 
   /** The ids of a caller's `id` column, read as [[inputRows]] reads rows;
     * a null id removes nothing. */
@@ -1105,38 +1125,81 @@ object VectorIndex {
     df.select(col("id").cast("long")).queryExecution.toRdd
       .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
 
-  /** The checks on vectors added to an index ([[VectorIndex!.rewrite]],
-    * [[appendTo]]): each must have the index dimension `dim` (unchecked
-    * while the index is empty, -1), and no id may repeat, within the
-    * batch or against the index. Both run them INSIDE their rewrite
-    * ([[rewriteShards]]), the one validation of an append: every copy of
-    * an id lands in the same shard, adjacent after the shard's id sort,
-    * so a shard counts its own violations into the accumulators and is
-    * not built if it has any; [[verify]] then throws on the driver, after
-    * the pass that ran the rewrite (the rewrite's cache fill, the write
-    * of buildTo and appendTo). */
-  private[index] final case class AppendCheck(dim: Int,
-      badDims: org.apache.spark.util.LongAccumulator,
-      clashes: org.apache.spark.util.LongAccumulator) {
-    def rejects(vecs: collection.IndexedSeq[(Long, Array[Float])]): Boolean = {
-      val bad = if (dim < 0) 0 else vecs.count(v => v._2 == null || v._2.length != dim)
-      val dup = (1 until vecs.length).count(i => vecs(i)._1 == vecs(i - 1)._1)
-      badDims.add(bad)
-      clashes.add(dup)
-      bad + dup > 0
-    }
-    def verify(): Unit = AppendCheck.require(dim, badDims.value, clashes.value)
+  /** `n` rows, `minId` the smallest id among them. */
+  private[index] final case class Rows(n: Long, minId: Long) {
+    def ++(o: Rows): Rows = Rows(n + o.n, math.min(minId, o.minId))
   }
 
-  private[index] object AppendCheck {
-    def apply(spark: SparkSession, dim: Int): AppendCheck =
-      AppendCheck(dim, spark.sparkContext.longAccumulator, spark.sparkContext.longAccumulator)
+  /** The keys of a [[checkIngest]] report: these faults, or an embedding
+    * length (>= 0). */
+  private final val NoEmbedding = -1
+  private final val NonFinite = -2
+  private final val Clash = -3
 
-    def require(dim: Int, badDims: Long, clashes: Long): Unit = {
-      Predef.require(badDims == 0,
-        s"appended vectors must match index dimension $dim ($badDims mismatching rows)")
-      Predef.require(clashes == 0,
-        s"appended ids must be disjoint from the index and unique ($clashes clashes)")
+  /** The one check of the vectors an index takes in, over one shard's
+    * id-ascending, transformed rows, its survivors included, or one
+    * driver-held batch's: the rows that lack an embedding, hold a
+    * non-finite component (a NaN is never evicted from a top-k) or repeat
+    * the id before them, and each other row's embedding length. */
+  private[index] def checkIngest(rows: collection.IndexedSeq[(Long, Array[Float])]): Map[Int, Rows] = {
+    val found = mutable.Map.empty[Int, Rows]
+    def add(kind: Int, id: Long): Unit = found(kind) = found.get(kind).fold(Rows(1, id))(_ ++ Rows(1, id))
+    for (i <- rows.indices) {
+      val (id, v) = rows(i)
+      if (i > 0 && rows(i - 1)._1 == id) add(Clash, id)
+      add(if (v == null) NoEmbedding else if (firstNonFinite(v) >= 0) NonFinite else v.length, id)
+    }
+    found.toMap
+  }
+
+  /** The one length `report`'s rows may have: the index dimension `dim`,
+    * or while the index is empty (-1) that of the smallest id. */
+  private def expected(report: Map[Int, Rows], dim: Int): Int =
+    if (dim > 0) dim else report.filter(_._1 >= 0).minByOption(_._2.minId).fold(-1)(_._1)
+
+  /** Throw, as an IllegalArgumentException, the first fault of `report`
+    * and `noId` rows without an id, in this order, naming its smallest id
+    * and its row count; lengths are shown as the caller gave them, less
+    * MIPS's added component. */
+  private def verify(report: Map[Int, Rows], noId: Long, dim: Int, params: IndexParams): Unit = {
+    def reject(kind: Int)(msg: Rows => String): Unit =
+      report.get(kind).foreach(r => throw new IllegalArgumentException(msg(r)))
+    if (noId > 0) throw new IllegalArgumentException(s"ingested rows must carry an id ($noId without)")
+    reject(NoEmbedding)(r => s"ingested id ${r.minId} has no embedding (${r.n} rows)")
+    val (want, aug) = (expected(report, dim), if (params.augmentForMips) 1 else 0)
+    val wrong = report.filter(k => k._1 >= 0 && k._1 != want)
+    wrong.minByOption(_._2.minId).foreach { case (len, r) =>
+      val against = if (dim > 0) s"the index dimension is ${dim - aug}"
+        else s"id ${report(want).minId} has ${want - aug}"
+      throw new IllegalArgumentException(s"ingested id ${r.minId} has ${len - aug} components, " +
+        s"$against (${wrong.values.map(_.n).sum} rows)")
+    }
+    reject(NonFinite)(r => s"ingested id ${r.minId} has a non-finite component (${r.n} rows)")
+    reject(Clash)(r => "ingested ids must be unique within the batch and disjoint from the " +
+      s"index: id ${r.minId} (${r.n} clashes)")
+  }
+
+  /** [[checkIngest]] in the tasks of one rewrite job, for an index of
+    * dimension `dim` (-1 while empty): `noId` counts rows read without an
+    * id, a changed shard with a fault is not built ([[rejects]]), and
+    * [[verify]] throws the first fault of the shards' summed reports on
+    * the driver, after the job, shards of different dimensions included. */
+  private[index] final class IngestCheck(@transient spark: SparkSession, val dim: Int,
+      params: IndexParams) extends Serializable {
+    val noId: org.apache.spark.util.LongAccumulator = spark.sparkContext.longAccumulator
+    private val shards = spark.sparkContext.collectionAccumulator[Map[Int, Rows]]
+
+    def rejects(rows: collection.IndexedSeq[(Long, Array[Float])]): Boolean = {
+      val r = checkIngest(rows)
+      shards.add(r)
+      r.keys.exists(k => k < 0 || k != expected(r, dim))
+    }
+
+    def verify(): Unit = {
+      import scala.jdk.CollectionConverters._
+      VectorIndex.verify(shards.value.asScala.foldLeft(Map.empty[Int, Rows]) { (a, b) =>
+        b.foldLeft(a) { case (m, (k, r)) => m.updated(k, m.get(k).fold(r)(_ ++ r)) }
+      }, noId.value, dim, params)
     }
   }
 
@@ -1190,20 +1253,13 @@ object VectorIndex {
     * ([[rewriteShard]], under every build from a DataFrame or a bucketed
     * table and every append) and of the driver build of a small LSM
     * generation ([[buildOnDriver]]). `vecs` must be id-ascending, the
-    * order the kernel is deterministic in, of
-    * dimension `dim` and finite: a NaN vector would enter every top-k of
-    * its shard and never be evicted. */
+    * order the kernel is deterministic in, and accepted by
+    * [[checkIngest]]. */
   private[index] def buildShard(shardId: Int,
-      vecs: collection.IndexedSeq[(Long, Array[Float])], params: IndexParams,
-      dim: Int): SubIndexGraph = {
+      vecs: collection.IndexedSeq[(Long, Array[Float])], params: IndexParams): SubIndexGraph = {
     var prevId = Long.MinValue
-    vecs.foreach { case (id, v) =>
+    vecs.foreach { case (id, _) =>
       require(id > prevId, s"ids not ascending within shard $shardId: $id after $prevId")
-      require(v.length == dim,
-        s"embedding dimension mismatch at id=$id: got ${v.length}, index dimension is $dim")
-      var c = 0
-      while (c < dim && java.lang.Float.isFinite(v(c))) c += 1
-      require(c == dim, s"non-finite embedding at id=$id: component $c is ${v(c)}")
       prevId = id
     }
     val g = new SubIndexGraph(params, vecs.length, shardId)
@@ -1211,17 +1267,21 @@ object VectorIndex {
     g
   }
 
-  /** Build a ONE-shard index on the driver from id-ascending vectors
-    * that are already transformed ([[IndexParams.transformCorpusVector]]):
-    * the small-LSM-generation path. The graph is built here by
-    * [[buildShard]], the meta is read off it, and the graph is broadcast
-    * as a [[DriverGraphRDD]] of exactly one partition, the probe layout.
-    * Building runs no job, and the first probe runs no exchange. The
-    * graph stays on the driver until [[unpersist]] releases it, which
-    * compaction does for every generation it folds. */
-  private[index] def buildOnDriver(spark: SparkSession,
-      vecs: IndexedSeq[(Long, Array[Float])], params: IndexParams): VectorIndex = {
-    val g = buildShard(0, vecs, params, vecs.head._2.length)
+  /** Build a ONE-shard index on the driver from [[takeVectors]]' rows,
+    * checked as a rewrite task checks its shard's ([[checkIngest]]) for
+    * an index of dimension `dim` (-1: any): the small-LSM-generation
+    * path. The graph is built here by [[buildShard]], the meta is read
+    * off it, and the graph is broadcast as a [[DriverGraphRDD]] of
+    * exactly one partition, the probe layout. Building runs no job, and
+    * the first probe runs no exchange. The graph stays on the driver
+    * until [[unpersist]] releases it, which compaction does for every
+    * generation it folds. */
+  private[index] def buildOnDriver(spark: SparkSession, rows: Array[(java.lang.Long, Array[Float])],
+      params: IndexParams, dim: Int): VectorIndex = {
+    val vecs = rows.collect { case (id, v) if id != null => (id.longValue, transformed(params, v)) }
+      .sortBy(_._1).toIndexedSeq
+    verify(checkIngest(vecs), rows.length - vecs.length, dim, params)
+    val g = buildShard(0, vecs, params)
     fromGraphs(spark, params, 1,
       new DriverGraphRDD(spark.sparkContext, spark.sparkContext.broadcast(g)),
       Array((metaOf(g), g.dim)))
@@ -1317,17 +1377,24 @@ object VectorIndex {
     * ([[VectorIndex!.rewrite]]): one job of one shuffle
     * ([[rewriteShards]]), no query planned. Shard s is built in
     * partition s, and its graph stays there, cached once at memory and
-    * disk as the probe layout. A repeated id is rejected as an append
-    * rejects one ([[AppendCheck]]), leaving nothing cached. */
+    * disk as the probe layout. The corpus is checked as an append's batch
+    * is ([[IngestCheck]]), a rejection leaving nothing cached. */
   def build(df: DataFrame, params: IndexParams, numShards: Int): VectorIndex =
-    buildRows(df.sparkSession, inputRows(df, params), params, numShards)
+    build(df, params, numShards, -1)
+
+  /** [[build]] whose rows must have the dimension `dim` (-1: any one):
+    * an LSM generation's, over a batch too large for the driver. */
+  private[index] def build(df: DataFrame, params: IndexParams, numShards: Int, dim: Int): VectorIndex = {
+    val check = new IngestCheck(df.sparkSession, dim, params)
+    buildRows(df.sparkSession, inputRows(df, params, check), check, params, numShards)
+  }
 
   /** [[build]] over rows already read and transformed: the rewrite of
     * `numShards` empty shards. */
-  private def buildRows(spark: SparkSession, rows: RDD[(Long, Array[Float])],
+  private def buildRows(spark: SparkSession, rows: RDD[(Long, Array[Float])], check: IngestCheck,
       params: IndexParams, numShards: Int): VectorIndex =
     fromGraphs(spark, params, numShards, emptyLayout(spark, numShards), Array.empty)
-      .rewrite(null, rows)
+      .rewrite(null, rows, check)
 
   /** `numShards` empty shards: the base a build rewrites. */
   private def emptyLayout(spark: SparkSession, numShards: Int): RDD[SubIndexGraph] =
@@ -1340,8 +1407,8 @@ object VectorIndex {
     * ONE job, no query planned: its tasks build the shards as [[build]]
     * does ([[rewriteShards]] over empty shards), write them and return
     * their meta and files, so nothing is read back. The sidecars follow,
-    * `meta.json` last ([[publish]]), so a repeated id, rejected after
-    * the write ([[AppendCheck]]), leaves no snapshot. No write task puts
+    * `meta.json` last ([[publish]]), so a corpus rejected as [[build]]
+    * rejects it, after the write, leaves no snapshot. No write task puts
     * a block into the block store.
     * Returns the LOADED index over that parquet, whose first probe (or
     * [[VectorIndex!.optimize]]) reads each shard's file once, straight
@@ -1357,10 +1424,10 @@ object VectorIndex {
   def buildTo(df: DataFrame, params: IndexParams, numShards: Int,
       path: String): VectorIndex = {
     val spark = df.sparkSession
-    val check = AppendCheck(spark, -1)
+    val check = new IngestCheck(spark, -1, params)
     publish(spark, path, params, numShards, java.util.UUID.randomUUID().toString) { rows =>
       val written = writeShards(spark, rewriteShards(Left(emptyLayout(spark, numShards)),
-        inputRows(df, params), spark.sparkContext.emptyRDD, params, numShards, check, null), rows)
+        inputRows(df, params, check), spark.sparkContext.emptyRDD, params, numShards, check, null), rows)
       check.verify()
       written
     }
@@ -1386,7 +1453,7 @@ object VectorIndex {
     *
     * One job, no query planned, whose tasks find their shard's changes,
     * rebuild it and write it; it reads nothing back. The added vectors
-    * are validated inside the build ([[AppendCheck]]) and the rebuilt
+    * are checked as [[VectorIndex!.append]] checks them and the rebuilt
     * shards' meta and files are the job's results ([[writeShards]]); the
     * index dimension comes from the old `params.json` (a snapshot written
     * without that key pays one one-row read). Rows are written before the
@@ -1413,12 +1480,10 @@ object VectorIndex {
       val files = shardFiles(spark, old.stored, old.meta, numShards)
       val base = scanShards(spark, files, storedSchema.filter(f => f.name == "global_id" ||
         f.name == "embedding")).map(r => (r.getLong(0), r.getArray(1).toFloatArray()))
-      // existing rows always match, and a clashing id hashes into an
-      // affected shard, so checking the rebuilt shards covers old-vs-new
-      // AND new-vs-new clashes
-      val dim = if (old.meta.nonEmpty) old.dimension else -1
-      val check = AppendCheck(spark, dim)
-      val rebuilt = writeShards(spark, rewriteShards(Right(base), inputRows(newVectors, params),
+      // a clashing id hashes into an affected shard, so checking the
+      // rebuilt shards covers old-vs-new AND new-vs-new clashes
+      val check = old.ingestCheck
+      val rebuilt = writeShards(spark, rewriteShards(Right(base), inputRows(newVectors, params, check),
         spark.sparkContext.emptyRDD, params, numShards, check, null), newRows)
       check.verify()
       if (rebuilt.isEmpty) throw new IllegalArgumentException("appendTo over an empty batch")
@@ -1430,7 +1495,7 @@ object VectorIndex {
           "migrate it with load(old).save(new)")
         val f = files(s).head.getPath
         linkOrCopyFile(hconf, f, new org.apache.hadoop.fs.Path(s"$newRows/sub_index_id=$s/${f.getName}"))
-        ShardWrite(m, dim, f.getName, files(s).head.getLen)
+        ShardWrite(m, check.dim, f.getName, files(s).head.getLen)
       }
       (kept ++ rebuilt).sortBy(_.meta.sub_index_id)
     }
@@ -1649,24 +1714,24 @@ object VectorIndex {
     * ([[bucketedInput]], whose plan, a scan and a projection with no
     * Exchange and no Sort, PlanShapeSpec guards). Like [[build]] it runs
     * one job of one shuffle ([[rewriteShards]]), which routes each row to
-    * its shard, and rejects a repeated id as an append does
-    * ([[AppendCheck]]), leaving nothing cached. */
+    * its shard, and checks the corpus as [[build]] does, a rejection
+    * leaving nothing cached. */
   def buildFromBucketed(
       spark: SparkSession, table: String, params: IndexParams): VectorIndex = {
-    val (_, rows, numShards) = bucketedInput(spark, table, params)
-    buildRows(spark, rows, params, numShards)
+    val (input, numShards) = bucketedInput(spark, table)
+    val check = new IngestCheck(spark, -1, params)
+    buildRows(spark, plannedRows(input, params, check), check, params, numShards)
   }
 
   /** A [[writeBucketedCorpus]] table as [[buildFromBucketed]] reads it:
-    * the planned (id, embedding, sub_index_id) scan, its (id, embedding)
-    * rows read off that plan as planned and transformed
+    * the planned (id, embedding, sub_index_id) scan, whose (id,
+    * embedding) rows the build reads off that plan as planned
     * ([[plannedRows]]), and its bucket count. The plan is made here, with
     * the bucketed scan kept: a scan and a projection, no Exchange and no
     * Sort. (DisableUnnecessaryBucketedScan would demote the scan to
     * ordinary file splits, as nothing above it "needs" bucketing; the
     * scan stays bucketed only while it outputs the bucket column.) */
-  private[graft] def bucketedInput(spark: SparkSession, table: String,
-      params: IndexParams): (DataFrame, RDD[(Long, Array[Float])], Int) = {
+  private[graft] def bucketedInput(spark: SparkSession, table: String): (DataFrame, Int) = {
     val cat = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
     val spec = cat.bucketSpec.getOrElse(
@@ -1681,7 +1746,7 @@ object VectorIndex {
       val input = spark.table(table).select(col("id").cast("long"),
         col("embedding").cast("array<float>"), col("sub_index_id"))
       input.queryExecution.executedPlan
-      (input, plannedRows(input, params), spec.numBuckets)
+      (input, spec.numBuckets)
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)

@@ -124,17 +124,17 @@ class AppendToSpec extends AnyFunSuite with SparkSuite {
 
   test("appendTo rejects an id that clashes with the old snapshot, naming the count") {
     checkRejected(dim => corpus(50, dim, 400L + _).union(corpus(2, dim, 10L + _)),
-      "requirement failed: appended ids must be disjoint from the index and unique (2 clashes)")
+      "ingested ids must be unique within the batch and disjoint from the index: id 10 (2 clashes)")
   }
 
   test("appendTo rejects an id repeated within the batch, naming the count") {
     checkRejected(dim => corpus(50, dim, 400L + _).union(corpus(3, dim, i => 420L + (i + 1) / 2)),
-      "requirement failed: appended ids must be disjoint from the index and unique (3 clashes)")
+      "ingested ids must be unique within the batch and disjoint from the index: id 420 (3 clashes)")
   }
 
   test("appendTo rejects a wrongly-sized vector, naming the count") {
     checkRejected(dim => corpus(50, dim, 400L + _).union(corpus(2, dim + 1, 450L + _)),
-      "requirement failed: appended vectors must match index dimension 8 (2 mismatching rows)")
+      "ingested id 450 has 9 components, the index dimension is 8 (2 rows)")
   }
 
   test("retiring the old generation: delete is safe, freed vs shared bytes enumerated") {

@@ -42,7 +42,7 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
       .toSeq.sortBy(_._1)
       .map { case (s, vs) =>
         val sorted = vs.sortBy(_._1).toIndexedSeq
-        val g = VectorIndex.buildShard(s, sorted, p, sorted.head._2.length)
+        val g = VectorIndex.buildShard(s, sorted, p)
         (VectorIndex.dehydrate(g).toSeq, VectorIndex.metaOf(g))
       }
     (built.flatMap(_._1), built.map(_._2))
@@ -167,8 +167,8 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
     def poisoned(ids: Seq[Long], bad: Long, x: Float) =
       frame(vectors(ids).map { case (id, v) => (id, if (id == bad) v.updated(3, x) else v) })
     def rejects(what: String, bad: Long)(f: => Any): Unit = {
-      val e = intercept[Exception](f)
-      assert(e.getMessage.contains(s"non-finite embedding at id=$bad"), s"$what: ${e.getMessage}")
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage === s"ingested id $bad has a non-finite component (1 rows)", what)
     }
     try {
       rejects("build", 17L)(VectorIndex.build(poisoned(0L until 100L, 17L, Float.NaN), params, 4))
@@ -209,15 +209,15 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
     try {
       // ids 7 and 42 twice: one clash each, in two shards
       val corpus = frame(vectors((0L until 100L) ++ Seq(7L, 42L)))
-      val message = "appended ids must be disjoint from the index and unique (2 clashes)"
+      val message = "ingested ids must be unique within the batch and disjoint from the index: id 7 (2 clashes)"
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       val built = intercept[IllegalArgumentException](VectorIndex.build(corpus, params, 4))
-      assert(built.getMessage.endsWith(message), built.getMessage)
+      assert(built.getMessage === message)
       assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
         "a rejected build left a persisted RDD")
       val published = intercept[IllegalArgumentException](
         VectorIndex.buildTo(corpus, params, 4, s"$dir/snap"))
-      assert(published.getMessage.endsWith(message), published.getMessage)
+      assert(published.getMessage === message)
       assert(!new java.io.File(s"$dir/snap/meta.json").exists, "a rejected buildTo wrote meta.json")
       assert(!new java.io.File(s"$dir/snap/rows").exists, "a rejected buildTo left its rows")
     } finally graft.streaming.StreamingOps.deleteRecursively(dir)
@@ -245,8 +245,8 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
       VectorIndex.writeBucketedCorpus(frame(vectors((0L until 100L) ++ Seq(7L, 42L))), tab, 4)
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       val e = intercept[IllegalArgumentException](VectorIndex.buildFromBucketed(spark, tab, params))
-      assert(e.getMessage.endsWith(
-        "appended ids must be disjoint from the index and unique (2 clashes)"), e.getMessage)
+      assert(e.getMessage ===
+        "ingested ids must be unique within the batch and disjoint from the index: id 7 (2 clashes)")
       assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
         "a rejected bucketed build left a persisted RDD")
     } finally spark.sql(s"DROP TABLE IF EXISTS $tab")
@@ -259,13 +259,12 @@ class BuildLayoutSpec extends AnyFunSuite with SparkSuite {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val clash = intercept[IllegalArgumentException](
       idx.append(frame(vectors(Seq(7L, 500L, 501L, 501L)))))
-    assert(clash.getMessage.contains("disjoint from the index and unique (2 clashes)"),
-      clash.getMessage)
+    assert(clash.getMessage ===
+      "ingested ids must be unique within the batch and disjoint from the index: id 7 (2 clashes)")
     val wide = intercept[IllegalArgumentException](
       idx.append(Seq((600L, Array.fill(9)(0.5f)), (601L, Array.fill(9)(0.5f)))
         .toDF("id", "embedding")))
-    assert(wide.getMessage.contains("must match index dimension 8 (2 mismatching rows)"),
-      wide.getMessage)
+    assert(wide.getMessage === "ingested id 600 has 9 components, the index dimension is 8 (2 rows)")
     assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
       "a rejected append left a persisted RDD")
     idx.unpersist()

@@ -67,34 +67,36 @@ class DehnswSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("save/load round-trip answers queries identically (O9/O10 invariant)") {
-    val path = java.nio.file.Files.createTempDirectory("graft_index_").toString
-    index.save(path)
-    val loaded = VectorIndex.load(spark, path)
-    assert(loaded.params === index.params)
-    // distinct cache identity: the loaded index must probe ITS rows, not
-    // hit executor-cached graphs built from the original in-memory index
-    assert(loaded.indexId !== index.indexId)
-    val before = index.query(queries, k = 5, searchWidth = 8)
-    val after = loaded.query(queries, k = 5, searchWidth = 8)
-    assert(before.exceptAll(after).count() === 0)
-    assert(after.exceptAll(before).count() === 0)
+    withTempDir("graft_index_") { path =>
+      index.save(path)
+      val loaded = VectorIndex.load(spark, path)
+      assert(loaded.params === index.params)
+      // distinct cache identity: the loaded index must probe ITS rows, not
+      // hit executor-cached graphs built from the original in-memory index
+      assert(loaded.indexId !== index.indexId)
+      val before = index.query(queries, k = 5, searchWidth = 8)
+      val after = loaded.query(queries, k = 5, searchWidth = 8)
+      assert(before.exceptAll(after).count() === 0)
+      assert(after.exceptAll(before).count() === 0)
+    }
   }
 
   test("buildTo (straight-to-parquet build) answers queries identically to a cached build") {
     // the decade-scale disk path: rows stream directly to parquet, the
     // handle is the LOADED index — results must equal the cached build's
     // bit for bit (the kernel is deterministic, so the graphs are equal)
-    val path = java.nio.file.Files.createTempDirectory("graft_buildto_").toString
-    val p = IndexParams(minimumConnect = 8, relaxedMonotonicity = 32, step = 2)
-    val direct = VectorIndex.buildTo(corpus, p, numShards = 4, path)
-    assert(direct.indexId !== index.indexId) // fresh cache identity (load path)
-    val a = index.query(queries, k = 5, searchWidth = 8)
-    val b = direct.query(queries, k = 5, searchWidth = 8)
-    assert(a.exceptAll(b).count() === 0)
-    assert(b.exceptAll(a).count() === 0)
-    // and the sidecars make it independently loadable
-    val reloaded = VectorIndex.load(spark, path)
-    assert(reloaded.numShards === 4)
+    withTempDir("graft_buildto_") { path =>
+      val p = IndexParams(minimumConnect = 8, relaxedMonotonicity = 32, step = 2)
+      val direct = VectorIndex.buildTo(corpus, p, numShards = 4, path)
+      assert(direct.indexId !== index.indexId) // fresh cache identity (load path)
+      val a = index.query(queries, k = 5, searchWidth = 8)
+      val b = direct.query(queries, k = 5, searchWidth = 8)
+      assert(a.exceptAll(b).count() === 0)
+      assert(b.exceptAll(a).count() === 0)
+      // and the sidecars make it independently loadable
+      val reloaded = VectorIndex.load(spark, path)
+      assert(reloaded.numShards === 4)
+    }
   }
 
   test("append rebuilds only affected shards and equals a full rebuild exactly") {
@@ -150,9 +152,10 @@ class DehnswSpec extends AnyFunSuite with SparkSuite {
     val viaIdx = s1.query(queries, k = 10, searchWidth = 0)
     assert(viaIdx.exceptAll(exact).count() === 0)
     // persisted: save/load round-trips the schedule; append rebuilds with it
-    val path = java.nio.file.Files.createTempDirectory("graft_sched_").toString
-    s1.save(path)
-    assert(VectorIndex.load(spark, path).params.schedule === sched)
+    withTempDir("graft_sched_") { path =>
+      s1.save(path)
+      assert(VectorIndex.load(spark, path).params.schedule === sched)
+    }
     val emb = Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") >= 50 && col("vec_id") < 400)
       .select(col("vec_id").as("id"), col("embedding"))
@@ -216,11 +219,10 @@ class DehnswSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     val bad = Seq((1L, Array(1.0f, 2.0f)), (2L, Array(1.0f, 2.0f, 3.0f)))
       .toDF("id", "embedding")
-    val ex = intercept[org.apache.spark.SparkException] {
+    val ex = intercept[IllegalArgumentException] {
       VectorIndex.build(bad, IndexParams(minimumConnect = 2), numShards = 1).rows.count()
     }
-    assert(ex.getMessage.contains("dimension mismatch") ||
-      ex.getCause != null && ex.getCause.getMessage.contains("dimension mismatch"))
+    assert(ex.getMessage === "ingested id 2 has 3 components, id 1 has 2 (1 rows)")
   }
 
   test("bucketed-corpus build equals the standard (shuffled) build exactly") {

@@ -169,28 +169,29 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
     // in-session reference: absolute cap 3 == the ratio 3/4 at n_docs=4
     val (index, stats) = HybridRetrieval.bm25Index(c, maxTokenDf = 3)
     val (p, d, st) = HybridRetrieval.bm25SnapshotPieces(c)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_t_").toString
-    HybridRetrieval.saveBm25Index(p, d, st, dir, dfCapNum = 3L, dfCapDen = 4L)
-    val (li, lstats) = HybridRetrieval.loadBm25Index(spark, dir)
-    // stats survive exactly (sum_dl is an exact long; avgdl = Σdl/n
-    // reproduces the batch avg-over-int double bit-for-bit)
-    val (b, l) = (stats.head, lstats.head)
-    assert(l.getLong(0) === b.getLong(0))
-    assert(l.getDouble(1) === b.getDouble(1), "avgdl must round-trip bit-exactly")
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "doc_id", "bm25", "lex_rank")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    val reference = key(HybridRetrieval.bm25Serve(q, index, stats, n = 3))
-    // both loaded serve flavors — the joined view AND the two-phase
-    // split-snapshot path — must reproduce the in-session serve exactly
-    assert(key(HybridRetrieval.bm25Serve(q, li, lstats, n = 3)) === reference)
-    val snap = HybridRetrieval.openBm25Index(spark, dir)
-    assert(key(HybridRetrieval.bm25Serve(q, snap, n = 3)) === reference)
-    // the split snapshot stores ALL raw postings (appendability) — the
-    // cap is applied by the serve, not the storage (the append spec pins
-    // the over-cap retention/resurrection case explicitly)
-    assert(snap.maxDf === 3L)
-    assert(snap.postings.count() === p.count())
+    withTempDir("graft_bm25_t_") { dir =>
+      HybridRetrieval.saveBm25Index(p, d, st, dir, dfCapNum = 3L, dfCapDen = 4L)
+      val (li, lstats) = HybridRetrieval.loadBm25Index(spark, dir)
+      // stats survive exactly (sum_dl is an exact long; avgdl = Σdl/n
+      // reproduces the batch avg-over-int double bit-for-bit)
+      val (b, l) = (stats.head, lstats.head)
+      assert(l.getLong(0) === b.getLong(0))
+      assert(l.getDouble(1) === b.getDouble(1), "avgdl must round-trip bit-exactly")
+      def key(df: org.apache.spark.sql.DataFrame) = df
+        .select("query_id", "doc_id", "bm25", "lex_rank")
+        .as[(Long, Long, Double, Int)].collect().toSet
+      val reference = key(HybridRetrieval.bm25Serve(q, index, stats, n = 3))
+      // both loaded serve flavors — the joined view AND the two-phase
+      // split-snapshot path — must reproduce the in-session serve exactly
+      assert(key(HybridRetrieval.bm25Serve(q, li, lstats, n = 3)) === reference)
+      val snap = HybridRetrieval.openBm25Index(spark, dir)
+      assert(key(HybridRetrieval.bm25Serve(q, snap, n = 3)) === reference)
+      // the split snapshot stores ALL raw postings (appendability) — the
+      // cap is applied by the serve, not the storage (the append spec pins
+      // the over-cap retention/resurrection case explicitly)
+      assert(snap.maxDf === 3L)
+      assert(snap.postings.count() === p.count())
+    }
   }
 
   test("appendBm25 == full rebuild, including a cap-boundary token") {
@@ -208,8 +209,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
       .toDF("doc_id", "text")
     val q = Seq((1L, "hot omega"), (2L, "beta delta"), (3L, "theta"))
       .toDF("query_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25_app_t_").toString
-    try {
+    withTempDir("graft_bm25_app_t_") { root =>
       val (p0, d0, s0) = HybridRetrieval.bm25SnapshotPieces(base)
       HybridRetrieval.saveBm25Index(p0, d0, s0, s"$root/base",
         tokBuckets = 8, dfCapNum = 78L, dfCapDen = 100L)
@@ -249,7 +249,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
           Seq((10L, "dup text")).toDF("doc_id", "text"), s"$root/bad")
       }
       assert(dup.getMessage.contains("already present"))
-    } finally graft.streaming.StreamingOps.deleteRecursively(root)
+    }
   }
 
   test("appendBm25 chains: generation -> generation -> generation == one rebuild") {
@@ -257,8 +257,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
     val b1 = Seq((20L, "gamma delta"), (21L, "delta epsilon")).toDF("doc_id", "text")
     val b2 = Seq((30L, "epsilon zeta alpha")).toDF("doc_id", "text")
     val q = Seq((1L, "alpha delta"), (2L, "zeta beta")).toDF("query_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25_chain_").toString
-    try {
+    withTempDir("graft_bm25_chain_") { root =>
       val (p0, d0, s0) = HybridRetrieval.bm25SnapshotPieces(base)
       HybridRetrieval.saveBm25Index(p0, d0, s0, s"$root/g0",
         tokBuckets = 4, dfCapNum = 78L, dfCapDen = 100L)
@@ -278,7 +277,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
       assert(g2.nDocs === 5L)
       // every EARLIER generation stays servable (immutable snapshots)
       assert(key(s"$root/g1").nonEmpty && key(s"$root/g0").nonEmpty)
-    } finally graft.streaming.StreamingOps.deleteRecursively(root)
+    }
   }
 
   test("retiring a bm25 base generation: delete is safe, freed vs shared bytes enumerated") {
@@ -295,8 +294,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
     val batch = Seq((20L, "alpha omega"), (21L, "omega zeta"))
       .toDF("doc_id", "text")
     val q = Seq((1L, "alpha delta"), (2L, "omega gamma")).toDF("query_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25_ret_").toString
-    try {
+    withTempDir("graft_bm25_ret_") { root =>
       val (p0, d0, s0) = HybridRetrieval.bm25SnapshotPieces(base)
       HybridRetrieval.saveBm25Index(p0, d0, s0, s"$root/g0",
         tokBuckets = 4, dfCapNum = 78L, dfCapDen = 100L)
@@ -337,7 +335,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
       graft.streaming.StreamingOps.deleteRecursively(s"$root/g0")
       assert(key(s"$root/g1") === before,
         "retiring the base generation corrupted the appended snapshot")
-    } finally graft.streaming.StreamingOps.deleteRecursively(root)
+    }
   }
 
   test("doc_ids sidecar (r21): O(n_docs) clash check, carried through appends, posting-scan fallback") {
@@ -346,8 +344,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
       .toDF("doc_id", "text")
     val batch = Seq((20L, "alpha omega"), (21L, "omega zeta"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25_ids_").toString
-    try {
+    withTempDir("graft_bm25_ids_") { root =>
       val (p0, d0, s0) = HybridRetrieval.bm25SnapshotPieces(base)
       HybridRetrieval.saveBm25Index(p0, d0, s0, s"$root/g0",
         tokBuckets = 4, dfCapNum = 78L, dfCapDen = 100L)
@@ -381,15 +378,14 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
         .as[(Long, Long, Double, Int)].collect().toSet
       assert(serve(s"$root/g1") === serve(s"$root/g2"),
         "sidecar and fallback appends must serve bit-identically")
-    } finally graft.streaming.StreamingOps.deleteRecursively(root)
+    }
   }
 
   test("appendBm25 freshness: completed target refused, partial target wiped") {
     val base = Seq((10L, "alpha beta"), (11L, "beta gamma")).toDF("doc_id", "text")
     val batch = Seq((20L, "gamma delta")).toDF("doc_id", "text")
     val q = Seq((1L, "alpha gamma delta")).toDF("query_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25_fresh_").toString
-    try {
+    withTempDir("graft_bm25_fresh_") { root =>
       val (p0, d0, s0) = HybridRetrieval.bm25SnapshotPieces(base)
       HybridRetrieval.saveBm25Index(p0, d0, s0, s"$root/g0",
         tokBuckets = 4, dfCapNum = 78L, dfCapDen = 100L)
@@ -430,7 +426,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
         java.nio.file.Files.readAllBytes(foreignFile).sameElements(
           Array[Byte](9, 9, 9)),
         "a refused wipe must leave the mispointed directory untouched")
-    } finally graft.streaming.StreamingOps.deleteRecursively(root)
+    }
   }
 
   test("snapshot serve above maxPushTokens falls back to the joined view, same results") {
@@ -438,8 +434,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
       .toDF("doc_id", "text")
     val q = Seq((1L, "alpha gamma"), (2L, "delta epsilon beta")).toDF("query_id", "text")
     val (p, d, st) = HybridRetrieval.bm25SnapshotPieces(c)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_fb_").toString
-    try {
+    withTempDir("graft_bm25_fb_") { dir =>
       HybridRetrieval.saveBm25Index(p, d, st, dir, tokBuckets = 4)
       val snap = HybridRetrieval.openBm25Index(spark, dir)
       def key(df: org.apache.spark.sql.DataFrame) = df
@@ -451,7 +446,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
       val fallback = key(HybridRetrieval.bm25Serve(q, snap, 10, 1.5, 0.75, 1))
       assert(pushed === fallback)
       assert(pushed.nonEmpty)
-    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+    }
   }
 
   test("two-phase snapshot serve never scans an over-cap token's postings") {
@@ -463,8 +458,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
     val c = (0L until 6L).map(i => (i + 10L, s"the w$i common"))
       .toDF("doc_id", "text")
     val (p, d, st) = HybridRetrieval.bm25SnapshotPieces(c)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_2p_").toString
-    try {
+    withTempDir("graft_bm25_2p_") { dir =>
       HybridRetrieval.saveBm25Index(p, d, st, dir,
         tokBuckets = 8, dfCapNum = 78L, dfCapDen = 100L)
       val snap = HybridRetrieval.openBm25Index(spark, dir)
@@ -481,7 +475,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
       // over cap; only w2 survives)
       val rows = serve.select("query_id", "doc_id").as[(Long, Long)].collect()
       assert(rows.toSet === Set((1L, 12L)))
-    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+    }
   }
 
   test("streaming BM25 ingest equals the batch build for any batching (s26)") {
@@ -513,8 +507,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
     val docs = Tables.documents(spark, sfDir)
     val qd = docs.filter(col("doc_id") < 5)
       .select(col("doc_id").as("query_id"), col("text"))
-    val root = java.nio.file.Files.createTempDirectory("graft_bm25_schain_").toString
-    try {
+    withTempDir("graft_bm25_schain_") { root =>
       val base = docs.filter(col("doc_id") >= 10 && col("doc_id") < 40)
         .select(col("doc_id"), col("text"))
       val (p0, d0, s0) = HybridRetrieval.bm25SnapshotPieces(base)
@@ -557,7 +550,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
       }
       assert(sharedTwice > 0,
         "base posting inodes must be hardlink-shared through BOTH generations")
-    } finally graft.streaming.StreamingOps.deleteRecursively(root)
+    }
   }
 
   test("s26 per-batch ingest work stays flat as the accumulated vocab grows") {
@@ -572,8 +565,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
     val docs = spark.range(nd).selectExpr("id AS doc_id",
       "concat('common alpha ', concat_ws(' ', transform(sequence(0, 7), " +
         "j -> concat('w', CAST(id * 8 + j AS STRING))))) AS text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_grow_").toString
-    try {
+    withTempDir("graft_bm25_grow_") { dir =>
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val qd = Seq((0L, "common w3 w111")).toDF("query_id", "text")
       val recs = new java.util.concurrent.atomic.LongAdder
@@ -624,7 +616,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
         assert(late <= 1.75 * early,
           s"per-batch shuffle grows with accumulated vocab: $perBatch")
       } finally spark.sparkContext.removeSparkListener(listener)
-    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+    }
   }
 
   test("shared BM25 base snapshot (r20): one publish per session, read-only under append") {
@@ -646,12 +638,11 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
     val batch = Tables.documents(spark, sfDir)
       .filter(col("doc_id") >= 10 && col("doc_id") % 3 === 0)
       .select(col("doc_id"), col("text"))
-    val next = Files.createTempDirectory("graft_shared_base_next_").toString
-    try {
+    withTempDir("graft_shared_base_next_") { next =>
       HybridRetrieval.appendBm25(spark, p1, batch, s"$next/g1")
       assert(state(p1) == before,
         "append must leave the session-shared base untouched")
-    } finally graft.streaming.StreamingOps.deleteRecursively(next)
+    }
   }
 
   test("v52 quality report: hybrid recall >= max(dense-only, lex-only), sf-independent") {
@@ -669,8 +660,7 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
     val c = Seq((10L, "alpha beta gamma delta"), (11L, "alpha beta epsilon"),
       (12L, "gamma gamma delta")).toDF("doc_id", "text")
     val (p, d, st) = HybridRetrieval.bm25SnapshotPieces(c)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_fix_").toString
-    try {
+    withTempDir("graft_bm25_fix_") { dir =>
       HybridRetrieval.saveBm25Index(p, d, st, dir, dfCapNum = 3L, dfCapDen = 4L)
       val fresh = HybridRetrieval.openBm25Index(spark, dir)
       // verbatim output of the pre-codec writer for the same snapshot
@@ -697,6 +687,6 @@ class HybridRetrievalSpec extends AnyFunSuite with SparkSuite {
       val t = intercept[IllegalArgumentException](
         HybridRetrieval.loadBm25Index(spark, dir))
       assert(t.getMessage.contains(s"$dir/stats.json"))
-    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+    }
   }
 }

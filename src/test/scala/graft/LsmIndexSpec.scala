@@ -114,16 +114,17 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
     val lsm = LsmVectorIndex(baseIdx, compactThreshold = 1000000)
       .ingest(slice(300, 350)).ingest(slice(350, 400))
     val before = resultSet(lsm.query(queries, 10, searchWidth = 0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsm_save_").toString
-    lsm.save(dir)
-    val loaded = LsmVectorIndex.load(spark, dir)
-    assert(loaded.generations.size == 2 && loaded.freshCount == lsm.freshCount)
-    assert(loaded.compactThreshold == lsm.compactThreshold)
-    assert(resultSet(loaded.query(queries, 10, searchWidth = 0)) == before)
-    // the loaded handle keeps working: further ingest + compaction
-    val more = loaded.ingest(slice(400, 430)).compact()
-    assert(more.generations.isEmpty)
-    assert(resultSet(more.query(queries, 10, searchWidth = 0)) == flatExact(430))
+    withTempDir("graft_lsm_save_") { dir =>
+      lsm.save(dir)
+      val loaded = LsmVectorIndex.load(spark, dir)
+      assert(loaded.generations.size == 2 && loaded.freshCount == lsm.freshCount)
+      assert(loaded.compactThreshold == lsm.compactThreshold)
+      assert(resultSet(loaded.query(queries, 10, searchWidth = 0)) == before)
+      // the loaded handle keeps working: further ingest + compaction
+      val more = loaded.ingest(slice(400, 430)).compact()
+      assert(more.generations.isEmpty)
+      assert(resultSet(more.query(queries, 10, searchWidth = 0)) == flatExact(430))
+    }
   }
 
   test("LSM over an EMPTY base: ingest-only lifecycle works end to end") {
@@ -485,16 +486,17 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("delete: save/load round-trips tombstones") {
-    val dir = java.nio.file.Files.createTempDirectory("lsm_del_save_").toString
-    val deleted = (20L to 24L).toSet
-    val lsm = LsmVectorIndex(baseIdx, compactThreshold = 1000000)
-      .ingest(slice(300, 350)).delete(deleted)
-    lsm.save(dir)
-    val back = LsmVectorIndex.load(spark, dir)
-    assert(back.tombstones == deleted)
-    assert(resultSet(back.query(queries, 10, searchWidth = 0)) ==
-      resultSet(lsm.query(queries, 10, searchWidth = 0)))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    withTempDir("lsm_del_save_") { dir =>
+      val deleted = (20L to 24L).toSet
+      val lsm = LsmVectorIndex(baseIdx, compactThreshold = 1000000)
+        .ingest(slice(300, 350)).delete(deleted)
+      lsm.save(dir)
+      val back = LsmVectorIndex.load(spark, dir)
+      assert(back.tombstones == deleted)
+      assert(resultSet(back.query(queries, 10, searchWidth = 0)) ==
+        resultSet(lsm.query(queries, 10, searchWidth = 0)))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("compaction of a normalizeForCosine base preserves probes bit-for-bit") {
@@ -605,8 +607,7 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("tombstones below and above Int.MaxValue round-trip lsm.json; earlier manifests load") {
-    val dir = java.nio.file.Files.createTempDirectory("lsm_ts_save_").toString
-    try {
+    withTempDir("lsm_ts_save_") { dir =>
       val ts = Set(20L, Int.MaxValue.toLong, Int.MaxValue + 1L, 5000000000L,
         Long.MaxValue - 1)
       LsmVectorIndex(baseIdx, compactThreshold = 1000000, deleteThreshold = 777L)
@@ -626,7 +627,7 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
       val preDelete = LsmVectorIndex.load(spark, dir)
       assert(preDelete.tombstones.isEmpty &&
         preDelete.deleteThreshold === Long.MaxValue)
-    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+    }
   }
 
   /** (id, embedding) rows of vec_id in [from, until) as a local relation. */
@@ -749,11 +750,10 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
       params, numShards = 4)
     assert(stream().generations.forall(_.numShards == 1))
     assert(sameIndex(stream().compact().base, full), "compact")
-    val dir = java.nio.file.Files.createTempDirectory("lsm_driver_gen_").toString
-    try {
+    withTempDir("lsm_driver_gen_") { dir =>
       stream().save(dir)
       assert(sameIndex(LsmVectorIndex.load(spark, dir).compact().base, full), "save/load + compact")
-    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+    }
     val lsm = stream()
     val swap = scala.concurrent.Await.result(
       lsm.compactAsync(), scala.concurrent.duration.Duration(180, "seconds"))
@@ -799,5 +799,29 @@ class LsmIndexSpec extends AnyFunSuite with SparkSuite {
     assert(over.driverGraphBroadcastId.isEmpty && over.numShards == 1)
     assert(sameIndex(over, VectorIndex.build(rows.toDF("id", "embedding"), params, numShards = 1)))
     atBound.unpersist(); over.unpersist()
+  }
+
+  test("work counter: a batch over DriverBuildRows runs a count job and the build job, no query or cache") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261022)
+    val batch = (0 to LsmVectorIndex.DriverBuildRows)
+      .map(i => (1000000L + i, Array.fill(8)(rnd.nextFloat()))).toDF("id", "embedding")
+    val lsm = LsmVectorIndex(VectorIndex.build(slice(0, 0), params, numShards = 4),
+      compactThreshold = Long.MaxValue)
+    val (_, read) = workDuring(VectorIndex.takeVectors(batch, "id", LsmVectorIndex.DriverBuildRows + 1))
+    // every RDD a stage of the ingest persists
+    val persisted = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.filter(_.storageLevel.isValid).foreach(r => persisted.add(r.id))
+    }
+    spark.sparkContext.addSparkListener(l)
+    val (grown, ingest) = try workDuring(lsm.ingest(batch)) finally spark.sparkContext.removeSparkListener(l)
+    val gen = grown.generations.last
+    assert(ingest.sqlExecutions == read.sqlExecutions && ingest.jobs == read.jobs + 2,
+      s"the bounded read ran $read, the ingest $ingest")
+    assert(persisted.toArray.toSet == Set(gen.probeLayout.id), "the ingest persisted more than its graphs")
+    assert(gen.meta.map(_.n_vectors).sum == LsmVectorIndex.DriverBuildRows + 1)
+    grown.unpersist()
   }
 }

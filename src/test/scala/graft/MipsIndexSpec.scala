@@ -63,16 +63,17 @@ class MipsIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("save/load persists augmentForMips + mipsMaxNorm and round-trips probes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mips_idx_").toString
-    index.save(dir)
-    val loaded = VectorIndex.load(spark, dir)
-    assert(loaded.params.augmentForMips, "augmentForMips must persist")
-    assert(loaded.params.mipsMaxNorm === index.params.mipsMaxNorm,
-      "mipsMaxNorm must persist bit-exactly")
-    val before = index.query(queries, k = 10, searchWidth = 0)
-    val after = loaded.query(queries, k = 10, searchWidth = 0)
-    assert(before.exceptAll(after).count() === 0)
-    assert(after.exceptAll(before).count() === 0)
+    withTempDir("graft_mips_idx_") { dir =>
+      index.save(dir)
+      val loaded = VectorIndex.load(spark, dir)
+      assert(loaded.params.augmentForMips, "augmentForMips must persist")
+      assert(loaded.params.mipsMaxNorm === index.params.mipsMaxNorm,
+        "mipsMaxNorm must persist bit-exactly")
+      val before = index.query(queries, k = 10, searchWidth = 0)
+      val after = loaded.query(queries, k = 10, searchWidth = 0)
+      assert(before.exceptAll(after).count() === 0)
+      assert(after.exceptAll(before).count() === 0)
+    }
   }
 
   test("a transformed index refuses bit-identical rewrite substitution") {

@@ -94,8 +94,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
     // it through bucketedInput) must be a bucketed scan, no Exchange, no
     // Sort anywhere
     Queries.ensureBucketedCorpus(spark, sfDir)
-    val p = graft.index.VectorIndex.bucketedInput(spark, Queries.corpusTableName(sfDir),
-      graft.index.IndexParams())._1.queryExecution.executedPlan.toString
+    val p = graft.index.VectorIndex.bucketedInput(spark, Queries.corpusTableName(sfDir))
+      ._1.queryExecution.executedPlan.toString
     assert(p.contains("Bucketed: true"), s"scan not bucketed:\n${p.take(3000)}")
     assert(!p.contains("Exchange"), s"build plan still shuffles:\n${p.take(3000)}")
     assert("\\bSort\\b".r.findFirstIn(p).isEmpty, s"build plan still sorts:\n${p.take(3000)}")
@@ -485,35 +485,37 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
     // scanning 4 of 100 date partitions, not all of them. Written here
     // as a real partitioned parquet table so the plan carries
     // dynamicpruning subqueries instead of a full scan.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp_").toString
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    spark.range(2000)
-      .select(col("id"), (col("id") % 20).as("pk"), (col("id") * 3).as("v"))
-      .write.mode("overwrite").partitionBy("pk").parquet(dir)
-    val fact = spark.read.parquet(dir)
-    // DPP inserts the pruning subquery only when the dim side carries a
-    // SELECTIVE predicate over a real scan (a local relation folds the
-    // filter away and never qualifies), and the key types must line up
-    // with the partition column (read back as int) so the join key is
-    // the partition attribute itself, not a cast
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dpp_dim_").toString
-    Seq((3, "keep"), (7, "keep"), (9, "drop")).toDF("pk", "tag")
-      .write.mode("overwrite").parquet(dimDir)
-    val dim = spark.read.parquet(dimDir)
-      .filter(org.apache.spark.sql.functions.col("tag") === "keep")
-    val saved = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled")
-    try {
-      spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-      val q = fact.join(dim, "pk").agg(org.apache.spark.sql.functions.sum("v"))
-      val p = q.queryExecution.executedPlan.toString
-      assert(p.contains("dynamicpruning"),
-        s"expected a dynamicpruning subquery on the fact scan:\n${p.take(3000)}")
-      // and the pruned result is still correct
-      val expect = (0L until 2000L).filter(i => i % 20 == 3 || i % 20 == 7).map(_ * 3).sum
-      assert(q.as[Long].head() === expect)
-    } finally spark.conf.set(
-      "spark.sql.optimizer.dynamicPartitionPruning.enabled", saved)
+    withTempDir("graft_dpp_") { root =>
+      val dir = s"$root/fact"
+      import spark.implicits._
+      import org.apache.spark.sql.functions.col
+      spark.range(2000)
+        .select(col("id"), (col("id") % 20).as("pk"), (col("id") * 3).as("v"))
+        .write.mode("overwrite").partitionBy("pk").parquet(dir)
+      val fact = spark.read.parquet(dir)
+      // DPP inserts the pruning subquery only when the dim side carries a
+      // SELECTIVE predicate over a real scan (a local relation folds the
+      // filter away and never qualifies), and the key types must line up
+      // with the partition column (read back as int) so the join key is
+      // the partition attribute itself, not a cast
+      val dimDir = s"$root/dim"
+      Seq((3, "keep"), (7, "keep"), (9, "drop")).toDF("pk", "tag")
+        .write.mode("overwrite").parquet(dimDir)
+      val dim = spark.read.parquet(dimDir)
+        .filter(org.apache.spark.sql.functions.col("tag") === "keep")
+      val saved = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled")
+      try {
+        spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
+        val q = fact.join(dim, "pk").agg(org.apache.spark.sql.functions.sum("v"))
+        val p = q.queryExecution.executedPlan.toString
+        assert(p.contains("dynamicpruning"),
+          s"expected a dynamicpruning subquery on the fact scan:\n${p.take(3000)}")
+        // and the pruned result is still correct
+        val expect = (0L until 2000L).filter(i => i % 20 == 3 || i % 20 == 7).map(_ * 3).sum
+        assert(q.as[Long].head() === expect)
+      } finally spark.conf.set(
+        "spark.sql.optimizer.dynamicPartitionPruning.enabled", saved)
+    }
   }
 
   test("bm25Serve over a snapshot prunes bucket dirs AND pushes In(tok)") {
@@ -524,8 +526,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
     val c = docs.filter(col("doc_id") >= 10).select(col("doc_id"), col("text"))
     val (index, stats) = graft.operators.HybridRetrieval.bm25Index(c)
     val (pieces, dfTable, st) = graft.operators.HybridRetrieval.bm25SnapshotPieces(c)
-    val dir = java.nio.file.Files.createTempDirectory("graft_planshape_bm25_").toString
-    try {
+    withTempDir("graft_planshape_bm25_") { dir =>
       graft.operators.HybridRetrieval.saveBm25Index(pieces, dfTable, st, dir,
         tokBuckets = 16)
       // the loaded JOINED view: serve predicates must push through the
@@ -558,6 +559,6 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
         s"two-phase posting scan lost its partition pruning:\n${p2.take(3000)}")
       assert(serve2.orderBy("query_id", "lex_rank").collect().toSeq ===
         full.orderBy("query_id", "lex_rank").collect().toSeq)
-    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+    }
   }
 }

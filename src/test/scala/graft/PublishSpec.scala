@@ -209,7 +209,7 @@ class PublishSpec extends AnyFunSuite with SparkSuite {
       assert(appended.meta.toSeq == full.meta.toSeq && canon(appended) == canon(full))
       val wrong = intercept[IllegalArgumentException](VectorIndex.appendTo(spark, s"$dir/g0",
         frame(vectors(500L until 502L, dim = 9)), s"$dir/g2"))
-      assert(wrong.getMessage.contains("must match index dimension 8 (2 mismatching rows)"))
+      assert(wrong.getMessage === "ingested id 500 has 9 components, the index dimension is 8 (2 rows)")
       Seq(appended, full).foreach(_.unpersist())
     }
   }

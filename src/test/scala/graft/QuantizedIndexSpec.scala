@@ -47,15 +47,16 @@ class QuantizedIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("quantized index save/load round-trips to identical probe results") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_quant_idx_").toString
-    index.save(dir)
-    val loaded = VectorIndex.load(spark, dir)
-    assert(loaded.params.quantized && loaded.params.quantLo == p.quantLo &&
-      loaded.params.quantHi == p.quantHi, "quantization params must persist")
-    val before = index.query(queries, k = 10, searchWidth = 0)
-    val after = loaded.query(queries, k = 10, searchWidth = 0)
-    assert(before.exceptAll(after).count() === 0)
-    assert(after.exceptAll(before).count() === 0)
+    withTempDir("graft_quant_idx_") { dir =>
+      index.save(dir)
+      val loaded = VectorIndex.load(spark, dir)
+      assert(loaded.params.quantized && loaded.params.quantLo == p.quantLo &&
+        loaded.params.quantHi == p.quantHi, "quantization params must persist")
+      val before = index.query(queries, k = 10, searchWidth = 0)
+      val after = loaded.query(queries, k = 10, searchWidth = 0)
+      assert(before.exceptAll(after).count() === 0)
+      assert(after.exceptAll(before).count() === 0)
+    }
   }
 
   test("quantized append equals the full quantized rebuild") {
@@ -100,12 +101,13 @@ class QuantizedIndexSpec extends AnyFunSuite with SparkSuite {
     assert(rDefault < rCal,
       s"default-range recall $rDefault should collapse below calibrated $rCal")
     // the calibrated range persists through save/load (params.json sidecar)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cal_idx_").toString
-    calibrated.save(dir)
-    val loaded = VectorIndex.load(spark, dir)
-    assert(loaded.params.quantLo == calibrated.params.quantLo &&
-      loaded.params.quantHi == calibrated.params.quantHi)
-    assert(recallOf(loaded) == rCal)
+    withTempDir("graft_cal_idx_") { dir =>
+      calibrated.save(dir)
+      val loaded = VectorIndex.load(spark, dir)
+      assert(loaded.params.quantLo == calibrated.params.quantLo &&
+        loaded.params.quantHi == calibrated.params.quantHi)
+      assert(recallOf(loaded) == rCal)
+    }
   }
 
   test("quantized mode rejects non-Euclidean metrics") {
@@ -158,25 +160,26 @@ class QuantizedIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("normalizeForCosine survives save/load and append == full rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cos_idx_").toString
-    cosIndex.save(dir)
-    val loaded = VectorIndex.load(spark, dir)
-    assert(loaded.params.normalizeForCosine, "flag must persist in params.json")
-    val before = cosIndex.query(queries, k = 10, searchWidth = 0)
-    val after = loaded.query(queries, k = 10, searchWidth = 0)
-    assert(before.exceptAll(after).count() === 0)
-    assert(after.exceptAll(before).count() === 0)
-    // append path: recovered rows must NOT be re-normalized — the
-    // incremental index must equal a clean rebuild over the union
-    val half1 = corpus.filter(col("id") % 2 === 0)
-    val half2 = corpus.filter(col("id") % 2 === 1)
-    val p2 = cosIndex.params
-    val incr = VectorIndex.build(half1, p2, numShards = 2).append(half2)
-    val full = VectorIndex.build(corpus, p2, numShards = 2)
-    val a = incr.query(queries, k = 10, searchWidth = 0)
-    val b = full.query(queries, k = 10, searchWidth = 0)
-    assert(a.exceptAll(b).count() === 0)
-    assert(b.exceptAll(a).count() === 0)
+    withTempDir("graft_cos_idx_") { dir =>
+      cosIndex.save(dir)
+      val loaded = VectorIndex.load(spark, dir)
+      assert(loaded.params.normalizeForCosine, "flag must persist in params.json")
+      val before = cosIndex.query(queries, k = 10, searchWidth = 0)
+      val after = loaded.query(queries, k = 10, searchWidth = 0)
+      assert(before.exceptAll(after).count() === 0)
+      assert(after.exceptAll(before).count() === 0)
+      // append path: recovered rows must NOT be re-normalized — the
+      // incremental index must equal a clean rebuild over the union
+      val half1 = corpus.filter(col("id") % 2 === 0)
+      val half2 = corpus.filter(col("id") % 2 === 1)
+      val p2 = cosIndex.params
+      val incr = VectorIndex.build(half1, p2, numShards = 2).append(half2)
+      val full = VectorIndex.build(corpus, p2, numShards = 2)
+      val a = incr.query(queries, k = 10, searchWidth = 0)
+      val b = full.query(queries, k = 10, searchWidth = 0)
+      assert(a.exceptAll(b).count() === 0)
+      assert(b.exceptAll(a).count() === 0)
+    }
   }
 
   test("normalizeForCosine rejects non-Euclidean metrics and zero vectors stay finite") {
@@ -221,8 +224,7 @@ class QuantizedIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("params.json bytes of the earlier string writer load to the same params") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_paramsfix_").toString
-    try {
+    withTempDir("graft_paramsfix_") { dir =>
       index.save(dir)
       def loadWith(text: String) = {
         VectorIndex.writeSmallFile(spark, s"$dir/params.json", text)
@@ -264,6 +266,6 @@ class QuantizedIndexSpec extends AnyFunSuite with SparkSuite {
       assert(old.params === IndexParams(minimumConnect = 8,
         relaxedMonotonicity = 32, step = 2, subIndexBound = 10000000L))
       assert(old.numShards === 2)
-    } finally graft.streaming.StreamingOps.deleteRecursively(dir)
+    }
   }
 }

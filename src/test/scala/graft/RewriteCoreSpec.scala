@@ -160,7 +160,8 @@ class RewriteCoreSpec extends AnyFunSuite with SparkSuite {
       .ingest(frame(vectors(100L until 110L)))
       .ingest(frame(vectors(105L until 160L))) // distributed, and clashes on 105-109
     val e = intercept[IllegalArgumentException](lsm.compact())
-    assert(e.getMessage.contains("disjoint from the index and unique (5 clashes)"), e.getMessage)
+    assert(e.getMessage ===
+      "ingested ids must be unique within the batch and disjoint from the index: id 105 (5 clashes)")
     lsm.unpersist(); base.unpersist()
   }
 

@@ -80,6 +80,14 @@ trait SparkSuite {
     s"listfs://$path"
   }
 
+  /** Run `f` on a new directory in `java.io.tmpdir` whose name starts
+    * with `prefix`, and delete it, with all it holds, when `f` returns or
+    * throws. */
+  def withTempDir[T](prefix: String)(f: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    try f(dir) finally graft.streaming.StreamingOps.deleteRecursively(dir)
+  }
+
   /** Run `f` and count the Spark jobs it started (the work counter the
     * probe specs pin). */
   def jobsDuring[T](f: => T): (T, Int) = {
